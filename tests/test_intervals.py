@@ -104,6 +104,35 @@ def test_sessions_from_events_intervals(spark):
     ]
 
 
+def test_sessions_from_events_order_col_collisions(spark):
+    """order_col may name the ts or the user column: the result matches
+    the default, and every plan node (the shuffle input included)
+    carries each column once."""
+    import re
+
+    from vectorsearchutil_spark.plans.explain import formatted_plan
+
+    base = dt.datetime(2024, 1, 1, 10, 0)
+    m = dt.timedelta(minutes=1)
+    rows = [
+        (1, 7, base), (2, 7, base + 10 * m), (3, 7, base + 50 * m),
+        (4, 8, base),
+    ]
+    df = spark.createDataFrame(rows, ["event_id", "user_id", "ts"])
+
+    def run(**kw):
+        out = sessions_from_events(df, **kw)
+        for cols in re.findall(r"Output \[\d+\]: \[([^\]]*)\]",
+                               formatted_plan(out)):
+            names = cols.split(", ")
+            assert len(names) == len(set(names)), cols
+        return sorted(tuple(r) for r in out.collect())
+
+    want = run()
+    assert run(order_col="ts") == want
+    assert run(order_col="user_id") == want
+
+
 # ------------------------------------------- interval overlap join
 
 

@@ -44,7 +44,8 @@ def main() -> None:
         try:
             df = fn(spark, sf)
             plan = df._jdf.queryExecution().optimizedPlan().toString()
-            rows.append((len(re.findall(r"Relation \[", plan)), name))
+            # \b: driver-built LocalRelations are not input scans
+            rows.append((len(re.findall(r"\bRelation \[", plan)), name))
         except Exception as e:  # noqa: BLE001 — audit keeps going
             rows.append((-1, f"{name} ERR {type(e).__name__}"))
     rows.sort(reverse=True)

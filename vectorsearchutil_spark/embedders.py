@@ -13,6 +13,13 @@ reference's ``sp=10`` chunking, ``VectorSearchBase.py:157-161``), with
 the model initialized once per executor task via the iterator pattern
 — the idiomatic Spark replacement for ``init_model``-per-object.
 
+Query text is the exception: :func:`embed_local` encodes it in-process
+on the driver, as the reference does before it searches
+(``VectorSearchBase.py:172-210``). A one-row query needs no Spark job,
+and the driver-built frames around it are JVM local relations
+(``session.local_frame``), so an interactive read starts no Python
+worker.
+
 The heavy encoders (torch/transformers/open_clip) are not installed in
 this environment, so they are registered behind import guards; the
 deterministic ``hash64`` stub is the correctness-boundary embedder
@@ -25,6 +32,7 @@ import hashlib
 import math
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
@@ -93,6 +101,26 @@ def embed_udf(name: str):
             yield encode(batch)
 
     return _udf
+
+
+#: driver-side encoders for :func:`embed_local`, one per embedder per
+#: process: a model loads once however many stores query through it
+_LOCAL_ENCODERS: dict[str, Callable[[pd.Series], pd.Series]] = {}
+
+
+def embed_local(name: str, text: str) -> list[float]:
+    """Encode one text on the driver with ``name``'s main encoder.
+
+    The model is initialized once per process. The output goes
+    through float32, so the vector is bit-identical to the
+    ``ArrayType(FloatType)`` value :func:`embed_udf` yields for the
+    same text.
+    """
+    encode = _LOCAL_ENCODERS.get(name)
+    if encode is None:
+        encode = _LOCAL_ENCODERS[name] = _REGISTRY[name][1]()
+    vec = encode(pd.Series([text])).iloc[0]
+    return np.asarray(vec, dtype=np.float32).tolist()
 
 
 def embed_sub_udf(name: str):

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.session import local_frame
+
 #: two independent hashes via the JVM-native vectorized xxhash64 —
 #: the filter is result-invisible (no false negatives; the exact join
 #: follows), so cross-engine hash replayability buys nothing and the
@@ -83,8 +85,8 @@ def build_bloom(
     arr = [0] * words
     for r in per_word.collect():
         arr[int(r["w"])] = int(r["m"])
-    return spark.createDataFrame(
-        [(arr,)], f"{out_col} array<bigint>"
+    return local_frame(
+        spark, [(arr,)], f"{out_col} array<bigint>"
     )
 
 

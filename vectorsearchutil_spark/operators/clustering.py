@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import l2_distance
+from vectorsearchutil_spark.session import local_frame
 
 
 def _recompute_centroids(
@@ -126,7 +127,8 @@ def _assign(
         if cells > _ASSIGN_BLAS_CELLS:
             return _assign_blas(df, cents, vector_col, id_col)
     spark = df.sparkSession
-    cents_row = spark.createDataFrame(
+    cents_row = local_frame(
+        spark,
         [([(int(c), [float(x) for x in v]) for c, v in sorted(cents)],)],
         "cents array<struct<cid:int,cv:array<double>>>",
     )
@@ -177,10 +179,10 @@ def _kmeans_driver(
         # empty-in, empty-out (Spark convention): no data, no
         # clusters — found by the registry-wide empty-input sweep
         return (
-            spark.createDataFrame(
-                [], f"{id_col} long, cluster int, distance double"
+            local_frame(
+                spark, [], f"{id_col} long, cluster int, distance double"
             ),
-            spark.createDataFrame([], "cid int, cv array<double>"),
+            local_frame(spark, [], "cid int, cv array<double>"),
         )
     ids = [r[0] for r in rows]
     X = np.array([r[1] for r in rows], dtype=np.float64)
@@ -202,14 +204,16 @@ def _kmeans_driver(
     C = np.array(cents, dtype=np.float64)
     a = assign(C)
     dist = np.sqrt(((X - C[a]) ** 2).sum(axis=1))
-    assignments = spark.createDataFrame(
+    assignments = local_frame(
+        spark,
         [
             (int(i), int(c), float(d))
             for i, c, d in zip(ids, a.tolist(), _round_half_up(dist, 4))
         ],
         f"{id_col} long, cluster int, distance double",
     )
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(int(c), list(map(float, v))) for c, v in enumerate(cents)],
         "cid int, cv array<double>",
     )
@@ -289,7 +293,8 @@ def kmeans(
         new = {r["cid"]: list(r["cv"]) for r in rows}
         cents = sorted((c, new.get(c, v)) for c, v in cents)
     final = _assign(work, cents, vector_col, id_col, n_rows)
-    centroids = df.sparkSession.createDataFrame(
+    centroids = local_frame(
+        df.sparkSession,
         [(int(c), list(v)) for c, v in cents], "cid int, cv array<double>"
     )
     return (
@@ -371,7 +376,8 @@ def silhouette_ab(
             ab, f"{id_col} long, cluster int, a double, b double"
         )
     spark = df.sparkSession
-    cents_row = spark.createDataFrame(
+    cents_row = local_frame(
+        spark,
         [([(int(c), [float(x) for x in v]) for c, v in ordered],)],
         "cents array<struct<cid:int,cv:array<double>>>",
     )

@@ -38,6 +38,7 @@ from vectorsearchutil_spark.functions.text import (
     tokens,
 )
 from vectorsearchutil_spark.functions.vector import cosine_similarity
+from vectorsearchutil_spark.session import local_frame
 
 
 def exact_dedup_groups(
@@ -716,8 +717,8 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     out = [(n, find(n)) for n in sorted(parent)]
-    return edges.sparkSession.createDataFrame(
-        out, "node long, component long"
+    return local_frame(
+        edges.sparkSession, out, "node long, component long"
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import finite_vector, l2_norm
+from vectorsearchutil_spark.session import local_frame
 
 
 def normalize_vectors(
@@ -205,7 +206,7 @@ def dim_covariance(
     if d_row is None:
         # empty-in, empty-out (no rows → no covariance cells); the
         # dimension is unknowable here so no matrix pass can start
-        return spark.createDataFrame([], "i int, j int, cov double")
+        return local_frame(spark, [], "i int, j int, cov double")
     d = d_row["d"]
 
     def partials(batches):
@@ -371,8 +372,8 @@ def random_projection(
     if first is None:
         # empty-in, empty-out: no rows to project (the JL matrix
         # needs the input dim, which empty input cannot declare)
-        return df.sparkSession.createDataFrame(
-            [], "id long, dim int, value double"
+        return local_frame(
+            df.sparkSession, [], "id long, dim int, value double"
         )
     in_dim = int(first["d"])
     signs = np.asarray(
@@ -524,8 +525,8 @@ def power_iteration_top_pc(
     spark = emb.sparkSession
     cells, d = _quantized_cov_cells(emb, vec_col, fp_scale)
     if not cells:
-        return spark.createDataFrame(
-            [], "dim int, loading double, eigenvalue double"
+        return local_frame(
+            spark, [], "dim int, loading double, eigenvalue double"
         )
     v, lam = _power_steps(cells, d, iterations, fp_scale)
     if v is None:
@@ -534,14 +535,14 @@ def power_iteration_top_pc(
         # cascade — every downstream value is NULL, one row per
         # dim survives (the joins keep their keys)
         rows_null = [(i + 1, None, None) for i in range(d)]
-        return spark.createDataFrame(
-            rows_null, "dim int, loading double, eigenvalue double"
+        return local_frame(
+            spark, rows_null, "dim int, loading double, eigenvalue double"
         )
     rows = [
         (i + 1, float(v[i]) / fp_scale, lam) for i in range(d)
     ]
-    return spark.createDataFrame(
-        rows, "dim int, loading double, eigenvalue double"
+    return local_frame(
+        spark, rows, "dim int, loading double, eigenvalue double"
     )
 
 
@@ -643,11 +644,11 @@ def power_iteration_top2(
     )
     cells, d = _quantized_cov_cells(emb, vec_col, fp_scale)
     if not cells:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     v1, lam1 = _power_steps(cells, d, iterations, fp_scale)
     if v1 is None:
         rows = [(i + 1, None, None, None, None, None) for i in range(d)]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     defl: dict[tuple[int, int], int] = {}
     for i in range(d):
         vi = float(v1[i]) / fp_scale
@@ -661,7 +662,7 @@ def power_iteration_top2(
             (i + 1, float(v1[i]) / fp_scale, None, lam1, None, None)
             for i in range(d)
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     gap = math.floor((lam1 - lam2) * fp_scale + 0.5) / fp_scale
     rows = [
         (
@@ -674,7 +675,7 @@ def power_iteration_top2(
         )
         for i in range(d)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def cka_dim_split(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.session import local_frame
+
 #: fixed-point scale: 40 fractional bits. deg_in · 2^40 stays far
 #: below 2^53, so the long sum round-trips exactly through double.
 _FP = float(2**40)
@@ -136,8 +138,8 @@ def pagerank(
         # empty-in, empty-out: no edges, no nodes, no ranks (the
         # teleport term would divide by zero) — registry-wide
         # empty-input sweep
-        return edges.sparkSession.createDataFrame(
-            [], "node long, degree long, pagerank double"
+        return local_frame(
+            edges.sparkSession, [], "node long, degree long, pagerank double"
         )
     if strategy == "auto":
         strategy = (
@@ -245,7 +247,8 @@ def _triangle_driver(e: DataFrame) -> DataFrame:
         n_tri += sum(1 for z in sx if z in sy)
     from vectorsearchutil_spark.functions.vector import round_half_up
 
-    row = e.sparkSession.createDataFrame(
+    row = local_frame(
+        e.sparkSession,
         [(n_nodes, n_edges, n_tri, n_wedges)],
         "n_nodes long, n_edges long, n_triangles long, n_wedges long",
     )

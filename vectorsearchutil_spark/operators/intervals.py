@@ -47,7 +47,9 @@ def sessions_from_events(
     adds no exchange). Only the three columns the sessionization
     reads enter that shuffle — the events table's payload columns
     (type/value/props) never leave the scan (guide §2.3)."""
-    events = events.select(user_col, ts_col, order_col)
+    # dict.fromkeys: order_col may name the ts or user column, and a
+    # repeated name would make every later reference ambiguous
+    events = events.select(*dict.fromkeys([user_col, ts_col, order_col]))
     w = Window.partitionBy(user_col).orderBy(
         F.col(ts_col).asc(), F.col(order_col).asc()
     )

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import cosine_similarity, l2_distance
+from vectorsearchutil_spark.session import local_frame
 
 
 def _distance(metric: str, a: Column | str, b: Column | str) -> tuple[Column, bool]:
@@ -451,7 +452,8 @@ def _self_knn_topk_blocked(
         .cast("int")
         .alias("_blk"),
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "ba int, bb int",
     )

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from vectorsearchutil_spark.session import local_frame
+
 
 @dataclass
 class FitResult:
@@ -340,8 +342,8 @@ def logreg_train_fixed_point(
         for k in range(d):
             w[k] = w[k] - lr * ((float(g.get(k + 1, 0)) / _LOGREG_FP) / n)
 
-    return spark.createDataFrame(
-        [(k + 1, float(w[k])) for k in range(d)], "i int, weight double"
+    return local_frame(
+        spark, [(k + 1, float(w[k])) for k in range(d)], "i int, weight double"
     )
 
 

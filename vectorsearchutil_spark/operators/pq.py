@@ -47,6 +47,7 @@ from vectorsearchutil_spark.functions.vector import (
     lit_double_sql,
 )
 from vectorsearchutil_spark.operators.clustering import _round_half_up
+from vectorsearchutil_spark.session import local_frame
 
 Codebooks = list[list[list[float]]]  # [subspace][code][dim/m]
 
@@ -140,7 +141,8 @@ def _codebook_row(df: DataFrame, books: Codebooks):
         [(int(cid), [float(x) for x in cv]) for cid, cv in enumerate(book)]
         for book in books
     ]
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(payload,)], "cbs array<array<struct<cid:int,cv:array<double>>>>"
     )
 

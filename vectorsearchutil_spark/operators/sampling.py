@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.session import local_frame
+
 
 def hash_uniform(key: Column, seed: str) -> Column:
     """Deterministic uniform [0,1) draw from (seed, key).
@@ -358,8 +360,8 @@ def token_budget_sample(
 
     n_buckets = 4096
     budget_items = sorted(budgets.items())
-    budget_df = docs.sparkSession.createDataFrame(
-        budget_items, f"{group_col} string, _budget long"
+    budget_df = local_frame(
+        docs.sparkSession, budget_items, f"{group_col} string, _budget long"
     )
     sized = docs.selectExpr(
         id_col,

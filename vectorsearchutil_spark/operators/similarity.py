@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from vectorsearchutil_spark.functions.vector import l2_distance
+from vectorsearchutil_spark.session import local_frame
 
 
 def _collect_matrix(
@@ -161,7 +162,8 @@ def neardup_pairs_blocked(
         .cast("int")
         .alias("_blk"),
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "ba int, bb int",
     )
@@ -303,7 +305,8 @@ def knn_batch_matrix(
     spark = corpus.sparkSession
     q_ids, q_mat = _collect_matrix(queries, query_id_col, query_vector_col)
     if not len(q_ids):  # no queries → no result rows (not a worker error)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"{query_id_col} long, {id_col} long, distance double,"
             " rank int",
@@ -1181,8 +1184,9 @@ def _triplet_matrix_stats(
     a_lbl = np.array([r["_albl"] for r in arows])
     A = np.array([r["_ae"] for r in arows], dtype=np.float64)
     if len(arows) == 0:
-        empty_pos = spark.createDataFrame([], "aid long, pos_sim double")
-        empty_neg = spark.createDataFrame(
+        empty_pos = local_frame(spark, [], "aid long, pos_sim double")
+        empty_neg = local_frame(
+            spark,
             [],
             "aid long, hardest_neg_sim double, n_hard long,"
             " n_semihard long",
@@ -1236,7 +1240,8 @@ def _triplet_matrix_stats(
     b2 = spark.sparkContext.broadcast(pvec)
     # pass 1 already reduced: rebuild its tiny result as a literal
     # relation so the final assembly doesn't recompute the scan
-    pos = spark.createDataFrame(
+    pos = local_frame(
+        spark,
         [(int(i), None if p != p else float(p)) for i, p in zip(a_ids, pvec)],
         "aid long, pos_sim double",
     ).filter(F.col("pos_sim").isNotNull())

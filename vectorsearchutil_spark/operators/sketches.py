@@ -36,6 +36,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.session import local_frame
+
 HASH_BITS = 60  # 15 md5 hex chars -> always-positive bigint
 
 
@@ -241,7 +243,8 @@ def histogram_quantiles(
     for r in sorted(sketch, key=lambda r: r["bucket"]):
         cum_rows.append((r["bucket"], r["n"], running + r["n"], running))
         running += r["n"]
-    cum = df.sparkSession.createDataFrame(
+    cum = local_frame(
+        df.sparkSession,
         cum_rows, "bucket int, n bigint, cum bigint, cum_before bigint"
     )
     out = None

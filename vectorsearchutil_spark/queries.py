@@ -24,6 +24,7 @@ from vectorsearchutil_spark.functions.datetime import (
 from vectorsearchutil_spark.functions.vector import round_half_up
 from vectorsearchutil_spark.operators.knn import knn, knn_batch
 from vectorsearchutil_spark.operators.zeroshot import zeroshot, zeroshot_scores
+from vectorsearchutil_spark.session import local_frame
 from vectorsearchutil_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1276,8 +1277,8 @@ def _mlp_classifier_out(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         < 2
     ):
-        return spark.createDataFrame(
-            [], "vec_id long, true_label int, pred_label int"
+        return local_frame(
+            spark, [], "vec_id long, true_label int, pred_label int"
         )
     fit = mlp_classifier(
         emb, y_col="label", vector_col="embedding", id_col="vec_id"
@@ -1298,7 +1299,7 @@ def _mlp_regressor_out(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = emb.filter(finite_vector(F.col("embedding")))
     if emb.filter(F.col("label").isNotNull()).first() is None:
         # no (usable) training data: no model, no rows
-        return spark.createDataFrame([], "vec_id long, prediction double")
+        return local_frame(spark, [], "vec_id long, prediction double")
     fit = mlp_regressor(
         emb, y_col="label", vector_col="embedding", id_col="vec_id"
     )
@@ -1399,8 +1400,8 @@ def _mlp_digest_df(
 
     rows = sorted(tuple(r) for r in out.collect())
     digest = hashlib.md5("\n".join(map(str, rows)).encode()).hexdigest()
-    return spark.createDataFrame(
-        [(len(rows), digest)], "n_rows bigint, pred_md5 string"
+    return local_frame(
+        spark, [(len(rows), digest)], "n_rows bigint, pred_md5 string"
     )
 
 
@@ -6595,8 +6596,8 @@ def embeddings_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
         # no (usable) corpus: no codebook, no codes
-        return spark.createDataFrame(
-            [], "vec_id long, codes string, qerr double"
+        return local_frame(
+            spark, [], "vec_id long, codes string, qerr double"
         )
     books = pq_train(emb, m=8, k=16, iterations=2)
     return pq_encode(emb, books).select(
@@ -6633,7 +6634,7 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
         # no (usable) corpus: no codebook, no candidates
-        return spark.createDataFrame([], "vec_id long, adc double")
+        return local_frame(spark, [], "vec_id long, adc double")
     books = pq_train(emb, m=8, k=16, iterations=2)
     qv = _probe_vec(emb.filter(F.col("vec_id") == 0).select("embedding"))
     codes = pq_encode(emb, books)
@@ -6671,7 +6672,7 @@ def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
         # no (usable) corpus: no codebook, no candidates
-        return spark.createDataFrame([], "vec_id long, distance double")
+        return local_frame(spark, [], "vec_id long, distance double")
     books = pq_train(emb, m=8, k=16, iterations=2)
     qv = _probe_vec(emb.filter(F.col("vec_id") == 0).select("embedding"))
     codes = pq_encode(emb, books)
@@ -6747,7 +6748,7 @@ def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
         # no (usable) corpus: no codebook, no candidates
-        return spark.createDataFrame([], "vec_id long, adc double")
+        return local_frame(spark, [], "vec_id long, adc double")
     books = pq_train(emb, m=8, k=16, iterations=2)
     qv = [float(v) for v in
           _probe_vec(emb.filter(F.col("vec_id") == 0).select("embedding"))]
@@ -7687,7 +7688,7 @@ def embeddings_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
         # no (usable) training data: no model, no weights
-        return spark.createDataFrame([], "i int, weight double")
+        return local_frame(spark, [], "i int, weight double")
     data = emb.select(
         "embedding",
         F.when(F.col("label") == 0, F.lit(1.0))
@@ -8315,7 +8316,8 @@ def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.lit(1.0).alias("w"),
     )
-    med = spark.createDataFrame(
+    med = local_frame(
+        spark,
         weighted_median_exact(
             base, "grp", "v", "w", out_col="med"
         ).collect(),
@@ -8324,7 +8326,8 @@ def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_med = base.join(F.broadcast(med), "grp").withColumn(
         "av", F.abs(F.col("v") - F.col("med"))
     )
-    mad = spark.createDataFrame(
+    mad = local_frame(
+        spark,
         weighted_median_exact(
             with_med.select("grp", F.col("av").alias("v"), "w"),
             "grp",

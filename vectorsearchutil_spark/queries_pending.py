@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.session import local_frame
 from vectorsearchutil_spark.sources.readers import load_table
 
 PENDING_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2455,7 +2456,8 @@ def docs_curriculum_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("_c").over(nxt), F.lit(2_147_483_647)
         ).alias("_next"),
     ).unionByName(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(0, 0, 0, None)], "_c long, _cumN long, _cumSum long, _next long"
         ).select(
             "_c",
@@ -3257,7 +3259,8 @@ def embeddings_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "subspace int, n_vectors long, mean_sq_err double,"
             " max_sq_err double, exact_zero long",
@@ -5760,7 +5763,7 @@ def rfm_ntile_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectorsearchutil_spark.operators.analytics import exact_ntile
 
     rows = [(int(i), v) for i, v in _NTILE_FIXTURE_ROWS]
-    df = spark.createDataFrame(rows, "id long, value int")
+    df = local_frame(spark, rows, "id long, value int")
     asc = exact_ntile(
         df, "value", 5, ascending=True, tie_col="id", out_col="bucket_asc"
     ).select("id", "value", "bucket_asc")

@@ -11,8 +11,18 @@ shuffling, and Arrow enabled for the pandas-UDF embedder path.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    TimestampType,
+)
 
 #: Defaults applied to every session this engine creates. Each one is
 #: plan-shaping, not machine-tuning, so they transfer to a real cluster.
@@ -83,6 +93,51 @@ def get_spark(app_name: str = "vectorsearchutil-spark", master: str | None = Non
     for key, value in ENGINE_CONF.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """A frame of driver-side ``rows`` as a JVM local relation.
+
+    Rule: every frame the engine builds from driver data (centroid
+    rows, component labels, block-pair task lists, empty results)
+    comes through here. ``spark.createDataFrame(<list>, schema)``
+    parallelizes a Python RDD (``Scan ExistingRDD``), and every scan
+    of it starts one Python-worker task per slice, 0.25-0.5 s each on
+    a 4-core host. An Arrow table instead becomes a ``LocalTableScan``
+    that the JVM serves without a Python worker (~0.05 s for one row).
+
+    ``rows`` are tuples (or Rows) in field order; ``schema`` is a DDL
+    string or a StructType. Rows under a schema holding a TimestampType
+    (the streaming key grid's caller-typed keys can) keep the Python
+    path: it reads a naive ``datetime`` in the process's local zone,
+    while Arrow would read it as UTC.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    if rows and _has_timestamp(schema):
+        return spark.createDataFrame(rows, schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _has_timestamp(dt: DataType) -> bool:
+    if isinstance(dt, TimestampType):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_timestamp(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_timestamp(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_timestamp(dt.keyType) or _has_timestamp(dt.valueType)
+    return False
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:

@@ -49,8 +49,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from vectorsearchutil_spark.embedders import embed_udf, embedding_dim
+from vectorsearchutil_spark.embedders import (
+    embed_local,
+    embed_udf,
+    embedding_dim,
+)
 from vectorsearchutil_spark.operators.knn import knn
+from vectorsearchutil_spark.session import local_frame
 
 #: Fixed logical schema (reference save_columns, VectorSearchBase.py:21)
 SAVE_COLUMNS = ["target", "option1", "option2", "option3", "option4", "option5"]
@@ -195,7 +200,7 @@ class VectorStore:
     def data(self) -> DataFrame:
         """The queryable store (reference mirror, VectorSearchBase.py:64-72)."""
         if self._df is None:
-            return self.spark.createDataFrame([], STORE_SCHEMA)
+            return local_frame(self.spark, [], STORE_SCHEMA)
         return self._df
 
     def count(self) -> int:
@@ -469,17 +474,20 @@ class VectorStore:
         VectorSearchBase.py:209-210). Result: id, save_columns,
         distance — ascending L2, ties by id.
         """
-        if self._df is None or self.data.rdd.isEmpty():
+        if self._df is None or self.data.isEmpty():
             return None
-        if isinstance(q, str):
-            qdf = self.spark.createDataFrame([(q,)], ["target"])
-            qvec = qdf.select(
-                embed_udf(self.embedder)(F.col("target")).alias("v")
-            ).first()[0]
-        else:
-            qvec = [float(x) for x in q]
+        qvec = self._query_vector(q)
         out = knn(self.data, qvec, k=k, vector_col="vector", id_col="id")
         return out.select("id", *SAVE_COLUMNS, "distance")
+
+    def _query_vector(self, q: str | Sequence[float]) -> list[float]:
+        """The query as a vector. Text is encoded in-process on the
+        driver, as the reference does before it searches
+        (VectorSearchBase.py:172-210): no Spark job, and the vector is
+        bit-identical to what ingest's UDF stores."""
+        if isinstance(q, str):
+            return embed_local(self.embedder, q)
+        return [float(x) for x in q]
 
     def query_with_info(self, q: str | Sequence[float], k: int = 5) -> DataFrame | None:
         """A7: like query() but drops all-null columns
@@ -684,18 +692,10 @@ class VectorStore:
         ``query`` (ascending L2, ties by id); recall < 1 by design."""
         import os
 
-        from vectorsearchutil_spark.operators.knn import knn
-
         index_path = index_path or getattr(self, "_ivf_path", None)
         if index_path is None or self._df is None:
             return None
-        if isinstance(q, str):
-            qdf = self.spark.createDataFrame([(q,)], ["target"])
-            qvec = qdf.select(
-                embed_udf(self.embedder)(F.col("target")).alias("v")
-            ).first()[0]
-        else:
-            qvec = [float(x) for x in q]
+        qvec = self._query_vector(q)
         cents = self.spark.read.parquet(
             os.path.join(index_path, "centroids")
         ).collect()
@@ -723,7 +723,7 @@ class VectorStore:
 
         self.zeroshot_labels = list(labels)
         rows = [(i, lab) for i, lab in enumerate(labels)]
-        ldf = self.spark.createDataFrame(rows, ["label_idx", "label"])
+        ldf = local_frame(self.spark, rows, "label_idx long, label string")
         ldf = ldf.withColumn(
             "label_vec", embed_sub_udf(self.embedder)(F.col("label"))
         )

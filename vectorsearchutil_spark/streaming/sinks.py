@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from vectorsearchutil_spark.session import local_frame
+
 
 def idempotent_parquet_sink(path: str):
     """Build a ``foreachBatch`` function writing each micro-batch to
@@ -78,8 +80,8 @@ def cdc_upsert_sink(log, id_col: str, seq_col: str = "seq",
         ]
         snapshot = log.read(spark)
         if snapshot is None:
-            snapshot = spark.createDataFrame(
-                [], batch_df.select(*payload_cols).schema
+            snapshot = local_frame(
+                spark, [], batch_df.select(*payload_cols).schema
             )
         merged = cdc_apply(
             snapshot, batch_df, id_col, seq_col=seq_col, op_col=op_col

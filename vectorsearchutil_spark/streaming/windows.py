@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from vectorsearchutil_spark.session import local_frame
+
 #: events schema when stored as TIMESTAMP(NANOS) parquet → read as
 #: long nanos, converted after read; see sources/readers.py. Newer
 #: testdata generations write TIMESTAMP(MICROS), which Spark reads
@@ -230,8 +232,8 @@ def histogram_psi(
     # materialize the key set and rebuild it lineage-free
     spark = current.sparkSession
     key_rows = current.select(*keys).distinct().collect()
-    keys_df = spark.createDataFrame(
-        key_rows, current.select(*keys).schema
+    keys_df = local_frame(
+        spark, key_rows, current.select(*keys).schema
     )
     grid = keys_df.crossJoin(
         spark.range(int(bins)).select(
