@@ -98,7 +98,7 @@ def test_embed_local_bit_equal_to_udf(spark, text):
         .select(embed_udf("hash64")(F.col("t")))
         .first()[0]
     )
-    got = embed_local("hash64", text)
+    got = embed_local("hash64", [text])[0]
     assert got == want
     assert (
         np.asarray(got, np.float32).tobytes()

@@ -585,3 +585,29 @@ def test_window_queries_no_cartesian_no_sortmerge_fact_join(
     silently goes quadratic at 100x."""
     plan = formatted_plan(Q.QUERIES[name](spark, sf_dir))
     assert "CartesianProduct" not in plan
+
+
+def test_ngram_jaccard_per_doc_lists_planned_once(spark, sf_dir):
+    """The per-doc shingle lists feed four consumers (both prefix
+    sides and both verify sides) without a cache: the executed plan
+    holds no InMemoryRelation, one exchange over the per-doc aggregate,
+    and ReusedExchange for the other consumers."""
+    from vectorsearchutil_spark.operators.dedup import ngram_jaccard_pairs
+    from vectorsearchutil_spark.sources.readers import load_table
+
+    df = ngram_jaccard_pairs(
+        load_table(spark, sf_dir, "documents"), threshold=0.5
+    )
+    assert "InMemoryRelation" not in formatted_plan(df)
+    df.collect()
+    final = formatted_plan(df).split("== Initial Plan ==")[0]
+    assert "InMemoryRelation" not in final
+    nodes = [ln.strip(" :+-*") for ln in final.splitlines()]
+    per_doc = sum(
+        1
+        for above, below in zip(nodes, nodes[1:])
+        if above.startswith("Exchange ")
+        and below.startswith("ObjectHashAggregate ")
+    )
+    assert per_doc == 1, final
+    assert final.count("ReusedExchange") >= 2, final

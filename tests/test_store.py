@@ -407,6 +407,35 @@ def test_ann_index_incremental_add(spark, tmp_path):
     assert exact[0] in approx_all
 
 
+def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch):
+    """add_to_ann_index persists the fresh rows it assigns; a failing
+    write must still release them (cache lifetime is explicit)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    vs = VectorStore(spark, path=str(tmp_path / "s"))
+    vs.set_data(
+        spark.createDataFrame([(f"doc {i}",) for i in range(40)], ["target"])
+    )
+    vs.build_ann_index(n_lists=4)
+    vs.set_data(
+        spark.createDataFrame([(f"new {i}",) for i in range(5)], ["target"]),
+        append=True,
+    )
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+
+    def failing_write(self, path, *a, **kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(OSError):
+        vs.add_to_ann_index()
+    # other tests' local checkpoints stay registered until collected,
+    # so compare with the state before the call
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_ann_index_compaction(spark, tmp_path):
     """Incremental appends accumulate one file per touched partition
     per call; optimize_ann_index coalesces to one file per list via

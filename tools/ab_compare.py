@@ -6,11 +6,14 @@ Usage:
         [--sf /root/testdata/sf0.1] name [name ...]
 
 For each query name, the OLD form (the registry entry at ``--old-ref``,
-materialized via ``git worktree``) and the NEW form (the working tree)
+materialized via ``git worktree``; a directory holding a checkout is
+used as it is) and the NEW form (the working tree)
 run INTERLEAVED in ONE Spark session — old, new, old, new, … ``reps``
 times each — and the minimum per side is reported, which is the
 methodology every per-change claim in OPTIMIZATION_r10/r11.md rests on
 (this host's session noise swamps cross-session totals; see PERF.md).
+Every timed rep starts with ``spark.catalog.clearCache()``, so no rep
+is served by an earlier rep's in-query cache.
 Output equality is asserted on sorted ``collect()`` of both sides (on
 top of the DuckDB oracle gate, which each round re-runs separately).
 
@@ -46,6 +49,8 @@ def _load_queries(root: str):
 
 
 def _worktree(ref: str) -> str:
+    if os.path.isdir(os.path.join(ref, "vectorsearchutil_spark")):
+        return ref  # an existing checkout of the old side
     out = f"/tmp/ab_worktree_{ref.replace('/', '_')}"
     if not os.path.isdir(out):
         subprocess.run(
@@ -89,6 +94,10 @@ def main() -> None:
                         ).save()
                     except Exception:
                         pass
+                # cold rep: the other side's (or the previous rep's)
+                # in-query caches must not serve this one through plan
+                # matching
+                spark.catalog.clearCache()
                 spark.sparkContext.setJobDescription(f"ab {name} {side} {rep}")
                 t0 = time.time()
                 df = fn(spark, args.sf)

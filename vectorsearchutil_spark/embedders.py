@@ -13,12 +13,13 @@ reference's ``sp=10`` chunking, ``VectorSearchBase.py:157-161``), with
 the model initialized once per executor task via the iterator pattern
 — the idiomatic Spark replacement for ``init_model``-per-object.
 
-Query text is the exception: :func:`embed_local` encodes it in-process
-on the driver, as the reference does before it searches
-(``VectorSearchBase.py:172-210``). A one-row query needs no Spark job,
-and the driver-built frames around it are JVM local relations
-(``session.local_frame``), so an interactive read starts no Python
-worker.
+Query text and small ingest batches are the exception:
+:func:`embed_local` encodes them in-process on the driver, as the
+reference does before it searches and when it ingests
+(``VectorSearchBase.py:101-133,172-210``). A one-row query needs no
+Spark job, and the driver-built frames around it are JVM local
+relations (``session.local_frame``), so an interactive read starts no
+Python worker.
 
 The heavy encoders (torch/transformers/open_clip) are not installed in
 this environment, so they are registered behind import guards; the
@@ -30,7 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -108,19 +109,20 @@ def embed_udf(name: str):
 _LOCAL_ENCODERS: dict[str, Callable[[pd.Series], pd.Series]] = {}
 
 
-def embed_local(name: str, text: str) -> list[float]:
-    """Encode one text on the driver with ``name``'s main encoder.
+def embed_local(name: str, texts: Sequence[str]) -> list[list[float]]:
+    """Encode ``texts`` on the driver with ``name``'s main encoder, one
+    vector per text.
 
     The model is initialized once per process. The output goes
-    through float32, so the vector is bit-identical to the
+    through float32, so each vector is bit-identical to the
     ``ArrayType(FloatType)`` value :func:`embed_udf` yields for the
     same text.
     """
     encode = _LOCAL_ENCODERS.get(name)
     if encode is None:
         encode = _LOCAL_ENCODERS[name] = _REGISTRY[name][1]()
-    vec = encode(pd.Series([text])).iloc[0]
-    return np.asarray(vec, dtype=np.float32).tolist()
+    vecs = encode(pd.Series(list(texts), dtype=object))
+    return [np.asarray(v, dtype=np.float32).tolist() for v in vecs]
 
 
 def embed_sub_udf(name: str):

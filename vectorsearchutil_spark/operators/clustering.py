@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import l2_distance
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 
 def _recompute_centroids(
@@ -161,21 +161,33 @@ def _round_half_up(values, decimals: int) -> list[float]:
     ]
 
 
+def _sorted_vectors(table, id_col: str, vector_col: str):
+    """(ids, float64 matrix) of a pulled (id, vector) table, in
+    ascending id order — the driver-side ``orderBy(id)``."""
+    import numpy as np
+
+    table = table.sort_by(id_col)
+    ids = table.column(id_col).to_pylist()
+    X = np.array(table.column(vector_col).to_pylist(), dtype=np.float64)
+    return ids, X
+
+
 def _kmeans_driver(
-    work: DataFrame,
+    spark,
+    table,
     k: int,
     iterations: int,
     vector_col: str,
     id_col: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """Driver-side Lloyd's for small inputs — bit-identical math to
-    the distributed path (float64 L2, argmin ties to lowest cid, 6dp
-    HALF_UP centroid rounding, empty cluster keeps its centroid)."""
+    """Driver-side Lloyd's for small inputs over the pulled (id,
+    vector) ``table`` — bit-identical math to the distributed path
+    (float64 L2, argmin ties to lowest cid, 6dp HALF_UP centroid
+    rounding, empty cluster keeps its centroid)."""
     import numpy as np
 
-    rows = work.orderBy(id_col).collect()
-    spark = work.sparkSession
-    if not rows:
+    ids, X = _sorted_vectors(table, id_col, vector_col)
+    if not ids:
         # empty-in, empty-out (Spark convention): no data, no
         # clusters — found by the registry-wide empty-input sweep
         return (
@@ -184,8 +196,6 @@ def _kmeans_driver(
             ),
             local_frame(spark, [], "cid int, cv array<double>"),
         )
-    ids = [r[0] for r in rows]
-    X = np.array([r[1] for r in rows], dtype=np.float64)
     cents = [X[i].tolist() for i in range(min(k, len(ids)))]
 
     def assign(C: np.ndarray) -> np.ndarray:
@@ -251,7 +261,13 @@ def kmeans(
     Lloyd's loop runs on the driver in numpy — identical math, none
     of the per-iteration job/shuffle overhead. Above the gate (any
     real corpus) the distributed plan runs. ``strategy=`` forces
-    either path ('driver' / 'distributed')."""
+    either path ('driver' / 'distributed').
+
+    Under 'auto' the gate is one Arrow job (``collect_if_small`` at
+    ``driver_max_cells // dim`` rows) that runs when this function is
+    called; below the gate the driver path uses the rows it pulled.
+    Callers that already know the row count pass ``n_rows`` and the
+    gate runs no job."""
     # narrow working set — each Lloyd's round re-reads (id, vector)
     # only (at 100 TB: persist MEMORY_AND_DISK or checkpoint)
     from vectorsearchutil_spark.functions.vector import finite_vector
@@ -261,22 +277,28 @@ def kmeans(
     work = df.select(id_col, vector_col).filter(
         finite_vector(F.col(vector_col))
     )
-    if strategy == "auto":
-        if n_rows is None:
-            # cache BEFORE counting: the sizing pass doubles as cache
-            # priming, so whichever path runs next reads the cached
-            # working set instead of re-scanning — the count job is no
-            # longer an extra corpus scan. Callers that already know
-            # the row count pass n_rows and skip the job entirely.
-            work = work.cache()
-            n_rows = work.count()
+    table = None
+    gated = strategy == "auto" and n_rows is None
+    if gated:
+        table = collect_if_small(work, driver_max_cells // dim)
+        strategy = "distributed" if table is None else "driver"
+    elif strategy == "auto":
         strategy = (
             "driver" if n_rows * dim <= driver_max_cells
             else "distributed"
         )
     if strategy == "driver":
-        return _kmeans_driver(work, k, iterations, vector_col, id_col)
+        if table is None:
+            table = work.toArrow()
+        return _kmeans_driver(
+            df.sparkSession, table, k, iterations, vector_col, id_col
+        )
+    # the Lloyd's loop re-reads the working set every iteration
     work = work.cache()
+    if gated:
+        # above the gate: the row count sizes _assign's expression/BLAS
+        # choice, as a caller-supplied n_rows does
+        n_rows = work.count()
     init = (
         work.orderBy(id_col)
         .limit(k)

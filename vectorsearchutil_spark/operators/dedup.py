@@ -38,7 +38,7 @@ from vectorsearchutil_spark.functions.text import (
     tokens,
 )
 from vectorsearchutil_spark.functions.vector import cosine_similarity
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 
 def exact_dedup_groups(
@@ -159,7 +159,9 @@ def ngram_jaccard_pairs(
     index never self-joins, and candidates approach the true pair
     count even at permissive thresholds (t=0.5 diagnostics)."""
     t = float(threshold)
-    per_doc = _doc_shingle_lists(df, text_col, id_col, n, max_df).cache()
+    # not cached: the per-doc aggregate's exchange is planned once and
+    # reused (ReusedExchange) by every consumer below
+    per_doc = _doc_shingle_lists(df, text_col, id_col, n, max_df)
     pref = per_doc.select(
         F.col(id_col),
         "n_sh",
@@ -687,9 +689,10 @@ def embedding_neardup_pairs(
     )
 
 
-def _cc_driver(edges: DataFrame) -> DataFrame:
-    """Union-find on the driver — the exact min-label fixpoint in one
-    pass, for edge sets below the driver gate."""
+def _cc_driver(spark, edges) -> DataFrame:
+    """Union-find on the driver over the pulled (a, b) ``edges`` table
+    — the exact min-label fixpoint in one pass, for edge sets below the
+    driver gate."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -700,13 +703,8 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    # ONE Arrow-batched job for the bounded pull (≤ the 2M-edge gate ≈
-    # 32 MB of longs): toLocalIterator fetches partition batches in
-    # sequential round-trips — up to one scheduler round per partition
-    # — and pickles Rows; r11 optimization round.
-    tbl = edges.select("a", "b").toArrow()
     for a, b in zip(
-        tbl.column("a").to_pylist(), tbl.column("b").to_pylist()
+        edges.column("a").to_pylist(), edges.column("b").to_pylist()
     ):
         for n in (a, b):
             if n not in parent:
@@ -717,9 +715,7 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     out = [(n, find(n)) for n in sorted(parent)]
-    return local_frame(
-        edges.sparkSession, out, "node long, component long"
-    )
+    return local_frame(spark, out, "node long, component long")
 
 
 def _cc_alternating(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -820,15 +816,21 @@ def connected_components(
     forces a path: 'driver' / 'distributed' (min-label propagation,
     O(diameter) rounds) / 'alternating' (large-star/small-star,
     O(log² n) rounds — prefer for deep-chain graphs).
+
+    Under 'auto' the gate is one Arrow job (``collect_if_small``) that
+    runs when this function is called; below the gate union-find runs
+    over the rows that job pulled.
     """
     # checkpoint the oriented pair list FIRST: the symmetric view
     # references it twice, and without the barrier the (expensive)
     # upstream pair plan — LSH, shingle join, … — would execute once
-    # per branch (no ReusedExchange across a union)
+    # per branch (no ReusedExchange across a union). Lazy: the gate's
+    # pull (or the first distributed job) materializes it.
     half = pairs.select(
         F.col(src).cast("long").alias("a"),
         F.col(dst).cast("long").alias("b"),
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
+    spark = pairs.sparkSession
     if strategy == "auto":
         # gate on the HALF pair count (same 2M-symmetric-edge
         # boundary): the driver path needs neither the symmetric
@@ -845,12 +847,12 @@ def connected_components(
         # and push the graph onto the distributed path early —
         # correctness is unaffected either way (union-find and
         # min-label are duplicate-invariant).
-        strategy = (
-            "driver" if half.count() * 2 <= driver_max_edges
-            else "distributed"
-        )
+        small = collect_if_small(half, driver_max_edges // 2)
+        if small is not None:
+            return _cc_driver(spark, small)
+        strategy = "distributed"
     if strategy == "driver":
-        return _cc_driver(half)
+        return _cc_driver(spark, half.toArrow())
     edges = (
         half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -1043,7 +1045,7 @@ def incremental_ingest_dedup_with_state(
 
     The store side contributes only its precomputed state tables — no
     store-side signature recomputation, ever. The incoming batch is
-    small: its signature pass runs once (cached), and every join
+    small (the store pulls it into a local relation), and every join
     against the store is batch-side-driven — the store's bucket scan
     joins a BROADCAST of the batch buckets, candidates are
     (incoming × bucket mates), never store × store. Mirrors the
@@ -1055,7 +1057,7 @@ def incremental_ingest_dedup_with_state(
     )
     inc_sh = inc_state["shingles"].select(
         F.col(id_col).alias("id_in"), "shingle"
-    ).cache()
+    )
     inc_b = inc_state["buckets"].select(
         F.col(id_col).alias("id_in"), "bucket"
     )

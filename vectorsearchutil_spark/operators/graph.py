@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 #: fixed-point scale: 40 fractional bits. deg_in · 2^40 stays far
 #: below 2^53, so the long sum round-trips exactly through double.
@@ -38,14 +38,20 @@ _FP = float(2**40)
 #: path is the only shape that survives 100 TB graphs).
 _PAGERANK_DRIVER_MAX_EDGES = 2_000_000
 
+#: ``pagerank``'s output. An empty edge list gives an empty result: no
+#: edges, no nodes, no ranks (the teleport term would divide by zero) —
+#: registry-wide empty-input sweep.
+_PAGERANK_SCHEMA = "node long, degree long, pagerank double"
+
 
 def _pagerank_driver(
-    e: DataFrame, damping: float, iters: int, round_dp: int
+    spark, tbl, damping: float, iters: int, round_dp: int
 ) -> DataFrame:
-    """Driver-side fixed-point PageRank for edge sets below the gate —
-    BIT-IDENTICAL to the iterative-join path by construction: every
-    float op (r/deg, ×2^40, floor, base + d·(Σq/2^40)) is the same
-    IEEE double expression in the same order, and the per-node
+    """Driver-side fixed-point PageRank over the pulled (_src, _dst)
+    table ``tbl`` of an edge set below the gate — BIT-IDENTICAL to the
+    iterative-join path by construction: every float op (r/deg,
+    ×2^40, floor, base + d·(Σq/2^40)) is the same IEEE double
+    expression in the same order, and the per-node
     reduction sums int64 exactly on both paths. Inner-join semantics
     of the distributed form are replicated exactly: ranks start on
     DISTINCT DST nodes, an edge contributes only while its src holds
@@ -54,7 +60,8 @@ def _pagerank_driver(
     import numpy as np
     import pandas as pd
 
-    tbl = e.toArrow()
+    if tbl.num_rows == 0:
+        return local_frame(spark, [], _PAGERANK_SCHEMA)
     srcs = np.asarray(tbl.column("_src").to_pylist(), dtype=np.int64)
     dsts = np.asarray(tbl.column("_dst").to_pylist(), dtype=np.int64)
     ids = np.unique(np.concatenate([srcs, dsts]))
@@ -87,9 +94,7 @@ def _pagerank_driver(
         }
     )
     return (
-        e.sparkSession.createDataFrame(
-            pdf, "node long, degree long, _r double"
-        )
+        spark.createDataFrame(pdf, "node long, degree long, _r double")
         .select(
             "node", "degree", F.round(F.col("_r"), round_dp).alias("pagerank")
         )
@@ -122,33 +127,29 @@ def pagerank(
     set of at most ``driver_max_edges`` runs the same fixed-point
     iterations on the driver — bit-identical output, none of the
     ~4 jobs/iteration of join/checkpoint scheduling latency. Larger
-    graphs take the iterative-join plan. EAGER AT BUILD TIME under
-    'auto'/'driver' (like connected_components): gating counts the
-    edge list when this function is called. ``strategy=`` forces a
-    path ('driver'/'distributed')."""
-    # edges and degrees are re-read every iteration (and the gate
-    # counts them) — checkpoint so iteration N doesn't recompute the
-    # upstream pair-mining plan N times (same discipline as connected
-    # components / k-means)
+    graphs take the iterative-join plan. Under 'auto' the gate is one
+    Arrow job (``collect_if_small``) that runs when this function is
+    called, and the driver path uses the edges it pulled.
+    ``strategy=`` forces a path ('driver'/'distributed')."""
+    spark = edges.sparkSession
+    # edges and degrees are re-read every iteration — checkpoint so
+    # iteration N doesn't recompute the upstream pair-mining plan N
+    # times (same discipline as connected components / k-means). Lazy:
+    # the gate's pull (or the node count below) materializes it.
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
-    ).localCheckpoint()
-    n_edges = e.count()  # cheap on the checkpoint; gates + empty check
-    if n_edges == 0:
-        # empty-in, empty-out: no edges, no nodes, no ranks (the
-        # teleport term would divide by zero) — registry-wide
-        # empty-input sweep
-        return local_frame(
-            edges.sparkSession, [], "node long, degree long, pagerank double"
-        )
+    ).localCheckpoint(eager=False)
     if strategy == "auto":
-        strategy = (
-            "driver" if n_edges <= driver_max_edges else "distributed"
-        )
+        tbl = collect_if_small(e, driver_max_edges)
+        if tbl is not None:
+            return _pagerank_driver(spark, tbl, damping, iters, round_dp)
+        strategy = "distributed"
     if strategy == "driver":
-        return _pagerank_driver(e, damping, iters, round_dp)
+        return _pagerank_driver(spark, e.toArrow(), damping, iters, round_dp)
     nodes = e.select(F.col("_dst").alias("_id")).distinct()
     n_nodes = nodes.count()  # scalar: sizes the teleport term
+    if n_nodes == 0:
+        return local_frame(spark, [], _PAGERANK_SCHEMA)
     deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg")).cache()
     base = (1.0 - damping) / float(n_nodes)
 
@@ -209,16 +210,16 @@ def pagerank_over_pairs(
     )
 
 
-def _triangle_driver(e: DataFrame) -> DataFrame:
-    """Driver-side exact triangle census for edge sets below the gate
-    (same boundary/rationale as ``_cc_driver`` / ``_pagerank_driver``):
+def _triangle_driver(spark, tbl) -> DataFrame:
+    """Driver-side exact triangle census over the pulled (a, b) table
+    ``tbl`` of an edge set below the gate (same boundary/rationale as
+    ``_cc_driver`` / ``_pagerank_driver``):
     all four counts are exact integers on either path, and the one
     double division runs through the SAME Spark expression as the
     distributed form, so outputs are identical. Assumes the documented
     input contract (one row per undirected edge, id_a < id_b)."""
     import numpy as np
 
-    tbl = e.toArrow()
     a = np.asarray(tbl.column("a").to_pylist(), dtype=np.int64)
     b = np.asarray(tbl.column("b").to_pylist(), dtype=np.int64)
     ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
@@ -248,7 +249,7 @@ def _triangle_driver(e: DataFrame) -> DataFrame:
     from vectorsearchutil_spark.functions.vector import round_half_up
 
     row = local_frame(
-        e.sparkSession,
+        spark,
         [(n_nodes, n_edges, n_tri, n_wedges)],
         "n_nodes long, n_edges long, n_triangles long, n_wedges long",
     )
@@ -300,7 +301,9 @@ def triangle_count(
     ``driver_max_edges`` the census runs on the driver (identical
     counts, one Arrow pull instead of the ~7-stage join cascade);
     above it — or forced 'distributed' — the oriented-join plan runs.
-    EAGER AT BUILD TIME under 'auto'/'driver' (the gate counts edges).
+    Under 'auto' the gate is one Arrow job (``collect_if_small``) that
+    runs when this function is called, and the driver path counts the
+    edges it pulled.
     """
     from vectorsearchutil_spark.functions.vector import round_half_up
 
@@ -315,11 +318,12 @@ def triangle_count(
         F.col(id_a).alias("a"), F.col(id_b).alias("b")
     ).localCheckpoint(eager=False)
     if strategy == "auto":
-        strategy = (
-            "driver" if e.count() <= driver_max_edges else "distributed"
-        )
+        tbl = collect_if_small(e, driver_max_edges)
+        if tbl is not None:
+            return _triangle_driver(pairs.sparkSession, tbl)
+        strategy = "distributed"
     if strategy == "driver":
-        return _triangle_driver(e)
+        return _triangle_driver(pairs.sparkSession, e.toArrow())
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))

@@ -46,8 +46,11 @@ from vectorsearchutil_spark.functions.vector import (
     l2_squared,
     lit_double_sql,
 )
-from vectorsearchutil_spark.operators.clustering import _round_half_up
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.operators.clustering import (
+    _round_half_up,
+    _sorted_vectors,
+)
+from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 Codebooks = list[list[list[float]]]  # [subspace][code][dim/m]
 
@@ -88,10 +91,14 @@ def pq_train(
     work = df.select(id_col, vector_col).filter(
         finite_vector(F.col(vector_col))
     )
+    table = None
     if train_limit is not None:
         if n_rows is None:
-            n_rows = work.count()
-        if n_rows > train_limit:
+            # one Arrow job: at or below the bound it IS the training set
+            table = collect_if_small(work, train_limit)
+            if table is None:
+                n_rows = work.count()  # sizes the sample's prefilter
+        if table is None and n_rows > train_limit:
             u = hash_uniform(F.col(id_col).cast("string"), "pqtrain")
             # cheap narrow prefilter (expect ~2×train_limit survivors)
             # so the top-k heap never sees the full corpus
@@ -105,13 +112,14 @@ def pq_train(
                 .limit(train_limit)
                 .drop("_u")
             )
-    rows = work.select(id_col, vector_col).orderBy(id_col).collect()
-    if not rows:
+    if table is None:
+        table = work.toArrow()
+    ids, X = _sorted_vectors(table, id_col, vector_col)
+    if not ids:
         # a codebook is a fitted model — an empty corpus has no dim
         # and no centroids, so this is a declared error, not a crash
         # (callers that want empty-in/empty-out guard before training)
         raise ValueError("pq_train: empty input")
-    X = np.array([r[1] for r in rows], dtype=np.float64)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")

@@ -6749,6 +6749,8 @@ def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     if emb.filter(F.col("embedding").isNotNull()).first() is None:
         # no (usable) corpus: no codebook, no candidates
         return local_frame(spark, [], "vec_id long, adc double")
+    # collected once: the encode and the probe both read the centroids
+    cents = local_frame(spark, cents.toArrow())
     books = pq_train(emb, m=8, k=16, iterations=2)
     qv = [float(v) for v in
           _probe_vec(emb.filter(F.col("vec_id") == 0).select("embedding"))]

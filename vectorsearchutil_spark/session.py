@@ -96,7 +96,9 @@ def get_spark(app_name: str = "vectorsearchutil-spark", master: str | None = Non
 
 
 def local_frame(
-    spark: SparkSession, rows: Iterable, schema: str | StructType
+    spark: SparkSession,
+    rows: Iterable | pa.Table,
+    schema: str | StructType | None = None,
 ) -> DataFrame:
     """A frame of driver-side ``rows`` as a JVM local relation.
 
@@ -113,7 +115,13 @@ def local_frame(
     (the streaming key grid's caller-typed keys can) keep the Python
     path: it reads a naive ``datetime`` in the process's local zone,
     while Arrow would read it as UTC.
+
+    ``rows`` may also be a ``pyarrow.Table`` (what
+    :func:`collect_if_small` pulls); its own schema is used unless
+    ``schema`` is given.
     """
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     rows = list(rows)
@@ -126,6 +134,24 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def collect_if_small(df: DataFrame, n: int) -> pa.Table | None:
+    """``df``'s rows as a ``pyarrow.Table`` if it has at most ``n``
+    rows, else None.
+
+    The one size gate of the engine's driver/distributed strategy
+    choices: a single ``limit(n + 1)`` Arrow job both decides and, when
+    the input is small, already holds the rows the driver path needs,
+    where a ``count()`` followed by a pull runs the input twice. Above
+    the gate the wasted work is bounded at ``n + 1`` rows. A lazy
+    ``localCheckpoint`` under ``df`` is materialized in full by this
+    job (the limit's single-partition exchange computes every input
+    partition), so a distributed path that follows reads it instead of
+    re-running the upstream plan.
+    """
+    table = df.limit(n + 1).toArrow()
+    return table if table.num_rows <= n else None
 
 
 def _has_timestamp(dt: DataType) -> bool:

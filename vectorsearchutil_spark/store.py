@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -55,10 +56,19 @@ from vectorsearchutil_spark.embedders import (
     embedding_dim,
 )
 from vectorsearchutil_spark.operators.knn import knn
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 #: Fixed logical schema (reference save_columns, VectorSearchBase.py:21)
 SAVE_COLUMNS = ["target", "option1", "option2", "option3", "option4", "option5"]
+
+#: Client batches of at most this many rows are pulled to the driver
+#: once, in one Arrow job, and continue as a JVM local relation: every
+#: later scan of a client's ``createDataFrame(<list>)`` would otherwise
+#: start its own Python worker. Driver memory: at the store's row shape
+#: (a text target, five short options, and a vector of a few hundred
+#: float32s) 10k rows stay in the tens of MB, and the encoder runs over
+#: them in-process as the reference's ``set_data`` does.
+_LOCAL_BATCH_MAX_ROWS = 10_000
 
 STORE_SCHEMA = StructType(
     [StructField("id", LongType())]
@@ -354,17 +364,21 @@ class VectorStore:
         signature pass over the batch plus batch-driven broadcast
         joins; the store is never re-shingled (production posture).
         Without state it falls back to deriving the store side in-job
-        (identical results)."""
+        (identical results). A batch of at most
+        ``_LOCAL_BATCH_MAX_ROWS`` rows is pulled once (one Arrow job)
+        and read from a local relation by the rest of the plan."""
         from vectorsearchutil_spark.operators.dedup import (
             build_ingest_dedup_state,
             incremental_ingest_dedup_with_state,
         )
 
-        inc = incoming
-        if text_col != "target" or id_col != "id":
-            inc = incoming.select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("target")
-            )
+        inc = incoming.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("target")
+        )
+        small = collect_if_small(inc, _LOCAL_BATCH_MAX_ROWS)
+        if small is not None:
+            # the dedup plan reads the batch several times
+            inc = local_frame(self.spark, small)
         state = self._dedup_state
         if state is None:
             state = build_ingest_dedup_state(
@@ -394,26 +408,44 @@ class VectorStore:
         extra columns away (:124-126); dedup on ``target`` is
         first-wins in ingest order (:124) and append never overwrites
         existing targets (:79-87).
+
+        A batch of at most ``_LOCAL_BATCH_MAX_ROWS`` rows is pulled
+        once (one Arrow job) and, like the reference's in-process
+        table, deduplicated and encoded on the driver; larger batches
+        run the same steps as a distributed plan.
         """
         if "target" not in data.columns:
             return
         # ingest-order marker: monotonically_increasing_id is
         # monotone in (partition, position), preserving input order of
         # a driver-created DataFrame — the analog of pandas row order.
+        # Assigned before the small-batch pull, so the order is the
+        # same on both paths.
         df = data.withColumn("_ord", F.monotonically_increasing_id())
-        if "vector" not in df.columns:
-            df = df.withColumn("vector", embed_udf(self.embedder)(F.col("target")))
         for c in SAVE_COLUMNS:
             if c not in df.columns:
                 df = df.withColumn(c, F.lit(None).cast("string"))
-        df = df.select(*SAVE_COLUMNS, "vector", "_ord")
-        # first-wins dedup within the batch
-        win = Window.partitionBy("target").orderBy("_ord")
-        df = (
-            df.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        has_vector = "vector" in df.columns
+        df = df.select(
+            *SAVE_COLUMNS, *(["vector"] if has_vector else []), "_ord"
         )
+        batch = collect_if_small(df, _LOCAL_BATCH_MAX_ROWS)
+        if batch is not None:
+            batch = self._first_wins_local(batch, has_vector)
+            df = local_frame(self.spark, batch)
+        else:
+            if not has_vector:
+                df = df.withColumn(
+                    "vector", embed_udf(self.embedder)(F.col("target"))
+                )
+            # first-wins dedup within the batch
+            win = Window.partitionBy("target").orderBy("_ord")
+            df = (
+                df.withColumn("_rn", F.row_number().over(win))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+        df = df.select(*SAVE_COLUMNS, "vector", "_ord")
         if append and self._df is not None:
             existing = self.data
             # insert-if-absent: left anti vs existing targets
@@ -460,10 +492,42 @@ class VectorStore:
                     replace=False,
                 )
         else:
-            df = df.withColumn("id", F.row_number().over(Window.orderBy("_ord")))
+            if batch is not None:
+                # the local batch is in ingest order: ids are positions
+                # (int, as row_number gives on the distributed path),
+                # written as one file like the row_number window's
+                # single partition
+                ids = pa.array(range(1, batch.num_rows + 1), pa.int32())
+                df = local_frame(
+                    self.spark, batch.append_column("id", ids)
+                ).coalesce(1)
+            else:
+                df = df.withColumn(
+                    "id", F.row_number().over(Window.orderBy("_ord"))
+                )
             self._df = self._persist(df.select("id", *SAVE_COLUMNS, "vector"))
             if self.maintain_dedup_state:
                 self._update_dedup_state(self.data, replace=True)
+
+    def _first_wins_local(self, batch: pa.Table, has_vector: bool) -> pa.Table:
+        """The pulled ``batch`` deduplicated on ``target``, first wins
+        in ingest (``_ord``) order — in-process, like the reference's
+        ``drop_duplicates`` (VectorSearchBase.py:124) — with vectors
+        encoded on the driver when the caller gave none."""
+        batch = batch.sort_by("_ord")
+        seen: set = set()
+        keep = []
+        for i, target in enumerate(batch.column("target").to_pylist()):
+            if target not in seen:
+                seen.add(target)
+                keep.append(i)
+        batch = batch.take(keep)
+        if not has_vector:
+            vecs = embed_local(self.embedder, batch.column("target").to_pylist())
+            batch = batch.append_column(
+                "vector", pa.array(vecs, pa.list_(pa.float32()))
+            )
+        return batch
 
     # -- queries (A5/A6/A7) -------------------------------------------
 
@@ -486,7 +550,7 @@ class VectorStore:
         (VectorSearchBase.py:172-210): no Spark job, and the vector is
         bit-identical to what ingest's UDF stores."""
         if isinstance(q, str):
-            return embed_local(self.embedder, q)
+            return embed_local(self.embedder, [q])[0]
         return [float(x) for x in q]
 
     def query_with_info(self, q: str | Sequence[float], k: int = 5) -> DataFrame | None:
@@ -597,12 +661,14 @@ class VectorStore:
             fresh, cents, vector_col="vector", id_col="id",
             n_rows=fresh.count(),
         ).persist()
-        n = indexed.count()
-        if n:
-            indexed.write.mode("append").partitionBy(
-                "centroid_id"
-            ).parquet(lists_path)
-        indexed.unpersist()
+        try:
+            n = indexed.count()
+            if n:
+                indexed.write.mode("append").partitionBy(
+                    "centroid_id"
+                ).parquet(lists_path)
+        finally:
+            indexed.unpersist()
         self._ivf_path = index_path
         return n
 
