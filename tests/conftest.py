@@ -12,7 +12,7 @@ SF_DIR = "/root/testdata/sf0.001"
 #: Slow tier (VERDICT r10 #3): base test ids (parametrizations
 #: included) whose max single-test call time measured ≥ 5 s in the
 #: duration-ranked full-suite run of 2026-08-18 (681 passed, 33 min
-#: wall on the r11 host; per-test log: --durations=0). These 38 names
+#: wall on the r11 host; per-test log: --durations=0). These names
 #: account for ~70% of suite call time (1364 s vs 609 s for the other
 #: 643 tests); every one re-verifies an invariant the fast tier
 #: already covers at smaller sizes (registry-wide sweeps, brute-force
@@ -29,7 +29,6 @@ _SLOW_TESTS = {
     "test_acid_store.py::test_acid_append_never_overwrites",
     "test_acid_store.py::test_acid_replace_wipes",
     "test_acid_store.py::test_compact_then_vacuum_preserves_data",
-    "test_dedup.py::test_connected_components_alternating_agrees",
     "test_properties.py::test_triplet_mining_matches_numpy",
     "test_properties.py::test_weighted_quantile_exact_matches_bruteforce",
     "test_properties.py::test_funnel_matches_naive",

@@ -156,33 +156,6 @@ def test_bucket_pairs_max_bucket_cap(spark):
     assert got == {(100, 101)}  # mega-bucket dropped, tiny kept
 
 
-def test_connected_components_alternating_agrees(spark):
-    # large-star/small-star must reach the same fixpoint as union-find
-    # on chains, stars, and random graphs
-    import random
-
-    from vectorsearchutil_spark.operators.dedup import connected_components
-
-    random.seed(7)
-    cases = [
-        [(i + 1, i) for i in range(1, 12)],          # deep chain
-        [(0, i) for i in range(1, 8)],               # star
-        [(random.randrange(40), random.randrange(40)) for _ in range(60)],
-    ]
-    for edges in cases:
-        edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-        alt = {
-            (r["node"], r["component"])
-            for r in connected_components(pairs, strategy="alternating").collect()
-        }
-        uf = {
-            (r["node"], r["component"])
-            for r in connected_components(pairs, strategy="driver").collect()
-        }
-        assert alt == uf, f"edges={edges}"
-
-
 def test_chunk_dedup_first_occurrence(spark):
     from vectorsearchutil_spark.operators.dedup import chunk_dedup
 

@@ -147,10 +147,8 @@ def test_every_query_executes_on_tiny_tables(spark, tiny_sf):
     a non-null vector/text/binary cell (26 crashes when first run).
     Every cell of every query output is hashed — value-materializing,
     not count()-pruned."""
-    from vectorsearchutil_spark import queries_pending as P
-
     crashed = {}
-    for name, fn in {**Q.QUERIES, **P.PENDING_QUERIES}.items():
+    for name, fn in {**Q.QUERIES, **Q.STAGED_QUERIES}.items():
         try:
             _materialize_all_cells(fn(spark, tiny_sf))
         except Exception as e:  # noqa: BLE001 — collecting the sweep

@@ -52,11 +52,8 @@ def _banned(type_str: str) -> bool:
 
 def _all_oracles() -> dict[str, str]:
     from vectorsearchutil_spark import queries as Q
-    from vectorsearchutil_spark import queries_pending as qp
 
-    merged = dict(qp.PENDING_ORACLES)
-    merged.update(Q.ORACLES)
-    return merged
+    return {**Q.STAGED_ORACLES, **Q.ORACLES}
 
 
 @pytest.fixture(scope="module")

@@ -801,7 +801,7 @@ def test_funnel_matches_naive(spark, events):
     users all generated)."""
     import datetime as dt
 
-    from vectorsearchutil_spark.queries_pending import funnel_conversion
+    from vectorsearchutil_spark.queries import funnel_conversion
 
     def t(m):
         return dt.datetime(2024, 1, 1, 12, m, 0)
@@ -850,7 +850,7 @@ def test_funnel_matches_naive(spark, events):
 def test_audience_overlap_matches_sets(spark, pairs):
     import datetime as dt
 
-    from vectorsearchutil_spark.queries_pending import audience_overlap
+    from vectorsearchutil_spark.queries import audience_overlap
 
     users = {}
     for u, ty in pairs:
@@ -893,7 +893,7 @@ def test_split_leakage_matches_naive(spark, n_docs, clusters):
     spanning >1 naive split."""
     import hashlib
 
-    from vectorsearchutil_spark.queries_pending import split_leakage
+    from vectorsearchutil_spark.queries import split_leakage
 
     def u(key):
         h = int(

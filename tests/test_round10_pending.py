@@ -1,4 +1,4 @@
-"""Unit tests for the round-10 staging wave (queries_pending.py:
+"""Unit tests for the round-10 staging wave (queries.py:
 Nelson-Aalen, Mann-Kendall + BH-FDR, EWMA forecast, DAU/MAU
 stickiness, diff-in-diff, trigram stupid backoff, template clusters,
 LOO source influence, quality ECE, price elasticity). The oracle gate
@@ -468,16 +468,15 @@ def sf001_docs(spark):
 
 def test_qsrc_quality_matches_live_quality_oracle():
     """_QSRC_CTE re-expresses the quality metric of _QUALITY_ORACLE
-    (list-side instead of explode-side). The formula now lives in
-    three places (textanalysis.QUALITY_STOPWORDS / queries.py /
-    queries_pending.py) — this DuckDB-only gate pins the two SQL
+    (list-side instead of explode-side). The formula lives in
+    three places (textanalysis.QUALITY_STOPWORDS and queries.py's
+    _QUALITY_ORACLE / _QSRC_CTE) — this DuckDB-only gate pins the two SQL
     formulations to per-doc equality on real data, so a future metric
     edit that misses one site goes red here instead of silently
     desyncing the LOO/ECE oracles (review r9)."""
     import duckdb
 
-    from vectorsearchutil_spark.queries import _QUALITY_ORACLE
-    from vectorsearchutil_spark.queries_pending import _QSRC_CTE
+    from vectorsearchutil_spark.queries import _QSRC_CTE, _QUALITY_ORACLE
 
     con = duckdb.connect()
     con.execute(
@@ -502,8 +501,7 @@ def test_quality_stopword_lists_agree_across_sites():
     from vectorsearchutil_spark.operators.textanalysis import (
         QUALITY_STOPWORDS,
     )
-    from vectorsearchutil_spark.queries import _QUALITY_ORACLE
-    from vectorsearchutil_spark.queries_pending import _QSRC_CTE
+    from vectorsearchutil_spark.queries import _QSRC_CTE, _QUALITY_ORACLE
 
     canonical = ",".join(f"'{w}'" for w in QUALITY_STOPWORDS)
     assert canonical in _QSRC_CTE.replace("\n", "").replace(" ", "").replace(

@@ -1,4 +1,4 @@
-"""Unit tests for the round-11 staging wave (queries_pending.py:
+"""Unit tests for the round-11 staging wave (queries.py:
 log-rank, Poisson rate test, Holt forecast, Hurst exponent, degree
 assortativity, common-neighbour link prediction, term burstiness,
 rater agreement, OCR garbage, TwoNN intrinsic dim, dim-split CKA).

@@ -1,6 +1,5 @@
-"""Unit tests for the round-6 pending operator wave (staged in
-vectorsearchutil_spark/queries_pending.py while the live registry is
-frozen). Oracle parity runs through CHECK_ORACLES_PENDING=1
+"""Unit tests for the round-6 operator wave
+(vectorsearchutil_spark/queries.py). Oracle parity runs through
 tools/check_oracles.py; these tests pin the operator SEMANTICS and
 the partitioning-invariance / bounded-state contracts."""
 
@@ -256,16 +255,6 @@ def test_truncation_stats_handmade(spark):
     assert rows[2]["total_tokens"] == 5
     assert rows[2]["lost_frac"] == 0.4
     assert rows[8]["n_truncated"] == 0 and rows[8]["lost_frac"] == 0.0
-
-
-def test_pending_registry_has_oracles():
-    from vectorsearchutil_spark.queries_pending import (
-        PENDING_ORACLES,
-        PENDING_QUERIES,
-    )
-
-    assert set(PENDING_ORACLES) == set(PENDING_QUERIES)
-    assert len(PENDING_QUERIES) >= 21
 
 
 # ---------------------------------------------------------------- containment

@@ -1,4 +1,4 @@
-"""Unit tests for the round-7 staging wave (queries_pending.py:
+"""Unit tests for the round-7 staging wave (queries.py:
 hapax ratio, daily peaks, Theil-Sen trend, block bootstrap, top-2
 PCA, sharded curriculum). The oracle gate runs separately via
 CHECK_ORACLES_PENDING=1; these pin the operator semantics on
@@ -141,7 +141,7 @@ def test_block_bootstrap_deterministic_and_sane(spark):
 
 
 def test_hapax_ratio_counts(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
     docs = spark.createDataFrame(
         [
@@ -159,7 +159,7 @@ def test_hapax_ratio_counts(spark, sf_dir):
         docs.write.parquet(os.path.join(tmp, "documents.parquet"))
         got = {
             r["source"]: r
-            for r in PENDING_QUERIES["docs_hapax_ratio"](
+            for r in QUERIES["docs_hapax_ratio"](
                 spark, tmp
             ).collect()
         }
@@ -232,7 +232,7 @@ def test_curriculum_sharded_equals_serial(spark, sf_dir):
     IDENTICAL total order as the windowed docs_curriculum_order —
     row-for-row, including global_pos."""
     from vectorsearchutil_spark.queries import QUERIES
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
     a = sorted(
         map(tuple, QUERIES["docs_curriculum_order"](spark, sf_dir).collect())
@@ -240,7 +240,7 @@ def test_curriculum_sharded_equals_serial(spark, sf_dir):
     b = sorted(
         map(
             tuple,
-            PENDING_QUERIES["docs_curriculum_sharded"](
+            QUERIES["docs_curriculum_sharded"](
                 spark, sf_dir
             ).collect(),
         )
@@ -249,7 +249,7 @@ def test_curriculum_sharded_equals_serial(spark, sf_dir):
 
 
 def test_retention_triangle_hand_case(spark):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
     import os
     import tempfile
 
@@ -273,7 +273,7 @@ def test_retention_triangle_hand_case(spark):
         ev.write.parquet(os.path.join(tmp, "events.parquet"))
         got = {
             (r["cohort_week"], r["age_w"]): r
-            for r in PENDING_QUERIES["events_retention_triangle"](
+            for r in QUERIES["events_retention_triangle"](
                 spark, tmp
             ).collect()
         }
@@ -292,10 +292,10 @@ def test_retention_triangle_hand_case(spark):
 def test_cluster_profile_counts(spark, sf_dir):
     """Totals must reconcile: sum(n_docs) over all size buckets ==
     total docs; singleton row = docs not in any near-dup cluster."""
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
     from vectorsearchutil_spark.sources.readers import load_table
 
-    out = PENDING_QUERIES["dedup_cluster_profile"](
+    out = QUERIES["dedup_cluster_profile"](
         spark, sf_dir
     ).collect()
     n_docs_total = load_table(spark, sf_dir, "documents").count()
@@ -310,7 +310,7 @@ def test_readability_hand_case(spark):
     import os
     import tempfile
 
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
     docs = spark.createDataFrame(
         [(1, "the cat sat. it sat!", "en", "s1", 20)],
@@ -319,7 +319,7 @@ def test_readability_hand_case(spark):
     )
     with tempfile.TemporaryDirectory() as tmp:
         docs.write.parquet(os.path.join(tmp, "documents.parquet"))
-        r = PENDING_QUERIES["docs_readability"](spark, tmp).collect()[0]
+        r = QUERIES["docs_readability"](spark, tmp).collect()[0]
     # words: the cat sat. it sat! -> 5; terminator runs: 2;
     # vowel groups in lowercase: e,a,a,i,a -> 5
     assert r["n_words"] == 5
@@ -339,7 +339,7 @@ def test_seasonal_decompose_identity_and_exactness(spark):
     import os
     import tempfile
 
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
     base = dt.datetime(2024, 1, 1, 12)
     rows = [
@@ -353,7 +353,7 @@ def test_seasonal_decompose_identity_and_exactness(spark):
     )
     with tempfile.TemporaryDirectory() as tmp:
         ev.write.parquet(os.path.join(tmp, "events.parquet"))
-        out = PENDING_QUERIES["events_seasonal_decompose"](
+        out = QUERIES["events_seasonal_decompose"](
             spark, tmp
         ).collect()
     assert len(out) == 21

@@ -1,162 +1,23 @@
-"""Round-8 diagnostics: hash echoes, integer twins, decomposition
-probes, canaries — plus the exact_ntile null-safe fix and the
+"""Round-8 diagnostics that stay live: the rfm per-customer base
+aggregate, the exact_ntile null-safe fix, the env canaries and the
 driver-strict canonicalizer round-trip (VERDICT r7 "Next round"
-#1/#3/#4/#8)."""
+#3/#4/#8)."""
 
 from __future__ import annotations
 
-import hashlib
-import math
-
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck():
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
-
-
 # ------------------------------------------------------------------
-# hash echoes
-# ------------------------------------------------------------------
-
-
-def test_hashecho_canonical_form_known_fixture(spark):
-    """_hashecho_df over a hand-built frame reproduces the digest a
-    by-hand canonicalization yields (NULL→N, float→ppm floor int,
-    byte-sorted rows)."""
-    from vectorsearchutil_spark.queries_pending import _hashecho_df
-
-    df = spark.createDataFrame(
-        [
-            (1, "b-row", 0.1234565),
-            (2, None, -0.5),
-            (3, "a-row", None),
-        ],
-        "id long, name string, score double",
-    )
-    rows = ["1,b-row,123457", "2,N,-500000", "3,a-row,N"]
-    # 0.1234565*1e6 = 123456.49999... in binary -> +0.5 floor = 123456?
-    # compute exactly the way the helper does, not by decimal intuition
-    rows[0] = "1,b-row," + str(int(math.floor(0.1234565 * 1e6 + 0.5)))
-    payload = "|".join(sorted(rows))
-    want = 1000 + int(hashlib.md5(payload.encode()).hexdigest()[:4], 16)
-    got = _hashecho_df(spark, df, float_cols=("score",))
-    assert got.count() == want
-    assert got.columns == ["hash_probe"]
-
-
-def test_hashecho_oracle_matches_python_on_fixture(spark):
-    """_echo_oracle's SQL assembly digests identically to
-    _hashecho_df for the same logical rows (incl. NULLs, negatives,
-    strings) — the cross-engine contract the probes rely on."""
-    from vectorsearchutil_spark.queries_pending import (
-        _echo_oracle,
-        _hashecho_df,
-    )
-
-    data = [
-        (10, "1995-03", 0.25),
-        (11, "1996-11", -1.0),
-        (12, None, None),
-    ]
-    df = spark.createDataFrame(data, "k long, label string, g double")
-    n_spark = _hashecho_df(spark, df, float_cols=("g",)).count()
-
-    base = (
-        "SELECT * FROM (VALUES (10, '1995-03', 0.25), "
-        "(11, '1996-11', -1.0), (12, NULL, NULL)) AS t(k, label, g)"
-    )
-    sql = _echo_oracle(
-        base, (("k", "s"), ("label", "s"), ("g", "f"))
-    )
-    n_duck = len(duckdb.connect().execute(sql).fetchall())
-    assert n_spark == n_duck
-
-
-def test_hashecho_empty_input(spark):
-    """Zero rows digest to md5('') — deterministic, never NULL."""
-    from vectorsearchutil_spark.queries_pending import _hashecho_df
-
-    df = spark.createDataFrame([], "id long, v double")
-    n = _hashecho_df(spark, df, float_cols=("v",)).count()
-    want = 1000 + int(hashlib.md5(b"").hexdigest()[:4], 16)
-    assert n == want
-
-
-def test_hashecho_entries_match_oracles_at_sf0001(spark):
-    """The three shipped echoes agree with their DuckDB twins at
-    sf0.001 (the full 3-scale evidence lives in the oracle gate)."""
-    from vectorsearchutil_spark import queries_pending as qp
-
-    con = _duck()
-    for name in (
-        "hashecho_yoy_growth",
-        "hashecho_rfm_scores",
-        "hashecho_kaplan_meier",
-    ):
-        n_spark = qp.PENDING_QUERIES[name](spark, SF).count()
-        n_duck = len(con.execute(qp.PENDING_ORACLES[name]).fetchall())
-        assert n_spark == n_duck, name
-
-
-# ------------------------------------------------------------------
-# integer twins
-# ------------------------------------------------------------------
-
-
-def test_yoy_ppm_twin_consistent_with_float(spark):
-    from vectorsearchutil_spark.operators.analytics import yoy_growth
-    from vectorsearchutil_spark.sources.readers import load_table
-
-    o = load_table(spark, SF, "orders")
-    fl = {
-        r["month"]: r["yoy_growth"]
-        for r in yoy_growth(o).collect()
-    }
-    pp = yoy_growth(o, fixed_point=True).collect()
-    assert pp and pp[0].__fields__[-1] == "yoy_growth_ppm"
-    for r in pp:
-        f = fl[r["month"]]
-        if r["yoy_growth_ppm"] is None:
-            assert f is None
-        else:
-            assert isinstance(r["yoy_growth_ppm"], int)
-            assert abs(f * 1e6 - r["yoy_growth_ppm"]) < 0.51
-
-
-def test_km_ppm_twin_consistent_with_float(spark):
-    from vectorsearchutil_spark.operators.analytics import kaplan_meier
-    from vectorsearchutil_spark.sources.readers import load_table
-
-    e = load_table(spark, SF, "events")
-    fl = {
-        r["delay_days"]: r["survival"] for r in kaplan_meier(e).collect()
-    }
-    pp = kaplan_meier(e, fixed_point=True).collect()
-    assert pp and pp[0].__fields__[-1] == "survival_ppm"
-    for r in pp:
-        assert isinstance(r["survival_ppm"], int)
-        assert abs(fl[r["delay_days"]] * 1e6 - r["survival_ppm"]) < 0.51
-
-
-# ------------------------------------------------------------------
-# decomposition probes + exact_ntile null path
+# rfm base aggregate + exact_ntile null path
 # ------------------------------------------------------------------
 
 
 def test_rfm_percust_is_rfm_scores_base(spark):
-    """The probe IS the base table rfm_scores quintiles over: joining
-    quintiles back reproduces rfm_scores row-for-row."""
+    """rfm_per_customer IS the base table rfm_scores quintiles over:
+    joining quintiles back reproduces rfm_scores row-for-row."""
     from vectorsearchutil_spark.operators.analytics import (
         rfm_per_customer,
         rfm_scores,
@@ -192,25 +53,6 @@ def test_exact_ntile_keeps_null_value_rows(spark):
     # order: 5,10,10,NULL,NULL (nulls last) -> buckets (n=5,k=2):
     # first 3 rows bucket 1, last 2 bucket 2
     assert got == {4: 1, 1: 1, 3: 1, 2: 2, 5: 2}
-
-
-def test_ntile_fixture_matches_duckdb_ntile(spark):
-    """The literal fixture probe agrees with DuckDB's own NTILE in
-    both directions (the driver comparison, run locally)."""
-    from vectorsearchutil_spark import queries_pending as qp
-
-    got = {
-        r["id"]: (r["bucket_asc"], r["bucket_desc"])
-        for r in qp.PENDING_QUERIES["rfm_ntile_fixture"](spark, SF).collect()
-    }
-    want = {
-        r[0]: (r[2], r[3])
-        for r in duckdb.connect()
-        .execute(qp.PENDING_ORACLES["rfm_ntile_fixture"])
-        .fetchall()
-    }
-    assert got == want
-    assert len(got) == 42
 
 
 # ------------------------------------------------------------------

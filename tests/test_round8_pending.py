@@ -1,4 +1,4 @@
-"""Unit tests for the round-8 staging wave (queries_pending.py:
+"""Unit tests for the round-8 staging wave (queries.py:
 Spearman / Kendall tau-b on the daily grid, transition entropy, Fano
 burstiness, boilerplate prefixes, n-gram novelty, chunk-overlap
 stats, PQ subspace distortion). The oracle gate runs separately via
@@ -311,9 +311,9 @@ def test_interpurchase_gaps(spark):
 
 
 def test_pair_similarity_histogram_bins(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
-    rows = PENDING_QUERIES["docs_pair_similarity_histogram"](
+    rows = QUERIES["docs_pair_similarity_histogram"](
         spark, sf_dir
     ).collect()
     assert all(10 <= r.sim_bin <= 19 for r in rows)  # j >= 0.5
@@ -324,10 +324,10 @@ def test_pair_similarity_histogram_bins(spark, sf_dir):
 
 def test_source_overlap_is_unordered_and_consistent(spark, sf_dir):
     from vectorsearchutil_spark.operators import dedup as _dd
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
     from vectorsearchutil_spark.sources.readers import load_table
 
-    out = PENDING_QUERIES["docs_source_overlap"](spark, sf_dir).collect()
+    out = QUERIES["docs_source_overlap"](spark, sf_dir).collect()
     # unordered pair labels: source_a <= source_b always
     assert all(r.source_a <= r.source_b for r in out)
     # total pair mass equals the raw pair table
@@ -337,9 +337,9 @@ def test_source_overlap_is_unordered_and_consistent(spark, sf_dir):
 
 
 def test_token_quantiles_monotone(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
-    rows = PENDING_QUERIES["docs_token_quantiles"](spark, sf_dir).collect()
+    rows = QUERIES["docs_token_quantiles"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.p50_tokens <= r.p90_tokens <= r.p99_tokens
@@ -582,9 +582,9 @@ def test_diversity_indices_uniform_and_degenerate(spark):
 
 
 def test_basket_histogram_shares_sum_to_one(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
-    out = PENDING_QUERIES["orders_basket_size_histogram"](
+    out = QUERIES["orders_basket_size_histogram"](
         spark, sf_dir
     ).collect()
     assert sum(r.n_orders for r in out) > 0
@@ -593,9 +593,9 @@ def test_basket_histogram_shares_sum_to_one(spark, sf_dir):
 
 
 def test_discount_band_net_le_gross(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
-    out = PENDING_QUERIES["lineitem_discount_band_profit"](
+    out = QUERIES["lineitem_discount_band_profit"](
         spark, sf_dir
     ).collect()
     assert out
@@ -607,7 +607,7 @@ def test_discount_band_net_le_gross(spark, sf_dir):
 
 def test_cluster_lang_purity_hand_built(spark):
     from vectorsearchutil_spark.operators import dedup as _dd
-    from vectorsearchutil_spark.queries_pending import (  # noqa: F401
+    from vectorsearchutil_spark.queries import (  # noqa: F401
         dedup_cluster_lang_purity,
     )
 
@@ -722,9 +722,9 @@ def test_seasonal_anomalies_flags_planted_spike(spark):
 
 
 def test_exact_dup_vectors_synthetic(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
-    out = PENDING_QUERIES["embeddings_exact_dup_vectors"](
+    out = QUERIES["embeddings_exact_dup_vectors"](
         spark, sf_dir).collect()
     tot_red = sum(r.n_redundant for r in out)
     tot_groups = sum(r.n_dup_groups for r in out)
@@ -735,9 +735,9 @@ def test_exact_dup_vectors_synthetic(spark, sf_dir):
 
 
 def test_dedup_impact_reconciles(spark, sf_dir):
-    from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
+    from vectorsearchutil_spark.queries import QUERIES
 
-    out = PENDING_QUERIES["docs_dedup_impact"](spark, sf_dir).collect()
+    out = QUERIES["docs_dedup_impact"](spark, sf_dir).collect()
     assert out
     for r in out:
         assert r.docs_after <= r.docs_before

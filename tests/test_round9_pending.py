@@ -1,4 +1,4 @@
-"""Unit tests for the round-9 staging wave (queries_pending.py wave
+"""Unit tests for the round-9 staging wave (queries.py wave
 7: triangle census, ordered funnel, dup-cluster-aware split leakage,
 semi-hard triplet mining, audience overlap). The oracle gate runs
 separately via CHECK_ORACLES_PENDING=1; these pin the operator
@@ -12,7 +12,7 @@ import pytest
 
 from vectorsearchutil_spark.operators.graph import triangle_count
 from vectorsearchutil_spark.operators.similarity import triplet_mining
-from vectorsearchutil_spark.queries_pending import (
+from vectorsearchutil_spark.queries import (
     audience_overlap,
     funnel_conversion,
     split_leakage,
@@ -283,7 +283,7 @@ def test_audience_overlap_disjoint_pairs_absent(spark):
 
 
 def test_recall_curve_hand_built(spark):
-    from vectorsearchutil_spark.queries_pending import recall_curve
+    from vectorsearchutil_spark.queries import recall_curve
 
     # cluster 0 around x=0, cluster 1 around x=10; one query vector
     # (vec_id 0) sits inside cluster 0. Its true top-7 = itself + the

@@ -829,7 +829,7 @@ def test_streaming_funnel_matches_batch_twin(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from vectorsearchutil_spark.queries_pending import funnel_conversion
+    from vectorsearchutil_spark.queries import funnel_conversion
     from vectorsearchutil_spark.sources.readers import load_table
     from vectorsearchutil_spark.streaming.stateful import streaming_funnel
 

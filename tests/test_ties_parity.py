@@ -59,13 +59,9 @@ def test_tie_sensitive_queries_match_oracles(spark, ties_sf):
 
     from tools.check_oracles import norm_rows
     from vectorsearchutil_spark import queries as Q
-    from vectorsearchutil_spark.queries_pending import (
-        PENDING_ORACLES,
-        PENDING_QUERIES,
-    )
 
-    qs = {**Q.QUERIES, **PENDING_QUERIES}
-    oracles = {**Q.ORACLES, **PENDING_ORACLES}
+    qs = {**Q.QUERIES, **Q.STAGED_QUERIES}
+    oracles = {**Q.ORACLES, **Q.STAGED_ORACLES}
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events "

@@ -9,6 +9,8 @@ driver's CORRECTNESS_r{N}.json format (rows_match / schema_match /
 hash_match / spark_rows / oracle_rows / err) — the committed
 CORRECTNESS_SELF_r{N}.json artifacts are produced this way, covering
 the ENTIRE registry (the driver's own file caps at ~50 entries).
+``CHECK_ORACLES_PENDING=1`` adds the staged entries
+(``queries.STAGED_QUERIES``).
 """
 
 from __future__ import annotations
@@ -152,16 +154,15 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if os.environ.get("CHECK_ORACLES_PENDING"):
-        # round-6 staging lane: validate the PENDING registry (kept
-        # out of __spark_entry__ while the live registry is frozen)
-        # through the same driver-strict gate
-        from vectorsearchutil_spark.queries_pending import (
-            PENDING_ORACLES,
-            PENDING_QUERIES,
+        # staged entries (kept out of __spark_entry__) go through the
+        # same driver-strict gate
+        from vectorsearchutil_spark.queries import (
+            STAGED_ORACLES,
+            STAGED_QUERIES,
         )
 
-        qs = {**qs, **PENDING_QUERIES}
-        oracles = {**oracles, **PENDING_ORACLES}
+        qs = {**qs, **STAGED_QUERIES}
+        oracles = {**oracles, **STAGED_ORACLES}
     failures = 0
     report: dict[str, dict] = {}
     for name, fn in qs.items():

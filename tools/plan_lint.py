@@ -15,7 +15,8 @@ Also reports per-query Exchange counts (informational — the shuffle
 budget is query-specific, so no global threshold is enforced).
 
 Usage: python tools/plan_lint.py [--json OUT.json] [name ...]
-Exit code 1 if any violation.
+Exit code 1 if any violation. ``PLAN_LINT_PENDING=1`` adds the staged
+entries (``queries.STAGED_QUERIES``).
 """
 
 from __future__ import annotations
@@ -40,9 +41,7 @@ def lint_all(names=None, sf_dir=SF_DIR):
     spark.sparkContext.setLogLevel("ERROR")
     entries = dict(Q.QUERIES)
     if os.environ.get("PLAN_LINT_PENDING"):
-        from vectorsearchutil_spark.queries_pending import PENDING_QUERIES
-
-        entries.update(PENDING_QUERIES)
+        entries.update(Q.STAGED_QUERIES)
     results, violations = {}, {}
     for name, fn in entries.items():
         if names and name not in names:

@@ -2,7 +2,7 @@
 self-kNN census path (VERDICT r9 "Next round" #6).
 
 Runs knn_hubness at 50k x 64-dim — the SAME shape as round 9's
-arrow-path probe (probe_round9_pending.py::probe_mutual_knn), so the
+arrow-path mutual-kNN probe (PERF.md, round 9), so the
 two physical strategies are directly comparable — plus the blocked
 path at 100k x 64 (4x the pair count), a size where the arrow path's
 driver collect is already the wrong posture. Also reports the auto

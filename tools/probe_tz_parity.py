@@ -69,17 +69,6 @@ DEFAULT_SLICE = [
     # round-9 staged calendar consumer (to_date + date_add day grid,
     # the same mechanism class as the wape entry above it)
     "orders_conformal_coverage",
-    # round-8 diagnostics that consume calendar functions (the
-    # COVERAGE.md window-composition rule): the integer twins and
-    # decomposition probes of the yoy/rfm/km family, plus the
-    # KM hash echo — the last also proves the engine-internal digest
-    # itself is zone-invariant (both engines' digests recompute under
-    # each hostile config and must still agree).
-    "orders_yoy_growth_ppm",
-    "events_kaplan_meier_ppm",
-    "orders_yoy_monthly",
-    "customer_rfm_percust",
-    "hashecho_kaplan_meier",
     # round-10 staged calendar consumers (the COVERAGE.md standing
     # rule): NA shares KM's epoch-floor day arithmetic; MK/FDR/EWMA
     # run on the to_date day grid; DAU/MAU adds date_add interval
@@ -143,16 +132,10 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    try:
-        from vectorsearchutil_spark.queries_pending import (
-            PENDING_ORACLES,
-            PENDING_QUERIES,
-        )
+    from vectorsearchutil_spark.queries import STAGED_ORACLES, STAGED_QUERIES
 
-        qs = {**PENDING_QUERIES, **qs}
-        oracles = {**PENDING_ORACLES, **oracles}
-    except Exception:
-        pass
+    qs = {**STAGED_QUERIES, **qs}
+    oracles = {**STAGED_ORACLES, **oracles}
 
     con = duckdb.connect()
     for t in (

@@ -291,7 +291,6 @@ def yoy_growth(
     orders: DataFrame,
     date_col: str = "o_orderdate",
     amount_col: str = "o_totalprice",
-    fixed_point: bool = False,
 ) -> DataFrame:
     """Monthly revenue with year-over-year growth. Aggregates to the
     month grid FIRST (exact-cents integer sums, map-side combinable),
@@ -301,12 +300,7 @@ def yoy_growth(
 
     ``yoy_growth`` is NULL for months with no prior-year row (or a
     zero prior-year revenue), rounded via the cross-engine floor form
-    otherwise. With ``fixed_point=True`` the growth column is emitted
-    as ``yoy_growth_ppm`` BIGINT — the same floor(g·1e6+0.5) fixpoint
-    WITHOUT the final /1e6 — the round-8 integer-twin probe (VERDICT
-    r7 "Next round" #3): if the twin greens while the float original
-    reds, the divergence channel is float representation in the
-    driver's hasher, not the computed values.
+    otherwise.
     """
     monthly = monthly_revenue(orders, date_col, amount_col)
     prev = monthly.select(
@@ -318,13 +312,6 @@ def yoy_growth(
         / F.when(F.col("prev_year_cents") != 0, F.col("prev_year_cents"))
         .cast("double")
     )
-    growth_out = (
-        F.floor(growth * F.lit(1e6) + F.lit(0.5))
-        .cast("long")
-        .alias("yoy_growth_ppm")
-        if fixed_point
-        else round_half_up(growth, 6).alias("yoy_growth")
-    )
     return (
         monthly.join(F.broadcast(prev), "_mi", "left")
         .select(
@@ -332,7 +319,7 @@ def yoy_growth(
             "n_orders",
             "revenue_cents",
             "prev_year_cents",
-            growth_out,
+            round_half_up(growth, 6).alias("yoy_growth"),
         )
     )
 
@@ -665,7 +652,6 @@ def kaplan_meier(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    fixed_point: bool = False,
 ) -> DataFrame:
     """Kaplan–Meier survival of time-to-conversion: per user, the
     whole-day delay from first ``start_type`` to first subsequent
@@ -682,13 +668,6 @@ def kaplan_meier(
     with a cumulative-flag guard so a day that converts its whole
     risk set pins survival to exactly 0 thereafter instead of
     feeding ln(0) into the sum.
-
-    With ``fixed_point=True`` the survival column is emitted as
-    ``survival_ppm`` BIGINT — the same floor(S·1e6+0.5) fixpoint
-    WITHOUT the final /1e6 — the round-8 integer-twin probe (VERDICT
-    r7 "Next round" #3): twin green + original red implicates float
-    representation in the driver's hasher; both red means the
-    computed values themselves differ.
     """
     risked = _survival_risk_table(
         events, start_type, convert_type, user_col, type_col, ts_col
@@ -714,20 +693,13 @@ def kaplan_meier(
     surv = F.when(F.col("_dead") == 1, F.lit(0.0)).otherwise(
         F.exp(F.col("_lnsum").cast("double") / F.lit(1e9))
     )
-    surv_out = (
-        F.floor(surv * F.lit(1e6) + F.lit(0.5))
-        .cast("long")
-        .alias("survival_ppm")
-        if fixed_point
-        else round_half_up(surv, 6).alias("survival")
-    )
     return (
         cum.filter(F.col("n_events") > 0)
         .select(
             "delay_days",
             F.col("n_at_risk").cast("long").alias("n_at_risk"),
             "n_events",
-            surv_out,
+            round_half_up(surv, 6).alias("survival"),
         )
     )
 

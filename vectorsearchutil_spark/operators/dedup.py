@@ -718,72 +718,6 @@ def _cc_driver(spark, edges) -> DataFrame:
     return local_frame(spark, out, "node long, component long")
 
 
-def _cc_alternating(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star/small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    converges in O(log² n) rounds vs O(diameter) for min-label
-    propagation — the path for deep near-dup chains at extreme scale.
-
-    ``edges`` comes in symmetric (both directions); the loop
-    maintains a canonical parent set (node > parent) and alternates:
-
-    * large-star: every node links its LARGER neighbors to the
-      minimum of its neighborhood (incl. itself);
-    * small-star: every node links its smaller-or-equal neighbors
-      (and itself) to their minimum.
-
-    Fixpoint = a star forest: each node points at its component
-    minimum directly.
-    """
-    # canonical parent pairs (a > b)
-    e = (
-        edges.filter(F.col("a") > F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        # --- large-star over the symmetric view
-        sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        m = (
-            sym.groupBy("a")
-            .agg(F.min("b").alias("_mb"))
-            .select("a", F.least("a", "_mb").alias("m"))
-        )
-        large = (
-            sym.filter(F.col("b") > F.col("a"))
-            .join(m, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # --- small-star over the oriented (a > b) view
-        m2 = large.groupBy("a").agg(F.min("b").alias("m"))
-        joined = large.join(m2, "a")
-        small = (
-            joined.select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .union(joined.select("a", F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # fixpoint: the canonical parent set stopped changing
-        changed = (
-            small.exceptAll(e).limit(1).count()
-            + e.exceptAll(small).limit(1).count()
-        )
-        e = small
-        if changed == 0:
-            break
-    # star forest: node → component for every non-root; roots label
-    # themselves
-    roots = e.select(F.col("b").alias("node")).distinct().join(
-        e.select(F.col("a").alias("node")).distinct(), "node", "left_anti"
-    )
-    return e.select(F.col("a").alias("node"), F.col("b").alias("component")).union(
-        roots.select("node", F.col("node").alias("component"))
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -802,11 +736,7 @@ def connected_components(
     the min; converges in O(component diameter) rounds (near-dup
     clusters are shallow — a handful of rounds in practice). Edges
     and labels are localCheckpoint-ed each round so iteration N is
-    one join, not a replay of rounds 1..N-1. At extreme scale the
-    alternating large-star/small-star variant (Kiveris et al.,
-    "Connected Components in MapReduce") cuts rounds to
-    O(log² n); min-propagation keeps the oracle-checkable exact
-    fixpoint with the same output.
+    one join, not a replay of rounds 1..N-1.
 
     ``strategy`` is size-gated physical strategy selection: an edge
     set of at most ``driver_max_edges`` (default 2M ≈ 32 MB) runs
@@ -814,8 +744,7 @@ def connected_components(
     the per-round join/checkpoint jobs. Larger edge sets (deep 100 TB
     near-dup graphs) take the distributed propagation. ``strategy=``
     forces a path: 'driver' / 'distributed' (min-label propagation,
-    O(diameter) rounds) / 'alternating' (large-star/small-star,
-    O(log² n) rounds — prefer for deep-chain graphs).
+    O(diameter) rounds).
 
     Under 'auto' the gate is one Arrow job (``collect_if_small``) that
     runs when this function is called; below the gate union-find runs
@@ -858,8 +787,6 @@ def connected_components(
         .distinct()
         .localCheckpoint()  # materialized once, reused every round
     )
-    if strategy == "alternating":
-        return _cc_alternating(edges, max_iter=max_iter)
     labels = edges.groupBy("a").agg(F.min("b").alias("nbr")).select(
         F.col("a").alias("node"), F.least("a", "nbr").alias("comp")
     )

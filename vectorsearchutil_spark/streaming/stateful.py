@@ -332,7 +332,7 @@ def streaming_funnel(
     steps: tuple[str, str, str] = ("view", "click", "purchase"),
 ) -> DataFrame:
     """Live ordered funnel — the streaming twin of the batch
-    ``events_funnel_conversion`` (queries_pending.funnel_conversion):
+    ``events_funnel_conversion`` (queries.funnel_conversion):
     a user reaches step k only via an event STRICTLY AFTER their
     step-(k−1) time. State per user is three longs (the microsecond
     first-completion time of each step, −1 = not reached). One row
