@@ -84,14 +84,13 @@ def _census_frames(spark, sf_dir, strategy):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
     hub = knn_hubness(
         emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=n, strategy=strategy,
+        metric="cosine", strategy=strategy,
     )
     mut = knn_mutual_pairs(
         emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=n, strategy=strategy,
+        metric="cosine", strategy=strategy,
     )
     return (
         sorted(tuple(r) for r in hub.collect()),

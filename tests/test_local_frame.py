@@ -1,7 +1,8 @@
 """Driver-built frames are JVM local relations (``session.local_frame``)
 and query text is encoded on the driver (``embedders.embed_local``):
 equivalence with the Python paths they replace, the store's job budget,
-and a lint that keeps ``createDataFrame(<list>)`` out of the engine."""
+a lint that keeps ``createDataFrame(<list>)`` out of the engine, and one
+that every name an ``except`` clause catches is bound."""
 
 import ast
 import datetime as dt
@@ -170,3 +171,46 @@ def test_engine_builds_local_frames_only_through_helper():
         "driver-built frames go through session.local_frame "
         f"(a Python-RDD scan otherwise): {offenders}"
     )
+
+
+def _module_bindings(tree: ast.Module) -> set[str]:
+    """Every name the module binds, at any depth: imports, defs,
+    classes and assignment targets."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update(
+                (a.asname or a.name).split(".")[0] for a in node.names
+            )
+        elif isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            names.add(node.name)
+        elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            names.add(node.id)
+    return names
+
+
+def test_except_clauses_name_bound_exceptions():
+    """An unbound name in an ``except`` clause only raises NameError
+    once the guarded code fails, so the handler never handles."""
+    import builtins
+
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            bound = _module_bindings(tree) | set(dir(builtins))
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.ExceptHandler) or not node.type:
+                    continue
+                offenders += [
+                    f"{os.path.relpath(path, PKG)}:{node.lineno} {n.id}"
+                    for n in ast.walk(node.type)
+                    if isinstance(n, ast.Name) and n.id not in bound
+                ]
+    assert not offenders, offenders

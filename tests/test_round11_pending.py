@@ -413,7 +413,7 @@ def test_twonn_matches_naive(spark):
         pts, "vec_id long, embedding array<double>"
     )
     out = intrinsic_dim_twonn(
-        df, vector_col="embedding", id_col="vec_id", n_rows=30
+        df, vector_col="embedding", id_col="vec_id"
     ).collect()[0]
 
     def cos(a, b):
@@ -450,7 +450,7 @@ def test_twonn_exact_duplicates_discarded(spark):
         "vec_id long, embedding array<double>",
     )
     out = intrinsic_dim_twonn(
-        df, vector_col="embedding", id_col="vec_id", n_rows=3
+        df, vector_col="embedding", id_col="vec_id"
     ).collect()[0]
     assert out.n_points == 3
     assert out.n_used == 1  # only point 3 has distinct 1st/2nd NN

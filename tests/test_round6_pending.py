@@ -341,7 +341,7 @@ def test_hubness_arrow_matches_expression(spark):
             k=5,
             vector_col="embedding",
             id_col="vec_id",
-            n_rows=10_000_000,  # force the gate over the cell limit
+            strategy="arrow",
         ).collect()
     }
     assert expr == arrow

@@ -416,11 +416,7 @@ def test_mutual_knn_strategy_equality(spark):
     ]
     df = spark.createDataFrame(rows, "id long, vector array<double>")
     a = knn_mutual_pairs(df, k=5).collect()[0]
-    # force the Arrow path via a fake large n_rows? No — the gate is
-    # n_rows^2*dim; 300 rows with n_rows passed honestly stays expr.
-    # Instead call the arrow top-k directly through the gate by
-    # passing n_rows large enough that the probe path triggers.
-    b = knn_mutual_pairs(df, k=5, n_rows=300_000).collect()[0]
+    b = knn_mutual_pairs(df, k=5, strategy="arrow").collect()[0]
     assert tuple(a) == tuple(b)
 
 

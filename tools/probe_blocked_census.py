@@ -6,8 +6,8 @@ arrow-path mutual-kNN probe (PERF.md, round 9), so the
 two physical strategies are directly comparable — plus the blocked
 path at 100k x 64 (4x the pair count), a size where the arrow path's
 driver collect is already the wrong posture. Also reports the auto
-dispatch at a synthetic n_rows above _SELF_KNN_COLLECT_MAX to prove
-the escalation wiring.
+dispatch with _SELF_KNN_COLLECT_MAX lowered below the input size to
+prove the escalation wiring.
 
 Usage: python tools/probe_blocked_census.py [probe ...]
 """
@@ -48,7 +48,7 @@ def probe_hubness_blocked_50k(spark):
     t0 = time.time()
     n = _force(knn_hubness(
         emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=50_000, strategy="blocked",
+        metric="cosine", strategy="blocked",
     ))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 50k x 64 (blocked, n_blocks=8) -> sum {n}"
@@ -62,7 +62,7 @@ def probe_hubness_arrow_50k(spark):
     t0 = time.time()
     n = _force(knn_hubness(
         emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=50_000, strategy="arrow",
+        metric="cosine", strategy="arrow",
     ))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 50k x 64 (arrow comparator) -> sum {n}"
@@ -78,32 +78,35 @@ def probe_hubness_blocked_100k(spark):
     t0 = time.time()
     n = _force(knn_hubness(
         emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=100_000, strategy="blocked",
+        metric="cosine", strategy="blocked",
     ))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 100k x 64 (blocked, n_blocks=8) -> sum {n}"
 
 
 def probe_auto_escalation(spark):
-    """auto + n_rows past _SELF_KNN_COLLECT_MAX must pick blocked
-    (plan fingerprint: applyInPandas stage present, no broadcast of
-    the query side). Runs on 2k real-size data — this probes the
-    DISPATCH, not the compute."""
-    from vectorsearchutil_spark.operators.knn import (
-        _SELF_KNN_COLLECT_MAX,
-        knn_hubness,
-    )
+    """auto on more points than _SELF_KNN_COLLECT_MAX must pick
+    blocked (plan fingerprint: applyInPandas stage present, no
+    broadcast of the query side). Runs on 2k points with the gate
+    lowered to 1k — this probes the DISPATCH, not the compute."""
+    import importlib
 
+    knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
     emb = _emb(spark, 2_000)
-    df = knn_hubness(
-        emb, k=5, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=_SELF_KNN_COLLECT_MAX + 1,
-    )
+    gate = knn_mod._SELF_KNN_COLLECT_MAX
+    knn_mod._SELF_KNN_COLLECT_MAX = 1_000
+    try:
+        df = knn_mod.knn_hubness(
+            emb, k=5, vector_col="embedding", id_col="vec_id",
+            metric="cosine",
+        )
+    finally:
+        knn_mod._SELF_KNN_COLLECT_MAX = gate
     plan = df._jdf.queryExecution().executedPlan().toString()
     picked_blocked = "FlatMapGroupsInPandas" in plan
     n = df.count()
     return (
-        f"auto@n_rows>{_SELF_KNN_COLLECT_MAX}: blocked={picked_blocked},"
+        f"auto@2000>gate 1000: blocked={picked_blocked},"
         f" {n} rows"
     )
 

@@ -23,12 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import l2_distance
-from vectorsearchutil_spark.session import collect_if_small, local_frame
+from vectorsearchutil_spark.session import (
+    collect_if_small,
+    local_frame,
+    table_matrix,
+)
 
 
-def _recompute_centroids(
-    assigned: DataFrame, vector_col: str, dim: int
-) -> DataFrame:
+def _recompute_centroids(assigned: DataFrame, vector_col: str) -> DataFrame:
     # posexplode + (cid,pos) groupBy beats a 64-column wide avg agg
     # here (measured ~1.5×): the narrow long-format aggregate stays in
     # one tight codegen loop while 64 separate element_at aggregates
@@ -161,17 +163,6 @@ def _round_half_up(values, decimals: int) -> list[float]:
     ]
 
 
-def _sorted_vectors(table, id_col: str, vector_col: str):
-    """(ids, float64 matrix) of a pulled (id, vector) table, in
-    ascending id order — the driver-side ``orderBy(id)``."""
-    import numpy as np
-
-    table = table.sort_by(id_col)
-    ids = table.column(id_col).to_pylist()
-    X = np.array(table.column(vector_col).to_pylist(), dtype=np.float64)
-    return ids, X
-
-
 def _kmeans_driver(
     spark,
     table,
@@ -186,8 +177,8 @@ def _kmeans_driver(
     rounding, empty cluster keeps its centroid)."""
     import numpy as np
 
-    ids, X = _sorted_vectors(table, id_col, vector_col)
-    if not ids:
+    ids, X = table_matrix(table, id_col, vector_col)
+    if not len(ids):
         # empty-in, empty-out (Spark convention): no data, no
         # clusters — found by the registry-wide empty-input sweep
         return (
@@ -239,7 +230,6 @@ def kmeans(
     dim: int = 64,
     strategy: str = "auto",
     driver_max_cells: int = 5_000_000,
-    n_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iterations`` Lloyd's steps; returns (assignments,
     centroids). Assignments: (id, cid, distance to its centroid).
@@ -265,9 +255,7 @@ def kmeans(
 
     Under 'auto' the gate is one Arrow job (``collect_if_small`` at
     ``driver_max_cells // dim`` rows) that runs when this function is
-    called; below the gate the driver path uses the rows it pulled.
-    Callers that already know the row count pass ``n_rows`` and the
-    gate runs no job."""
+    called; below the gate the driver path uses the rows it pulled."""
     # narrow working set — each Lloyd's round re-reads (id, vector)
     # only (at 100 TB: persist MEMORY_AND_DISK or checkpoint)
     from vectorsearchutil_spark.functions.vector import finite_vector
@@ -278,15 +266,9 @@ def kmeans(
         finite_vector(F.col(vector_col))
     )
     table = None
-    gated = strategy == "auto" and n_rows is None
-    if gated:
+    if strategy == "auto":
         table = collect_if_small(work, driver_max_cells // dim)
         strategy = "distributed" if table is None else "driver"
-    elif strategy == "auto":
-        strategy = (
-            "driver" if n_rows * dim <= driver_max_cells
-            else "distributed"
-        )
     if strategy == "driver":
         if table is None:
             table = work.toArrow()
@@ -295,10 +277,8 @@ def kmeans(
         )
     # the Lloyd's loop re-reads the working set every iteration
     work = work.cache()
-    if gated:
-        # above the gate: the row count sizes _assign's expression/BLAS
-        # choice, as a caller-supplied n_rows does
-        n_rows = work.count()
+    # the row count sizes _assign's expression/BLAS choice
+    n_rows = work.count()
     init = (
         work.orderBy(id_col)
         .limit(k)
@@ -308,7 +288,7 @@ def kmeans(
     cents = [(i, list(r["cv"])) for i, r in enumerate(init)]
     for _ in range(iterations):
         assigned = _assign(work, cents, vector_col, id_col, n_rows)
-        rows = _recompute_centroids(assigned, vector_col, dim).collect()
+        rows = _recompute_centroids(assigned, vector_col).collect()
         # a cluster that lost every member keeps its previous centroid
         # (deterministic, k never shrinks); the recompute groupBy only
         # emits cids with members, so merge over the prior set

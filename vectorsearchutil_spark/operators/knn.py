@@ -25,11 +25,16 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import cosine_similarity, l2_distance
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import (
+    collect_if_small,
+    local_frame,
+    table_matrix,
+)
 
 
 def _distance(metric: str, a: Column | str, b: Column | str) -> tuple[Column, bool]:
@@ -143,13 +148,12 @@ def knn_batch(
 #: zeroshot/_assign_blas wall — interpreted lambdas off codegen).
 _HUBNESS_BLAS_CELLS = 50_000_000
 
-#: Above this many valid points the self-kNN census paths stop
-#: collecting/broadcasting the query matrix (the arrow path collects
-#: the full point set driver-side, the expression path broadcasts it
-#: — both die at the driver/broadcast long before compute at 100 TB)
-#: and dispatch to the query-tiled ``_self_knn_topk_blocked`` form,
-#: which never materializes more than two hash-blocks per task
-#: (VERDICT r9 "What's wrong" #3 / "Next round" #6).
+#: The self-kNN size gate: up to this many valid points, ``auto``
+#: pulls the point set in one Arrow job and the arrow or expression
+#: path broadcasts it as the query side. Above it both would die at
+#: the driver/broadcast long before compute at 100 TB, so ``auto``
+#: dispatches to the query-tiled ``_self_knn_topk_blocked`` form,
+#: which never materializes more than two hash-blocks per task.
 _SELF_KNN_COLLECT_MAX = 2_000_000
 
 #: candidate-row budget for the arrow self-kNN fan-out: each partition
@@ -167,7 +171,6 @@ def knn_hubness(
     vector_col: str = "vector",
     id_col: str = "id",
     metric: str = "cosine",
-    n_rows: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
     """ANN hubness diagnostic: each point's *k-occurrence* — how many
@@ -186,12 +189,12 @@ def knn_hubness(
     then one count per neighbour id. The quadratic candidate stage is
     inherent to exact hubness — at 100 TB run it per IVF probe list
     or on a deterministic hash-sample of queries; the aggregation
-    side stays O(n). Passing ``n_rows`` (a metadata-cheap count)
-    gates the cosine scoring onto the Arrow path above
-    ``_HUBNESS_BLAS_CELLS`` — dim-at-a-time accumulation in the
-    JVM's fold order, so scores and therefore ranks are BIT-IDENTICAL
-    to the expression path (the zeroshot technique). Past
-    ``_SELF_KNN_COLLECT_MAX`` points (or with
+    side stays O(n). Under ``auto`` with cosine, one Arrow job pulls
+    the valid points when there are at most ``_SELF_KNN_COLLECT_MAX``
+    of them; above ``_HUBNESS_BLAS_CELLS`` of n²·dim work the Arrow
+    path scores them dim-at-a-time in the JVM's fold order, so scores
+    and therefore ranks are BIT-IDENTICAL to the expression path (the
+    zeroshot technique). Past the gate (or with
     ``strategy='blocked'``) the query side is hash-blocked instead
     of collected/broadcast — see ``_self_knn_topk_blocked`` — so no
     physical strategy here dies at the driver at 100 TB.
@@ -205,9 +208,7 @@ def knn_hubness(
         finite_vector(F.col(vector_col))
         & (l2_norm(F.col(vector_col)) != F.lit(0.0))
     )
-    neighbors = _self_knn_topk(
-        valid, k, vector_col, id_col, metric, n_rows, strategy
-    )
+    neighbors = _self_knn_topk(valid, k, vector_col, id_col, metric, strategy)
     occ = neighbors.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("int").alias("k_occurrence")
     )
@@ -227,13 +228,16 @@ def _self_knn_topk_expr(
     vector_col: str,
     id_col: str,
     metric: str,
+    table=None,
 ) -> DataFrame:
     """Expression-path exact self-kNN top-k: (_qid, id, _d, _rk) for
     every valid point's k nearest (self excluded). Shared by
-    ``knn_hubness`` and ``knn_mutual_pairs``."""
+    ``knn_hubness`` and ``knn_mutual_pairs``. The broadcast query side
+    is the pulled (id, vector) ``table`` when the gate has one."""
     from vectorsearchutil_spark.functions.parallel import fanout_repartition
 
-    queries = valid.select(
+    src = valid if table is None else local_frame(valid.sparkSession, table)
+    queries = src.select(
         F.col(id_col).alias("_qid"), F.col(vector_col).alias("_qv")
     )
     dist, asc = _distance(metric, F.col(vector_col), F.col("_qv"))
@@ -254,13 +258,26 @@ def _self_knn_topk_expr(
     )
 
 
+def _fold_norms(X):
+    """Row L2 norms of ``X``, summed one dimension at a time: the
+    JVM fold's addition order, so cosine scores stay bit-identical to
+    the expression path."""
+    import numpy as np
+
+    acc = np.zeros(len(X), dtype=np.float64)
+    for j in range(X.shape[1]):
+        col = X[:, j]
+        acc += col * col
+    return np.sqrt(acc)
+
+
 def _self_knn_topk_arrow(
-    valid: DataFrame, k: int, vector_col: str, id_col: str
+    valid: DataFrame, table, k: int, vector_col: str, id_col: str
 ) -> DataFrame:
     """Arrow form of the cosine self-kNN TOP-K (returns the
-    (_qid, id, _d, _rk) frame; callers aggregate): the full (pre-
-    filtered) point set broadcasts as the query matrix; the corpus
-    streams through ``mapInPandas`` in batches, scoring
+    (_qid, id, _d, _rk) frame; callers aggregate): the pulled (id,
+    vector) ``table`` of valid points broadcasts as the query matrix;
+    the corpus streams through ``mapInPandas`` in batches, scoring
     dim-at-a-time (``acc += X[:, j] * Q[:, j]``) so every dot and
     norm reproduces the JVM fold's rounding exactly (zeroshot-proven
     technique). Per (corpus-batch, query) only the batch-local top-k
@@ -278,22 +295,10 @@ def _self_knn_topk_arrow(
     )
 
     spark = valid.sparkSession
-    rows = sorted(
-        (int(r[0]), list(r[1]))
-        for r in valid.select(id_col, vector_col).collect()
-    )
-    qids = np.array([i for i, _ in rows], dtype=np.int64)
-    Q = np.array([v for _, v in rows], dtype=np.float64)
-    qn = []
-    for _, v in rows:
-        acc = 0.0
-        for x in v:
-            acc = acc + float(x) * float(x)
-        qn.append(acc**0.5)
-    qn = np.array(qn, dtype=np.float64)
+    qids, Q = table_matrix(table, id_col, vector_col)
     b_qids = spark.sparkContext.broadcast(qids)
     b_q = spark.sparkContext.broadcast(Q)
-    b_qn = spark.sparkContext.broadcast(qn)
+    b_qn = spark.sparkContext.broadcast(_fold_norms(Q))
 
     out_schema = StructType(
         [
@@ -318,11 +323,7 @@ def _self_knn_topk_arrow(
             X = np.array(list(pdf[vector_col]), dtype=np.float64)
             cids = pdf[id_col].to_numpy(dtype=np.int64)
             n = len(X)
-            xn = np.zeros(n, dtype=np.float64)
-            for j in range(d):
-                xj = X[:, j]
-                xn += xj * xj
-            xn = np.sqrt(xn)
+            xn = _fold_norms(X)
             take = min(int(k), n)
             for q0 in range(0, m, QBLOCK):
                 Qb = Qm[q0 : q0 + QBLOCK]
@@ -378,7 +379,7 @@ def _self_knn_topk_arrow(
     src = valid.select(id_col, vector_col)
     p = min(
         int(spark.sparkContext.defaultParallelism),
-        max(1, _SELF_KNN_CANDIDATE_BUDGET // max(1, len(rows) * int(k))),
+        max(1, _SELF_KNN_CANDIDATE_BUDGET // max(1, len(qids) * int(k))),
     )
     if p > 1:
         try:
@@ -491,13 +492,7 @@ def _self_knn_topk_blocked(
             part = part.sort_values("_id")
             ids = part["_id"].to_numpy(dtype=np.int64)
             m = np.array(list(part["_vec"]), dtype=np.float64)
-            # dim-at-a-time norm: identical addition order to the
-            # JVM fold and the arrow path's per-element loop
-            acc = np.zeros(len(m), dtype=np.float64)
-            for j in range(m.shape[1]):
-                col = m[:, j]
-                acc += col * col
-            return ids, m, np.sqrt(acc)
+            return ids, m, _fold_norms(m)
 
         def widened_cut(q, c, s):
             """Per-query tie-widened top-kk over a candidate pool.
@@ -619,38 +614,39 @@ def _self_knn_topk(
     vector_col: str,
     id_col: str,
     metric: str,
-    n_rows: int | None,
     strategy: str = "auto",
 ) -> DataFrame:
     """Strategy dispatch shared by ``knn_hubness`` /
     ``knn_mutual_pairs``: 'expr' (broadcast expression plan),
     'arrow' (driver query matrix, cosine only), 'blocked' (no
-    collect/broadcast, cosine only), or 'auto' — the measured BLAS
-    gate between expr and arrow, escalating to blocked once the
-    point set is too large to collect (``_SELF_KNN_COLLECT_MAX``).
-    All three cosine paths score bit-identically, so the choice is
-    invisible to results (strategy-equality tests)."""
+    collect/broadcast, cosine only), or 'auto'. For cosine, 'auto' is
+    one ``collect_if_small`` job at ``_SELF_KNN_COLLECT_MAX`` points:
+    above it blocked, below it the measured BLAS gate on n²·dim picks
+    arrow or expr, and either broadcasts the pulled table. 'auto' with
+    l2 is expr, with no gate job. All three cosine paths score
+    bit-identically, so the choice is invisible to results
+    (strategy-equality tests)."""
     if strategy not in ("auto", "expr", "arrow", "blocked"):
         raise ValueError(f"unknown self-kNN strategy {strategy!r}")
     if strategy in ("arrow", "blocked") and metric != "cosine":
         raise ValueError(f"strategy {strategy!r} supports cosine only")
-    if strategy == "expr":
+    if strategy == "expr" or metric != "cosine":
         return _self_knn_topk_expr(valid, k, vector_col, id_col, metric)
-    if strategy == "arrow":
-        return _self_knn_topk_arrow(valid, k, vector_col, id_col)
     if strategy == "blocked":
         return _self_knn_topk_blocked(valid, k, vector_col, id_col)
-    if n_rows and metric == "cosine":
-        if n_rows > _SELF_KNN_COLLECT_MAX:
-            return _self_knn_topk_blocked(valid, k, vector_col, id_col)
-        if n_rows * n_rows > _HUBNESS_BLAS_CELLS:
-            dim = 1
-        else:
-            probe = valid.select(vector_col).first()
-            dim = len(probe[0]) if probe and probe[0] is not None else 0
-        if n_rows * n_rows * dim > _HUBNESS_BLAS_CELLS:
-            return _self_knn_topk_arrow(valid, k, vector_col, id_col)
-    return _self_knn_topk_expr(valid, k, vector_col, id_col, metric)
+    points = valid.select(id_col, vector_col)
+    if strategy == "arrow":
+        return _self_knn_topk_arrow(
+            valid, points.toArrow(), k, vector_col, id_col
+        )
+    table = collect_if_small(points, _SELF_KNN_COLLECT_MAX)
+    if table is None:
+        return _self_knn_topk_blocked(valid, k, vector_col, id_col)
+    n = table.num_rows
+    dim = len(table.column(vector_col)[0]) if n else 0
+    if n * n * dim > _HUBNESS_BLAS_CELLS:
+        return _self_knn_topk_arrow(valid, table, k, vector_col, id_col)
+    return _self_knn_topk_expr(valid, k, vector_col, id_col, metric, table)
 
 
 def knn_mutual_pairs(
@@ -659,7 +655,6 @@ def knn_mutual_pairs(
     vector_col: str = "vector",
     id_col: str = "id",
     metric: str = "cosine",
-    n_rows: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
     """Reciprocal-nearest-neighbour census — the mutuality companion
@@ -673,7 +668,7 @@ def knn_mutual_pairs(
     2·pairs/edges).
 
     Same participation contract, exact top-k machinery, and
-    ``n_rows``-gated expr/arrow/blocked dispatch as ``knn_hubness``
+    size-gated expr/arrow/blocked dispatch as ``knn_hubness``
     (the scoring is bit-identical across all three paths, so the
     mutual join — which needs exact rank equality — is
     gate-invisible). The mutual self-join
@@ -691,9 +686,7 @@ def knn_mutual_pairs(
         finite_vector(F.col(vector_col))
         & (l2_norm(F.col(vector_col)) != F.lit(0.0))
     )
-    topk = _self_knn_topk(
-        valid, k, vector_col, id_col, metric, n_rows, strategy
-    )
+    topk = _self_knn_topk(valid, k, vector_col, id_col, metric, strategy)
     topk = topk.select("_qid", id_col).localCheckpoint(eager=False)
     fwd = topk.select(
         F.col("_qid").alias("id_a"), F.col(id_col).alias("id_b")
@@ -741,7 +734,6 @@ def intrinsic_dim_twonn(
     df: DataFrame,
     vector_col: str = "vector",
     id_col: str = "id",
-    n_rows: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017) from
@@ -772,9 +764,7 @@ def intrinsic_dim_twonn(
         finite_vector(F.col(vector_col))
         & (l2_norm(F.col(vector_col)) != F.lit(0.0))
     )
-    topk = _self_knn_topk(
-        valid, 2, vector_col, id_col, "cosine", n_rows, strategy
-    )
+    topk = _self_knn_topk(valid, 2, vector_col, id_col, "cosine", strategy)
     per = topk.groupBy("_qid").agg(
         F.max(F.when(F.col("_rk") == 1, F.col("_d"))).alias("_s1"),
         F.max(F.when(F.col("_rk") == 2, F.col("_d"))).alias("_s2"),

@@ -46,11 +46,12 @@ from vectorsearchutil_spark.functions.vector import (
     l2_squared,
     lit_double_sql,
 )
-from vectorsearchutil_spark.operators.clustering import (
-    _round_half_up,
-    _sorted_vectors,
+from vectorsearchutil_spark.operators.clustering import _round_half_up
+from vectorsearchutil_spark.session import (
+    collect_if_small,
+    local_frame,
+    table_matrix,
 )
-from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 Codebooks = list[list[list[float]]]  # [subspace][code][dim/m]
 
@@ -63,7 +64,6 @@ def pq_train(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     train_limit: int | None = 100_000,
-    n_rows: int | None = None,
 ) -> Codebooks:
     """Train m per-subspace codebooks of k centroids each.
 
@@ -93,12 +93,10 @@ def pq_train(
     )
     table = None
     if train_limit is not None:
-        if n_rows is None:
-            # one Arrow job: at or below the bound it IS the training set
-            table = collect_if_small(work, train_limit)
-            if table is None:
-                n_rows = work.count()  # sizes the sample's prefilter
-        if table is None and n_rows > train_limit:
+        # one Arrow job: at or below the bound it IS the training set
+        table = collect_if_small(work, train_limit)
+        if table is None:
+            n_rows = work.count()  # sizes the sample's prefilter
             u = hash_uniform(F.col(id_col).cast("string"), "pqtrain")
             # cheap narrow prefilter (expect ~2×train_limit survivors)
             # so the top-k heap never sees the full corpus
@@ -114,8 +112,8 @@ def pq_train(
             )
     if table is None:
         table = work.toArrow()
-    ids, X = _sorted_vectors(table, id_col, vector_col)
-    if not ids:
+    ids, X = table_matrix(table, id_col, vector_col)
+    if not len(ids):
         # a codebook is a fitted model — an empty corpus has no dim
         # and no centroids, so this is a declared error, not a crash
         # (callers that want empty-in/empty-out guard before training)

@@ -36,29 +36,19 @@ from pyspark.sql.types import (
 )
 
 from vectorsearchutil_spark.functions.vector import l2_distance
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import (
+    collect_if_small,
+    local_frame,
+    table_matrix,
+)
 
 
-def _collect_matrix(
-    df: DataFrame, id_col: str, vector_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collect (ids, row-major float64 matrix) for the broadcast side.
-
-    Zero rows yield a (0, 0) 2-D matrix — ``np.array([])`` is 1-D and
-    every ``axis=1`` reduction downstream would raise AxisError (the
-    empty-input class ADVICE r3 found in the blocked path)."""
-    rows = (
-        df.select(id_col, vector_col)
-        # a NULL vector cannot participate in any distance — drop it
-        # here so the object-dtype row doesn't poison the matrix
-        .filter(F.col(vector_col).isNotNull())
-        .collect()
+def _vectors(df: DataFrame, id_col: str, vector_col: str) -> DataFrame:
+    """The (id, vector) rows that can take part in a distance: a NULL
+    vector cannot, so it never reaches a matrix."""
+    return df.select(id_col, vector_col).filter(
+        F.col(vector_col).isNotNull()
     )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    if mat.ndim == 1:
-        mat = mat.reshape(len(ids), 0)
-    return ids, mat
 
 
 def neardup_pairs_matrix(
@@ -75,8 +65,21 @@ def neardup_pairs_matrix(
     qualifying pairs. One narrow pass, no shuffle at all; output is
     the (small) qualifying pair set.
     """
+    table = _vectors(df, id_col, vector_col).toArrow()
+    return _neardup_pairs_matrix(df, table, vector_col, id_col, threshold)
+
+
+def _neardup_pairs_matrix(
+    df: DataFrame,
+    table,
+    vector_col: str,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """``neardup_pairs_matrix`` over the corpus ``table`` already
+    pulled to the driver."""
     spark = df.sparkSession
-    ids, mat = _collect_matrix(df, id_col, vector_col)
+    ids, mat = table_matrix(table, id_col, vector_col)
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = 1.0
     normed = mat / norms[:, None]
@@ -123,10 +126,7 @@ def neardup_pairs_matrix(
     from vectorsearchutil_spark.functions.parallel import fanout_repartition
 
     return (
-        fanout_repartition(
-            df.select(id_col, vector_col)
-            .filter(F.col(vector_col).isNotNull())
-        )
+        fanout_repartition(_vectors(df, id_col, vector_col))
         .mapInPandas(compute, out_schema)
         .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
     )
@@ -248,7 +248,6 @@ def neardup_pairs(
     dim: int = 64,
     matrix_max_cells: int = 5_000_000,
     n_blocks: int = 32,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Exact cosine near-dup pairs with size-gated physical strategy
     (the broadcast-join analogy, mirroring ``kmeans(strategy="auto")``):
@@ -258,8 +257,9 @@ def neardup_pairs(
       the whole cost);
     * ``blocked`` — distributed block-pair tasks, no driver collect,
       identical results (the production path above the gate);
-    * ``auto`` — pick by ``n_rows·dim`` (pass ``n_rows`` when known
-      to avoid the sizing count job).
+    * ``auto`` — one Arrow job pulls the non-NULL (id, vector) rows
+      when there are at most ``matrix_max_cells // dim`` of them, and
+      the matrix path broadcasts that table; above the gate, blocked.
 
     The 5M-cell default gate (~78k×64) is MEASURED, not a memory
     bound: at 50k×64 the matrix path wins (0.6 s vs 1.5 s — task
@@ -270,11 +270,14 @@ def neardup_pairs(
     so the same oracle covers them.
     """
     if strategy == "auto":
-        if n_rows is None:
-            n_rows = df.count()
-        strategy = (
-            "matrix" if n_rows * dim <= matrix_max_cells else "blocked"
+        table = collect_if_small(
+            _vectors(df, id_col, vector_col), matrix_max_cells // dim
         )
+        if table is not None:
+            return _neardup_pairs_matrix(
+                df, table, vector_col, id_col, threshold
+            )
+        strategy = "blocked"
     if strategy == "matrix":
         return neardup_pairs_matrix(df, vector_col, id_col, threshold)
     return neardup_pairs_blocked(
@@ -303,7 +306,11 @@ def knn_batch_matrix(
     The corpus (the 100 TB side) never shuffles and is read once; the
     final window sees ≤ k rows per (query, batch)."""
     spark = corpus.sparkSession
-    q_ids, q_mat = _collect_matrix(queries, query_id_col, query_vector_col)
+    q_ids, q_mat = table_matrix(
+        _vectors(queries, query_id_col, query_vector_col).toArrow(),
+        query_id_col,
+        query_vector_col,
+    )
     if not len(q_ids):  # no queries → no result rows (not a worker error)
         return local_frame(
             spark,
@@ -597,18 +604,19 @@ def _lsh_plane(plane: int, dim: int) -> list[float]:
 
 
 def _verify_pairs_matrix(
-    df: DataFrame,
+    table,
     cand: DataFrame,
     vector_col: str,
     id_col: str,
     threshold: float,
 ) -> DataFrame:
-    """Exact-cosine verification of candidate pairs against a
-    broadcast normalized corpus matrix: per Arrow batch of (id_a,
-    id_b) pairs, two vectorized row lookups and one row-wise dot —
-    no vector joins, no interpreted per-pair array math."""
-    spark = df.sparkSession
-    ids, mat = _collect_matrix(df, id_col, vector_col)
+    """Exact-cosine verification of candidate pairs against the
+    pulled corpus ``table``, broadcast as a normalized matrix: per
+    Arrow batch of (id_a, id_b) pairs, two vectorized row lookups and
+    one row-wise dot — no vector joins, no interpreted per-pair array
+    math."""
+    spark = cand.sparkSession
+    ids, mat = table_matrix(table, id_col, vector_col)
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = 1.0
     b_ids = spark.sparkContext.broadcast(ids)
@@ -705,15 +713,20 @@ def cosine_lsh_pairs(
     cand = bucket_pairs(signed, id_col)
     # exact-cosine verify, size-gated (broadcast-join analogy): when
     # the corpus matrix fits comfortably in executor memory (default
-    # 50M cells = 400 MB float64), verify against the broadcast
-    # matrix — no vector joins, BLAS instead of interpreted per-pair
-    # array math. Larger corpora take the join path.
+    # 50M cells = 400 MB float64), one Arrow job pulls it and the
+    # verify runs against the broadcast matrix — no vector joins, BLAS
+    # instead of interpreted per-pair array math. Larger corpora take
+    # the join path.
+    table = None
     if verify == "auto":
-        verify = (
-            "matrix" if df.count() * dim <= matrix_max_cells else "join"
+        table = collect_if_small(
+            _vectors(df, id_col, vector_col), matrix_max_cells // dim
         )
+        verify = "join" if table is None else "matrix"
     if verify == "matrix":
-        out = _verify_pairs_matrix(df, cand, vector_col, id_col, threshold)
+        if table is None:
+            table = _vectors(df, id_col, vector_col).toArrow()
+        out = _verify_pairs_matrix(table, cand, vector_col, id_col, threshold)
         return out.select(
             "id_a", "id_b", F.round("cosine", 4).alias("cosine")
         )
@@ -819,15 +832,13 @@ def hard_negative_mining(
     id_col: str = "vec_id",
     label_col: str = "label",
     strategy: str = "auto",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor,
     the ``k`` corpus vectors MOST similar to it that carry a DIFFERENT
     label — the negatives that actually move a contrastive loss.
     Output: (anchor_id, id, cosine, rank).
 
-    Two size-gated physical strategies (identical results,
-    equality-tested; same gate discipline as ``neardup_pairs``):
+    Two physical strategies (identical results, equality-tested):
 
     * ``expr`` — anchors broadcast onto one corpus scan, per-pair
       cosine as an expression, per-anchor WindowGroupLimit cut. No
@@ -839,8 +850,8 @@ def hard_negative_mining(
       per-anchor rank. The expression form is interpreted per pair
       (HOFs sit outside codegen) — measured warm 6.9 s vs 2.1 s at
       500k×10×64, and the gap scales with the anchor count.
-    * ``auto`` — ``matrix`` above 50M rows×anchors×dim cells when
-      ``n_rows`` is known, else ``expr``.
+    * ``auto`` — ``expr``; callers that know their rows×anchors×dim
+      work is large (above ~50M cells) choose ``matrix``.
 
     For anchor sets too large to broadcast, route anchors through the
     IVF index first (``ivf_search``) and mine within probed lists.
@@ -851,18 +862,6 @@ def hard_negative_mining(
 
     from vectorsearchutil_spark.functions.vector import cosine_similarity
 
-    if strategy == "auto":
-        strategy = "expr"
-        if n_rows is not None:
-            a_rows = anchors.select(id_col).count()
-            dim = None
-            try:
-                first = anchors.select(vector_col).first()
-                dim = len(first[0]) if first else None
-            except Exception:
-                dim = None
-            if dim and n_rows * a_rows * dim > 50_000_000:
-                strategy = "matrix"
     if strategy == "matrix":
         return _hard_negatives_matrix(
             df, anchors, k, vector_col, id_col, label_col
@@ -1074,7 +1073,7 @@ def triplet_mining(
     compare — absorbing FP summation-order differences; a pre-
     quantization difference landing exactly on the grid boundary
     could in principle flip an n_hard/n_semihard count between
-    strategies. Same gate discipline as ``hard_negative_mining``):
+    strategies):
 
     * ``expr`` — anchors broadcast onto corpus scans, per-pair
       cosine as an expression. Right when rows×anchors×dim is small.

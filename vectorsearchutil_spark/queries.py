@@ -10232,8 +10232,7 @@ def embeddings_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return knn_hubness(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=emb.count(),
+        emb, k=10, vector_col="embedding", id_col="vec_id", metric="cosine"
     )
 
 
@@ -12617,15 +12616,15 @@ def embeddings_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = emb.filter(finite_vector(F.col("embedding"))).select(
         "vec_id", "embedding"
     ).cache()
-    n_rows = pts.count()
     _, centroids = kmeans(
-        emb, k=8, iterations=3, vector_col="embedding",
-        id_col="vec_id", n_rows=n_rows,
+        emb, k=8, iterations=3, vector_col="embedding", id_col="vec_id"
     )
     cents = [
         (r["cid"], list(r["cv"])) for r in centroids.collect()
     ]
-    ab = silhouette_ab(pts, cents, "embedding", "vec_id", n_rows=n_rows)
+    ab = silhouette_ab(
+        pts, cents, "embedding", "vec_id", n_rows=pts.count()
+    )
     a, b = F.col("a"), F.col("b")
     s = F.when(
         F.greatest(a, b) > 0, (b - a) / F.greatest(a, b)
@@ -15127,8 +15126,7 @@ def embeddings_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return knn_mutual_pairs(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", n_rows=emb.count(),
+        emb, k=10, vector_col="embedding", id_col="vec_id", metric="cosine"
     )
 
 
@@ -16493,10 +16491,7 @@ def embeddings_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectorsearchutil_spark.operators.knn import intrinsic_dim_twonn
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return intrinsic_dim_twonn(
-        emb, vector_col="embedding", id_col="vec_id",
-        n_rows=emb.count(),
-    )
+    return intrinsic_dim_twonn(emb, vector_col="embedding", id_col="vec_id")
 
 
 # --------------------------------------------------------------------------

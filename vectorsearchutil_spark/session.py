@@ -13,7 +13,9 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -148,10 +150,28 @@ def collect_if_small(df: DataFrame, n: int) -> pa.Table | None:
     ``localCheckpoint`` under ``df`` is materialized in full by this
     job (the limit's single-partition exchange computes every input
     partition), so a distributed path that follows reads it instead of
-    re-running the upstream plan.
+    re-running the upstream plan. ``limit`` takes a 32-bit int, so a
+    gate beyond that pulls ``df`` whole.
     """
-    table = df.limit(n + 1).toArrow()
+    table = (df.limit(n + 1) if n < 2**31 - 1 else df).toArrow()
     return table if table.num_rows <= n else None
+
+
+def table_matrix(
+    table: pa.Table, id_col: str, vector_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 ids, float64 row matrix) of a pulled (id, vector) table,
+    in ascending id order. Rows with a NULL vector are dropped; zero
+    rows give a (0, 0) matrix, so ``axis=1`` reductions stay defined."""
+    table = table.filter(pc.is_valid(table[vector_col])).sort_by(id_col)
+    ids = table.column(id_col).to_numpy().astype(np.int64)
+    vecs = table.column(vector_col).combine_chunks()
+    lens = pc.list_value_length(vecs).to_numpy()
+    if len(lens) and (lens != lens[0]).any():
+        raise ValueError(f"{vector_col}: vectors of unequal length")
+    dim = int(lens[0]) if len(lens) else 0
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return ids, flat.astype(np.float64).reshape(len(ids), dim)
 
 
 def _has_timestamp(dt: DataType) -> bool:

@@ -602,20 +602,18 @@ class VectorStore:
                     "index_path= required for cache-mode stores"
                 )
             index_path = base.rstrip("/") + "__ivf"
-        # one sizing count feeds BOTH gates (k-means driver/distributed
-        # and the assignment's expression/Arrow path — the HOF wall)
-        n_rows = self.data.count()
         _, centroids = kmeans(
-            self.data, k=n_lists, vector_col="vector", id_col="id",
-            n_rows=n_rows,
+            self.data, k=n_lists, vector_col="vector", id_col="id"
         )
         cents = centroids.select(
             F.col("cid").alias("centroid_id"),
             F.col("cv").alias("centroid_vec"),
         )
+        # the row count sizes the assignment's expression/Arrow path
+        # (the HOF wall)
         indexed = build_ivf_index(
             self.data, cents, vector_col="vector", id_col="id",
-            n_rows=n_rows,
+            n_rows=self.data.count(),
         )
         indexed.write.mode("overwrite").partitionBy("centroid_id").parquet(
             os.path.join(index_path, "lists")
