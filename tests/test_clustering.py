@@ -92,23 +92,37 @@ def test_kmeans_centroids_feed_ivf(spark, sf_dir):
 def test_assign_blas_equals_expression(spark, sf_dir):
     """The BLAS assignment path must reproduce the expression path
     exactly — cluster ids AND 4dp distances — on the same centroids
-    (tie-break included)."""
+    (tie-break included), and keep every input column. A NULL vector
+    takes the lowest cid with a NULL distance on both."""
     from vectorsearchutil_spark.operators import clustering as C
     from vectorsearchutil_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    work = emb.select("vec_id", "embedding")
     init = (
-        work.orderBy("vec_id").limit(8)
+        emb.orderBy("vec_id").limit(8)
         .selectExpr("cast(embedding as array<double>) cv").collect()
     )
     cents = [(i, list(r["cv"])) for i, r in enumerate(init)]
-    expr = {
-        r["vec_id"]: (r["cid"], round(r["_d"], 4))
-        for r in C._assign(work, cents, "embedding", "vec_id").collect()
-    }
-    blas = {
-        r["vec_id"]: (r["cid"], round(r["_d"], 4))
-        for r in C._assign_blas(work, cents, "embedding", "vec_id").collect()
-    }
+    work = emb.unionByName(
+        spark.createDataFrame(
+            [(10**6, None), (10**6 + 1, [0.0] * len(cents[0][1]))],
+            emb.select("vec_id", "embedding").schema,
+        ),
+        allowMissingColumns=True,
+    )
+
+    def rows(df):
+        return {
+            r["vec_id"]: (
+                r["cid"], None if r["_d"] is None else round(r["_d"], 4)
+            )
+            for r in df.collect()
+        }
+
+    expr_df = C._assign(work, cents, "embedding", False)
+    blas_df = C._assign_blas(work, cents, "embedding")
+    assert blas_df.schema == expr_df.schema
+    assert blas_df.columns == work.columns + ["cid", "_d"]
+    expr, blas = rows(expr_df), rows(blas_df)
     assert expr == blas
+    assert expr[10**6] == (0, None)

@@ -107,12 +107,6 @@ def test_vector_ops_on_degenerate_embeddings(frames):
     oq = one.selectExpr("vec_id AS query_id", "embedding AS query_vector")
     assert Sim.knn_batch_matrix(empty, oq, k=3).count() == 0
     assert Sim.hard_negative_mining(empty, one, k=2).count() == 0
-    assert (
-        Sim._hard_negatives_matrix(
-            empty, one, 2, "embedding", "vec_id", "label"
-        ).count()
-        == 0
-    )
 
 
 def test_session3_ops_on_degenerate_inputs(frames, spark):

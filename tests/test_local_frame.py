@@ -1,12 +1,14 @@
 """Driver-built frames are JVM local relations (``session.local_frame``)
 and query text is encoded on the driver (``embedders.embed_local``):
 equivalence with the Python paths they replace, the store's job budget,
-a lint that keeps ``createDataFrame(<list>)`` out of the engine, and one
-that every name an ``except`` clause catches is bound."""
+a lint that keeps ``createDataFrame(<list>)`` out of the engine, one
+that every name an ``except`` clause catches is bound, and one that no
+public function takes a sizing option."""
 
 import ast
 import datetime as dt
 import os
+import re
 import time
 
 import numpy as np
@@ -212,5 +214,34 @@ def test_except_clauses_name_bound_exceptions():
                     f"{os.path.relpath(path, PKG)}:{node.lineno} {n.id}"
                     for n in ast.walk(node.type)
                     if isinstance(n, ast.Name) and n.id not in bound
+                ]
+    assert not offenders, offenders
+
+
+#: sizing options: the size gates measure their input or read a module
+#: constant, so no caller passes a row count or a gate threshold
+_SIZING_PARAM = re.compile(r"n_rows|n_queries|n_corpus|\w*_max_cells|driver_max_edges")
+
+
+def test_public_functions_take_no_sizing_options():
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if not isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ) or node.name.startswith("_"):
+                    continue
+                a = node.args
+                offenders += [
+                    f"{os.path.relpath(path, PKG)}:{node.lineno} "
+                    f"{node.name}({p.arg})"
+                    for p in a.posonlyargs + a.args + a.kwonlyargs
+                    if _SIZING_PARAM.fullmatch(p.arg)
                 ]
     assert not offenders, offenders

@@ -198,29 +198,6 @@ def test_hard_negatives_plan_is_group_limited(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_hard_negatives_matrix_equals_expr(spark, sf_dir):
-    from vectorsearchutil_spark.operators.similarity import (
-        hard_negative_mining,
-    )
-    from vectorsearchutil_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    anchors = emb.filter("vec_id < 10")
-    expr = sorted(
-        tuple(r)
-        for r in hard_negative_mining(
-            emb, anchors, k=3, strategy="expr"
-        ).collect()
-    )
-    mat = sorted(
-        tuple(r)
-        for r in hard_negative_mining(
-            emb, anchors, k=3, strategy="matrix"
-        ).collect()
-    )
-    assert expr == mat and len(expr) == 30
-
-
 def test_token_budget_sample_respects_budgets(spark):
     from vectorsearchutil_spark.operators.sampling import token_budget_sample
 
@@ -286,9 +263,7 @@ def test_hard_negatives_ivf_all_probes_equals_exact(spark, sf_dir):
     anchors = emb.filter(F.col("vec_id") < 5)
     exact = sorted(
         tuple(r)
-        for r in hard_negative_mining(
-            emb, anchors, k=3, strategy="expr"
-        ).collect()
+        for r in hard_negative_mining(emb, anchors, k=3).collect()
     )
     full = sorted(
         tuple(r)

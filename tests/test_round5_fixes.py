@@ -370,21 +370,29 @@ def test_mad_zscore_rounding_matches_duckdb_on_boundary(spark, tmp_path):
     assert len(got) >= 1  # the boundary row actually came out
 
 
-def test_zeroshot_arrow_strategy_bit_identical(spark):
+def test_zeroshot_arrow_strategy_bit_identical(spark, monkeypatch):
     """The size-gated Arrow zeroshot path (the 302s -> 16s fix at
     2M x 100 labels) must produce BIT-IDENTICAL predictions and
     cosine scores to the expression path — the numpy form accumulates
     dot/norm folds one dim at a time in the same order with the same
     two roundings. Softmax probs may differ only by the documented
-    Math.exp-vs-libm last ulp (<= 1e-12 relative)."""
+    Math.exp-vs-libm last ulp (<= 1e-12 relative). A NULL and a
+    zero-norm vector get the lowest-index label and NULL scores on
+    both paths."""
     from pyspark.sql import functions as F
 
+    from vectorsearchutil_spark import session
     from vectorsearchutil_spark.operators.zeroshot import zeroshot
 
     emb = spark.range(2000).selectExpr(
         "id",
         "transform(sequence(1, 16), j -> pmod(xxhash64(id, j), 1000)"
         " / 1000.0) AS vector",
+    ).unionByName(
+        spark.createDataFrame(
+            [(2000, None), (2001, [0.0] * 16)],
+            "id long, vector array<double>",
+        )
     )
     labels = spark.range(5).selectExpr(
         "cast(id AS int) AS label_idx",
@@ -408,13 +416,18 @@ def test_zeroshot_arrow_strategy_bit_identical(spark):
             b = arrow_out[i]
             assert a["zeroshot_pred"] == b["zeroshot_pred"]
             assert a["score"] == b["score"]  # exact, not approx
-            if softmax:
+            if softmax and a["prob"] is None:
+                assert b["prob"] is None
+            elif softmax:
                 assert abs(a["prob"] - b["prob"]) <= 1e-12 * abs(a["prob"])
+        for i in (2000, 2001):
+            assert expr_out[i]["zeroshot_pred"] == "L0"
+            assert expr_out[i]["score"] is None
 
-    # the auto gate: small n_rows stays on the expression plan (no
-    # mapInPandas in it), big n_rows flips to Arrow
-    small = zeroshot(emb, labels, n_rows=2000)
-    big = zeroshot(emb, labels, n_rows=10_000_000)
-    assert "mapInPandas" not in small._jdf.queryExecution().toString()
-    assert "FlatMapGroupsInPandas" in big._jdf.queryExecution().toString() or \
-        "MapInPandas" in big._jdf.queryExecution().toString()
+    # the auto gate: 2002 rows × 5 labels × 16 dims stays on the
+    # expression plan (no MapInPandas in it); a zero wall flips it
+    small = zeroshot(emb, labels)
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
+    big = zeroshot(emb, labels)
+    assert "MapInPandas" not in small._jdf.queryExecution().toString()
+    assert "MapInPandas" in big._jdf.queryExecution().toString()

@@ -1335,7 +1335,8 @@ def test_top_pc_empty_input(spark):
     assert power_iteration_top_pc(emb).count() == 0
 
 
-def test_knn_label_vote_matrix_path_equals_expr_path(spark):
+def test_knn_label_vote_matrix_path_equals_expr_path(spark, monkeypatch):
+    from vectorsearchutil_spark import session
     from vectorsearchutil_spark.operators.evaluation import (
         knn_label_vote_eval,
     )
@@ -1355,10 +1356,7 @@ def test_knn_label_vote_matrix_path_equals_expr_path(spark):
     expr_path = sorted(
         knn_label_vote_eval(emb, pred, k=5).collect()
     )
-    # force the matrix gate with counts far above the cell threshold
-    blas_path = sorted(
-        knn_label_vote_eval(
-            emb, pred, k=5, n_queries=10**6, n_corpus=10**6
-        ).collect()
-    )
+    # a zero wall sends the measured gate to the matrix path
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
+    blas_path = sorted(knn_label_vote_eval(emb, pred, k=5).collect())
     assert expr_path == blas_path

@@ -405,11 +405,12 @@ def test_silhouette_separated_clusters_near_one(spark):
     assert got["lo"] > 0.95
 
 
-def test_silhouette_ab_strategy_equality(spark, sf_dir):
+def test_silhouette_ab_strategy_equality(spark, sf_dir, monkeypatch):
     """Expression path vs gated Arrow path of silhouette_ab — same
-    (cluster, a, b) per row on the real sf0.001 table (the clustering
-    strategy-equality discipline; near-tie caveat documented in the
-    docstring)."""
+    (cluster, a, b) per row on the real sf0.001 table plus a NULL and
+    a zero-norm vector (the clustering strategy-equality discipline;
+    near-tie caveat documented in the docstring)."""
+    from vectorsearchutil_spark import session
     from vectorsearchutil_spark.operators.clustering import (
         kmeans,
         silhouette_ab,
@@ -419,13 +420,17 @@ def test_silhouette_ab_strategy_equality(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     _, cents_df = kmeans(emb, k=8, iterations=3)
     cents = [(r["cid"], list(r["cv"])) for r in cents_df.collect()]
-    expr = sorted(
-        map(tuple, silhouette_ab(emb, cents, n_rows=10).collect())
-    )
-    arrow = sorted(
-        map(
-            tuple,
-            silhouette_ab(emb, cents, n_rows=10**9).collect(),
+    pts = emb.select("vec_id", "embedding")
+    pts = pts.unionByName(
+        spark.createDataFrame(
+            [(10**6, None), (10**6 + 1, [0.0] * len(cents[0][1]))],
+            pts.schema,
         )
     )
+    expr = sorted(map(tuple, silhouette_ab(pts, cents).collect()))
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
+    arrow_plan = silhouette_ab(pts, cents)
+    assert "MapInPandas" in arrow_plan._jdf.queryExecution().toString()
+    arrow = sorted(map(tuple, arrow_plan.collect()))
     assert expr == arrow
+    assert (10**6, 0, None, None) in expr

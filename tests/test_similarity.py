@@ -1,6 +1,7 @@
 import pyspark.sql.functions as F
 import pytest
 
+from vectorsearchutil_spark.operators import similarity as Sim
 from vectorsearchutil_spark.operators.knn import knn_batch
 from vectorsearchutil_spark.operators.similarity import (
     build_ivf_index,
@@ -77,19 +78,17 @@ def test_neardup_blocked_equals_matrix(emb):
         assert got == want, f"n_blocks={n_blocks}"
 
 
-def test_neardup_auto_gates_on_size(emb):
+def test_neardup_auto_gates_on_size(emb, monkeypatch):
     """auto must route big corpora to the blocked (collect-free)
     plan: with the gate forced below the corpus size the plan must
     contain no broadcast of a driver-built corpus matrix — assert by
     strategy equivalence of results."""
     # gate far below corpus cells → auto picks blocked
-    small_gate = neardup_pairs(
-        emb, threshold=0.4, strategy="auto", matrix_max_cells=1
-    )
+    monkeypatch.setattr(Sim, "_NEARDUP_MATRIX_MAX_CELLS", 1)
+    small_gate = neardup_pairs(emb, threshold=0.4, strategy="auto")
     # gate above corpus cells → auto picks matrix
-    big_gate = neardup_pairs(
-        emb, threshold=0.4, strategy="auto", matrix_max_cells=10**12
-    )
+    monkeypatch.setattr(Sim, "_NEARDUP_MATRIX_MAX_CELLS", 10**12)
+    big_gate = neardup_pairs(emb, threshold=0.4, strategy="auto")
     a = sorted((r["id_a"], r["id_b"]) for r in small_gate.collect())
     b = sorted((r["id_a"], r["id_b"]) for r in big_gate.collect())
     assert a == b and len(a) > 0

@@ -1,19 +1,27 @@
-"""The fused size gate (``session.collect_if_small``): one Arrow job
-decides a driver/distributed choice and, when small, holds the rows the
-driver path uses. Pins the helper's contract and job count, equality of
-every table-fed driver path with its forced ``strategy=`` path on both
-sides of the gate, the one-job build of the self-kNN and near-dup
-gates, and the store's small-batch pull."""
+"""The size gates. The fused pull gate (``session.collect_if_small``):
+one Arrow job decides a driver/distributed choice and, when small,
+holds the rows the driver path uses. Pins the helper's contract and job
+count, equality of every table-fed driver path with its forced
+``strategy=`` path on both sides of the gate, the one-job build of the
+self-kNN and near-dup gates, and the store's small-batch pull. The
+measured Arrow gate (``session.arrow_wins``): at a zero wall every
+operator behind it takes its Arrow twin and returns the expression
+path's rows."""
 
 import importlib
 import random
 
 import numpy as np
+import pyspark.sql.functions as F
 import pytest
 
+from vectorsearchutil_spark import session
 from vectorsearchutil_spark import store as store_mod
-from vectorsearchutil_spark.operators.clustering import kmeans
+from vectorsearchutil_spark.operators import clustering, graph
+from vectorsearchutil_spark.operators import similarity as Sim
+from vectorsearchutil_spark.operators.clustering import kmeans, silhouette_ab
 from vectorsearchutil_spark.operators.dedup import connected_components
+from vectorsearchutil_spark.operators.evaluation import knn_label_vote_eval
 from vectorsearchutil_spark.operators.graph import pagerank, triangle_count
 from vectorsearchutil_spark.operators.knn import (
     intrinsic_dim_twonn,
@@ -22,10 +30,14 @@ from vectorsearchutil_spark.operators.knn import (
 )
 from vectorsearchutil_spark.operators.pq import pq_train
 from vectorsearchutil_spark.operators.similarity import (
+    build_ivf_index,
     cosine_lsh_pairs,
     neardup_pairs,
+    triplet_mining,
 )
+from vectorsearchutil_spark.operators.zeroshot import zeroshot
 from vectorsearchutil_spark.plans.explain import formatted_plan
+from vectorsearchutil_spark.queries import recall_curve
 from vectorsearchutil_spark.session import collect_if_small
 from vectorsearchutil_spark.sources.readers import load_table
 from vectorsearchutil_spark.store import VectorStore
@@ -98,11 +110,12 @@ def _kmeans_rows(res):
     )
 
 
-def test_kmeans_gate_paths_agree(emb):
+def test_kmeans_gate_paths_agree(emb, monkeypatch):
     forced = _kmeans_rows(kmeans(emb, k=5, iterations=2, strategy="distributed"))
     below = _kmeans_rows(kmeans(emb, k=5, iterations=2))
     # a 1-cell gate sends the auto path above it, to the distributed plan
-    above = _kmeans_rows(kmeans(emb, k=5, iterations=2, driver_max_cells=1))
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_CELLS", 1)
+    above = _kmeans_rows(kmeans(emb, k=5, iterations=2))
     driver = _kmeans_rows(kmeans(emb, k=5, iterations=2, strategy="driver"))
     assert below == forced == above == driver
 
@@ -129,14 +142,14 @@ def _census(emb, strategy="auto"):
     )
 
 
-@pytest.mark.parametrize("blas_cells", [knn_mod._HUBNESS_BLAS_CELLS, 0])
+@pytest.mark.parametrize("blas_cells", [session.ARROW_MIN_CELLS, 0])
 def test_self_knn_auto_builds_with_one_job(spark, emb, monkeypatch, blas_cells):
     """The gate job is the only build job on both sides of the BLAS
     gate (expr at the default, arrow at 0): no count, no vector-size
     probe, no second collect. (``knn_mutual_pairs`` builds through the
     same dispatch; its lazy checkpoints add AQE stage jobs of their
     own.)"""
-    monkeypatch.setattr(knn_mod, "_HUBNESS_BLAS_CELLS", blas_cells)
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", blas_cells)
     kw = dict(vector_col="embedding", id_col="vec_id")
     for op in (knn_hubness, intrinsic_dim_twonn):
         jobs = _job_ids(
@@ -206,27 +219,30 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_connected_components_gate_paths_agree(pairs):
+def test_connected_components_gate_paths_agree(pairs, monkeypatch):
     forced = _rows(connected_components(pairs, strategy="distributed"))
     assert _rows(connected_components(pairs)) == forced
-    assert _rows(connected_components(pairs, driver_max_edges=2)) == forced
     assert _rows(connected_components(pairs, strategy="driver")) == forced
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 2)
+    assert _rows(connected_components(pairs)) == forced
 
 
-def test_pagerank_gate_paths_agree(pairs):
+def test_pagerank_gate_paths_agree(pairs, monkeypatch):
     edges = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
         pairs.selectExpr("id_b AS src", "id_a AS dst")
     )
     forced = _rows(pagerank(edges, strategy="distributed"))
     assert _rows(pagerank(edges)) == forced
-    assert _rows(pagerank(edges, driver_max_edges=3)) == forced
     assert _rows(pagerank(edges, strategy="driver")) == forced
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 3)
+    assert _rows(pagerank(edges)) == forced
 
 
-def test_triangle_count_gate_paths_agree(pairs):
+def test_triangle_count_gate_paths_agree(pairs, monkeypatch):
     forced = _rows(triangle_count(pairs, strategy="distributed"))
     assert _rows(triangle_count(pairs)) == forced
-    assert _rows(triangle_count(pairs, driver_max_edges=3)) == forced
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 3)
+    assert _rows(triangle_count(pairs)) == forced
     assert forced[0][2] > 0
 
 
@@ -239,6 +255,102 @@ def test_gated_operators_on_empty_input(spark):
         assert _rows(triangle_count(empty, strategy=strategy)) == [
             (0, 0, 0, 0, 0.0)
         ]
+
+
+# -- the measured Arrow gate -----------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def ivf_cents(emb):
+    # bigint ids, so the IVF schema check sees a type the assignment's
+    # own int cid is not
+    _, cents = kmeans(emb, k=4, iterations=1)
+    return cents.selectExpr(
+        "CAST(cid AS bigint) AS centroid_id", "cv AS centroid_vec"
+    )
+
+
+def _as_labels(cents):
+    return cents.selectExpr(
+        "centroid_id AS label_idx",
+        "CAST(centroid_id AS string) AS label",
+        "centroid_vec AS label_vec",
+    )
+
+
+def _cent_list(cents):
+    return [(r[0], list(r[1])) for r in cents.collect()]
+
+
+#: every operator behind ``session.arrow_wins``, on the sf embeddings
+_MEASURED_TWINS = {
+    "zeroshot": lambda emb, c: zeroshot(
+        emb, _as_labels(c), vector_col="embedding", id_col="vec_id"
+    ),
+    "build_ivf_index": lambda emb, c: build_ivf_index(emb, c),
+    "kmeans_distributed": lambda emb, c: kmeans(
+        emb, k=4, iterations=2, strategy="distributed"
+    )[0],
+    "silhouette_ab": lambda emb, c: silhouette_ab(emb, _cent_list(c)),
+    "triplet_mining": lambda emb, c: triplet_mining(emb),
+    "recall_curve": lambda emb, c: recall_curve(emb, c),
+    "knn_label_vote_eval": lambda emb, c: knn_label_vote_eval(
+        emb, F.col("vec_id") % 10 == 0, k=5
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MEASURED_TWINS))
+def test_measured_gate_auto_picks_arrow_at_zero_wall(
+    emb, ivf_cents, monkeypatch, name
+):
+    """At the default wall the sf inputs stay on the expression path;
+    with ``ARROW_MIN_CELLS`` at 0, ``auto`` takes the Arrow twin (a
+    MapInPandas in the plan, or a ``knn_batch_matrix`` call where a
+    lazy checkpoint hides the plan) and returns the same rows under
+    the same schema."""
+    matrix_calls = []
+    real_matrix = Sim.knn_batch_matrix
+
+    def spy(*args, **kwargs):
+        matrix_calls.append(1)
+        return real_matrix(*args, **kwargs)
+
+    monkeypatch.setattr(Sim, "knn_batch_matrix", spy)
+
+    def arrow_path(df):
+        plan = df._jdf.queryExecution().toString()
+        return "MapInPandas" in plan or bool(matrix_calls)
+
+    op = _MEASURED_TWINS[name]
+    expr = op(emb, ivf_cents)
+    assert not arrow_path(expr)
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
+    arrow = op(emb, ivf_cents)
+    assert arrow_path(arrow)
+    assert arrow.schema == expr.schema
+    assert _rows(arrow) == _rows(expr)
+
+
+def test_build_ann_index_sizes_kmeans_gate_by_store_width(
+    spark, tmp_path, monkeypatch
+):
+    """The k-means pull gate is ``_DRIVER_MAX_CELLS // dim`` rows, so
+    the store passes its own vector width rather than the 64-d
+    default (a 384-d store would pull 6× the cell budget)."""
+    seen = []
+
+    def spy(*args, **kwargs):
+        seen.append(kwargs.get("dim"))
+        return kmeans(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "kmeans", spy)
+    vs = VectorStore(spark, path=str(tmp_path / "s"))
+    vs.set_data(
+        spark.createDataFrame([(f"doc {i}",) for i in range(20)], ["target"])
+    )
+    vs.build_ann_index(n_lists=2)
+    assert seen == [vs.vec_size]
 
 
 # -- store client batches ---------------------------------------------------

@@ -25,7 +25,7 @@ cents.count()
 t_kmeans = time.time() - t0
 
 t0 = time.time()
-idx = build_ivf_index(emb, cents, n_rows=N)  # gated Arrow assignment
+idx = build_ivf_index(emb, cents)  # measured gate: Arrow assignment
 path = "/tmp/ivf2m_index"
 shutil.rmtree(path, ignore_errors=True)
 idx.write.partitionBy("centroid_id").parquet(path)

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 
 from vectorsearchutil_spark.functions.vector import l2_distance
 from vectorsearchutil_spark.session import (
+    arrow_wins,
+    batch_matrix,
     collect_if_small,
     local_frame,
     table_matrix,
@@ -50,28 +52,31 @@ def _recompute_centroids(assigned: DataFrame, vector_col: str) -> DataFrame:
     )
 
 
-#: expression-assignment work gate: rows×k×dim lambda evaluations run
-#: interpreted (HOFs sit outside whole-stage codegen), so beyond this
-#: many "cells" the Arrow/BLAS path wins decisively (measured at
-#: 125k×64, 2 iterations: k=32 12.7 → 7.0 s, k=128 28.1 → 5.1 s —
-#: the expression path scales linearly in k, the BLAS path is flat;
-#: below the gate the expression path avoids Python-worker startup)
-_ASSIGN_BLAS_CELLS = 50_000_000
+#: ``kmeans``' driver gate: a working set of at most this many float64
+#: cells (≈ 40 MB) runs Lloyd's on the driver
+_DRIVER_MAX_CELLS = 5_000_000
 
 
 def _assign_blas(
     df: DataFrame,
     cents: list[tuple[int, list[float]]],
     vector_col: str,
-    id_col: str,
 ) -> DataFrame:
-    """BLAS form of ``_assign``: per Arrow batch, squared distances
+    """BLAS form of ``_assign`` (same output: ``df``'s columns + cid,
+    _d): per Arrow batch, squared distances
     accumulate one centroid at a time (memory n_batch×dim, never
     n_batch×k×dim), argmin over the k columns. Ties break to the
     lowest cid exactly like the expression form (centroids are
-    iterated in cid order and argmin keeps the first minimum)."""
+    iterated in cid order and argmin keeps the first minimum); a NULL
+    vector scores NaN everywhere, so it takes the lowest cid with a
+    NULL distance, as there."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
 
     ordered = sorted(cents)
     cids = np.array([c for c, _ in ordered], dtype=np.int64)
@@ -79,36 +84,31 @@ def _assign_blas(
 
     def assign(batches):
         for pdf in batches:
-            X = np.array(list(pdf[vector_col]), dtype=np.float64)
-            if not len(X):
+            if not len(pdf):
                 continue
+            X = batch_matrix(pdf[vector_col], C.shape[1])
             d2 = np.empty((len(X), len(cids)), dtype=np.float64)
             for j in range(len(cids)):
                 diff = X - C[j]
                 d2[:, j] = np.einsum("ij,ij->i", diff, diff)
             best = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vector_col: pdf[vector_col],
-                    "cid": cids[best].astype(np.int32),
-                    "_d": np.sqrt(d2[np.arange(len(X)), best]),
-                }
+            yield pdf.assign(
+                cid=cids[best].astype(np.int32),
+                _d=np.sqrt(d2[np.arange(len(X)), best]),
             )
 
-    vec_type = df.schema[vector_col].dataType.simpleString()
-    return df.select(id_col, vector_col).mapInPandas(
-        assign,
-        f"{id_col} long, {vector_col} {vec_type}, cid int, _d double",
+    out = StructType(
+        df.schema.fields
+        + [StructField("cid", IntegerType()), StructField("_d", DoubleType())]
     )
+    return df.mapInPandas(assign, out)
 
 
 def _assign(
     df: DataFrame,
     cents: list[tuple[int, list[float]]],
     vector_col: str,
-    id_col: str,
-    n_rows: int | None = None,
+    blas: bool,
 ) -> DataFrame:
     """Assign each row to its nearest centroid.
 
@@ -120,14 +120,12 @@ def _assign(
     never moves. Data-driven (not literal-inlined) centroids keep
     the generated code small and stable across iterations.
 
-    Above ``_ASSIGN_BLAS_CELLS`` of rows×k×dim work the HOF lambdas
-    (interpreted, outside codegen) lose to the Arrow/BLAS path and
-    ``_assign_blas`` takes over — same results, tie-break included
-    (strategy-equality test-asserted)."""
-    if n_rows is not None and cents:
-        cells = n_rows * len(cents) * len(cents[0][1])
-        if cells > _ASSIGN_BLAS_CELLS:
-            return _assign_blas(df, cents, vector_col, id_col)
+    ``blas`` is the caller's ``session.arrow_wins`` verdict: above
+    the wall the HOF lambdas (interpreted, outside codegen) lose to
+    the Arrow/BLAS path and ``_assign_blas`` takes over — same
+    results, tie-break included (strategy-equality test-asserted)."""
+    if blas:
+        return _assign_blas(df, cents, vector_col)
     spark = df.sparkSession
     cents_row = local_frame(
         spark,
@@ -229,7 +227,6 @@ def kmeans(
     id_col: str = "vec_id",
     dim: int = 64,
     strategy: str = "auto",
-    driver_max_cells: int = 5_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iterations`` Lloyd's steps; returns (assignments,
     centroids). Assignments: (id, cid, distance to its centroid).
@@ -247,15 +244,19 @@ def kmeans(
 
     ``strategy`` is size-gated physical strategy selection (the
     broadcast-join analogy): when the working set is at most
-    ``driver_max_cells`` float64 cells (default 5M ≈ 40 MB) the
-    Lloyd's loop runs on the driver in numpy — identical math, none
-    of the per-iteration job/shuffle overhead. Above the gate (any
-    real corpus) the distributed plan runs. ``strategy=`` forces
-    either path ('driver' / 'distributed').
+    ``_DRIVER_MAX_CELLS`` float64 cells (5M ≈ 40 MB) the Lloyd's loop
+    runs on the driver in numpy — identical math, none of the
+    per-iteration job/shuffle overhead. Above the gate (any real
+    corpus) the distributed plan runs, and its assignment takes the
+    Arrow/BLAS form past ``session.ARROW_MIN_CELLS`` of rows×k×dim
+    work. ``strategy=`` forces either path ('driver' /
+    'distributed').
 
     Under 'auto' the gate is one Arrow job (``collect_if_small`` at
-    ``driver_max_cells // dim`` rows) that runs when this function is
-    called; below the gate the driver path uses the rows it pulled."""
+    ``_DRIVER_MAX_CELLS // dim`` rows) that runs when this function is
+    called; below the gate the driver path uses the rows it pulled.
+    ``dim`` is the vector width the caller declares, read before
+    anything is pulled."""
     # narrow working set — each Lloyd's round re-reads (id, vector)
     # only (at 100 TB: persist MEMORY_AND_DISK or checkpoint)
     from vectorsearchutil_spark.functions.vector import finite_vector
@@ -267,7 +268,7 @@ def kmeans(
     )
     table = None
     if strategy == "auto":
-        table = collect_if_small(work, driver_max_cells // dim)
+        table = collect_if_small(work, _DRIVER_MAX_CELLS // dim)
         strategy = "distributed" if table is None else "driver"
     if strategy == "driver":
         if table is None:
@@ -277,8 +278,6 @@ def kmeans(
         )
     # the Lloyd's loop re-reads the working set every iteration
     work = work.cache()
-    # the row count sizes _assign's expression/BLAS choice
-    n_rows = work.count()
     init = (
         work.orderBy(id_col)
         .limit(k)
@@ -286,15 +285,17 @@ def kmeans(
         .collect()
     )
     cents = [(i, list(r["cv"])) for i, r in enumerate(init)]
+    # measured once: every iteration assigns the same rows to k centroids
+    blas = arrow_wins(work, [v for _, v in cents])
     for _ in range(iterations):
-        assigned = _assign(work, cents, vector_col, id_col, n_rows)
+        assigned = _assign(work, cents, vector_col, blas)
         rows = _recompute_centroids(assigned, vector_col).collect()
         # a cluster that lost every member keeps its previous centroid
         # (deterministic, k never shrinks); the recompute groupBy only
         # emits cids with members, so merge over the prior set
         new = {r["cid"]: list(r["cv"]) for r in rows}
         cents = sorted((c, new.get(c, v)) for c, v in cents)
-    final = _assign(work, cents, vector_col, id_col, n_rows)
+    final = _assign(work, cents, vector_col, blas)
     centroids = local_frame(
         df.sparkSession,
         [(int(c), list(v)) for c, v in cents], "cid int, cv array<double>"
@@ -314,19 +315,21 @@ def silhouette_ab(
     cents: list[tuple[int, list[float]]],
     vector_col: str = "embedding",
     id_col: str = "vec_id",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Per-row centroid-silhouette inputs: (id, cluster, a, b) with
     a = distance to the nearest centroid (= own cluster, ties lowest
     cid) and b = distance to the nearest OTHER centroid, both rounded
     to 4dp AFTER the unrounded argmin (the kmeans tie-break).
 
-    Physical strategy mirrors :func:`_assign`: below
-    ``_ASSIGN_BLAS_CELLS`` of rows×k×dim work, a narrow
+    Physical strategy mirrors :func:`_assign`, gated by one
+    ``session.arrow_wins`` count of ``df``: below
+    ``session.ARROW_MIN_CELLS`` of rows×k×dim work, a narrow
     expression plan (one broadcast×corpus pass, per-row struct sort
     over k entries — no collect_list shuffle); above it, the
     Arrow/numpy path computes the n×k distance block per batch with
-    the SAME centroid-at-a-time accumulation as ``_assign_blas``.
+    the SAME centroid-at-a-time accumulation as ``_assign_blas``. A
+    NULL vector gives the lowest cid with NULL ``a`` and ``b`` on
+    both paths.
     Near-tie caveat (same class as the kNN gate): the two paths'
     float sums can differ in the last ulps, so a point exactly
     between two centroids may flip — strategy equality is asserted on
@@ -334,10 +337,7 @@ def silhouette_ab(
     import math
 
     ordered = sorted(cents)
-    cells = (n_rows or 0) * max(1, len(ordered)) * (
-        len(ordered[0][1]) if ordered else 1
-    )
-    if n_rows is not None and cells > _ASSIGN_BLAS_CELLS:
+    if arrow_wins(df, [v for _, v in ordered]):
         import numpy as np
         import pandas as pd
 
@@ -346,9 +346,9 @@ def silhouette_ab(
 
         def ab(batches):
             for pdf in batches:
-                X = np.array(list(pdf[vector_col]), dtype=np.float64)
-                if not len(X):
+                if not len(pdf):
                     continue
+                X = batch_matrix(pdf[vector_col], C.shape[1])
                 d2 = np.empty((len(X), len(cids)), dtype=np.float64)
                 for j in range(len(cids)):
                     diff = X - C[j]

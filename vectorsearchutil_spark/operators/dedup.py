@@ -38,6 +38,7 @@ from vectorsearchutil_spark.functions.text import (
     tokens,
 )
 from vectorsearchutil_spark.functions.vector import cosine_similarity
+from vectorsearchutil_spark.operators import graph
 from vectorsearchutil_spark.session import collect_if_small, local_frame
 
 
@@ -724,7 +725,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 25,
     strategy: str = "auto",
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over a near-dup pair list: (node,
     component) where component = the minimum node id reachable from
@@ -739,7 +739,7 @@ def connected_components(
     one join, not a replay of rounds 1..N-1.
 
     ``strategy`` is size-gated physical strategy selection: an edge
-    set of at most ``driver_max_edges`` (default 2M ≈ 32 MB) runs
+    set of at most ``graph._DRIVER_MAX_EDGES`` (2M ≈ 32 MB) runs
     union-find on the driver — the same fixpoint in one pass, none of
     the per-round join/checkpoint jobs. Larger edge sets (deep 100 TB
     near-dup graphs) take the distributed propagation. ``strategy=``
@@ -776,7 +776,7 @@ def connected_components(
         # and push the graph onto the distributed path early —
         # correctness is unaffected either way (union-find and
         # min-label are duplicate-invariant).
-        small = collect_if_small(half, driver_max_edges // 2)
+        small = collect_if_small(half, graph._DRIVER_MAX_EDGES // 2)
         if small is not None:
             return _cc_driver(spark, small)
         strategy = "distributed"

@@ -157,9 +157,6 @@ def knn_label_vote_eval(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    n_queries: int | None = None,
-    n_corpus: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Holdout kNN-classifier evaluation: predict each holdout
     vector's label by majority vote of its k nearest corpus
@@ -177,10 +174,9 @@ def knn_label_vote_eval(
 
     Scale shape: the top-k stage IS batch kNN, so it inherits the
     measured paths — the JVM expression plan below the
-    ``knn._HUBNESS_BLAS_CELLS`` cell gate, the broadcast-query Arrow
-    matrix plan above it (pass ``n_queries``/``n_corpus`` hints to
-    enable the gate, and ``dim`` to keep gating metadata-cheap —
-    without it the gate probes one corpus row, an eager scan job).
+    ``session.ARROW_MIN_CELLS`` wall, the broadcast-query Arrow
+    matrix plan above it. The gate collects the holdout vectors
+    (k × dim) and counts the corpus once (``session.arrow_wins``).
     Either way the corpus never shuffles; votes aggregate <= k rows
     per query and accuracy is a <= |labels|-row aggregate after that.
 
@@ -196,10 +192,8 @@ def knn_label_vote_eval(
     from pyspark.sql import Window
 
     from vectorsearchutil_spark.functions.vector import round_half_up
-    from vectorsearchutil_spark.operators.knn import (
-        _HUBNESS_BLAS_CELLS,
-        knn_batch,
-    )
+    from vectorsearchutil_spark.operators.knn import knn_batch
+    from vectorsearchutil_spark.session import arrow_wins, local_frame
 
     base = emb.filter(
         F.col(label_col).isNotNull() & F.col(vector_col).isNotNull()
@@ -210,15 +204,11 @@ def knn_label_vote_eval(
         F.col(id_col).alias("query_id"),
         F.col(vector_col).alias("query_vector"),
     )
-    use_matrix = False
-    if n_queries and n_corpus:
-        if dim is None:
-            probe = c.select(vector_col).first()
-            dim = (
-                len(probe[0]) if probe and probe[0] is not None else 0
-            )
-        use_matrix = n_queries * n_corpus * dim > _HUBNESS_BLAS_CELLS
-    if use_matrix:
+    # the holdout is small by contract: collected once, it sizes the
+    # gate and is the broadcast query side of either path
+    q_rows = queries.collect()
+    queries = local_frame(emb.sparkSession, q_rows, queries.schema)
+    if arrow_wins(c, [r["query_vector"] for r in q_rows]):
         from vectorsearchutil_spark.operators.similarity import (
             knn_batch_matrix,
         )

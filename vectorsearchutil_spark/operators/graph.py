@@ -30,13 +30,13 @@ from vectorsearchutil_spark.session import collect_if_small, local_frame
 #: below 2^53, so the long sum round-trips exactly through double.
 _FP = float(2**40)
 
-#: edge-count gate below which ``pagerank`` runs its fixed-point
-#: iterations on the driver (same boundary and rationale as
-#: ``dedup.connected_components``: ≤ 2M edges ≈ 32 MB of longs — the
-#: iterative-join plan's ~4 jobs/iteration of fixed scheduling latency
-#: dwarf the arithmetic at this size, while above it the distributed
-#: path is the only shape that survives 100 TB graphs).
-_PAGERANK_DRIVER_MAX_EDGES = 2_000_000
+#: edge-count gate at or below which ``pagerank``, ``triangle_count``
+#: and ``dedup.connected_components`` run on the driver: ≤ 2M edges
+#: ≈ 32 MB of longs — the iterative-join plans' jobs of fixed
+#: scheduling latency dwarf the arithmetic at this size, while above
+#: it the distributed path is the only shape that survives 100 TB
+#: graphs.
+_DRIVER_MAX_EDGES = 2_000_000
 
 #: ``pagerank``'s output. An empty edge list gives an empty result: no
 #: edges, no nodes, no ranks (the teleport term would divide by zero) —
@@ -109,7 +109,6 @@ def pagerank(
     iters: int = 3,
     round_dp: int = 6,
     strategy: str = "auto",
-    driver_max_edges: int = _PAGERANK_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """PageRank over a DIRECTED edge list (symmetrize upstream for an
     undirected similarity graph). Nodes are the vertices appearing in
@@ -124,7 +123,7 @@ def pagerank(
 
     ``strategy`` is size-gated physical strategy selection (the
     ``connected_components`` pattern, r11 optimization round): an edge
-    set of at most ``driver_max_edges`` runs the same fixed-point
+    set of at most ``_DRIVER_MAX_EDGES`` runs the same fixed-point
     iterations on the driver — bit-identical output, none of the
     ~4 jobs/iteration of join/checkpoint scheduling latency. Larger
     graphs take the iterative-join plan. Under 'auto' the gate is one
@@ -140,7 +139,7 @@ def pagerank(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
     ).localCheckpoint(eager=False)
     if strategy == "auto":
-        tbl = collect_if_small(e, driver_max_edges)
+        tbl = collect_if_small(e, _DRIVER_MAX_EDGES)
         if tbl is not None:
             return _pagerank_driver(spark, tbl, damping, iters, round_dp)
         strategy = "distributed"
@@ -276,7 +275,6 @@ def triangle_count(
     id_a: str = "id_a",
     id_b: str = "id_b",
     strategy: str = "auto",
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient over an
     undirected pair list (one row per edge, ``id_a < id_b``). Returns
@@ -298,7 +296,7 @@ def triangle_count(
 
     ``strategy`` is the size-gated physical dispatch shared with
     ``pagerank`` / ``connected_components`` (r11): at or below
-    ``driver_max_edges`` the census runs on the driver (identical
+    ``_DRIVER_MAX_EDGES`` the census runs on the driver (identical
     counts, one Arrow pull instead of the ~7-stage join cascade);
     above it — or forced 'distributed' — the oriented-join plan runs.
     Under 'auto' the gate is one Arrow job (``collect_if_small``) that
@@ -318,7 +316,7 @@ def triangle_count(
         F.col(id_a).alias("a"), F.col(id_b).alias("b")
     ).localCheckpoint(eager=False)
     if strategy == "auto":
-        tbl = collect_if_small(e, driver_max_edges)
+        tbl = collect_if_small(e, _DRIVER_MAX_EDGES)
         if tbl is not None:
             return _triangle_driver(pairs.sparkSession, tbl)
         strategy = "distributed"

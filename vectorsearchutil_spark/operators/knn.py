@@ -29,6 +29,7 @@ from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark import session
 from vectorsearchutil_spark.functions.vector import cosine_similarity, l2_distance
 from vectorsearchutil_spark.session import (
     collect_if_small,
@@ -143,11 +144,6 @@ def knn_batch(
     )
 
 
-#: rows² × dim above which the hubness self-kNN leaves the JVM HOF
-#: expression path for the bit-identical Arrow accumulation (the
-#: zeroshot/_assign_blas wall — interpreted lambdas off codegen).
-_HUBNESS_BLAS_CELLS = 50_000_000
-
 #: The self-kNN size gate: up to this many valid points, ``auto``
 #: pulls the point set in one Arrow job and the arrow or expression
 #: path broadcasts it as the query side. Above it both would die at
@@ -191,7 +187,7 @@ def knn_hubness(
     or on a deterministic hash-sample of queries; the aggregation
     side stays O(n). Under ``auto`` with cosine, one Arrow job pulls
     the valid points when there are at most ``_SELF_KNN_COLLECT_MAX``
-    of them; above ``_HUBNESS_BLAS_CELLS`` of n²·dim work the Arrow
+    of them; above ``session.ARROW_MIN_CELLS`` of n²·dim work the Arrow
     path scores them dim-at-a-time in the JVM's fold order, so scores
     and therefore ranks are BIT-IDENTICAL to the expression path (the
     zeroshot technique). Past the gate (or with
@@ -644,7 +640,7 @@ def _self_knn_topk(
         return _self_knn_topk_blocked(valid, k, vector_col, id_col)
     n = table.num_rows
     dim = len(table.column(vector_col)[0]) if n else 0
-    if n * n * dim > _HUBNESS_BLAS_CELLS:
+    if n * n * dim > session.ARROW_MIN_CELLS:
         return _self_knn_topk_arrow(valid, table, k, vector_col, id_col)
     return _self_knn_topk_expr(valid, k, vector_col, id_col, metric, table)
 

@@ -37,10 +37,19 @@ from pyspark.sql.types import (
 
 from vectorsearchutil_spark.functions.vector import l2_distance
 from vectorsearchutil_spark.session import (
+    arrow_wins,
     collect_if_small,
     local_frame,
     table_matrix,
 )
+
+#: ``neardup_pairs``' matrix gate in corpus cells (~78k × 64): measured,
+#: not a memory bound — see its docstring
+_NEARDUP_MATRIX_MAX_CELLS = 5_000_000
+
+#: ``cosine_lsh_pairs``' matrix-verify gate: a memory bound on the
+#: float64 corpus matrix broadcast to every executor
+_LSH_VERIFY_MAX_BYTES = 400_000_000
 
 
 def _vectors(df: DataFrame, id_col: str, vector_col: str) -> DataFrame:
@@ -246,7 +255,6 @@ def neardup_pairs(
     threshold: float = 0.9,
     strategy: str = "auto",
     dim: int = 64,
-    matrix_max_cells: int = 5_000_000,
     n_blocks: int = 32,
 ) -> DataFrame:
     """Exact cosine near-dup pairs with size-gated physical strategy
@@ -258,10 +266,11 @@ def neardup_pairs(
     * ``blocked`` — distributed block-pair tasks, no driver collect,
       identical results (the production path above the gate);
     * ``auto`` — one Arrow job pulls the non-NULL (id, vector) rows
-      when there are at most ``matrix_max_cells // dim`` of them, and
-      the matrix path broadcasts that table; above the gate, blocked.
+      when there are at most ``_NEARDUP_MATRIX_MAX_CELLS // dim`` of
+      them (``dim`` is the declared vector width), and the matrix
+      path broadcasts that table; above the gate, blocked.
 
-    The 5M-cell default gate (~78k×64) is MEASURED, not a memory
+    The 5M-cell gate (~78k×64) is MEASURED, not a memory
     bound: at 50k×64 the matrix path wins (0.6 s vs 1.5 s — task
     overhead dominates), at 125k×64 the blocked path wins 51.4 s vs
     11.1 s at n_blocks=32 (even work distribution beats the single
@@ -271,7 +280,8 @@ def neardup_pairs(
     """
     if strategy == "auto":
         table = collect_if_small(
-            _vectors(df, id_col, vector_col), matrix_max_cells // dim
+            _vectors(df, id_col, vector_col),
+            _NEARDUP_MATRIX_MAX_CELLS // dim,
         )
         if table is not None:
             return _neardup_pairs_matrix(
@@ -401,58 +411,32 @@ def build_ivf_index(
     id_col: str = "vec_id",
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "centroid_vec",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (IVF list id).
 
-    The centroid set travels as ONE broadcast row holding an
-    array<struct(cid, cv)>; the assignment is array_min over
-    (distance, cid) structs — lexicographic struct ordering breaks
-    ties to the lowest centroid id. Fully narrow: no per-centroid
-    row expansion and no window shuffle, so the corpus never moves.
-    At 100 TB the result is written partitioned by ``centroid_id`` so
-    queries prune partitions (the Spark analog of faiss IVF lists —
-    reference index at vsu/base/VectorSearchBase.py:54-59).
+    The k-row centroid table is collected and the assignment is
+    ``clustering._assign``: its expression form (one broadcast row of
+    centroids, array_min over (distance, cid) structs, ties to the
+    lowest centroid id, the corpus never moves) or, past the
+    interpreted-HOF wall that ``session.arrow_wins`` measures with one
+    ``df.count()``, its bit-identical Arrow/BLAS form. A NULL vector
+    lands in the lowest centroid id. ``centroid_id`` keeps the
+    centroid table's type. At 100 TB the result is written
+    partitioned by ``centroid_id`` so queries prune partitions (the
+    Spark analog of faiss IVF lists — reference index at
+    vsu/base/VectorSearchBase.py:54-59).
     """
-    if n_rows is not None:
-        # rows x k x dim beyond the HOF wall: reuse the k-means
-        # assignment's gated Arrow path (bit-identical argmin and
-        # tie-break — clustering._assign_blas, strategy-equality
-        # test-asserted). Same 18.7x class of win as zeroshot's
-        # Arrow path; the default plan (and every oracle) unchanged.
-        from vectorsearchutil_spark.operators.clustering import _assign
+    from vectorsearchutil_spark.operators.clustering import _assign
 
-        cents = sorted(
-            (int(r[centroid_id_col]), list(r[centroid_vec_col]))
-            for r in centroids.collect()
-        )
-        assigned = _assign(df, cents, vector_col, id_col, n_rows=n_rows)
-        return assigned.select(
-            *df.columns, F.col("cid").alias(centroid_id_col)
-        )
-    cents_row = centroids.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(centroid_id_col).alias("cid"),
-                    F.col(centroid_vec_col).alias("cv"),
-                )
-            )
-        ).alias("_cents")
+    cents = sorted(
+        (int(r[centroid_id_col]), list(r[centroid_vec_col]))
+        for r in centroids.collect()
     )
-    best = F.array_min(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                l2_distance(F.col(vector_col), c["cv"]).alias("d"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    return (
-        df.crossJoin(F.broadcast(cents_row))
-        .withColumn("_b", best)
-        .select(df["*"], F.col("_b.cid").alias(centroid_id_col))
+    blas = arrow_wins(df, [v for _, v in cents])
+    assigned = _assign(df, cents, vector_col, blas)
+    cid_type = centroids.schema[centroid_id_col].dataType
+    return assigned.select(
+        *df.columns, F.col("cid").cast(cid_type).alias(centroid_id_col)
     )
 
 
@@ -658,7 +642,6 @@ def cosine_lsh_pairs(
     threshold: float = 0.3,
     dim: int = 64,
     verify: str = "auto",
-    matrix_max_cells: int = 50_000_000,
 ) -> DataFrame:
     """Approximate cosine near-dup via multi-table random-hyperplane
     LSH.
@@ -712,15 +695,16 @@ def cosine_lsh_pairs(
 
     cand = bucket_pairs(signed, id_col)
     # exact-cosine verify, size-gated (broadcast-join analogy): when
-    # the corpus matrix fits comfortably in executor memory (default
-    # 50M cells = 400 MB float64), one Arrow job pulls it and the
+    # the corpus matrix fits comfortably in executor memory
+    # (_LSH_VERIFY_MAX_BYTES), one Arrow job pulls it and the
     # verify runs against the broadcast matrix — no vector joins, BLAS
     # instead of interpreted per-pair array math. Larger corpora take
     # the join path.
     table = None
     if verify == "auto":
         table = collect_if_small(
-            _vectors(df, id_col, vector_col), matrix_max_cells // dim
+            _vectors(df, id_col, vector_col),
+            _LSH_VERIFY_MAX_BYTES // (8 * dim),
         )
         verify = "join" if table is None else "matrix"
     if verify == "matrix":
@@ -831,41 +815,22 @@ def hard_negative_mining(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor,
     the ``k`` corpus vectors MOST similar to it that carry a DIFFERENT
     label — the negatives that actually move a contrastive loss.
     Output: (anchor_id, id, cosine, rank).
 
-    Two physical strategies (identical results, equality-tested):
-
-    * ``expr`` — anchors broadcast onto one corpus scan, per-pair
-      cosine as an expression, per-anchor WindowGroupLimit cut. No
-      Python workers; right when rows×anchors×dim is small.
-    * ``matrix`` — anchors collect to a broadcast numpy matrix; each
-      Arrow batch BLAS-scores all anchors at once and forwards only
-      its per-anchor top-k candidates (exact: any global top-k member
-      is in its batch's top-k under the same order), then one global
-      per-anchor rank. The expression form is interpreted per pair
-      (HOFs sit outside codegen) — measured warm 6.9 s vs 2.1 s at
-      500k×10×64, and the gap scales with the anchor count.
-    * ``auto`` — ``expr``; callers that know their rows×anchors×dim
-      work is large (above ~50M cells) choose ``matrix``.
-
-    For anchor sets too large to broadcast, route anchors through the
-    IVF index first (``ivf_search``) and mine within probed lists.
+    Plan: anchors broadcast onto one corpus scan, per-pair cosine as
+    an expression, per-anchor WindowGroupLimit cut; no Python workers.
+    For anchor sets too large to broadcast, mine within the probed IVF
+    lists instead (:func:`hard_negatives_ivf`).
     Ties break on (cosine desc, id asc) BEFORE rounding so the cut is
     engine-stable; the reported cosine rounds to 4dp.
     """
     from pyspark.sql import Window
 
     from vectorsearchutil_spark.functions.vector import cosine_similarity
-
-    if strategy == "matrix":
-        return _hard_negatives_matrix(
-            df, anchors, k, vector_col, id_col, label_col
-        )
 
     a = anchors.select(
         F.col(id_col).alias("anchor_id"),
@@ -885,89 +850,6 @@ def hard_negative_mining(
         c.join(F.broadcast(a), F.col("_clbl") != F.col("_albl"))
         .withColumn("_cos", cos)
         .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select(
-            "anchor_id",
-            id_col,
-            F.round("_cos", 4).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def _hard_negatives_matrix(
-    df: DataFrame,
-    anchors: DataFrame,
-    k: int,
-    vector_col: str,
-    id_col: str,
-    label_col: str,
-) -> DataFrame:
-    """BLAS form of ``hard_negative_mining`` (see its docstring)."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    arows = anchors.select(id_col, label_col, vector_col).collect()
-    a_ids = np.array([r[0] for r in arows], dtype=np.int64)
-    a_lbl = np.array([r[1] for r in arows])
-    A = np.array([r[2] for r in arows], dtype=np.float64)
-    an = np.linalg.norm(A, axis=1)
-    an[an == 0.0] = 1.0
-    A = A / an[:, None]
-    b = spark.sparkContext.broadcast((a_ids, a_lbl, A))
-
-    out_schema = StructType(
-        [
-            StructField("anchor_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("_cos", DoubleType()),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_a, lbl_a, mat_a = b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(list(pdf[vector_col]), dtype=np.float64)
-            xn = np.linalg.norm(X, axis=1)
-            xn[xn == 0.0] = 1.0
-            sims = (X / xn[:, None]) @ mat_a.T
-            cids = pdf[id_col].to_numpy(dtype=np.int64)
-            clbl = pdf[label_col].to_numpy()
-            outs = []
-            for j in range(len(ids_a)):
-                mask = clbl != lbl_a[j]
-                if not mask.any():
-                    continue
-                sj, cj = sims[mask, j], cids[mask]
-                # per-batch top-k by (cos desc, id asc): exact — any
-                # global top-k row is in its batch's top-k
-                order = np.lexsort((cj, -sj))[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "anchor_id": np.full(
-                                len(order), ids_a[j], dtype=np.int64
-                            ),
-                            id_col: cj[order],
-                            "_cos": sj[order],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    from vectorsearchutil_spark.functions.parallel import fanout_repartition
-
-    cand = fanout_repartition(
-        df.select(id_col, label_col, vector_col)
-    ).mapInPandas(score, out_schema)
-    win = Window.partitionBy("anchor_id").orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
         .select(
             "anchor_id",
@@ -1054,7 +936,6 @@ def triplet_mining(
     id_col: str = "vec_id",
     label_col: str = "label",
     strategy: str = "auto",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Semi-hard triplet census (FaceNet's mining rule): per anchor
     (``id < anchor_below``, finite + nonzero-norm participation
@@ -1084,8 +965,9 @@ def triplet_mining(
       associative, so per-batch partials reduce exactly). The
       expression form is interpreted per pair (HOFs sit outside
       codegen) — the measured ~20M cells/s wall (PERF.md round 4).
-    * ``auto`` — ``matrix`` above 50M rows×anchors×dim cells when
-      ``n_rows`` is given, else ``expr``.
+    * ``auto`` — collects the anchors, and ``matrix`` when
+      ``session.arrow_wins`` (one ``emb.count()``) puts
+      rows×anchors×dim past the interpreted-HOF wall, else ``expr``.
     """
     from vectorsearchutil_spark.functions.vector import (
         cosine_similarity,
@@ -1113,15 +995,17 @@ def triplet_mining(
         F.col("label").alias("_albl"),
         F.col("_e").alias("_ae"),
     )
+    arows = None
     if strategy == "auto":
-        strategy = "expr"
-        if n_rows is not None:
-            first = vv.select(F.size("_e").alias("d")).first()
-            dim = first["d"] if first else None
-            if dim and n_rows * anchor_below * dim > 50_000_000:
-                strategy = "matrix"
+        arows = anchors.collect()
+        strategy = (
+            "matrix" if arrow_wins(emb, [r["_ae"] for r in arows])
+            else "expr"
+        )
     if strategy == "matrix":
-        pos, neg = _triplet_matrix_stats(vv, anchors, margin)
+        if arows is None:
+            arows = anchors.collect()
+        pos, neg = _triplet_matrix_stats(vv, arows, margin)
     else:
         cq = round_half_up(
             cosine_similarity(F.col("_ae"), F.col("_e")), 6
@@ -1170,15 +1054,13 @@ def triplet_mining(
     )
 
 
-def _triplet_matrix_stats(
-    vv: DataFrame, anchors: DataFrame, margin: float
-):
+def _triplet_matrix_stats(vv: DataFrame, arows: list, margin: float):
     """BLAS form of ``triplet_mining``'s two passes (see its
-    docstring). Returns the (pos, neg) per-anchor aggregate frames;
-    pass 1's ≤anchor-count result is a bounded collect that
-    parameterizes pass 2's batch closure."""
+    docstring) over the collected anchor rows ``arows``. Returns the
+    (pos, neg) per-anchor aggregate frames; pass 1's ≤anchor-count
+    result is a bounded collect that parameterizes pass 2's batch
+    closure."""
     spark = vv.sparkSession
-    arows = anchors.collect()
     a_ids = np.array([r["aid"] for r in arows], dtype=np.int64)
     a_lbl = np.array([r["_albl"] for r in arows])
     A = np.array([r["_ae"] for r in arows], dtype=np.float64)

@@ -19,8 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructField, StructType
 
 from vectorsearchutil_spark.functions.vector import cosine_similarity
+from vectorsearchutil_spark.session import (
+    arrow_wins,
+    batch_matrix,
+    local_frame,
+)
 
 
 def zeroshot_scores(
@@ -69,14 +75,14 @@ def zeroshot(
     label_vec_col: str = "label_vec",
     softmax: bool = False,
     strategy: str = "auto",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Per-row prediction: data columns + ``zeroshot_pred`` (+ score).
 
     Mirrors the reference's ``data["zeroshot_pred"]`` materialization
     (``vsu/text/_classes.py:43``).
 
-    The label set travels as ONE broadcast row holding an
+    The label set is collected (it is tiny by construction) and
+    travels as ONE local broadcast row holding an idx-sorted
     array<struct(idx, label, vec)>; per data row the scores are a
     transform() over that array and the argmax is array_min over
     (-score, idx) structs — lexicographic struct ordering reproduces
@@ -84,34 +90,31 @@ def zeroshot(
     (vsu/text/_classes.py:40). Fully narrow: no per-label row
     expansion, no window shuffle, no join-back — the corpus is
     scanned once and never moves (the shape that survives 100 TB).
+
+    ``strategy`` picks the physical form: 'expr' (above), 'arrow'
+    (:func:`_zeroshot_arrow`, bit-identical scores), or 'auto', which
+    takes 'arrow' when ``session.arrow_wins`` (one ``data.count()``)
+    puts rows × labels × dim past the interpreted-HOF wall.
     """
-    if strategy == "auto" and n_rows is not None:
-        lrow = labels.agg(
-            F.count(F.lit(1)).alias("k"),
-            F.max(F.size(F.col(label_vec_col))).alias("d"),
-        ).first()
-        if n_rows * lrow["k"] * (lrow["d"] or 0) > _ZEROSHOT_BLAS_CELLS:
-            strategy = "arrow"
-    if strategy == "arrow":
-        # size-gated Arrow path (the interpreted-HOF wall: measured
-        # 302 s -> seconds at 2M rows × 100 labels); bit-identical
-        # scores, see _zeroshot_arrow. Callers that know their scale
-        # pass n_rows (a metadata-cheap count for parquet sources) or
-        # force strategy="arrow"; the default plan is unchanged.
-        return _zeroshot_arrow(
-            data, labels, vector_col, id_col, label_col,
-            label_idx_col, label_vec_col, softmax,
-        )
-    labels_row = labels.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(label_idx_col).alias("idx"),
-                    F.col(label_col).alias("label"),
-                    F.col(label_vec_col).alias("cv"),
-                )
-            )
-        ).alias("_labels")
+    labs = sorted(
+        (r[label_idx_col], r[label_col], r[label_vec_col])
+        for r in labels.collect()
+    )
+    if strategy == "arrow" or (
+        strategy == "auto" and arrow_wins(data, [v for *_, v in labs])
+    ):
+        return _zeroshot_arrow(data, labs, vector_col, softmax)
+    lab_type = StructType(
+        [
+            StructField("idx", labels.schema[label_idx_col].dataType),
+            StructField("label", labels.schema[label_col].dataType),
+            StructField("cv", labels.schema[label_vec_col].dataType),
+        ]
+    )
+    labels_row = local_frame(
+        data.sparkSession,
+        [(labs,)],
+        StructType([StructField("_labels", ArrayType(lab_type))]),
     )
     scores_arr = F.transform(
         F.col("_labels"),
@@ -161,24 +164,14 @@ def zeroshot(
     return out.select(*data.columns, pred, score)
 
 
-#: rows × labels × dim cells beyond which the interpreted-HOF scoring
-#: loses to the Arrow path (same wall as clustering._ASSIGN_BLAS_CELLS:
-#: HOF lambdas run outside codegen; measured at 2M×100×64 the
-#: expression form took 302 s vs seconds for the Arrow form)
-_ZEROSHOT_BLAS_CELLS = 50_000_000
-
-
 def _zeroshot_arrow(
     data: DataFrame,
-    labels: DataFrame,
+    labs: list[tuple],
     vector_col: str,
-    id_col: str,
-    label_col: str,
-    label_idx_col: str,
-    label_vec_col: str,
     softmax: bool,
 ) -> DataFrame:
-    """Arrow/numpy form of ``zeroshot`` — bit-identical dot/norm math.
+    """Arrow/numpy form of ``zeroshot`` over the collected, idx-sorted
+    (idx, label, vector) ``labs`` — bit-identical dot/norm math.
 
     The JVM expression folds Σ xⱼ·lⱼ (and Σ xⱼ²) sequentially in dim
     order with separate multiply and add roundings; this path
@@ -189,17 +182,13 @@ def _zeroshot_arrow(
     Softmax probabilities also accumulate exp terms in label-index
     order; Math.exp vs libm exp may differ in the last ulp, which is
     the one documented (and tested: ≤1e-12 relative) divergence.
-    Zero-norm rows (score undefined — NULL on the expression path)
-    keep NaN scores and fall back to the lowest label index."""
+    Zero-norm and NULL-vector rows (score undefined — NULL on the
+    expression path) keep NaN scores, which leave as NULL, and fall
+    back to the lowest label index."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import DoubleType, StringType, StructField
+    from pyspark.sql.types import DoubleType, StringType
 
-    labs = sorted(
-        (r[label_idx_col], r[label_col], list(r[label_vec_col]))
-        for r in labels.collect()
-    )
     names = [lab for _, lab, _ in labs]
     L = np.array([v for _, _, v in labs], dtype=np.float64)
     k, d = L.shape
@@ -218,15 +207,13 @@ def _zeroshot_arrow(
     ]
     if softmax:
         fields.append(StructField("prob", DoubleType()))
-    from pyspark.sql.types import StructType
-
     out_schema = StructType(fields)
 
     def score_batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(list(pdf[vector_col]), dtype=np.float64)
+            X = batch_matrix(pdf[vector_col], d)
             n = len(X)
             dots = np.zeros((n, k), dtype=np.float64)
             xsq = np.zeros(n, dtype=np.float64)

@@ -29,7 +29,7 @@ from vectorsearchutil_spark.functions.datetime import (
 from vectorsearchutil_spark.functions.vector import round_half_up
 from vectorsearchutil_spark.operators.knn import knn, knn_batch
 from vectorsearchutil_spark.operators.zeroshot import zeroshot, zeroshot_scores
-from vectorsearchutil_spark.session import local_frame
+from vectorsearchutil_spark.session import arrow_wins, local_frame
 from vectorsearchutil_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -12622,9 +12622,7 @@ def embeddings_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = [
         (r["cid"], list(r["cv"])) for r in centroids.collect()
     ]
-    ab = silhouette_ab(
-        pts, cents, "embedding", "vec_id", n_rows=pts.count()
-    )
+    ab = silhouette_ab(pts, cents, "embedding", "vec_id")
     a, b = F.col("a"), F.col("b")
     s = F.when(
         F.greatest(a, b) > 0, (b - a) / F.greatest(a, b)
@@ -14649,7 +14647,7 @@ def embeddings_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectorsearchutil_spark.operators.similarity import triplet_mining
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return triplet_mining(emb, n_rows=emb.count())
+    return triplet_mining(emb)
 
 
 _AUDIENCE_ORACLE = """
@@ -14845,18 +14843,17 @@ def recall_curve(
     query_below: int = 8,
     k: int = 10,
     max_probe: int = 3,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Core of ``ann_recall_curve`` over any (vec_id, embedding)
     corpus and (centroid_id, centroid_vec) list heads — split out
     for unit tests. The exact ground-truth arm is the dominant cost
-    at scale (queries x corpus x dim interpreted cells): pass
-    ``n_rows`` to gate BOTH the index assignment (build_ivf_index's
-    kmeans-shared BLAS gate — the 2M x 32 x 64 assignment was 4.1G
-    interpreted cells and dominated) and the ground truth
-    (knn_batch_matrix, same (distance asc, id asc) result contract,
-    already oracle-proven as its own registry entry): 25x probe
-    53.7 s -> 13.9 s, identical outputs."""
+    at scale (queries x corpus x dim interpreted cells), so it takes
+    the measured Arrow gate (``session.arrow_wins`` over the
+    collected query vectors and one corpus count) like the index
+    assignment does inside ``build_ivf_index``: above the wall the
+    ground truth is ``knn_batch_matrix`` (same (distance asc, id asc)
+    result contract, oracle-proven as its own registry entry) — the
+    2M-row probe ran 53.7 s -> 13.9 s with identical outputs."""
     from vectorsearchutil_spark.functions.vector import (
         l2_distance,
         round_half_up,
@@ -14867,20 +14864,20 @@ def recall_curve(
     )
 
     indexed = build_ivf_index(
-        emb, cents, vector_col="embedding", id_col="vec_id",
-        n_rows=n_rows,
+        emb, cents, vector_col="embedding", id_col="vec_id"
     ).localCheckpoint(eager=False)
     qs = emb.filter(F.col("vec_id") < query_below).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vector"),
     )
+    # collected once: it sizes the ground-truth gate and is the
+    # broadcast query side of the ground truth and the probes
+    q_rows = qs.collect()
+    qs = local_frame(emb.sparkSession, q_rows, qs.schema)
 
     from pyspark.sql import Window
 
-    use_matrix = (
-        n_rows is not None and n_rows * query_below * 64 > 50_000_000
-    )
-    if use_matrix:
+    if arrow_wins(emb, [r["query_vector"] for r in q_rows]):
         exact = knn_batch_matrix(
             emb, qs, k=k, vector_col="embedding", id_col="vec_id"
         ).select("query_id", "vec_id").localCheckpoint(eager=False)

@@ -603,17 +603,15 @@ class VectorStore:
                 )
             index_path = base.rstrip("/") + "__ivf"
         _, centroids = kmeans(
-            self.data, k=n_lists, vector_col="vector", id_col="id"
+            self.data, k=n_lists, vector_col="vector", id_col="id",
+            dim=self.vec_size,
         )
         cents = centroids.select(
             F.col("cid").alias("centroid_id"),
             F.col("cv").alias("centroid_vec"),
         )
-        # the row count sizes the assignment's expression/Arrow path
-        # (the HOF wall)
         indexed = build_ivf_index(
-            self.data, cents, vector_col="vector", id_col="id",
-            n_rows=self.data.count(),
+            self.data, cents, vector_col="vector", id_col="id"
         )
         indexed.write.mode("overwrite").partitionBy("centroid_id").parquet(
             os.path.join(index_path, "lists")
@@ -656,8 +654,7 @@ class VectorStore:
             F.col("centroid_id"), F.col("centroid_vec")
         )
         indexed = build_ivf_index(
-            fresh, cents, vector_col="vector", id_col="id",
-            n_rows=fresh.count(),
+            fresh, cents, vector_col="vector", id_col="id"
         ).persist()
         try:
             n = indexed.count()
