@@ -67,8 +67,7 @@ def test_kmeans_centroids_feed_ivf(spark, sf_dir):
     cents = centroids.select(
         F.col("cid").alias("centroid_id"), F.col("cv").alias("centroid_vec")
     )
-    indexed = build_ivf_index(emb, cents, vector_col="embedding",
-                              id_col="vec_id").cache()
+    indexed = build_ivf_index(emb, cents, vector_col="embedding").cache()
     assert indexed.count() == emb.count()
 
     qs = emb.filter(F.col("vec_id") < 5).select(

@@ -170,7 +170,7 @@ def test_ivfpq_encode_matches_separate_paths(spark, emb, books, sf_dir):
     )
     fused = ivfpq_encode(emb, cents, books)
     split_assign = build_ivf_index(
-        emb, cents, vector_col="embedding", id_col="vec_id"
+        emb, cents, vector_col="embedding"
     ).select("vec_id", F.col("centroid_id").cast("long").alias("centroid_id"))
     split = split_assign.join(pq_encode(emb, books), "vec_id").select(
         "vec_id", "centroid_id", "codes", "qerr"

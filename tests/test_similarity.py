@@ -34,6 +34,39 @@ def test_matrix_knn_matches_expression_knn(emb, queries5):
     assert a == b
 
 
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_matrix_knn_null_vectors_rank_like_expression_knn(spark, metric):
+    """NULL and zero-norm corpus vectors and a NULL query vector score
+    NULL on both paths and rank where the window puts NULL: first
+    under l2's ascending order, last under cosine's descending one."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 0.0]), (4, [0.5, 0.5]),
+         (5, [2.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    ).repartition(2)
+    q = spark.createDataFrame(
+        [(10, [1.0, 1.0]), (11, None), (12, [0.0, 0.0])],
+        "query_id long, query_vector array<double>",
+    )
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["vec_id"], r["rank"],
+             None if r["distance"] is None else round(r["distance"], 9))
+            for r in df.collect()
+        )
+
+    for k in (2, 5):
+        args = dict(k=k, vector_col="embedding", id_col="vec_id", metric=metric)
+        expr = rows(knn_batch(corpus, q, **args))
+        assert rows(knn_batch_matrix(corpus, q, **args)) == expr
+        assert [r[1] for r in expr if r[0] == 11] == [1, 2, 3, 4, 5][:k]
+    only_null = q.filter("query_vector IS NULL")
+    assert rows(knn_batch_matrix(corpus, only_null, **args)) == rows(
+        knn_batch(corpus, only_null, **args)
+    )
+
+
 def test_matrix_knn_tie_break_deterministic(spark):
     # ADVICE r1: ties straddling the per-batch top-k cutoff must
     # resolve to the lowest ids regardless of partitioning. 40 corpus
@@ -105,7 +138,7 @@ def test_ivf_recall_against_exact(spark, emb, queries5):
         .select(F.col("label").alias("centroid_id"),
                 F.transform("s", lambda x: x["v"]).alias("centroid_vec"))
     )
-    indexed = build_ivf_index(emb, cents, vector_col="embedding", id_col="vec_id")
+    indexed = build_ivf_index(emb, cents, vector_col="embedding")
     assert indexed.count() == emb.count()  # every vector in exactly one list
     approx = ivf_search(indexed, cents, queries5, k=5, n_probe=5,
                         vector_col="embedding", id_col="vec_id")
@@ -137,7 +170,7 @@ def test_ivf_partitioned_storage_prunes(spark, emb, tmp_path):
         .select(F.col("label").alias("centroid_id"),
                 F.transform("s", lambda x: x["v"]).alias("centroid_vec"))
     )
-    indexed = build_ivf_index(emb, cents, vector_col="embedding", id_col="vec_id")
+    indexed = build_ivf_index(emb, cents, vector_col="embedding")
     path = str(tmp_path / "ivf")
     indexed.write.partitionBy("centroid_id").parquet(path)
 

@@ -282,18 +282,36 @@ def _cent_list(cents):
     return [(r[0], list(r[1])) for r in cents.collect()]
 
 
+def _wide_ids(cents):
+    # bigint ids beyond 32 bits, in the same order
+    return cents.selectExpr(
+        "centroid_id * 4294967296 + 1 AS centroid_id", "centroid_vec"
+    )
+
+
+def _with_null_vectors(emb):
+    # a NULL-vector query (ids below recall_curve's query_below are
+    # queries) and a NULL-vector corpus row
+    df = emb.select("vec_id", "embedding")
+    extra = df.sparkSession.createDataFrame([(-1, None), (10**6, None)], df.schema)
+    return df.unionByName(extra)
+
+
 #: every operator behind ``session.arrow_wins``, on the sf embeddings
 _MEASURED_TWINS = {
     "zeroshot": lambda emb, c: zeroshot(
         emb, _as_labels(c), vector_col="embedding", id_col="vec_id"
     ),
     "build_ivf_index": lambda emb, c: build_ivf_index(emb, c),
+    "build_ivf_index_wide_ids": lambda emb, c: build_ivf_index(
+        emb, _wide_ids(c)
+    ),
     "kmeans_distributed": lambda emb, c: kmeans(
         emb, k=4, iterations=2, strategy="distributed"
     )[0],
     "silhouette_ab": lambda emb, c: silhouette_ab(emb, _cent_list(c)),
     "triplet_mining": lambda emb, c: triplet_mining(emb),
-    "recall_curve": lambda emb, c: recall_curve(emb, c),
+    "recall_curve": lambda emb, c: recall_curve(_with_null_vectors(emb), c),
     "knn_label_vote_eval": lambda emb, c: knn_label_vote_eval(
         emb, F.col("vec_id") % 10 == 0, k=5
     ),
@@ -330,6 +348,28 @@ def test_measured_gate_auto_picks_arrow_at_zero_wall(
     assert arrow_path(arrow)
     assert arrow.schema == expr.schema
     assert _rows(arrow) == _rows(expr)
+
+
+def test_build_ivf_index_keeps_centroid_id_type_and_values(emb, ivf_cents):
+    """The assignment runs on centroid positions; the position maps
+    back to the centroid table's own id, whatever its type or width."""
+
+    def lists(cents):
+        out = build_ivf_index(emb, cents)
+        return out.schema["centroid_id"].dataType.simpleString(), {
+            r[0]: r[1] for r in out.select("vec_id", "centroid_id").collect()
+        }
+
+    kind, ref = lists(ivf_cents)
+    assert kind == "bigint" and set(ref.values()) <= {0, 1, 2, 3}
+    assert lists(_wide_ids(ivf_cents)) == (
+        "bigint",
+        {v: c * 2**32 + 1 for v, c in ref.items()},
+    )
+    text = ivf_cents.selectExpr(
+        "CAST(centroid_id AS string) AS centroid_id", "centroid_vec"
+    )
+    assert lists(text) == ("string", {v: str(c) for v, c in ref.items()})
 
 
 def test_build_ann_index_sizes_kmeans_gate_by_store_width(

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
     StructField,
@@ -38,6 +39,7 @@ from pyspark.sql.types import (
 from vectorsearchutil_spark.functions.vector import l2_distance
 from vectorsearchutil_spark.session import (
     arrow_wins,
+    batch_matrix,
     collect_if_small,
     local_frame,
     table_matrix,
@@ -311,25 +313,32 @@ def knn_batch_matrix(
     ascending distance, ties by ascending id — and deterministic
     across partitionings: batch-local selection uses the same
     (distance, id) total order as the final window, so the per-batch
-    top-k provably contains the global top-k.
+    top-k provably contains the global top-k. A NULL corpus or query
+    vector (or a zero-norm one under cosine) scores NULL, and NULL
+    distances rank as they do there: first under l2's ascending order,
+    last under cosine's descending one.
 
     The corpus (the 100 TB side) never shuffles and is read once; the
     final window sees ≤ k rows per (query, batch)."""
     spark = corpus.sparkSession
-    q_ids, q_mat = table_matrix(
-        _vectors(queries, query_id_col, query_vector_col).toArrow(),
-        query_id_col,
-        query_vector_col,
+    q_tbl = (
+        queries.select(query_id_col, query_vector_col)
+        .toArrow()
+        .sort_by(query_id_col)
     )
-    if not len(q_ids):  # no queries → no result rows (not a worker error)
+    if not q_tbl.num_rows:  # no queries → no result rows (not a worker error)
         return local_frame(
             spark,
             [],
             f"{query_id_col} long, {id_col} long, distance double,"
             " rank int",
         )
-    b_qids = spark.sparkContext.broadcast(q_ids)
-    b_qmat = spark.sparkContext.broadcast(q_mat)
+    q_vecs = q_tbl.column(query_vector_col).to_pandas()
+    dim = max((len(v) for v in q_vecs.dropna()), default=0)
+    b_qids = spark.sparkContext.broadcast(
+        q_tbl.column(query_id_col).to_numpy().astype(np.int64)
+    )
+    b_qmat = spark.sparkContext.broadcast(batch_matrix(q_vecs, dim))
 
     out_schema = StructType(
         [
@@ -338,6 +347,8 @@ def knn_batch_matrix(
             StructField("distance", DoubleType()),
         ]
     )
+    # NaN (a NULL distance) sorts where the window below puts NULL
+    null_key = -np.inf if metric == "l2" else np.inf
 
     def _topk_by_dist_then_id(
         srow: np.ndarray, cids: np.ndarray, take: int
@@ -347,29 +358,37 @@ def knn_batch_matrix(
         # row tied at the cutoff and lexsort (distance, id). Without
         # the widening, ties straddling the cutoff are kept
         # arbitrarily and the result depends on partitioning.
+        srow = np.where(np.isnan(srow), null_key, srow)
         part = np.argpartition(srow, take - 1)[:take]
         kth = srow[part].max()
         cand = np.nonzero(srow <= kth)[0]
         return cand[np.lexsort((cids[cand], srow[cand]))[:take]]
 
+    def _scores(qmat: np.ndarray, vectors: pd.Series) -> np.ndarray:
+        # (queries, batch) distances, negated similarity under cosine
+        # so both metrics rank ascending; NaN where either side is NULL
+        if not qmat.shape[1]:  # no query has a vector
+            return np.full((len(qmat), len(vectors)), np.nan)
+        c = batch_matrix(vectors, qmat.shape[1])
+        if metric == "l2":
+            # ||q||² - 2q·c + ||c||², computed blocked
+            d2 = (
+                (qmat * qmat).sum(axis=1)[:, None]
+                - 2.0 * (qmat @ c.T)
+                + (c * c).sum(axis=1)[None, :]
+            )
+            return np.sqrt(np.maximum(d2, 0.0))
+        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
+        cn = np.linalg.norm(c, axis=1, keepdims=True)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return -((qmat / qn) @ (c / cn).T)
+
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids = b_qids.value
         qmat = b_qmat.value
         for pdf in batches:
-            c = np.array(list(pdf[vector_col]), dtype=np.float64)
+            scores = _scores(qmat, pdf[vector_col])
             cids = pdf[id_col].to_numpy(dtype=np.int64)
-            if metric == "l2":
-                # ||q||² - 2q·c + ||c||², computed blocked
-                d2 = (
-                    (qmat * qmat).sum(axis=1)[:, None]
-                    - 2.0 * (qmat @ c.T)
-                    + (c * c).sum(axis=1)[None, :]
-                )
-                scores = np.sqrt(np.maximum(d2, 0.0))
-            else:
-                qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-                cn = np.linalg.norm(c, axis=1, keepdims=True)
-                scores = -((qmat / qn) @ (c / cn).T)  # negate → ascending
             take = min(k, scores.shape[1])
             rows = {query_id_col: [], id_col: [], "distance": []}
             for qi in range(len(qids)):
@@ -408,7 +427,6 @@ def build_ivf_index(
     df: DataFrame,
     centroids: DataFrame,
     vector_col: str = "embedding",
-    id_col: str = "vec_id",
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "centroid_vec",
 ) -> DataFrame:
@@ -419,25 +437,29 @@ def build_ivf_index(
     centroids, array_min over (distance, cid) structs, ties to the
     lowest centroid id, the corpus never moves) or, past the
     interpreted-HOF wall that ``session.arrow_wins`` measures with one
-    ``df.count()``, its bit-identical Arrow/BLAS form. A NULL vector
-    lands in the lowest centroid id. ``centroid_id`` keeps the
-    centroid table's type. At 100 TB the result is written
-    partitioned by ``centroid_id`` so queries prune partitions (the
-    Spark analog of faiss IVF lists — reference index at
+    ``df.count()``, its bit-identical Arrow/BLAS form. The assignment
+    runs on each centroid's position in ascending id order, and the
+    position maps back to the id, so ``centroid_id`` keeps the
+    centroid table's type and values (any orderable type, bigint
+    beyond 32 bits included). A NULL vector lands in the lowest
+    centroid id. At 100 TB the result is written partitioned by
+    ``centroid_id`` so queries prune partitions (the Spark analog of
+    faiss IVF lists — reference index at
     vsu/base/VectorSearchBase.py:54-59).
     """
     from vectorsearchutil_spark.operators.clustering import _assign
 
-    cents = sorted(
-        (int(r[centroid_id_col]), list(r[centroid_vec_col]))
-        for r in centroids.collect()
+    rows = sorted(
+        (r[0], list(r[1]))
+        for r in centroids.select(centroid_id_col, centroid_vec_col).collect()
     )
+    cents = [(pos, v) for pos, (_, v) in enumerate(rows)]
     blas = arrow_wins(df, [v for _, v in cents])
     assigned = _assign(df, cents, vector_col, blas)
-    cid_type = centroids.schema[centroid_id_col].dataType
-    return assigned.select(
-        *df.columns, F.col("cid").cast(cid_type).alias(centroid_id_col)
+    ids = F.lit([cid for cid, _ in rows]).cast(
+        ArrayType(centroids.schema[centroid_id_col].dataType)
     )
+    return assigned.select(*df.columns, ids[F.col("cid")].alias(centroid_id_col))
 
 
 def ivf_search(
@@ -657,7 +679,7 @@ def cosine_lsh_pairs(
     narrow projection; the only shuffles are the (table, bucket) join
     over small keys and the candidate distinct.
     """
-    from pyspark.sql.types import ArrayType, StringType
+    from pyspark.sql.types import StringType
 
     from vectorsearchutil_spark.functions.vector import cosine_similarity
 

@@ -1154,7 +1154,7 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label_idx").alias("centroid_id"),
         F.col("label_vec").alias("centroid_vec"),
     ).cache()
-    indexed = build_ivf_index(emb, cents, vector_col="embedding", id_col="vec_id")
+    indexed = build_ivf_index(emb, cents, vector_col="embedding")
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vector")
     )
@@ -3780,7 +3780,7 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vector"),
     )
-    indexed = build_ivf_index(emb, cents, vector_col="embedding", id_col="vec_id")
+    indexed = build_ivf_index(emb, cents, vector_col="embedding")
     ivf = ivf_search(
         indexed, cents, qs, k=5, n_probe=3,
         vector_col="embedding", id_col="vec_id",
@@ -8816,7 +8816,7 @@ def ann_ivf_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label_vec").alias("centroid_vec"),
     ).cache()
     indexed = build_ivf_index(
-        emb, cents, vector_col="embedding", id_col="vec_id"
+        emb, cents, vector_col="embedding"
     ).filter(F.col("label") % 2 == 0)
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -14864,7 +14864,7 @@ def recall_curve(
     )
 
     indexed = build_ivf_index(
-        emb, cents, vector_col="embedding", id_col="vec_id"
+        emb, cents, vector_col="embedding"
     ).localCheckpoint(eager=False)
     qs = emb.filter(F.col("vec_id") < query_below).select(
         F.col("vec_id").alias("query_id"),

@@ -610,9 +610,7 @@ class VectorStore:
             F.col("cid").alias("centroid_id"),
             F.col("cv").alias("centroid_vec"),
         )
-        indexed = build_ivf_index(
-            self.data, cents, vector_col="vector", id_col="id"
-        )
+        indexed = build_ivf_index(self.data, cents, vector_col="vector")
         indexed.write.mode("overwrite").partitionBy("centroid_id").parquet(
             os.path.join(index_path, "lists")
         )
@@ -654,7 +652,7 @@ class VectorStore:
             F.col("centroid_id"), F.col("centroid_vec")
         )
         indexed = build_ivf_index(
-            fresh, cents, vector_col="vector", id_col="id"
+            fresh, cents, vector_col="vector"
         ).persist()
         try:
             n = indexed.count()
