@@ -23,12 +23,7 @@ _SLOW_TESTS = {
     "test_empty_registry.py::test_every_query_executes_on_tiny_tables",
     "test_tz_parity.py::test_tz_parity_hostile_zones",
     "test_plan_lint.py::test_no_cartesian_or_rowwise_udf_anywhere",
-    "test_acid_store.py::test_acid_roundtrip_and_reopen",
-    "test_acid_store.py::test_acid_dedup_state_maintained",
-    "test_acid_store.py::test_acid_ids_monotonic_across_appends",
-    "test_acid_store.py::test_acid_append_never_overwrites",
     "test_acid_store.py::test_acid_replace_wipes",
-    "test_acid_store.py::test_compact_then_vacuum_preserves_data",
     "test_properties.py::test_triplet_mining_matches_numpy",
     "test_properties.py::test_weighted_quantile_exact_matches_bruteforce",
     "test_properties.py::test_funnel_matches_naive",

@@ -1,13 +1,13 @@
-"""Manifest-log ACID store: the object-store-safe VectorStore backend
-(sources/manifest.py) — store semantics replayed against it, plus the
-log's own atomicity/visibility/concurrency guarantees."""
+"""Manifest-log ACID store (sources/manifest.py), the file-backed
+VectorStore mode: the store semantics test_store.py does not already
+run on it, plus the log's own atomicity/visibility/concurrency
+guarantees."""
 
 from __future__ import annotations
 
 import json
 import os
 
-import pyspark.sql.functions as F
 import pytest
 
 from vectorsearchutil_spark.sources.manifest import ManifestLog
@@ -23,29 +23,7 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, ["target", "option1"])
 
 
-# -- store semantics against the acid backend (mirror of test_store) --
-
-
-def test_acid_roundtrip_and_reopen(spark, tmp_path, acid_store):
-    acid_store.set_data(_df(spark, [("a", "1"), ("b", "2")]))
-    assert acid_store.count() == 2
-    reopened = VectorStore(spark, acid_path=acid_store.acid.base)
-    assert reopened.count() == 2
-    assert {r["target"] for r in reopened.data.collect()} == {"a", "b"}
-
-
-def test_acid_append_never_overwrites(spark, acid_store):
-    acid_store.set_data(_df(spark, [("a", "old")]))
-    acid_store.set_data(_df(spark, [("a", "new"), ("c", "3")]), append=True)
-    rows = {r["target"]: r["option1"] for r in acid_store.data.collect()}
-    assert rows == {"a": "old", "c": "3"}  # first-wins on target
-
-
-def test_acid_ids_monotonic_across_appends(spark, acid_store):
-    acid_store.set_data(_df(spark, [("a", "1"), ("b", "2")]))
-    acid_store.set_data(_df(spark, [("c", "3")]), append=True)
-    ids = sorted(r["id"] for r in acid_store.data.collect())
-    assert ids == [1, 2, 3]
+# -- store semantics specific to the acid backend ---------------------
 
 
 def test_acid_replace_wipes(spark, acid_store):
@@ -78,22 +56,6 @@ def test_acid_append_commits_only_fresh_rows(spark, acid_store):
     )
     assert appended.count() == 1
     assert appended.first()["target"] == "extra"
-
-
-def test_acid_dedup_state_maintained(spark, tmp_path):
-    vs = VectorStore(
-        spark,
-        acid_path=str(tmp_path / "acid2"),
-        maintain_dedup_state=True,
-    )
-    vs.set_data(_df(spark, [("one two three four", "a")]))
-    vs.set_data(_df(spark, [("five six seven eight", "b")]), append=True)
-    assert vs._dedup_state["meta"].count() == 2
-    incoming = spark.createDataFrame(
-        [(100, "one two three four")], ["id", "target"]
-    )
-    out = vs.ingest_dedup_check(incoming).collect()
-    assert out[0]["verdict"] == "exact_dup"
 
 
 # -- manifest-log guarantees ------------------------------------------
@@ -144,19 +106,6 @@ def test_commit_race_retries_on_next_version(spark, tmp_path):
     assert v == 2  # lost v1, retried, won v2
     vals = sorted(r["x"] for r in log.read(spark).collect())
     assert vals == [1, 2, 3]  # nothing lost
-
-
-def test_compact_then_vacuum_preserves_data(spark, acid_store):
-    for i in range(3):
-        acid_store.set_data(
-            _df(spark, [(f"t{i}", str(i))]), append=(i > 0)
-        )
-    assert len(acid_store.acid.dirs()) == 3
-    acid_store.compact(target_files=1)
-    assert len(acid_store.acid.dirs()) == 1
-    assert acid_store.count() == 3
-    # vacuumed history: old tx dirs gone, data intact on reopen
-    assert VectorStore(spark, acid_path=acid_store.acid.base).count() == 3
 
 
 def test_manifest_stats_prune_appends(spark, tmp_path):

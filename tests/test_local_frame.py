@@ -2,8 +2,9 @@
 and query text is encoded on the driver (``embedders.embed_local``):
 equivalence with the Python paths they replace, the store's job budget,
 a lint that keeps ``createDataFrame(<list>)`` out of the engine, one
-that every name an ``except`` clause catches is bound, and one that no
-public function takes a sizing option."""
+that every name an ``except`` clause catches is bound, one that no
+public function takes a sizing option, and a bound on the count of
+public options."""
 
 import ast
 import datetime as dt
@@ -123,7 +124,7 @@ def test_store_query_job_budget(spark, tmp_path):
     """A text read on a tiny store: ``query`` runs the empty check and
     the result collect (2 jobs), ``query_ann`` the centroid read, the
     lists schema and the collect (4). Encoding the query adds none."""
-    vs = VectorStore(spark, path=str(tmp_path / "s"))
+    vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
     vs.set_data(
         spark.createDataFrame([(f"doc {i}",) for i in range(40)], ["target"])
     )
@@ -223,8 +224,10 @@ def test_except_clauses_name_bound_exceptions():
 _SIZING_PARAM = re.compile(r"n_rows|n_queries|n_corpus|\w*_max_cells|driver_max_edges")
 
 
-def test_public_functions_take_no_sizing_options():
-    offenders = []
+def _public_functions():
+    """(path relative to the package, node) for every function and
+    method whose name does not start with ``_``, nested ones included,
+    and every ``__init__`` (a constructor takes its class's options)."""
     for root, _dirs, files in os.walk(PKG):
         for fname in files:
             if not fname.endswith(".py"):
@@ -233,15 +236,33 @@ def test_public_functions_take_no_sizing_options():
             with open(path, encoding="utf-8") as fh:
                 tree = ast.parse(fh.read())
             for node in ast.walk(tree):
-                if not isinstance(
+                if isinstance(
                     node, (ast.FunctionDef, ast.AsyncFunctionDef)
-                ) or node.name.startswith("_"):
-                    continue
-                a = node.args
-                offenders += [
-                    f"{os.path.relpath(path, PKG)}:{node.lineno} "
-                    f"{node.name}({p.arg})"
-                    for p in a.posonlyargs + a.args + a.kwonlyargs
-                    if _SIZING_PARAM.fullmatch(p.arg)
-                ]
+                ) and (
+                    not node.name.startswith("_") or node.name == "__init__"
+                ):
+                    yield os.path.relpath(path, PKG), node
+
+
+def test_public_functions_take_no_sizing_options():
+    offenders = [
+        f"{rel}:{node.lineno} {node.name}({p.arg})"
+        for rel, node in _public_functions()
+        for p in node.args.posonlyargs + node.args.args + node.args.kwonlyargs
+        if _SIZING_PARAM.fullmatch(p.arg)
+    ]
     assert not offenders, offenders
+
+
+#: upper bound on the public options: defaulted parameters of public
+#: functions, methods and constructors. Lower it when an option goes;
+#: raise it only with a reason in CHANGES.md
+_MAX_PUBLIC_OPTIONS = 758
+
+
+def test_public_option_count_does_not_grow():
+    n = sum(
+        len(a.defaults) + sum(d is not None for d in a.kw_defaults)
+        for a in (node.args for _rel, node in _public_functions())
+    )
+    assert n <= _MAX_PUBLIC_OPTIONS, n

@@ -102,8 +102,7 @@ def test_optimize_ann_index_files_per_list(spark, tmp_path):
         (f"doc {i}", [float(x) for x in rng.randn(8)])
         for i in range(400)
     ]
-    path = str(tmp_path / "annstore.parquet")
-    vs = VectorStore(spark, path=path)
+    vs = VectorStore(spark, acid_path=str(tmp_path / "annstore"))
     vs.set_data(spark.createDataFrame(rows, ["target", "vector"]))
     vs.build_ann_index(n_lists=4)
 

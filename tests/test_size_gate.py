@@ -385,7 +385,7 @@ def test_build_ann_index_sizes_kmeans_gate_by_store_width(
         return kmeans(*args, **kwargs)
 
     monkeypatch.setattr(clustering, "kmeans", spy)
-    vs = VectorStore(spark, path=str(tmp_path / "s"))
+    vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
     vs.set_data(
         spark.createDataFrame([(f"doc {i}",) for i in range(20)], ["target"])
     )
@@ -415,7 +415,9 @@ _APPEND = [
 
 
 def _store_state(spark, tmp_path, name):
-    vs = VectorStore(spark, path=str(tmp_path / name), maintain_dedup_state=True)
+    vs = VectorStore(
+        spark, acid_path=str(tmp_path / name), maintain_dedup_state=True
+    )
     schema = "target string, option1 string, option2 string"
     vs.set_data(spark.createDataFrame(_BULK, schema))
     vs.set_data(spark.createDataFrame(_APPEND, schema), append=True)
@@ -457,7 +459,9 @@ def test_ingest_dedup_check_scans_client_batch_once(spark, tmp_path):
     """A client's ``createDataFrame(<list>)`` batch is scanned by one
     job (the gate's pull); every later read of it hits the local
     relation, so no other job starts a Python worker for it."""
-    vs = VectorStore(spark, path=str(tmp_path / "s"), maintain_dedup_state=True)
+    vs = VectorStore(
+        spark, acid_path=str(tmp_path / "s"), maintain_dedup_state=True
+    )
     vs.set_data(
         spark.createDataFrame([(f"doc {i} text",) for i in range(30)], ["target"])
     )

@@ -96,47 +96,21 @@ def test_zeroshot_softmax_probs(store, spark):
 
 
 def test_parquet_persistence_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "store.parquet")
-    vs = VectorStore(spark, path=path)
+    path = str(tmp_path / "store")
+    vs = VectorStore(spark, acid_path=path)
     vs.set_data(_df(spark, [("a", "1"), ("b", "2")]))
     # a fresh store object on the same path sees the data
-    vs2 = VectorStore(spark, path=path)
+    vs2 = VectorStore(spark, acid_path=path)
     assert vs2.count() == 2
     res = vs2.query("a", k=1)
     assert res.first()["target"] == "a"
-    # append persists too
-    vs2.set_data(_df(spark, [("c", "3")]), append=True)
-    assert VectorStore(spark, path=path).count() == 3
-
-
-def test_crash_mid_swap_recovers(spark, tmp_path):
-    # ADVICE r1: append must never leave the store unrecoverable.
-    # Simulate every crash point of _persist's staged swap and check
-    # a fresh open heals to a complete version.
-    import os
-    import shutil
-
-    path = str(tmp_path / "store.parquet")
-    vs = VectorStore(spark, path=path)
-    vs.set_data(_df(spark, [("a", "1"), ("b", "2")]))
-
-    # crash point 1: staging fully written, live dir renamed away
-    # (the gap between the two renames)
-    shutil.copytree(path, path + "__staging")
-    os.rename(path, path + "__old")
-    vs2 = VectorStore(spark, path=path)
-    assert vs2.count() == 2
-    assert not os.path.exists(path + "__staging")
-    assert not os.path.exists(path + "__old")
-
-    # crash point 2: staging incomplete (no _SUCCESS), live renamed —
-    # must roll back to __old, not adopt the torn staging copy
-    shutil.copytree(path, path + "__staging")
-    os.remove(os.path.join(path + "__staging", "_SUCCESS"))
-    os.rename(path, path + "__old")
-    vs3 = VectorStore(spark, path=path)
-    assert vs3.count() == 2
-    assert not os.path.exists(path + "__staging")
+    # append persists too: insert-if-absent, ids continue
+    vs2.set_data(_df(spark, [("a", "NEW"), ("c", "3")]), append=True)
+    rows = VectorStore(spark, acid_path=path).data.collect()
+    assert {r["target"]: r["option1"] for r in rows} == {
+        "a": "1", "b": "2", "c": "3"
+    }
+    assert sorted(r["id"] for r in rows) == [1, 2, 3]
 
 
 def test_no_label_tower_disables_zeroshot(spark):
@@ -218,18 +192,21 @@ def test_bucketed_reset_drops_table(bucketed_store, spark):
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     import glob
 
-    path = str(tmp_path / "store.parquet")
-    vs = VectorStore(spark, path=path)
+    path = str(tmp_path / "store")
+    vs = VectorStore(spark, acid_path=path)
     # many tiny appends fragment the store
     for i in range(4):
         vs.set_data(
             _df(spark, [(f"t{i}a", "x"), (f"t{i}b", "y")]), append=(i > 0)
         )
+    assert len(vs.acid.dirs()) == 4
     before = vs.data.collect()
     vs.compact(target_files=1)
-    files = glob.glob(f"{path}/part-*.parquet")
+    assert len(vs.acid.dirs()) == 1
+    # the replaced data directories are vacuumed
+    files = glob.glob(f"{path}/data/*/part-*.parquet")
     assert len(files) == 1
-    after = VectorStore(spark, path=path).data.collect()
+    after = VectorStore(spark, acid_path=path).data.collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
 
 
@@ -256,8 +233,10 @@ def test_dedup_state_incremental_appends(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(dd, "build_ingest_dedup_state", spy)
 
-    path = str(tmp_path / "st.parquet")
-    vs = store_mod.VectorStore(spark, path=path, maintain_dedup_state=True)
+    path = str(tmp_path / "st")
+    vs = store_mod.VectorStore(
+        spark, acid_path=path, maintain_dedup_state=True
+    )
     base = [(f"alpha beta gamma delta {i}", "a") for i in range(20)]
     vs.set_data(_docs_df(spark, base))
     assert signed_counts == [20]
@@ -291,8 +270,8 @@ def test_dedup_state_gate_matches_stateless(spark, tmp_path):
         ("the quick brown fox jumps over the lazy cat", "n"),
         ("completely different sentence about spark plans", "n"),
     ]
-    path = str(tmp_path / "st2.parquet")
-    vs = VectorStore(spark, path=path, maintain_dedup_state=True)
+    path = str(tmp_path / "st2")
+    vs = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
     vs.set_data(_docs_df(spark, existing_rows))
 
     incoming = spark.createDataFrame(
@@ -319,13 +298,50 @@ def test_dedup_state_gate_matches_stateless(spark, tmp_path):
     assert got[102][0] == "new"
 
     # state survives reopen (persisted, not in-memory)
-    vs2 = VectorStore(spark, path=path, maintain_dedup_state=True)
+    vs2 = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
     assert vs2._dedup_state is not None
     got2 = {
         r["id"]: (r["verdict"], r["matched_id"])
         for r in vs2.ingest_dedup_check(incoming, threshold=0.5).collect()
     }
     assert got2 == got
+
+
+@pytest.mark.parametrize("mode", ["acid", "table"])
+def test_reopen_with_dedup_state_signs_existing_rows(spark, tmp_path, mode):
+    """A store written without dedup state (or whose state is gone)
+    and reopened with ``maintain_dedup_state=True`` signs its existing
+    rows at the first append, so the gate still sees them."""
+    kw = (
+        {"acid_path": str(tmp_path / "st")} if mode == "acid"
+        else {"table": "vs_reopen_state"}
+    )
+    VectorStore(spark, **kw).reset_db()
+    rows = [
+        ("pack my box with five dozen liquor jugs", "s"),
+        ("the quick brown fox jumps over the lazy dog", "s"),
+        ("how vexingly quick daft zebras jump today", "s"),
+    ]
+    try:
+        VectorStore(spark, **kw).set_data(_docs_df(spark, rows))
+        vs = VectorStore(spark, maintain_dedup_state=True, **kw)
+        vs.set_data(
+            _docs_df(spark, [("completely different words about plans", "n")]),
+            append=True,
+        )
+        assert vs._dedup_state["meta"].count() == 4
+        incoming = spark.createDataFrame(
+            [(100, rows[0][0]),
+             (101, "the quick brown fox jumps over the lazy cat")],
+            ["id", "target"],
+        )
+        got = sorted(
+            (r["id"], r["verdict"], r["matched_id"])
+            for r in vs.ingest_dedup_check(incoming, threshold=0.5).collect()
+        )
+        assert got == [(100, "exact_dup", 1), (101, "near_dup", 2)]
+    finally:
+        VectorStore(spark, **kw).reset_db()
 
 
 # -- materialized IVF index (the reference's vss/faiss analog) --------
@@ -344,8 +360,8 @@ def test_ann_index_query_and_pruning(spark, tmp_path):
         (f"doc {i}", [float(x) for x in rng.randn(16)]) for i in range(200)
     ]
     df = spark.createDataFrame(rows, ["target", "vector"])
-    path = str(tmp_path / "annstore.parquet")
-    vs = VectorStore(spark, path=path)
+    path = str(tmp_path / "annstore")
+    vs = VectorStore(spark, acid_path=path)
     vs.set_data(df)
     vs.build_ann_index(n_lists=4)
 
@@ -370,7 +386,7 @@ def test_ann_index_query_and_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "centroid_id" in plan
 
     # index is addressable after reopen via explicit path
-    vs2 = VectorStore(spark, path=path)
+    vs2 = VectorStore(spark, acid_path=path)
     again = vs2.query_ann(qvec, k=5, n_probe=4, index_path=vs._ivf_path)
     assert [r["id"] for r in again.collect()] == exact
 
@@ -387,8 +403,8 @@ def test_ann_index_incremental_add(spark, tmp_path):
     ]
     df1 = spark.createDataFrame(rows[:200], ["target", "vector"])
     df2 = spark.createDataFrame(rows[200:], ["target", "vector"])
-    path = str(tmp_path / "annstore.parquet")
-    vs = VectorStore(spark, path=path)
+    path = str(tmp_path / "annstore")
+    vs = VectorStore(spark, acid_path=path)
     vs.set_data(df1)
     vs.build_ann_index(n_lists=4)
 
@@ -412,7 +428,7 @@ def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch)
     write must still release them (cache lifetime is explicit)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    vs = VectorStore(spark, path=str(tmp_path / "s"))
+    vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
     vs.set_data(
         spark.createDataFrame([(f"doc {i}",) for i in range(40)], ["target"])
     )
@@ -449,8 +465,8 @@ def test_ann_index_compaction(spark, tmp_path):
     rows = [
         (f"doc {i}", [float(x) for x in rng.randn(8)]) for i in range(300)
     ]
-    path = str(tmp_path / "annstore.parquet")
-    vs = VectorStore(spark, path=path)
+    path = str(tmp_path / "annstore")
+    vs = VectorStore(spark, acid_path=path)
     vs.set_data(spark.createDataFrame(rows[:150], ["target", "vector"]))
     vs.build_ann_index(n_lists=4)
     for lo, hi in ((150, 200), (200, 250), (250, 300)):

@@ -306,7 +306,7 @@ def test_stream_ingest_to_store_matches_batch(spark, sf_dir, tmp_path):
         stream_ingest,
     )
 
-    store = VectorStore(spark, path=str(tmp_path / "store.parquet"))
+    store = VectorStore(spark, acid_path=str(tmp_path / "store"))
     stream = read_documents_stream(spark, sf_dir)
     q = stream_ingest(stream, store, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
@@ -355,7 +355,7 @@ def test_stream_ingest_deduped_rejects_near_dups(spark, tmp_path):
         perturbed, DOCUMENTS_SCHEMA
     ).coalesce(1).write.parquet(str(d2))
 
-    store = VectorStore(spark, path=str(tmp_path / "store.parquet"))
+    store = VectorStore(spark, acid_path=str(tmp_path / "store"))
 
     def stream_of(path):
         return spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(str(path))

@@ -8,7 +8,7 @@ spark = get_spark("store-2m-probe")
 spark.sparkContext.setLogLevel("ERROR")
 base = "/tmp/store2m"
 shutil.rmtree(base, ignore_errors=True)
-store = VectorStore(spark, path=base)
+store = VectorStore(spark, acid_path=base)
 
 def mk(lo, hi, tag):
     return spark.range(lo, hi).selectExpr(

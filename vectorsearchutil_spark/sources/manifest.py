@@ -2,11 +2,11 @@
 extra dependencies — the Delta/Iceberg posture for VectorStore when
 those jars are unavailable (VERDICT r2 #6).
 
-Why the path-mode store's rename swap is not enough: ``os.rename`` of
-a directory is atomic on a local filesystem but not on object stores
-(S3/GCS rename = copy+delete, non-atomic, and readers can observe the
-gap). This log borrows the design that Delta Lake built for exactly
-that problem:
+Why not a directory rewritten in place and swapped by rename:
+``os.rename`` of a directory is atomic on a local filesystem but not on
+object stores (S3/GCS rename = copy+delete, non-atomic, and readers can
+observe the gap), and every append would rewrite the whole store. This
+log borrows the design that Delta Lake built for exactly that problem:
 
 * **data files are immutable** — every transaction writes a fresh
   ``data/tx-<uuid>/`` directory and never touches existing ones; an

@@ -5,7 +5,7 @@ Reproduces ``vsu.base.VectorSearchBase``'s surface
 do_zeroshot / MLP_Classifier / MLP_Regressor / reset_db``,
 ``vsu/base/VectorSearchBase.py:96-256``) with Spark semantics:
 
-* the store is one DataFrame (optionally Parquet-persisted) — the
+* the store is one DataFrame (optionally persisted) — the
   reference's SQLite ``data`` table, ``vss`` index and pandas mirror
   collapse into it (the vector column IS the index payload; exact kNN
   subsumes ANN on correctness);
@@ -17,17 +17,17 @@ do_zeroshot / MLP_Classifier / MLP_Regressor / reset_db``,
 
 Persistence modes:
 
-* ``path=`` — plain Parquet; append rewrites via a staged copy and
-  the anti-join broadcasts the existing targets (fine for small
-  local stores).
+* default — in memory (a cached DataFrame), like the reference's
+  pandas mirror; nothing survives the session.
 * ``table=`` — **bucketed managed table** (bucketBy hash(target)):
   the 100 TB posture. Append writes ONLY the fresh rows
-  (``mode("append")`` into the bucketed table — no store rewrite,
-  no staging copy), and the insert-if-absent anti-join reads the
-  store bucket-aligned: the Exchange lands on the small incoming
-  batch, never on the store.
+  (``mode("append")`` into the bucketed table — no store rewrite),
+  and the insert-if-absent anti-join reads the store
+  bucket-aligned: the Exchange lands on the small incoming batch,
+  never on the store.
 * ``acid_path=`` — **manifest-log table** (sources/manifest.py): the
-  object-store-safe ACID mode. Immutable data directories + an
+  file-backed mode, the analog of the reference's one SQLite file
+  with a transaction per row. Immutable data directories + an
   atomic create-exclusive version manifest per commit (the
   conditional-PUT primitive S3/GCS/ABFS provide); appends commit
   only the appended rows; crashes at any point leave the previous
@@ -92,7 +92,6 @@ class VectorStore:
         self,
         spark: SparkSession,
         embedder: str = "hash64",
-        path: str | None = None,
         table: str | None = None,
         acid_path: str | None = None,
         acid_format: str = "manifest",
@@ -100,14 +99,11 @@ class VectorStore:
         maintain_dedup_state: bool = False,
         dedup_params: dict | None = None,
     ):
-        if sum(x is not None for x in (path, table, acid_path)) > 1:
-            raise ValueError(
-                "pass at most one of path= / table= / acid_path="
-            )
+        if table is not None and acid_path is not None:
+            raise ValueError("pass at most one of table= / acid_path=")
         self.spark = spark
         self.embedder = embedder
         self.vec_size = embedding_dim(embedder)
-        self.path = path
         self.table = table
         self.num_buckets = num_buckets
         self._df: DataFrame | None = None
@@ -151,20 +147,6 @@ class VectorStore:
                     }
                 except Exception:
                     self._dedup_state = None
-        if path is not None:
-            self._recover_path(path)
-            try:
-                self._df = spark.read.parquet(path)
-            except Exception:
-                self._df = None
-            if maintain_dedup_state:
-                try:
-                    self._dedup_state = {
-                        part: spark.read.parquet(self._dedup_dir(part))
-                        for part in self._DEDUP_PARTS
-                    }
-                except Exception:
-                    self._dedup_state = None
         elif table is not None and spark.catalog.tableExists(table):
             self._df = spark.table(table)
             if maintain_dedup_state and spark.catalog.tableExists(
@@ -176,33 +158,7 @@ class VectorStore:
                 }
 
     def _dedup_dir(self, part: str) -> str:
-        base = self.path if self.path is not None else self.acid.base
-        return base.rstrip("/") + "__dedup/" + part
-
-    @staticmethod
-    def _recover_path(path: str) -> None:
-        """Heal a store interrupted mid-swap (see _persist).
-
-        The swap order guarantees at least one complete copy exists at
-        every crash point: live dir, ``__old`` (previous version), or
-        ``__staging`` with a ``_SUCCESS`` marker (new version).
-        """
-        import os
-        import shutil
-
-        base = path.rstrip("/")
-        staging, old = base + "__staging", base + "__old"
-        if os.path.exists(base):
-            # swap completed (or never started) — drop leftovers
-            shutil.rmtree(staging, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return
-        if os.path.exists(os.path.join(staging, "_SUCCESS")):
-            os.rename(staging, base)  # new version fully written
-            shutil.rmtree(old, ignore_errors=True)
-        elif os.path.exists(old):
-            os.rename(old, base)  # roll back to previous version
-            shutil.rmtree(staging, ignore_errors=True)
+        return self.acid.base + "__dedup/" + part
 
     # -- store state -------------------------------------------------
 
@@ -228,10 +184,6 @@ class VectorStore:
                 self.spark.sql(
                     f"DROP TABLE IF EXISTS {self.table}_dedup_{part}"
                 )
-        if self.path is not None:
-            shutil.rmtree(
-                self.path.rstrip("/") + "__dedup", ignore_errors=True
-            )
         if self.acid is not None:
             self.acid.drop()
             shutil.rmtree(
@@ -252,55 +204,25 @@ class VectorStore:
                 .saveAsTable(self.table)
             )
             return self.spark.table(self.table)
-        if self.path is not None:
-            # the append path unions the DataFrame being overwritten;
-            # Spark reads lazily DURING the overwrite and would clobber
-            # its own input. Write the new version ONCE to a staging
-            # dir, verify it, then swap it into place with renames —
-            # the previous version survives on disk until the swap
-            # completes, so no crash point loses the store, and each
-            # append writes the data exactly once instead of twice.
-            # (Local-FS rename; with Delta/Iceberg this would be a
-            # single ACID MERGE/append — the bucketed table= mode is
-            # the cluster-scale posture.)
-            import os
-            import shutil
-
-            base = self.path.rstrip("/")
-            staging = base + "__staging"
-            df.write.mode("overwrite").parquet(staging)
-            # verify the staged write is readable before touching live
-            self.spark.read.parquet(staging).count()
-            old = base + "__old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(base):
-                os.rename(base, old)
-            os.rename(staging, base)
-            shutil.rmtree(old, ignore_errors=True)
-            return self.spark.read.parquet(base)
         return df.cache()
 
     def compact(self, target_files: int = 1) -> None:
-        """Rewrite the path-mode store into ``target_files`` files.
+        """Rewrite the ``acid_path=`` store into ``target_files`` files
+        and vacuum the data directories it replaces.
 
-        Streaming/micro-batch appends accumulate small files (each
-        append rewrites, but a long-lived store fed by many tiny
-        batches still fragments); at scale small files dominate scan
-        planning cost. Uses the same staged atomic swap as appends,
-        so a crash mid-compaction never loses the store. No-op for
-        table mode (bucketed layout fixes file count by bucket) and
-        for empty stores.
+        Every append commits its own data directory, so a long-lived
+        store fed by many tiny batches fragments; at scale small files
+        dominate scan planning cost. The rewrite is one replace
+        commit, so a crash mid-compaction leaves the previous version
+        readable. No-op for the in-memory and table modes (the
+        bucketed layout fixes file count by bucket) and for empty
+        stores.
         """
-        if self._df is None:
+        if self._df is None or self.acid is None:
             return
-        if self.acid is not None:
-            self.acid.compact(self.spark, target_files)
-            self.acid.vacuum()
-            self._df = self.acid.read(self.spark)
-            return
-        if self.path is None:
-            return
-        self._df = self._persist(self.data.coalesce(target_files))
+        self.acid.compact(self.spark, target_files)
+        self.acid.vacuum()
+        self._df = self.acid.read(self.spark)
 
     # -- ingest-dedup state (VERDICT r2 #5) ---------------------------
 
@@ -321,7 +243,7 @@ class VectorStore:
             **self.dedup_params,
         )
         mode = "overwrite" if replace else "append"
-        if self.path is not None or self.acid is not None:
+        if self.acid is not None:
             for part in self._DEDUP_PARTS:
                 state[part].write.mode(mode).parquet(self._dedup_dir(part))
             self._dedup_state = {
@@ -338,7 +260,7 @@ class VectorStore:
                 for part in self._DEDUP_PARTS
             }
         else:
-            if replace or self._dedup_state is None:
+            if replace:
                 self._dedup_state = {
                     p: state[p].cache() for p in self._DEDUP_PARTS
                 }
@@ -449,16 +371,12 @@ class VectorStore:
         if append and self._df is not None:
             existing = self.data
             # insert-if-absent: left anti vs existing targets
-            # (reference insert_data guard, VectorSearchBase.py:79-87)
-            if self.table is not None:
-                # bucketed mode: no broadcast hint — the store scan is
-                # already hash-partitioned by target, so the anti-join
-                # shuffles only the incoming batch
-                fresh = df.join(existing.select("target"), "target", "left_anti")
-            else:
-                # no broadcast hint: the existing store is unbounded;
-                # AQE demotes to broadcast when it measures small
-                fresh = df.join(existing.select("target"), "target", "left_anti")
+            # (reference insert_data guard, VectorSearchBase.py:79-87).
+            # No broadcast hint: the store is unbounded — a bucketed
+            # store scan is already hash-partitioned by target, so only
+            # the incoming batch shuffles, and AQE demotes to broadcast
+            # when it measures the store small
+            fresh = df.join(existing.select("target"), "target", "left_anti")
             start = existing.agg(F.coalesce(F.max("id"), F.lit(0))).first()[0]
             fresh = fresh.withColumn(
                 "id", F.row_number().over(Window.orderBy("_ord")) + F.lit(start)
@@ -466,7 +384,7 @@ class VectorStore:
             if self.table is not None:
                 # incremental append: write ONLY the fresh rows into
                 # the bucketed table — at 100 TB the store is never
-                # rewritten, and there is no staging double-write
+                # rewritten
                 (
                     fresh.write.mode("append")
                     .bucketBy(self.num_buckets, "target")
@@ -486,10 +404,14 @@ class VectorStore:
             if self.maintain_dedup_state:
                 # signatures for the APPENDED rows only (read back from
                 # the persisted store: clean lineage, and ids > start
-                # are exactly this batch) — O(batch) state work
+                # are exactly this batch) — O(batch) state work. A
+                # store reopened without its state signs every row
+                # once, or the gate would miss the rows it held.
+                whole = self._dedup_state is None
                 self._update_dedup_state(
-                    self.data.filter(F.col("id") > F.lit(start)),
-                    replace=False,
+                    self.data if whole
+                    else self.data.filter(F.col("id") > F.lit(start)),
+                    replace=whole,
                 )
         else:
             if batch is not None:
@@ -592,16 +514,11 @@ class VectorStore:
         if self._df is None:
             return
         if index_path is None:
-            base = (
-                self.path if self.path is not None
-                else self.acid.base if self.acid is not None
-                else None
-            )
-            if base is None:
+            if self.acid is None:
                 raise ValueError(
-                    "index_path= required for cache-mode stores"
+                    "index_path= required for stores without acid_path="
                 )
-            index_path = base.rstrip("/") + "__ivf"
+            index_path = self.acid.base + "__ivf"
         _, centroids = kmeans(
             self.data, k=n_lists, vector_col="vector", id_col="id",
             dim=self.vec_size,
@@ -631,9 +548,9 @@ class VectorStore:
         The unindexed set derives from a column-pruned id scan of the
         lists (an id-only anti-join, not a vector read); the append
         writes only the new rows, partition-wise. Idempotent: a second
-        call appends nothing. Plain-parquet appends are not atomic
-        under concurrent writers — use the manifest-log/Delta ACID
-        backends for that regime. Returns the number of rows added."""
+        call appends nothing. The lists are plain Parquet in every
+        store mode, so an append to them is not atomic under
+        concurrent writers. Returns the number of rows added."""
         import os
 
         from vectorsearchutil_spark.operators.similarity import (
@@ -677,10 +594,10 @@ class VectorStore:
         to dominate the probe scans). Rewrites the lists directory
         coalesced to ``target_files_per_list`` file(s) per centroid
         partition via a staged swap: write to ``lists__compact``,
-        then atomically rename over the old directory (the store's
-        staged-swap discipline — a crash leaves either the old or the
-        new complete directory, never a mix). Returns the number of
-        data files after compaction."""
+        then rename it over the old directory (a local rename, so a
+        crash leaves either the old or the new complete directory,
+        never a mix). Returns the number of data files after
+        compaction."""
         import glob
         import os
         import shutil
