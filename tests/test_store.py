@@ -437,6 +437,9 @@ def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch)
         spark.createDataFrame([(f"new {i}",) for i in range(5)], ["target"]),
         append=True,
     )
+    # a fresh handle holds no index, so the add takes the persisting
+    # (distributed) path
+    vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
     sc = spark.sparkContext
     spark.catalog.clearCache()
     before = set(sc._jsc.getPersistentRDDs().keySet())
@@ -446,7 +449,7 @@ def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
     with pytest.raises(OSError):
-        vs.add_to_ann_index()
+        vs.add_to_ann_index(index_path=str(tmp_path / "s") + "__ivf")
     # other tests' local checkpoints stay registered until collected,
     # so compare with the state before the call
     assert set(sc._jsc.getPersistentRDDs().keySet()) <= before

@@ -26,6 +26,7 @@ from vectorsearchutil_spark.functions.vector import l2_distance
 from vectorsearchutil_spark.session import (
     arrow_wins,
     batch_matrix,
+    centroid_sq_distances,
     collect_if_small,
     local_frame,
     table_matrix,
@@ -86,15 +87,13 @@ def _assign_blas(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = batch_matrix(pdf[vector_col], C.shape[1])
-            d2 = np.empty((len(X), len(cids)), dtype=np.float64)
-            for j in range(len(cids)):
-                diff = X - C[j]
-                d2[:, j] = np.einsum("ij,ij->i", diff, diff)
+            d2 = centroid_sq_distances(
+                batch_matrix(pdf[vector_col], C.shape[1]), C
+            )
             best = np.argmin(d2, axis=1)
             yield pdf.assign(
                 cid=cids[best].astype(np.int32),
-                _d=np.sqrt(d2[np.arange(len(X)), best]),
+                _d=np.sqrt(d2[np.arange(len(d2)), best]),
             )
 
     out = StructType(
@@ -348,19 +347,17 @@ def silhouette_ab(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                X = batch_matrix(pdf[vector_col], C.shape[1])
-                d2 = np.empty((len(X), len(cids)), dtype=np.float64)
-                for j in range(len(cids)):
-                    diff = X - C[j]
-                    d2[:, j] = np.einsum("ij,ij->i", diff, diff)
+                d2 = centroid_sq_distances(
+                    batch_matrix(pdf[vector_col], C.shape[1]), C
+                )
                 best = np.argmin(d2, axis=1)
-                rows = np.arange(len(X))
+                rows = np.arange(len(d2))
                 a = np.sqrt(d2[rows, best])
                 if len(cids) < 2:
                     # a single centroid has no "nearest other": b is
                     # NULL (degenerate one-row/one-cluster inputs),
                     # matching the oracle's MIN-over-empty
-                    b_col = pd.array([None] * len(X), dtype="Float64")
+                    b_col = pd.array([None] * len(d2), dtype="Float64")
                 else:
                     d2[rows, best] = np.inf
                     b = np.sqrt(d2.min(axis=1))

@@ -908,13 +908,22 @@ def build_ingest_dedup_state(
     rows already in the store. ``VectorStore`` maintains this
     incrementally across appends (store.py) so an ingest gate costs
     one signature pass over the BATCH only.
+
+    ``n_sh`` is the shingle total over the rows sharing the doc's id
+    (0 for a NULL id): a window sum of per-row shingle-array sizes, so
+    ``meta`` needs no join back to a shingle count. Over a
+    one-partition input (the store's pulled batch) the window needs
+    no exchange either, and each state table is one write job.
     """
     assert num_hashes % band_size == 0
+    from pyspark.sql import Window
+
     from vectorsearchutil_spark.functions.text import shingles_sql, tokens_sql
 
-    sh = df.selectExpr(id_col, f"{tokens_sql(text_col)} AS _t").selectExpr(
-        id_col, f"explode({shingles_sql('_t', n)}) AS shingle"
+    toks = df.selectExpr(
+        id_col, f"md5({text_col}) AS text_md5", f"{tokens_sql(text_col)} AS _t"
     )
+    sh = toks.selectExpr(id_col, f"explode({shingles_sql('_t', n)}) AS shingle")
     h1, h2 = minhash_base_hashes(F.col("shingle"))
     sig = (
         sh.withColumn("_h1", h1)
@@ -945,13 +954,17 @@ def build_ingest_dedup_state(
             )
         ).alias("bucket"),
     )
-    meta = df.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("text_md5")
-    ).join(
-        sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh")),
+    total = F.sum(F.expr(f"size({shingles_sql('_t', n)})")).over(
+        Window.partitionBy(id_col)
+    )
+    meta = toks.select(
         id_col,
-        "left",
-    ).fillna(0, subset=["n_sh"])
+        "text_md5",
+        F.when(F.col(id_col).isNull(), F.lit(0))
+        .otherwise(total)
+        .cast("long")
+        .alias("n_sh"),
+    )
     return {"meta": meta, "shingles": sh, "buckets": buckets}
 
 

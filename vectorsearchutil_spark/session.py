@@ -123,6 +123,12 @@ def local_frame(
     ``schema`` is given.
     """
     if isinstance(rows, pa.Table):
+        if not rows.num_rows:
+            # an empty filter or take leaves columns with no chunks,
+            # which createDataFrame cannot type
+            rows = pa.Table.from_arrays(
+                [c.combine_chunks() for c in rows.columns], schema=rows.schema
+            )
         return spark.createDataFrame(rows, schema)
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
@@ -201,6 +207,20 @@ def batch_matrix(vectors, dim: int) -> np.ndarray:
     if valid.any():
         X[valid] = np.array(list(vectors[valid]), dtype=np.float64)
     return X
+
+
+def centroid_sq_distances(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(rows, k) squared L2 distances from the rows of ``X`` to the
+    rows of the centroid matrix ``C``, accumulated one centroid at a
+    time (memory rows×dim, never rows×k×dim). A NaN row (a NULL
+    vector, see :func:`batch_matrix`) scores NaN everywhere, so
+    ``argmin`` over the row gives column 0, the lowest centroid when
+    ``C`` is in centroid-id order."""
+    d2 = np.empty((len(X), len(C)), dtype=np.float64)
+    for j in range(len(C)):
+        diff = X - C[j]
+        d2[:, j] = np.einsum("ij,ij->i", diff, diff)
+    return d2
 
 
 def table_matrix(

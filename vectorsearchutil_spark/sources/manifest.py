@@ -22,6 +22,12 @@ log borrows the design that Delta Lake built for exactly that problem:
   (``If-None-Match: *``), which S3, GCS and ABFS all support;
   concurrent writers race on the version number and the loser
   retries on the next version (optimistic concurrency);
+* **the manifest records the schema** — a commit stores the written
+  frame's schema (``schema``, the analogue of Delta's
+  ``metaData.schemaString``) and ``read`` uses it, so a reader infers
+  nothing from the parquet footers (schema inference is one Spark job
+  per read). An append whose schema differs from its parent's records
+  none, and a manifest without one is read with inference;
 * **vacuum** removes data directories no manifest references.
 
 Known bound: ``latest_version`` lists the log directory, so commit
@@ -44,6 +50,32 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def nullable_schema(schema: StructType) -> StructType:
+    """``schema`` with every field, array element and map value
+    nullable: what a parquet read reports for a written frame."""
+    def loosen(t: dict) -> dict:
+        if not isinstance(t, dict):
+            return t
+        out = dict(t)
+        if t["type"] == "struct":
+            out["fields"] = [
+                {**f, "nullable": True, "type": loosen(f["type"])}
+                for f in t["fields"]
+            ]
+        elif t["type"] == "array":
+            out.update(containsNull=True, elementType=loosen(t["elementType"]))
+        elif t["type"] == "map":
+            out.update(
+                valueContainsNull=True,
+                keyType=loosen(t["keyType"]),
+                valueType=loosen(t["valueType"]),
+            )
+        return out
+
+    return StructType.fromJson(loosen(schema.jsonValue()))
 
 
 class ManifestLog:
@@ -122,7 +154,9 @@ class ManifestLog:
         it as the next version. ``mode='append'`` keeps the parent
         version's directories; ``'replace'`` starts fresh. Returns the
         committed version. A crash before the commit leaves only an
-        unreferenced directory (invisible; vacuum removes it).
+        unreferenced directory (invisible; vacuum removes it). The
+        manifest records ``df``'s schema unless this append's schema
+        differs from the parent's (or the parent recorded none).
 
         ``stats_cols`` records per-transaction min/max for those
         columns in the manifest (computed from the written files, one
@@ -152,6 +186,7 @@ class ManifestLog:
                         lo if isinstance(lo, (int, float)) else str(lo),
                         hi if isinstance(hi, (int, float)) else str(hi),
                     ]
+        tx_schema = nullable_schema(df.schema).jsonValue()
         os.makedirs(self.log_dir, exist_ok=True)
         for _ in range(max_retries):
             parent = self.latest_version()
@@ -166,18 +201,22 @@ class ManifestLog:
             ]
             version = max(occupied, default=-1) + 1
             if mode == "replace" or parent is None:
-                dirs, stats = [], {}
+                dirs, stats, schema = [], {}, tx_schema
             else:
                 pm = self._manifest(parent)
                 dirs = list(pm["dirs"])
                 stats = dict(pm.get("stats", {}))
+                schema = pm.get("schema")
+                if schema != tx_schema:
+                    schema = None
             dirs.append(tx)
             if tx_stats:
                 stats[tx] = tx_stats
-            payload = json.dumps(
-                {"version": version, "parent": parent, "mode": mode,
-                 "dirs": dirs, "stats": stats}
-            )
+            entry = {"version": version, "parent": parent, "mode": mode,
+                     "dirs": dirs, "stats": stats}
+            if schema is not None:
+                entry["schema"] = schema
+            payload = json.dumps(entry)
             path = os.path.join(self.log_dir, f"v{version}.json")
             # Two-step atomic put-if-absent: the payload is fully
             # written + fsynced to a private temp file FIRST, then
@@ -207,17 +246,29 @@ class ManifestLog:
 
     # -- reads ---------------------------------------------------------
 
+    def _reader(self, spark: SparkSession, manifest: dict):
+        """A parquet reader under ``manifest``'s recorded schema, or an
+        inferring one where it recorded none."""
+        schema = manifest.get("schema")
+        if schema is None:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(schema))
+
     def read(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame | None:
         """The table at ``version`` (default latest; time travel for
         free — old manifests still describe old snapshots). None if no
         version is committed or the latest snapshot is empty."""
-        dirs = self.dirs(version)
-        if not dirs:
+        if version is None:
+            version = self.latest_version()
+        if version is None:
             return None
-        return spark.read.parquet(
-            *[os.path.join(self.data_dir, d) for d in dirs]
+        m = self._manifest(version)
+        if not m["dirs"]:
+            return None
+        return self._reader(spark, m).parquet(
+            *[os.path.join(self.data_dir, d) for d in m["dirs"]]
         )
 
     def pruned_dirs(
@@ -263,10 +314,12 @@ class ManifestLog:
         skipping)."""
         from pyspark.sql import functions as F
 
+        if version is None:
+            version = self.latest_version()
         kept, _ = self.pruned_dirs(col, lo, hi, version)
         if not kept:
             return None
-        df = spark.read.parquet(
+        df = self._reader(spark, self._manifest(version)).parquet(
             *[os.path.join(self.data_dir, d) for d in kept]
         )
         if lo is not None:

@@ -9,11 +9,21 @@ do_zeroshot / MLP_Classifier / MLP_Regressor / reset_db``,
   reference's SQLite ``data`` table, ``vss`` index and pandas mirror
   collapse into it (the vector column IS the index payload; exact kNN
   subsumes ANN on correctness);
-* ingest is one distributed job instead of a per-row transaction
-  loop; first-wins dedup on ``target`` matches
+* ingest is one batch instead of a per-row transaction loop;
+  first-wins dedup on ``target`` matches
   ``VectorSearchBase.py:79-87,124``;
-* ids are assigned by ``row_number`` over ingest order (the
-  reference's ``last_insert_rowid`` monotonic ids, :89).
+* ids are assigned in ingest order (the reference's
+  ``last_insert_rowid`` monotonic ids, :89).
+
+A batch of at most ``_LOCAL_BATCH_MAX_ROWS`` rows is pulled to the
+driver once and stays there, as the reference's in-process insert
+(``VectorSearchBase.py:78-94,101-133``) does: its dedup, id
+assignment and IVF list assignment run in Arrow and numpy, and the
+store is not re-planned for them. What the store already knows stays
+on the store object: its max id, and the centroids, lists schema and
+max indexed id of the IVF index it built or last extended. A reopened
+store knows neither until its first write; larger batches run the
+same steps as distributed plans.
 
 Persistence modes:
 
@@ -36,14 +46,19 @@ Persistence modes:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
+from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -56,7 +71,13 @@ from vectorsearchutil_spark.embedders import (
     embedding_dim,
 )
 from vectorsearchutil_spark.operators.knn import knn
-from vectorsearchutil_spark.session import collect_if_small, local_frame
+from vectorsearchutil_spark.session import (
+    batch_matrix,
+    centroid_sq_distances,
+    collect_if_small,
+    local_frame,
+)
+from vectorsearchutil_spark.sources.manifest import nullable_schema
 
 #: Fixed logical schema (reference save_columns, VectorSearchBase.py:21)
 SAVE_COLUMNS = ["target", "option1", "option2", "option3", "option4", "option5"]
@@ -75,6 +96,48 @@ STORE_SCHEMA = StructType(
     + [StructField(c, StringType()) for c in SAVE_COLUMNS]
     + [StructField("vector", ArrayType(FloatType()))]
 )
+
+
+#: dedup-state schemas by the store's (id, target) types and dedup
+#: parameters (see ``VectorStore._state_schemas``)
+_STATE_SCHEMAS: dict[tuple, dict[str, StructType]] = {}
+
+
+@dataclass
+class _HeldIndex:
+    """An IVF index as its store built or last extended it."""
+
+    path: str
+    #: centroid ids, ascending
+    cids: list
+    #: float64 (k, dim) centroid matrix, rows in ``cids`` order
+    centroids: np.ndarray
+    #: the schema a read of the lists directory infers
+    lists_schema: StructType
+    #: every store row with an id at most this is in the lists
+    max_id: int
+
+
+def _probes(
+    cids: list, centroids: np.ndarray, qvec: Sequence[float], n_probe: int
+) -> list:
+    """The ids of the ``n_probe`` centroids nearest ``qvec`` (``cids``
+    ascending, ``centroids`` in their order), ties to the lower id."""
+    d2 = centroid_sq_distances(np.asarray([qvec], dtype=np.float64), centroids)
+    return [cids[i] for i in np.argsort(d2[0], kind="stable")[:n_probe]]
+
+
+def _heal_lists(lists_path: str) -> None:
+    """Put back a lists directory that a crash between the two renames
+    of ``optimize_ann_index`` left missing. The staged ``__compact``
+    copy is complete (it is renamed only after its write returned), so
+    it wins; otherwise the ``__old`` copy goes back."""
+    if os.path.isdir(lists_path):
+        return
+    for staged in (lists_path + "__compact", lists_path + "__old"):
+        if os.path.isdir(staged):
+            os.rename(staged, lists_path)
+            return
 
 
 class VectorStore:
@@ -118,6 +181,11 @@ class VectorStore:
             **(dedup_params or {}),
         }
         self._dedup_state: dict[str, DataFrame] | None = None
+        #: the store's max id, held from the last write; None until
+        #: then (a reopened store reads it once, at its first append)
+        self._max_id: int | None = None
+        #: the IVF index this store built or last extended
+        self._ivf: _HeldIndex | None = None
         #: acid_path= — manifest-log table (sources/manifest.py): the
         #: object-store-safe mode. Appends commit only the appended
         #: rows; every commit is an atomic create-exclusive manifest
@@ -141,10 +209,9 @@ class VectorStore:
             self._df = self.acid.read(spark)
             if maintain_dedup_state:
                 try:
-                    self._dedup_state = {
-                        part: spark.read.parquet(self._dedup_dir(part))
-                        for part in self._DEDUP_PARTS
-                    }
+                    self._dedup_state = self._read_dedup_state(
+                        None if self._df is None else self._state_schemas()
+                    )
                 except Exception:
                     self._dedup_state = None
         elif table is not None and spark.catalog.tableExists(table):
@@ -159,6 +226,58 @@ class VectorStore:
 
     def _dedup_dir(self, part: str) -> str:
         return self.acid.base + "__dedup/" + part
+
+    def _build_dedup_state(self, rows: DataFrame) -> dict[str, DataFrame]:
+        from vectorsearchutil_spark.operators.dedup import (
+            build_ingest_dedup_state,
+        )
+
+        return build_ingest_dedup_state(
+            rows.select("id", "target"),
+            text_col="target",
+            id_col="id",
+            **self.dedup_params,
+        )
+
+    def _state_key(self) -> tuple:
+        fields = self._df.schema
+        return (
+            fields["id"].dataType.json(),
+            fields["target"].dataType.json(),
+            tuple(sorted(self.dedup_params.items())),
+        )
+
+    def _state_schemas(self) -> dict[str, StructType]:
+        """The schemas ``build_ingest_dedup_state`` gives over rows of
+        the store's (id, target) schema: analysis only, but building
+        and analysing the state plans takes 0.2-0.4 s, so they are
+        derived (here, over an empty local frame) or recorded (at a
+        state write) once per process."""
+        key = self._state_key()
+        if key not in _STATE_SCHEMAS:
+            fields = self._df.schema
+            empty = local_frame(
+                self.spark, [], StructType([fields["id"], fields["target"]])
+            )
+            _STATE_SCHEMAS[key] = {
+                part: nullable_schema(df.schema)
+                for part, df in self._build_dedup_state(empty).items()
+            }
+        return _STATE_SCHEMAS[key]
+
+    def _read_dedup_state(
+        self, schemas: dict[str, StructType] | None
+    ) -> dict[str, DataFrame]:
+        """The ``acid_path=`` store's dedup-state directories, read
+        under ``schemas``, or inferred from the files (one job each)
+        when that is None."""
+        reader = self.spark.read
+        return {
+            part: (
+                reader if schemas is None else reader.schema(schemas[part])
+            ).parquet(self._dedup_dir(part))
+            for part in self._DEDUP_PARTS
+        }
 
     # -- store state -------------------------------------------------
 
@@ -178,6 +297,8 @@ class VectorStore:
 
         self._df = None
         self._dedup_state = None
+        self._max_id = None
+        self._ivf = None
         if self.table is not None:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
             for part in self._DEDUP_PARTS:
@@ -228,28 +349,19 @@ class VectorStore:
 
     def _update_dedup_state(self, batch: DataFrame, replace: bool) -> None:
         """Persist the dedup signatures for ``batch`` (rows just
-        ingested, read back from the persisted store so lineage is
-        clean). Append mode appends ONLY the batch's state rows — the
+        ingested: the driver path's one-partition local frame, or the
+        rows read back from the persisted store so lineage is clean).
+        Append mode appends ONLY the batch's state rows — the
         incremental property: signature work per append is O(batch),
         never O(store)."""
-        from vectorsearchutil_spark.operators.dedup import (
-            build_ingest_dedup_state,
-        )
-
-        state = build_ingest_dedup_state(
-            batch.select("id", "target"),
-            text_col="target",
-            id_col="id",
-            **self.dedup_params,
-        )
+        state = self._build_dedup_state(batch)
         mode = "overwrite" if replace else "append"
         if self.acid is not None:
             for part in self._DEDUP_PARTS:
                 state[part].write.mode(mode).parquet(self._dedup_dir(part))
-            self._dedup_state = {
-                part: self.spark.read.parquet(self._dedup_dir(part))
-                for part in self._DEDUP_PARTS
-            }
+            schemas = {p: nullable_schema(state[p].schema) for p in state}
+            _STATE_SCHEMAS[self._state_key()] = schemas
+            self._dedup_state = self._read_dedup_state(schemas)
         elif self.table is not None:
             for part in self._DEDUP_PARTS:
                 state[part].write.mode(mode).saveAsTable(
@@ -333,8 +445,13 @@ class VectorStore:
 
         A batch of at most ``_LOCAL_BATCH_MAX_ROWS`` rows is pulled
         once (one Arrow job) and, like the reference's in-process
-        table, deduplicated and encoded on the driver; larger batches
-        run the same steps as a distributed plan.
+        table, deduplicated, encoded and given its ids on the driver.
+        An append then pulls only the batch's targets that the store
+        already holds (one column-pruned job), writes the fresh rows
+        as one local frame, and signs their dedup state from that
+        frame as one partition. The next id comes from the held max
+        id; a reopened store reads it once. Larger batches run the
+        same steps as a distributed plan.
         """
         if "target" not in data.columns:
             return
@@ -354,7 +471,6 @@ class VectorStore:
         batch = collect_if_small(df, _LOCAL_BATCH_MAX_ROWS)
         if batch is not None:
             batch = self._first_wins_local(batch, has_vector)
-            df = local_frame(self.spark, batch)
         else:
             if not has_vector:
                 df = df.withColumn(
@@ -366,70 +482,124 @@ class VectorStore:
                 df.withColumn("_rn", F.row_number().over(win))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
-            )
-        df = df.select(*SAVE_COLUMNS, "vector", "_ord")
+            ).select(*SAVE_COLUMNS, "vector", "_ord")
         if append and self._df is not None:
-            existing = self.data
-            # insert-if-absent: left anti vs existing targets
-            # (reference insert_data guard, VectorSearchBase.py:79-87).
-            # No broadcast hint: the store is unbounded — a bucketed
-            # store scan is already hash-partitioned by target, so only
-            # the incoming batch shuffles, and AQE demotes to broadcast
-            # when it measures the store small
-            fresh = df.join(existing.select("target"), "target", "left_anti")
+            self._append(df, batch)
+            return
+        if batch is not None:
+            df = self._with_ids(batch, 0)
+        else:
+            df = df.withColumn(
+                "id", F.row_number().over(Window.orderBy("_ord"))
+            ).select("id", *SAVE_COLUMNS, "vector")
+        self._ivf = None
+        self._df = self._persist(df)
+        self._max_id = None if batch is None else batch.num_rows
+        if self.maintain_dedup_state:
+            self._update_dedup_state(
+                self.data if batch is None else df, replace=True
+            )
+
+    def _append(self, df: DataFrame, batch: pa.Table | None) -> None:
+        """Insert-if-absent of the deduplicated batch (reference
+        insert_data guard, VectorSearchBase.py:79-87): ``batch`` when
+        it was pulled, else the distributed ``df``."""
+        existing = self.data
+        start = self._max_id
+        if start is None:
             start = existing.agg(F.coalesce(F.max("id"), F.lit(0))).first()[0]
+        if batch is not None:
+            batch = self._absent(batch)
+            fresh = self._with_ids(batch, start)
+        else:
+            # No broadcast hint: the store is unbounded — a bucketed
+            # store scan is already hash-partitioned by target, so
+            # only the incoming batch shuffles, and AQE demotes to
+            # broadcast when it measures the store small
+            fresh = df.join(existing.select("target"), "target", "left_anti")
             fresh = fresh.withColumn(
                 "id", F.row_number().over(Window.orderBy("_ord")) + F.lit(start)
             ).select("id", *SAVE_COLUMNS, "vector")
-            if self.table is not None:
-                # incremental append: write ONLY the fresh rows into
-                # the bucketed table — at 100 TB the store is never
-                # rewritten
-                (
-                    fresh.write.mode("append")
-                    .bucketBy(self.num_buckets, "target")
-                    .sortBy("target")
-                    .saveAsTable(self.table)
-                )
-                self._df = self.spark.table(self.table)
-            elif self.acid is not None:
-                # ACID append: one immutable data directory holding
-                # ONLY the fresh rows + one atomic manifest commit —
-                # the store is never rewritten and a crash at any
-                # point leaves the previous version fully readable
-                self.acid.write_and_commit(fresh, mode="append")
-                self._df = self.acid.read(self.spark)
-            else:
-                self._df = self._persist(existing.unionByName(fresh))
-            if self.maintain_dedup_state:
-                # signatures for the APPENDED rows only (read back from
-                # the persisted store: clean lineage, and ids > start
-                # are exactly this batch) — O(batch) state work. A
-                # store reopened without its state signs every row
-                # once, or the gate would miss the rows it held.
-                whole = self._dedup_state is None
-                self._update_dedup_state(
-                    self.data if whole
-                    else self.data.filter(F.col("id") > F.lit(start)),
-                    replace=whole,
-                )
+        if self.table is not None:
+            # incremental append: write ONLY the fresh rows into the
+            # bucketed table — at 100 TB the store is never rewritten
+            (
+                fresh.write.mode("append")
+                .bucketBy(self.num_buckets, "target")
+                .sortBy("target")
+                .saveAsTable(self.table)
+            )
+            self._df = self.spark.table(self.table)
+        elif self.acid is not None:
+            # ACID append: one immutable data directory holding ONLY
+            # the fresh rows + one atomic manifest commit — the store
+            # is never rewritten and a crash at any point leaves the
+            # previous version fully readable
+            self.acid.write_and_commit(fresh, mode="append")
+            self._df = self.acid.read(self.spark)
         else:
-            if batch is not None:
-                # the local batch is in ingest order: ids are positions
-                # (int, as row_number gives on the distributed path),
-                # written as one file like the row_number window's
-                # single partition
-                ids = pa.array(range(1, batch.num_rows + 1), pa.int32())
-                df = local_frame(
-                    self.spark, batch.append_column("id", ids)
-                ).coalesce(1)
+            self._df = self._persist(existing.unionByName(fresh))
+        self._max_id = None if batch is None else start + batch.num_rows
+        if self.maintain_dedup_state:
+            # signatures for the APPENDED rows only — O(batch) state
+            # work: the pulled rows' local frame, or, read back from
+            # the persisted store, the ids above ``start``. A store
+            # reopened without its state signs every row once, or
+            # the gate would miss the rows it held.
+            whole = self._dedup_state is None
+            if whole:
+                signed = self.data
+            elif batch is not None:
+                signed = fresh
             else:
-                df = df.withColumn(
-                    "id", F.row_number().over(Window.orderBy("_ord"))
+                signed = self.data.filter(F.col("id") > F.lit(start))
+            self._update_dedup_state(signed, replace=whole)
+
+    def _absent(self, batch: pa.Table) -> pa.Table:
+        """The rows of the pulled ``batch`` whose target the store does
+        not hold. One column-pruned job pulls the store's targets that
+        occur in the batch; a NULL target never matches, as in the
+        distributed anti-join.
+
+        The batch's targets enter the filter as one parsed ``IN``
+        list (the optimizer makes it a hash set): a Column literal per
+        target costs a Py4J round trip each (6.5 s for 10k targets on
+        a 4-core host), and a semi-join against a local relation runs
+        a second job to broadcast it. String targets are written as
+        hex literals cast back to string, so no quoting or parser
+        setting applies."""
+        probe = pc.drop_null(pc.unique(batch.column("target"))).to_pylist()
+        if not probe:
+            return batch
+        if isinstance(probe[0], str):
+            cond = F.expr(
+                "target IN ("
+                + ", ".join(
+                    f"CAST(X'{t.encode().hex()}' AS STRING)" for t in probe
                 )
-            self._df = self._persist(df.select("id", *SAVE_COLUMNS, "vector"))
-            if self.maintain_dedup_state:
-                self._update_dedup_state(self.data, replace=True)
+                + ")"
+            )
+        else:
+            cond = F.col("target").isin(probe)
+        held = self.data.select("target").filter(cond).toArrow()
+        return batch.filter(
+            pc.invert(pc.is_in(batch.column("target"), held.column("target")))
+        )
+
+    def _with_ids(self, rows: pa.Table, start: int) -> DataFrame:
+        """The pulled ``rows`` (in ingest order) with ids ``start + 1``
+        onward, as one local frame: a non-NULL int while they fit, as
+        the distributed path's ``row_number()`` gives, and one
+        partition, like that window's, so the write is one file."""
+        n = rows.num_rows
+        id_type = pa.int32() if start + n < 2**31 else pa.int64()
+        table = rows.append_column(
+            pa.field("id", id_type, nullable=False),
+            pa.array(range(start + 1, start + n + 1), id_type),
+        ).select(
+            ["id", *SAVE_COLUMNS, "vector"]
+        )
+        return local_frame(self.spark, table).coalesce(1)
 
     def _first_wins_local(self, batch: pa.Table, has_vector: bool) -> pa.Table:
         """The pulled ``batch`` deduplicated on ``target``, first wins
@@ -457,10 +627,13 @@ class VectorStore:
         """kNN by text (embedded) or by raw vector.
 
         Returns None on an empty store (reference guard,
-        VectorSearchBase.py:209-210). Result: id, save_columns,
-        distance — ascending L2, ties by id.
+        VectorSearchBase.py:209-210): a held max id above 0 says the
+        store holds rows, otherwise one ``isEmpty()`` job asks. Result:
+        id, save_columns, distance — ascending L2, ties by id.
         """
-        if self._df is None or self.data.isEmpty():
+        if self._df is None or (
+            not self._max_id and self.data.isEmpty()
+        ):
             return None
         qvec = self._query_vector(q)
         out = knn(self.data, qvec, k=k, vector_col="vector", id_col="id")
@@ -503,9 +676,9 @@ class VectorStore:
         list id, so a probe-limited search is partition pruning — at
         100 TB each query reads n_probe/n_lists of the index. The
         centroid table (k rows) persists next to it. Rebuild after
-        large appends (same posture as faiss retraining)."""
-        import os
-
+        large appends (same posture as faiss retraining). The store
+        holds the new index (see :meth:`add_to_ann_index`) when it
+        holds its own max id."""
         from vectorsearchutil_spark.operators.clustering import kmeans
         from vectorsearchutil_spark.operators.similarity import (
             build_ivf_index,
@@ -519,6 +692,7 @@ class VectorStore:
                     "index_path= required for stores without acid_path="
                 )
             index_path = self.acid.base + "__ivf"
+        self._ivf = None
         _, centroids = kmeans(
             self.data, k=n_lists, vector_col="vector", id_col="id",
             dim=self.vec_size,
@@ -535,6 +709,51 @@ class VectorStore:
             os.path.join(index_path, "centroids")
         )
         self._ivf_path = index_path
+        if self._max_id is not None:
+            # kmeans returns its centroids as a local relation, so
+            # this collect runs no job
+            self._hold_index(
+                index_path, cents.collect(), indexed.schema, self._max_id
+            )
+
+    def _hold_index(
+        self, path: str, cents: list, lists: StructType, max_id: int
+    ) -> None:
+        """Hold the index at ``path``: its (centroid_id, centroid_vec)
+        rows, the schema of the frames written to its lists (the
+        partition column last) and the max id they cover."""
+        rows = sorted((r[0], list(r[1])) for r in cents)
+        data = nullable_schema(lists)
+        self._ivf = _HeldIndex(
+            path=path,
+            cids=[c for c, _ in rows],
+            centroids=np.array([v for _, v in rows], dtype=np.float64),
+            # a read of the lists infers the partition column's type
+            # from its directory names: int for kmeans' centroid ids
+            lists_schema=StructType(
+                [f for f in data.fields if f.name != "centroid_id"]
+                + [StructField("centroid_id", IntegerType())]
+            ),
+            max_id=max_id,
+        )
+
+    def _held(self, index_path: str) -> _HeldIndex | None:
+        return (
+            self._ivf
+            if self._ivf is not None and self._ivf.path == index_path
+            else None
+        )
+
+    def _lists(self, index_path: str) -> DataFrame:
+        """The index's lists, read under the held schema when the
+        store holds the index."""
+        lists_path = os.path.join(index_path, "lists")
+        _heal_lists(lists_path)
+        held = self._held(index_path)
+        reader = self.spark.read
+        if held is not None:
+            reader = reader.schema(held.lists_schema)
+        return reader.parquet(lists_path)
 
     def add_to_ann_index(self, index_path: str | None = None) -> int:
         """Incremental IVF maintenance: assign ONLY the store rows not
@@ -545,31 +764,52 @@ class VectorStore:
         drifts only if the append distribution does; rebuild with
         :meth:`build_ann_index` then, exactly like faiss re-training).
 
-        The unindexed set derives from a column-pruned id scan of the
-        lists (an id-only anti-join, not a vector read); the append
-        writes only the new rows, partition-wise. Idempotent: a second
-        call appends nothing. The lists are plain Parquet in every
-        store mode, so an append to them is not atomic under
-        concurrent writers. Returns the number of rows added."""
-        import os
-
-        from vectorsearchutil_spark.operators.similarity import (
-            build_ivf_index,
-        )
-
+        When the store holds the index (it built or last extended it
+        and knows its max id), the unindexed rows are the ids above
+        the held max indexed id: one job pulls them if they are at
+        most ``_LOCAL_BATCH_MAX_ROWS``, they are assigned on the
+        driver against the held centroid matrix, and one job writes
+        them as one local frame — one file per touched list.
+        Otherwise (a reopened store, or more rows than the gate) the
+        unindexed set derives from a column-pruned id scan of the
+        lists (an id-only anti-join, which also picks up rows a
+        half-written earlier add missed) and the assignment is
+        ``build_ivf_index``'s; the store then holds the index.
+        Idempotent: a second call appends nothing. The lists are
+        plain Parquet in every store mode, so an append to them is
+        not atomic under concurrent writers, and a held index assumes
+        its store is the index's one writer. Returns the number of
+        rows added."""
         index_path = index_path or getattr(self, "_ivf_path", None)
         if index_path is None or self._df is None:
             return 0
         lists_path = os.path.join(index_path, "lists")
-        indexed_ids = self.spark.read.parquet(lists_path).select("id")
-        fresh = self.data.join(indexed_ids, "id", "left_anti")
-        cents = self.spark.read.parquet(
-            os.path.join(index_path, "centroids")
-        ).select(
-            F.col("centroid_id"), F.col("centroid_vec")
+        _heal_lists(lists_path)
+        held = self._held(index_path)
+        if held is not None:
+            rows = collect_if_small(
+                self.data.filter(F.col("id") > F.lit(held.max_id)),
+                _LOCAL_BATCH_MAX_ROWS,
+            )
+            if rows is not None:
+                if rows.num_rows:
+                    self._add_local(held, rows)
+                self._ivf_path = index_path
+                return rows.num_rows
+        from vectorsearchutil_spark.operators.similarity import (
+            build_ivf_index,
         )
+
+        fresh = self.data.join(
+            self._lists(index_path).select("id"), "id", "left_anti"
+        )
+        cdf = self.spark.read.parquet(
+            os.path.join(index_path, "centroids")
+        ).select("centroid_id", "centroid_vec")
+        cent_rows = cdf.collect()
         indexed = build_ivf_index(
-            fresh, cents, vector_col="vector"
+            fresh, local_frame(self.spark, cent_rows, cdf.schema),
+            vector_col="vector",
         ).persist()
         try:
             n = indexed.count()
@@ -580,7 +820,31 @@ class VectorStore:
         finally:
             indexed.unpersist()
         self._ivf_path = index_path
+        if self._max_id is not None:
+            # every store row is in the lists now
+            self._hold_index(
+                index_path, cent_rows, indexed.schema, self._max_id
+            )
         return n
+
+    def _add_local(self, held: _HeldIndex, rows: pa.Table) -> None:
+        """Assign the pulled unindexed ``rows`` to the held centroids
+        (nearest, ties to the lower id; a NULL vector takes the lowest,
+        as ``build_ivf_index`` does) and append them to the lists."""
+        d2 = centroid_sq_distances(
+            batch_matrix(
+                rows.column("vector").to_pandas(), held.centroids.shape[1]
+            ),
+            held.centroids,
+        )
+        # the partition value only names the list's directory
+        cids = pa.array([held.cids[i] for i in np.argmin(d2, axis=1)])
+        local_frame(
+            self.spark, rows.append_column("centroid_id", cids)
+        ).coalesce(1).write.mode("append").partitionBy("centroid_id").parquet(
+            os.path.join(held.path, "lists")
+        )
+        held.max_id = max(held.max_id, pc.max(rows.column("id")).as_py())
 
     def optimize_ann_index(
         self,
@@ -594,18 +858,19 @@ class VectorStore:
         to dominate the probe scans). Rewrites the lists directory
         coalesced to ``target_files_per_list`` file(s) per centroid
         partition via a staged swap: write to ``lists__compact``,
-        then rename it over the old directory (a local rename, so a
-        crash leaves either the old or the new complete directory,
-        never a mix). Returns the number of data files after
-        compaction."""
+        rename the old directory to ``lists__old``, then rename the
+        staged one into place (local renames; a crash between the two
+        leaves no ``lists``, and the next access to the index renames
+        the complete staged copy into place). Returns the number of
+        data files after compaction."""
         import glob
-        import os
         import shutil
 
         index_path = index_path or getattr(self, "_ivf_path", None)
         if index_path is None:
             return 0
         lists_path = os.path.join(index_path, "lists")
+        lists_df = self._lists(index_path)
         staged = lists_path + "__compact"
         shutil.rmtree(staged, ignore_errors=True)
         # repartition BY KEY ONLY: repartition(N, "centroid_id") sets
@@ -620,9 +885,7 @@ class VectorStore:
         # what its name says: the biggest list lands in exactly
         # `target_files_per_list` files, smaller lists in
         # proportionally fewer.
-        lists_df = self.spark.read.parquet(lists_path).repartition(
-            "centroid_id"
-        )
+        lists_df = lists_df.repartition("centroid_id")
         writer = lists_df.write.mode("overwrite")
         n = max(1, int(target_files_per_list))
         if n > 1:
@@ -662,29 +925,38 @@ class VectorStore:
         index_path: str | None = None,
     ) -> DataFrame | None:
         """Approximate kNN through the materialized IVF index: pick
-        the n_probe nearest lists driver-side (k-row centroid table),
-        scan ONLY those partitions (PartitionFilters — test-asserted),
-        exact distance + top-k inside them. Same result contract as
-        ``query`` (ascending L2, ties by id); recall < 1 by design."""
-        import os
-
+        the n_probe nearest lists driver-side, ties to the lower
+        centroid id, scan ONLY those partitions (PartitionFilters —
+        test-asserted), exact distance + top-k inside them. Same
+        result contract as ``query`` (ascending L2, ties by id);
+        recall < 1 by design. When the store holds the index the
+        probes come from the held centroid matrix and the lists are
+        read under the held schema, so building the result runs no
+        job; otherwise the k-row centroid table is read and
+        collected."""
         index_path = index_path or getattr(self, "_ivf_path", None)
         if index_path is None or self._df is None:
             return None
         qvec = self._query_vector(q)
-        cents = self.spark.read.parquet(
-            os.path.join(index_path, "centroids")
-        ).collect()
-        scored = sorted(
-            (
-                sum((float(a) - float(b)) ** 2 for a, b in zip(qvec, r[1])),
-                int(r[0]),
+        held = self._held(index_path)
+        if held is not None:
+            probes = _probes(held.cids, held.centroids, qvec, n_probe)
+        else:
+            rows = sorted(
+                (r[0], r[1])
+                for r in self.spark.read.parquet(
+                    os.path.join(index_path, "centroids")
+                ).collect()
             )
-            for r in cents
+            probes = _probes(
+                [c for c, _ in rows],
+                np.array([v for _, v in rows], dtype=np.float64),
+                qvec,
+                n_probe,
+            )
+        pruned = self._lists(index_path).filter(
+            F.col("centroid_id").isin(probes)
         )
-        probes = [cid for _, cid in scored[:n_probe]]
-        lists = self.spark.read.parquet(os.path.join(index_path, "lists"))
-        pruned = lists.filter(F.col("centroid_id").isin(probes))
         out = knn(pruned, qvec, k=k, vector_col="vector", id_col="id")
         return out.select("id", *SAVE_COLUMNS, "distance")
 
