@@ -202,7 +202,13 @@ def test_pii_redaction_narrow_no_shuffle(spark, sf_dir):
     assert "Exchange" not in plan  # one narrow regexp projection
 
 
-def test_incremental_ingest_broadcasts_batch(spark, sf_dir):
+def test_incremental_ingest_broadcasts_batch(spark, sf_dir, monkeypatch):
+    """Above the driver gate the store side joins a broadcast of the
+    incoming batch (at this scale the batch is under the gate, so the
+    gate is lowered to 0 to plan it)."""
+    from vectorsearchutil_spark.operators import dedup as dd
+
+    monkeypatch.setattr(dd, "INGEST_GATE_MAX_ROWS", 0)
     df = Q.QUERIES["dedup_incremental_ingest"](spark, sf_dir)
     assert has_broadcast_join(df)
     assert_no_cartesian(df)

@@ -225,9 +225,10 @@ def _job_count(spark, group, fn):
 
 def test_store_round_job_budget(spark, tmp_path):
     """One small round of a file-backed store with dedup state, as a
-    client feeds it: the append runs at most 6 Spark jobs, the index
-    add at most 2, and building the exact and ANN reads runs none (the
-    jobs are in their result's collect)."""
+    client feeds it: the dedup check of the batch runs at most 3 Spark
+    jobs (the pull and two state probes), the append at most 6, the
+    index add at most 2, and building the exact and ANN reads runs
+    none (the jobs are in their result's collect)."""
     rng = np.random.RandomState(2)
     words = [f"w{i}" for i in range(60)]
 
@@ -245,6 +246,15 @@ def test_store_round_job_budget(spark, tmp_path):
     jobs = {}
     for r in range(2):  # the first round warms the code paths
         batch = docs(45, 1000 + 100 * r) + bulk[r * 5:r * 5 + 5]
+        verdicts, jobs["check"] = _job_count(
+            spark, f"budget-check-{r}",
+            lambda: vs.ingest_dedup_check(spark.createDataFrame(
+                [(i, t) for i, (t, _) in enumerate(batch)],
+                "id long, target string")).collect(),
+        )
+        resent = {v["id"]: v["matched_id"] for v in verdicts
+                  if v["verdict"] == "exact_dup"}
+        assert resent == {45 + j: r * 5 + j + 1 for j in range(5)}
         _, jobs["append"] = _job_count(
             spark, f"budget-append-{r}",
             lambda: vs.set_data(
@@ -258,6 +268,7 @@ def test_store_round_job_budget(spark, tmp_path):
         approx, jobs["query_ann"] = _job_count(
             spark, f"budget-ann-{r}", lambda: vs.query_ann("doc1 w1 w2", k=5))
         assert len(exact.collect()) == len(approx.collect()) == 5
+    assert jobs["check"] <= 3, jobs
     assert jobs["append"] <= 6, jobs
     assert jobs["add"] <= 2, jobs
     assert jobs["query"] == 0 and jobs["query_ann"] == 0, jobs

@@ -28,9 +28,14 @@ DuckDB oracles bit-for-bit.
 
 from __future__ import annotations
 
+import hashlib
+from collections import Counter
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from vectorsearchutil_spark.functions.text import (
     minhash_base_hashes,
@@ -39,7 +44,11 @@ from vectorsearchutil_spark.functions.text import (
 )
 from vectorsearchutil_spark.functions.vector import cosine_similarity
 from vectorsearchutil_spark.operators import graph
-from vectorsearchutil_spark.session import collect_if_small, local_frame
+from vectorsearchutil_spark.session import (
+    collect_if_small,
+    in_list,
+    local_frame,
+)
 
 
 def exact_dedup_groups(
@@ -968,6 +977,191 @@ def build_ingest_dedup_state(
     return {"meta": meta, "shingles": sh, "buckets": buckets}
 
 
+#: Incoming batches of at most this many rows are gated on the driver
+#: (see ``incremental_ingest_dedup_with_state``). The bound is where
+#: the driver path stops winning: a row enters the first probe as one
+#: md5 and 4 bucket literals, and Spark plans an ``in_list`` of hex
+#: string literals in 0.6 s at 10k literals and 3.5-5 s at 40k.
+#: Measured against a 20k-row store (20-word documents, 4-core host),
+#: driver vs distributed: 2k rows 0.8-2.3 s vs 1.4-3.7 s, 3k rows
+#: 1.5-1.9 s vs 1.7-2.1 s, 5k rows 2.4-2.8 s vs 1.7-2.1 s, 10k rows
+#: 4.6-8.0 s vs 1.8-5.1 s.
+INGEST_GATE_MAX_ROWS = 2_000
+
+
+def _sign_rows(
+    ids: list, texts: list, n: int, num_hashes: int, band_size: int
+) -> dict[str, list[tuple]]:
+    """``build_ingest_dedup_state`` of the driver-held rows
+    ``(ids[i], texts[i])``, computed in-process, row for row: the same
+    whitespace tokens (split on single spaces, empties dropped), the
+    same distinct word n-grams, the same md5 arithmetic. ``meta`` rows
+    come in input order; ``shingles`` per row in n-gram order;
+    ``buckets`` per id, band by band."""
+    assert num_hashes % band_size == 0
+    per_row = []
+    n_sh: dict = {}
+    by_id: dict = {}
+    for i, t in zip(ids, texts):
+        toks = [] if t is None else [w for w in t.split(" ") if w]
+        grams = list(
+            dict.fromkeys(
+                "_".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
+            )
+        )
+        per_row.append(grams)
+        n_sh[i] = n_sh.get(i, 0) + len(grams)
+        by_id.setdefault(i, set()).update(grams)
+    meta = [
+        (
+            i,
+            None if t is None else hashlib.md5(t.encode()).hexdigest(),
+            0 if i is None else n_sh[i],
+        )
+        for i, t in zip(ids, texts)
+    ]
+    shingles = [(i, g) for i, grams in zip(ids, per_row) for g in grams]
+    buckets = []
+    members = np.arange(num_hashes, dtype=np.int64)[:, None]
+    for i, grams in by_id.items():
+        if not grams:
+            continue
+        digests = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+        h1 = np.array([int(d[:12], 16) for d in digests], dtype=np.int64)
+        h2 = np.array([int(d[16:28], 16) for d in digests], dtype=np.int64)
+        sig = (h1 + members * h2).min(axis=1).tolist()
+        for b in range(num_hashes // band_size):
+            band = "|".join(map(str, sig[b * band_size:(b + 1) * band_size]))
+            buckets.append(
+                (i, f"{b}:{hashlib.md5(band.encode()).hexdigest()}")
+            )
+    return {"meta": meta, "shingles": shingles, "buckets": buckets}
+
+
+def _gate_on_driver(
+    state: dict[str, DataFrame],
+    batch: pa.Table,
+    out_schema: StructType,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_hashes: int,
+    band_size: int,
+    threshold: float,
+) -> DataFrame:
+    """The distributed gate's verdicts for the pulled ``batch``, as a
+    local frame: the batch is signed in-process, and two column-pruned
+    jobs read only the state rows it touches."""
+    ids = batch.column(id_col).to_pylist()
+    texts = batch.column(text_col).to_pylist()
+    sig = _sign_rows(ids, texts, n, num_hashes, band_size)
+    # a NULL incoming id never joins back to its verdict: 'new'
+    md5s: dict = {}
+    for i, h, _ in sig["meta"]:
+        if i is not None and h is not None:
+            md5s.setdefault(h, set()).add(i)
+    counts: dict = {}
+    for i, g in sig["shingles"]:
+        if i is not None:
+            counts.setdefault(i, Counter())[g] += 1
+    inc_buckets: dict = {}
+    for i, b in sig["buckets"]:
+        if i is not None:
+            inc_buckets.setdefault(b, []).append(i)
+
+    # probe 1: the store rows sharing a text hash or a band bucket
+    exact: dict = {}
+    cands: dict = {}
+    if md5s or inc_buckets:
+        hit = (
+            state["meta"]
+            .select(
+                F.lit(True).alias("_exact"),
+                F.col(id_col).alias("_id"),
+                F.col("text_md5").alias("_key"),
+            )
+            .filter(in_list("_key", list(md5s)))
+            .unionByName(
+                state["buckets"]
+                .select(
+                    F.lit(False).alias("_exact"),
+                    F.col(id_col).alias("_id"),
+                    F.col("bucket").alias("_key"),
+                )
+                .filter(in_list("_key", list(inc_buckets)))
+            )
+            .filter(F.col("_id").isNotNull())
+            .toArrow()
+            .to_pylist()
+        )
+        for r in hit:
+            if r["_exact"]:
+                for i in md5s[r["_key"]]:
+                    if i not in exact or r["_id"] < exact[i]:
+                        exact[i] = r["_id"]
+            else:
+                for i in inc_buckets[r["_key"]]:
+                    cands.setdefault(i, set()).add(r["_id"])
+    # an exact match wins: its near candidates need no shingles
+    for i in exact:
+        cands.pop(i, None)
+
+    # probe 2: the candidates' shingles and shingle totals; exact
+    # Jaccard as the distributed plan counts it (one row per incoming
+    # shingle row and store shingle row, every meta row of the id)
+    near: dict = {}
+    probe_ids = sorted({e for es in cands.values() for e in es})
+    if probe_ids:
+        rows = (
+            state["shingles"]
+            .select(
+                F.col(id_col).alias("_id"),
+                F.col("shingle").alias("_sh"),
+                F.lit(None).cast("long").alias("_n"),
+            )
+            .unionByName(
+                state["meta"].select(
+                    F.col(id_col).alias("_id"),
+                    F.lit(None).cast("string").alias("_sh"),
+                    F.col("n_sh").cast("long").alias("_n"),
+                )
+            )
+            .filter(in_list("_id", probe_ids))
+            .toArrow()
+            .to_pylist()
+        )
+        ex_counts: dict = {}
+        ex_sizes: dict = {}
+        for r in rows:
+            if r["_sh"] is not None:
+                ex_counts.setdefault(r["_id"], Counter())[r["_sh"]] += 1
+            elif r["_n"] is not None:
+                ex_sizes.setdefault(r["_id"], set()).add(r["_n"])
+        for i, es in cands.items():
+            mine = counts.get(i, Counter())
+            n_a = mine.total()
+            for e in sorted(es):
+                theirs = ex_counts.get(e, {})
+                inter = sum(k * theirs.get(g, 0) for g, k in mine.items())
+                if inter and any(
+                    n_a + n_b - inter != 0
+                    and inter / (n_a + n_b - inter) >= threshold
+                    for n_b in ex_sizes.get(e, ())
+                ):
+                    near[i] = e
+                    break
+
+    out = []
+    for i in ids:
+        if i in exact:
+            out.append((i, "exact_dup", exact[i]))
+        elif i in near:
+            out.append((i, "near_dup", near[i]))
+        else:
+            out.append((i, "new", None))
+    return local_frame(state["meta"].sparkSession, out, out_schema)
+
+
 def incremental_ingest_dedup_with_state(
     state: dict[str, DataFrame],
     incoming: DataFrame,
@@ -982,16 +1176,42 @@ def incremental_ingest_dedup_with_state(
     incoming doc, verdict 'exact_dup' (byte-identical text exists),
     'near_dup' (MinHash-LSH candidate verified at Jaccard ≥
     threshold), or 'new', plus the lowest matching existing id.
+    Mirrors the reference's insert-if-absent append guard
+    (vsu/base/VectorSearchBase.py:79-87) extended to near-dup.
 
     The store side contributes only its precomputed state tables — no
-    store-side signature recomputation, ever. The incoming batch is
-    small (the store pulls it into a local relation), and every join
-    against the store is batch-side-driven — the store's bucket scan
-    joins a BROADCAST of the batch buckets, candidates are
-    (incoming × bucket mates), never store × store. Mirrors the
-    reference's insert-if-absent append guard
-    (vsu/base/VectorSearchBase.py:79-87) extended to near-dup.
+    store-side signature recomputation, ever. A batch of at most
+    ``INGEST_GATE_MAX_ROWS`` rows is pulled (one job) and gated on
+    the driver: it is signed in-process (``_sign_rows``), one
+    column-pruned job reads the ``meta`` rows with its text hashes and
+    the ``buckets`` rows with its band buckets, a second reads the
+    ``shingles`` rows and shingle totals of the candidate ids, and
+    exact Jaccard runs in-process; the verdicts come back as a local
+    frame. Each probe is one ``session.in_list``; a Parquet scan takes
+    the id list's min and max to skip row groups, since the state is
+    written one batch, one contiguous id range, at a time. Above the gate
+    every join against the store is batch-side-driven: the store's
+    bucket scan joins a BROADCAST of the batch buckets, candidates are
+    (incoming × bucket mates), never store × store.
     """
+    batch = collect_if_small(
+        incoming.select(id_col, text_col), INGEST_GATE_MAX_ROWS
+    )
+    if batch is not None:
+        fields = incoming.schema
+        out_schema = StructType(
+            [
+                fields[id_col],
+                StructField("verdict", StringType(), False),
+                StructField(
+                    "matched_id", state["meta"].schema[id_col].dataType
+                ),
+            ]
+        )
+        return _gate_on_driver(
+            state, batch, out_schema, text_col, id_col, n, num_hashes,
+            band_size, threshold,
+        )
     inc_state = build_ingest_dedup_state(
         incoming, text_col, id_col, n, num_hashes, band_size
     )
@@ -1070,9 +1290,12 @@ def incremental_ingest_dedup(
     threshold: float = 0.8,
 ) -> DataFrame:
     """State-less convenience form: derive the store state in-job,
-    then gate. Production appends use the persisted-state form
-    (``VectorStore.ingest_dedup_check``) so the store side is read,
-    not recomputed — results are identical either way (test-asserted).
+    then gate (on the driver for a batch of at most
+    ``INGEST_GATE_MAX_ROWS`` rows, see
+    ``incremental_ingest_dedup_with_state``). Production appends use
+    the persisted-state form (``VectorStore.ingest_dedup_check``) so
+    the store side is read, not recomputed — results are identical
+    either way (test-asserted).
     """
     state = build_ingest_dedup_state(
         existing, text_col, id_col, n, num_hashes, band_size

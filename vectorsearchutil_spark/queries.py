@@ -5313,8 +5313,10 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time dedup gate: the newest 20% of docs (the incoming
     batch) checked against the older 80% (the store) — exact md5
     match first, then MinHash-LSH candidates verified at Jaccard
-    ≥ 0.8. Store-side scans join against BROADCAST incoming buckets,
-    so at 100 TB the store never shuffles for an append."""
+    ≥ 0.8. An incoming batch of at most ``INGEST_GATE_MAX_ROWS`` rows
+    is gated on the driver; above that, store-side scans join against
+    BROADCAST incoming buckets, so at 100 TB the store never shuffles
+    for an append."""
     docs = load_table(spark, sf_dir, "documents")
     cut_row = docs.agg(F.floor(0.8 * F.max("doc_id"))).first()
     cut = int(cut_row[0]) if cut_row[0] is not None else 0  # empty corpus

@@ -16,7 +16,8 @@ from collections.abc import Iterable, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
@@ -166,6 +167,28 @@ def collect_if_small(df: DataFrame, n: int) -> pa.Table | None:
     """
     table = (df.limit(n + 1) if n < 2**31 - 1 else df).toArrow()
     return table if table.num_rows <= n else None
+
+
+def in_list(col: str, values: Sequence) -> Column:
+    """``col IN (values)`` for driver-held ``values``, as one parsed
+    expression (the optimizer makes it a hash set, and a Parquet scan
+    takes its min and max to skip row groups). A Column literal per
+    value (``isin``) costs a Py4J round trip each (6.5 s for 10k
+    strings on a 4-core host). Strings are written as hex literals
+    cast back to string, so no quoting or parser setting applies;
+    ints as decimal literals; other types go through ``isin``. An
+    empty list matches nothing. Planning grows with the list: 0.6 s
+    for 10k hex string literals, 3.5-5 s for 40k."""
+    if not values:
+        return F.lit(False)
+    if all(isinstance(v, str) for v in values):
+        items = [f"CAST(X'{v.encode().hex()}' AS STRING)" for v in values]
+    elif all(type(v) is int for v in values):
+        items = [str(v) for v in values]
+    else:
+        return F.col(col).isin(list(values))
+    name = col.replace("`", "``")
+    return F.expr(f"`{name}` IN ({', '.join(items)})")
 
 
 #: The expression/Arrow wall: rows × k × dim "cells" of per-pair

@@ -49,6 +49,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -75,6 +76,7 @@ from vectorsearchutil_spark.session import (
     batch_matrix,
     centroid_sq_distances,
     collect_if_small,
+    in_list,
     local_frame,
 )
 from vectorsearchutil_spark.sources.manifest import nullable_schema
@@ -207,13 +209,14 @@ class VectorStore:
 
                 self.acid = ManifestLog(acid_path)
             self._df = self.acid.read(spark)
-            if maintain_dedup_state:
-                try:
-                    self._dedup_state = self._read_dedup_state(
-                        None if self._df is None else self._state_schemas()
-                    )
-                except Exception:
-                    self._dedup_state = None
+            # a state with a part missing counts as absent: the next
+            # append signs the whole store again
+            if maintain_dedup_state and all(
+                os.path.isdir(self._dedup_dir(p)) for p in self._DEDUP_PARTS
+            ):
+                self._dedup_state = self._read_dedup_state(
+                    None if self._df is None else self._state_schemas()
+                )
         elif table is not None and spark.catalog.tableExists(table):
             self._df = spark.table(table)
             if maintain_dedup_state and spark.catalog.tableExists(
@@ -295,6 +298,8 @@ class VectorStore:
         """Drop everything (reference reset_db, VectorSearchBase.py:96-99)."""
         import shutil
 
+        for df in self._cached():
+            df.unpersist()
         self._df = None
         self._dedup_state = None
         self._max_id = None
@@ -310,6 +315,30 @@ class VectorStore:
             shutil.rmtree(
                 self.acid.base + "__dedup", ignore_errors=True
             )
+
+    def _cached(self) -> list[DataFrame]:
+        """The frames an in-memory store holds in the cache: its data
+        and its dedup state."""
+        if self.acid is not None or self.table is not None:
+            return []
+        held = [self._df, *(self._dedup_state or {}).values()]
+        return [df for df in held if df is not None]
+
+    def _release(self, replaced: list[DataFrame]) -> None:
+        """Unpersist the cached frames a write of an in-memory store
+        replaced. The frames that replace them are built over them, so
+        one job (a no-op write) first fills the new caches from the
+        old: dropping ``replaced`` then recomputes nothing, and the
+        cache holds one copy of the store and its state."""
+        if not replaced:
+            return
+        held = [df.select(F.lit(1).alias("_")) for df in self._cached()]
+        if held:
+            reduce(DataFrame.unionAll, held).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        for df in replaced:
+            df.unpersist()
 
     def _persist(self, df: DataFrame) -> DataFrame:
         if self.acid is not None:
@@ -394,13 +423,14 @@ class VectorStore:
         threshold) / 'new' + the lowest matching store id.
 
         With ``maintain_dedup_state`` the store side contributes only
-        its persisted signature tables — the append-time cost is one
-        signature pass over the batch plus batch-driven broadcast
-        joins; the store is never re-shingled (production posture).
-        Without state it falls back to deriving the store side in-job
-        (identical results). A batch of at most
-        ``_LOCAL_BATCH_MAX_ROWS`` rows is pulled once (one Arrow job)
-        and read from a local relation by the rest of the plan."""
+        its persisted signature tables; the store is never re-shingled
+        (production posture). Without state it falls back to deriving
+        the store side in-job (identical results). A batch of at most
+        ``dedup.INGEST_GATE_MAX_ROWS`` rows is pulled once and gated on
+        the driver: three jobs (the pull and two column-pruned state
+        probes) give a local frame of verdicts. Larger batches run
+        batch-driven broadcast joins against the state (see
+        ``incremental_ingest_dedup_with_state``)."""
         from vectorsearchutil_spark.operators.dedup import (
             build_ingest_dedup_state,
             incremental_ingest_dedup_with_state,
@@ -409,10 +439,6 @@ class VectorStore:
         inc = incoming.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("target")
         )
-        small = collect_if_small(inc, _LOCAL_BATCH_MAX_ROWS)
-        if small is not None:
-            # the dedup plan reads the batch several times
-            inc = local_frame(self.spark, small)
         state = self._dedup_state
         if state is None:
             state = build_ingest_dedup_state(
@@ -483,9 +509,16 @@ class VectorStore:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             ).select(*SAVE_COLUMNS, "vector", "_ord")
+        replaced = self._cached()
         if append and self._df is not None:
             self._append(df, batch)
-            return
+        else:
+            self._replace(df, batch)
+        self._release(replaced)
+
+    def _replace(self, df: DataFrame, batch: pa.Table | None) -> None:
+        """Replace the store by the deduplicated batch: ``batch`` when
+        it was pulled, else the distributed ``df``."""
         if batch is not None:
             df = self._with_ids(batch, 0)
         else:
@@ -558,29 +591,13 @@ class VectorStore:
     def _absent(self, batch: pa.Table) -> pa.Table:
         """The rows of the pulled ``batch`` whose target the store does
         not hold. One column-pruned job pulls the store's targets that
-        occur in the batch; a NULL target never matches, as in the
-        distributed anti-join.
-
-        The batch's targets enter the filter as one parsed ``IN``
-        list (the optimizer makes it a hash set): a Column literal per
-        target costs a Py4J round trip each (6.5 s for 10k targets on
-        a 4-core host), and a semi-join against a local relation runs
-        a second job to broadcast it. String targets are written as
-        hex literals cast back to string, so no quoting or parser
-        setting applies."""
+        occur in the batch (one ``in_list``, no semi-join against a
+        local relation, which would run a second job to broadcast it);
+        a NULL target never matches, as in the distributed anti-join."""
         probe = pc.drop_null(pc.unique(batch.column("target"))).to_pylist()
         if not probe:
             return batch
-        if isinstance(probe[0], str):
-            cond = F.expr(
-                "target IN ("
-                + ", ".join(
-                    f"CAST(X'{t.encode().hex()}' AS STRING)" for t in probe
-                )
-                + ")"
-            )
-        else:
-            cond = F.col("target").isin(probe)
+        cond = in_list("target", probe)
         held = self.data.select("target").filter(cond).toArrow()
         return batch.filter(
             pc.invert(pc.is_in(batch.column("target"), held.column("target")))
@@ -975,6 +992,8 @@ class VectorStore:
         ldf = ldf.withColumn(
             "label_vec", embed_sub_udf(self.embedder)(F.col("label"))
         )
+        if self._labels_df is not None:
+            self._labels_df.unpersist()
         self._labels_df = ldf.cache()
 
     def do_zeroshot(self, variant: str = "e5") -> DataFrame | None:

@@ -86,10 +86,12 @@ def stream_ingest_deduped(
     This upgrades the store's exact first-wins guard (reference
     insert-if-absent, vsu/base/VectorSearchBase.py:79-87) to the
     near-dup policy a training corpus actually wants: a trivially
-    perturbed re-submission no longer slips past the exact hash. The
-    gate's store-side joins run against BROADCAST batch buckets, so
-    the store never shuffles per micro-batch; replay safety is
-    unchanged (a re-delivered batch re-gates to the same verdicts).
+    perturbed re-submission no longer slips past the exact hash. A
+    micro-batch of at most ``dedup.INGEST_GATE_MAX_ROWS`` rows is
+    gated on the driver against the store rows it touches; a larger
+    one joins the store against BROADCAST batch buckets, so the store
+    never shuffles per micro-batch. Replay safety is unchanged (a
+    re-delivered batch re-gates to the same verdicts).
     """
     from vectorsearchutil_spark.operators.dedup import (
         incremental_ingest_dedup,
