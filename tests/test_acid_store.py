@@ -108,42 +108,6 @@ def test_commit_race_retries_on_next_version(spark, tmp_path):
     assert vals == [1, 2, 3]  # nothing lost
 
 
-def test_manifest_stats_prune_appends(spark, tmp_path):
-    """Data skipping: three appends with disjoint id ranges + stats;
-    a range read must skip the non-overlapping transaction dirs
-    entirely, return exactly the matching rows, and never skip dirs
-    lacking stats."""
-    log = ManifestLog(str(tmp_path / "skip"))
-    for lo in (0, 100, 200):
-        df = spark.range(lo, lo + 100).selectExpr("id", "id * 2 AS v")
-        log.write_and_commit(df, mode="append", stats_cols=["id"])
-
-    kept, skipped = log.pruned_dirs("id", lo=120, hi=180)
-    assert len(kept) == 1 and len(skipped) == 2
-
-    out = log.read_pruned(spark, "id", lo=120, hi=180)
-    ids = sorted(r["id"] for r in out.collect())
-    assert ids == list(range(120, 181))
-
-    # boundary overlap: range touching two txs keeps both
-    kept2, skipped2 = log.pruned_dirs("id", lo=90, hi=110)
-    assert len(kept2) == 2 and len(skipped2) == 1
-
-    # a stats-less append is never skipped
-    log.write_and_commit(
-        spark.range(500, 510).selectExpr("id", "id * 2 AS v"),
-        mode="append",
-    )
-    kept3, skipped3 = log.pruned_dirs("id", lo=120, hi=180)
-    assert len(kept3) == 2  # the matching tx + the unknown tx
-    out3 = log.read_pruned(spark, "id", lo=120, hi=180)
-    assert sorted(r["id"] for r in out3.collect()) == list(range(120, 181))
-
-    # fully out-of-range -> only the stats-less dir remains
-    out4 = log.read_pruned(spark, "id", lo=10_000, hi=20_000)
-    assert out4 is None or out4.count() == 0
-
-
 def test_empty_manifest_is_uncommitted(spark, tmp_path):
     """ADVICE r3 (high): an empty/unparsable v<N>.json (a writer that
     died mid-put under a pre-atomic-commit layout) must read as

@@ -25,9 +25,6 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/dedup.py", "_tf_packed_votes"): (
         1, "the vocabulary broadcast runs the token counts as its own job "
         "and the vote aggregate reads them again"),
-    ("operators/dedup.py", "incremental_ingest_dedup"): (
-        1, "the stateless form derives meta, buckets and intersections from "
-        "one shingle table of the existing side"),
     ("operators/dedup.py", "scrub_duplicate_spans"): (
         2, "the span list feeds the match join and both side sets; the "
         "per-doc cut lists feed four consumers"),

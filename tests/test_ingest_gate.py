@@ -7,13 +7,11 @@ path's equality with the distributed plan (the gate constant patched
 to 0) over NULLs, duplicate ids, short and oddly spaced texts and
 unicode, in every store mode and in the stateless form; the driver
 signer's equality with ``build_ingest_dedup_state``; the quiet open of
-a store without dedup state; and the in-memory store's cache, which
-holds one copy of the store and its state across appends."""
+a new store and the re-signing of one whose manifest lists no dedup
+state; and the in-memory store's cache, which holds one copy of the
+store and its state across appends."""
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -207,7 +205,9 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_new_store_opens_quietly_and_partial_state_is_absent(spark, tmp_path):
+def test_new_store_opens_quietly_and_stateless_manifest_resigns(
+    spark, tmp_path
+):
     path = str(tmp_path / "st")
     vs, jobs = _jobs(
         spark, "open-new",
@@ -219,23 +219,31 @@ def test_new_store_opens_quietly_and_partial_state_is_absent(spark, tmp_path):
     reopened = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
     assert reopened._dedup_state is not None
     assert reopened._dedup_state["meta"].count() == 4
-    # one part missing: the state is absent, and the next append signs
-    # the whole store again
-    shutil.rmtree(path + "__dedup/buckets")
-    partial = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
-    assert partial._dedup_state is None
-    partial.set_data(
+    # a writer without state commits no state parts, so the manifest
+    # that lists its rows lists no state that misses them
+    VectorStore(spark, acid_path=path).set_data(
         spark.createDataFrame([(_STORE[4],)], "target string"), append=True
     )
-    assert os.path.isdir(path + "__dedup/buckets")
-    assert partial._dedup_state["meta"].count() == 5
+    stateless = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
+    assert stateless._dedup_state is None
+    assert "parts" not in stateless.acid._manifest(
+        stateless.acid.latest_version()
+    )
+    # its first append signs every row, in the commit of its rows
+    stateless.set_data(
+        spark.createDataFrame([(_STORE[5],)], "target string"), append=True
+    )
+    assert stateless._dedup_state["meta"].count() == 6
+    resigned = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
+    assert resigned._dedup_state["meta"].count() == 6
     got = {
         r["id"]: r["verdict"]
-        for r in partial.ingest_dedup_check(
-            _incoming(spark, [(1, _STORE[1]), (2, "fresh words only here")])
+        for r in resigned.ingest_dedup_check(
+            _incoming(spark, [(1, _STORE[1]), (2, "fresh words only here"),
+                              (3, _STORE[4])])
         ).collect()
     }
-    assert got == {1: "exact_dup", 2: "new"}
+    assert got == {1: "exact_dup", 2: "new", 3: "exact_dup"}
 
 
 def test_memory_store_cache_stays_flat_across_appends(spark):

@@ -137,7 +137,8 @@ def test_reopened_store_appends_then_extends_index(spark, tmp_path):
     n_bulk = vs.count()
 
     fresh = VectorStore(spark, acid_path=path)
-    assert fresh._max_id is None and fresh._ivf is None
+    # the manifest records the max id; the index is not held
+    assert fresh._max_id == n_bulk and fresh._ivf is None
     fresh.set_data(spark.createDataFrame(_APPEND_1, _SCHEMA), append=True)
     fresh.set_data(spark.createDataFrame(_APPEND_2, _SCHEMA), append=True)
     ids = sorted(r["id"] for r in fresh.data.collect())

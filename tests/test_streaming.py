@@ -377,6 +377,58 @@ def test_stream_ingest_deduped_rejects_near_dups(spark, tmp_path):
     assert not any("tonight" in t for t in targets)
 
 
+def test_stream_ingest_deduped_keeps_the_cache_flat(spark, tmp_path):
+    """20 micro-batches through the near-dup-gated ingest into a store
+    without dedup state: each batch is gated through
+    ``store.ingest_dedup_check``, which derives the store's state
+    in-job and caches nothing, so the session's cache holds as many
+    entries after the stream as before it. Every batch re-sends a
+    near copy of the previous batch's first document, which the gate
+    rejects."""
+    import glob
+    import shutil
+
+    from vectorsearchutil_spark.store import VectorStore
+    from vectorsearchutil_spark.streaming.ingest import (
+        DOCUMENTS_SCHEMA,
+        stream_ingest_deduped,
+    )
+
+    import random
+
+    words = [f"w{i}" for i in range(2000)]
+
+    def text(b, i):
+        return " ".join(random.Random(b * 10 + i).choices(words, k=60))
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for b in range(20):
+        rows = [(b * 10 + i, text(b, i), "en", "s", 0) for i in range(2)]
+        if b:
+            near = text(b - 1, 0).rsplit(" ", 1)[0] + " changed"
+            rows.append((b * 10 + 9, near, "en", "s", 0))
+        out = str(tmp_path / f"w{b}")
+        spark.createDataFrame(rows, DOCUMENTS_SCHEMA).coalesce(1).write.parquet(out)
+        (part,) = glob.glob(out + "/part-*.parquet")
+        shutil.move(part, str(src / f"batch-{b:02d}.parquet"))
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    store = VectorStore(spark, acid_path=str(tmp_path / "store"))
+    stream = (
+        spark.readStream.schema(DOCUMENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = stream_ingest_deduped(stream, store, str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    assert q.lastProgress["batchId"] == 19
+    assert cache.cachedData().size() == before
+    targets = {r["target"] for r in store.data.collect()}
+    assert targets == {text(b, i) for b in range(20) for i in range(2)}
+
+
 def test_streaming_segment_dedup_each_segment_once(spark, sf_dir):
     """Streaming sub-document dedup: across all micro-batches, every
     distinct segment value survives exactly once, and the survivor

@@ -1300,11 +1300,6 @@ def incremental_ingest_dedup(
     state = build_ingest_dedup_state(
         existing, text_col, id_col, n, num_hashes, band_size
     )
-    # the in-job state derives buckets/meta/intersections from the same
-    # shingle table — cache it so the existing side is shingled once
-    # (a persisted store reads its state instead; this is the
-    # stateless path's analog)
-    state["shingles"] = state["shingles"].cache()
     return incremental_ingest_dedup_with_state(
         state, incoming, text_col, id_col, n, num_hashes, band_size, threshold
     )

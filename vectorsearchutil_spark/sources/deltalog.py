@@ -76,10 +76,9 @@ class DeltaLog:
         self,
         df: DataFrame,
         mode: str = "append",
-        max_retries: int = 20,  # noqa: ARG002 — Delta retries internally
-        stats_cols: list[str] | None = None,  # noqa: ARG002 — Delta
-        # collects per-file column stats automatically
     ) -> int:
+        # Delta retries contended commits and collects per-file column
+        # statistics itself
         assert mode in ("append", "replace")
         (
             df.write.format("delta")

@@ -8,38 +8,51 @@ object stores (S3/GCS rename = copy+delete, non-atomic, and readers can
 observe the gap), and every append would rewrite the whole store. This
 log borrows the design that Delta Lake built for exactly that problem:
 
-* **data files are immutable** — every transaction writes a fresh
-  ``data/tx-<uuid>/`` directory and never touches existing ones; an
-  append writes ONLY the appended rows (no store rewrite, no staging
-  double-write);
+* **data files are immutable** — every transaction writes fresh
+  ``<part>/tx-<uuid>/`` directories and never touches existing ones;
+  an append writes ONLY the appended rows (no store rewrite, no
+  staging double-write);
 * **the manifest is the source of truth** — ``_log/v<N>.json`` lists
-  the data directories visible at version N. Readers resolve the
-  highest committed version and read exactly those directories, so a
+  the directories visible at version N. Readers resolve the highest
+  committed version and read exactly those directories, so a
   half-written transaction (crash before commit) is simply invisible;
+* **one commit, many parts** — a table is its ``data`` part plus any
+  named parts derived from it (the store's dedup state: ``meta``,
+  ``shingles``, ``buckets``), each in its own ``<base>/<part>/``
+  directory. One manifest lists the directories of every part and an
+  optional ``max_id``, so the parts of one logical write become
+  visible together or not at all — Delta's multi-action commit. A
+  commit lists exactly the parts it writes: a writer that does not
+  write a derived part drops it rather than leave it stale;
 * **commits are atomic create-exclusive** — ``O_CREAT|O_EXCL`` of the
   next version file either fully succeeds or fully fails. On object
   stores the same primitive is a conditional PUT
   (``If-None-Match: *``), which S3, GCS and ABFS all support;
   concurrent writers race on the version number and the loser
   retries on the next version (optimistic concurrency);
-* **the manifest records the schema** — a commit stores the written
-  frame's schema (``schema``, the analogue of Delta's
-  ``metaData.schemaString``) and ``read`` uses it, so a reader infers
+* **the manifest records each part's schema** — a commit stores the
+  written frames' schemas (the analogue of Delta's
+  ``metaData.schemaString``) and reads use them, so a reader infers
   nothing from the parquet footers (schema inference is one Spark job
   per read). An append whose schema differs from its parent's records
-  none, and a manifest without one is read with inference;
-* **vacuum** removes data directories no manifest references.
+  none for that part, and a part without one is read with inference;
+* **vacuum** removes directories of any part that no retained
+  manifest references.
 
 Known bound: ``latest_version`` lists the log directory, so commit
 history grows the listing O(versions); Delta solves this with
-periodic checkpoint files. Here ``compact()`` + ``vacuum()`` keep the
-DATA dir bounded, and a deployment doing thousands of commits should
-additionally prune old ``v*.json`` (they are only needed for time
-travel).
+periodic checkpoint files. Every append adds one directory to each
+part it writes, so a read of a part lists O(appends) directories; past
+Spark's parallel-listing threshold (32 paths) that listing is a job of
+its own. ``compact()`` rewrites every part into one directory each,
+and ``vacuum()`` then removes the directories the compaction replaced;
+a deployment doing thousands of commits should additionally prune old
+``v*.json`` (they are only needed for time travel).
 
 Contrast with the reference's per-row SQLite transactions
-(``vsu/base/VectorSearchBase.py:78``): one commit per distributed
-batch, same atomicity guarantee, object-store-safe.
+(``vsu/base/VectorSearchBase.py:78``, a row and its ``vss`` entry in
+one transaction): one commit per distributed batch, same atomicity
+guarantee, object-store-safe.
 """
 
 from __future__ import annotations
@@ -47,11 +60,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+#: the part every table has; its record is the manifest's top level
+DATA = "data"
+
+#: commit attempts before a writer gives up on a contended version
+_MAX_RETRIES = 20
 
 def nullable_schema(schema: StructType) -> StructType:
     """``schema`` with every field, array element and map value
@@ -79,12 +98,13 @@ def nullable_schema(schema: StructType) -> StructType:
 
 
 class ManifestLog:
-    """A versioned collection of immutable parquet directories."""
+    """A versioned collection of immutable parquet directories, in one
+    or more parts."""
 
     def __init__(self, base: str):
         self.base = base.rstrip("/")
         self.log_dir = os.path.join(self.base, "_log")
-        self.data_dir = os.path.join(self.base, "data")
+        self.data_dir = os.path.join(self.base, DATA)
 
     # -- versions ------------------------------------------------------
 
@@ -133,6 +153,12 @@ class ManifestLog:
             )
         return m
 
+    @staticmethod
+    def _parts(manifest: dict) -> dict[str, dict]:
+        """Every part ``manifest`` lists: its ``dirs`` and, when
+        recorded, its ``schema``."""
+        return {DATA: manifest, **manifest.get("parts", {})}
+
     def dirs(self, version: int | None = None) -> list[str]:
         """Data directories visible at ``version`` (default latest)."""
         if version is None:
@@ -143,52 +169,39 @@ class ManifestLog:
 
     # -- transactions --------------------------------------------------
 
-    def write_and_commit(
-        self,
-        df: DataFrame,
-        mode: str = "append",
-        max_retries: int = 20,
-        stats_cols: list[str] | None = None,
-    ) -> int:
-        """Write ``df`` as a new immutable data directory, then commit
-        it as the next version. ``mode='append'`` keeps the parent
-        version's directories; ``'replace'`` starts fresh. Returns the
-        committed version. A crash before the commit leaves only an
-        unreferenced directory (invisible; vacuum removes it). The
-        manifest records ``df``'s schema unless this append's schema
-        differs from the parent's (or the parent recorded none).
-
-        ``stats_cols`` records per-transaction min/max for those
-        columns in the manifest (computed from the written files, one
-        tiny agg over the tx directory) — the Delta-style data-
-        skipping statistics ``read_pruned`` uses to skip whole
-        transaction directories on range predicates."""
-        assert mode in ("append", "replace")
+    def write(self, part: str, df: DataFrame) -> tuple[str, dict]:
+        """Write ``df`` as a new directory of ``part``, invisible until
+        a commit lists it. Returns the directory's name and the JSON
+        schema a read of it reports."""
         tx = f"tx-{uuid.uuid4().hex}"
-        tx_dir = os.path.join(self.data_dir, tx)
-        df.write.parquet(tx_dir)
-        tx_stats: dict[str, list] = {}
-        if stats_cols:
-            from pyspark.sql import functions as F
+        df.write.parquet(os.path.join(self.base, part, tx))
+        return tx, nullable_schema(df.schema).jsonValue()
 
-            written = df.sparkSession.read.parquet(tx_dir)
-            row = written.agg(
-                *[
-                    agg(c).alias(f"{which}_{c}")
-                    for c in stats_cols
-                    for which, agg in (("min", F.min), ("max", F.max))
-                ]
-            ).first()
-            for c in stats_cols:
-                lo, hi = row[f"min_{c}"], row[f"max_{c}"]
-                if lo is not None:
-                    tx_stats[c] = [
-                        lo if isinstance(lo, (int, float)) else str(lo),
-                        hi if isinstance(hi, (int, float)) else str(hi),
-                    ]
-        tx_schema = nullable_schema(df.schema).jsonValue()
+    def read_written(
+        self, spark: SparkSession, part: str, written: tuple[str, dict]
+    ) -> DataFrame:
+        """A directory ``write`` returned, committed or not."""
+        tx, schema = written
+        return spark.read.schema(StructType.fromJson(schema)).parquet(
+            os.path.join(self.base, part, tx)
+        )
+
+    def commit(
+        self,
+        changes: dict[str, tuple[str, tuple[str, dict]]],
+        max_id: int | None,
+    ) -> int:
+        """Commit written directories as the next version: for each
+        part, ``(mode, written)``; ``'append'`` keeps the parent
+        version's directories of that part, ``'replace'`` starts
+        fresh. The new version lists exactly the parts in ``changes``
+        (``data`` among them), less any appended part the parent does
+        not list, and records ``max_id`` when it is given.
+        Returns the committed version. A crash before the commit
+        leaves only unreferenced directories (invisible; vacuum
+        removes them)."""
         os.makedirs(self.log_dir, exist_ok=True)
-        for _ in range(max_retries):
+        for _ in range(_MAX_RETRIES):
             parent = self.latest_version()
             # next version = one past ANY occupied version name, even
             # an unparsable one (a legacy crash's empty v<N>.json must
@@ -200,22 +213,25 @@ class ManifestLog:
                 if (v := self._version_of(name)) is not None
             ]
             version = max(occupied, default=-1) + 1
-            if mode == "replace" or parent is None:
-                dirs, stats, schema = [], {}, tx_schema
-            else:
-                pm = self._manifest(parent)
-                dirs = list(pm["dirs"])
-                stats = dict(pm.get("stats", {}))
-                schema = pm.get("schema")
-                if schema != tx_schema:
-                    schema = None
-            dirs.append(tx)
-            if tx_stats:
-                stats[tx] = tx_stats
-            entry = {"version": version, "parent": parent, "mode": mode,
-                     "dirs": dirs, "stats": stats}
-            if schema is not None:
-                entry["schema"] = schema
+            held = {} if parent is None else self._parts(self._manifest(parent))
+            listed = {}
+            for part, (mode, (tx, schema)) in changes.items():
+                if mode == "replace" or parent is None:
+                    listed[part] = {"dirs": [tx], "schema": schema}
+                elif part in held:
+                    old = held[part]
+                    listed[part] = {"dirs": [*old["dirs"], tx]}
+                    if old.get("schema") == schema:
+                        listed[part]["schema"] = schema
+                # else a writer that won the race dropped the part, and
+                # appending to nothing would list a part that misses
+                # the parent's rows: this version drops it too
+            entry = {"version": version, "parent": parent,
+                     "mode": changes[DATA][0], **listed.pop(DATA)}
+            if listed:
+                entry["parts"] = listed
+            if max_id is not None:
+                entry["max_id"] = max_id
             payload = json.dumps(entry)
             path = os.path.join(self.log_dir, f"v{version}.json")
             # Two-step atomic put-if-absent: the payload is fully
@@ -242,17 +258,35 @@ class ManifestLog:
                 return version
             finally:
                 os.unlink(tmp)
-        raise RuntimeError(f"commit contention: {max_retries} losses")
+        raise RuntimeError(f"commit contention: {_MAX_RETRIES} losses")
+
+    def write_and_commit(
+        self,
+        df: DataFrame,
+        mode: str = "append",
+    ) -> int:
+        """Write ``df`` as a new immutable data directory, then commit
+        it as the next version. ``mode='append'`` keeps the parent
+        version's data directories; ``'replace'`` starts fresh. The
+        version lists the data part only. Returns the committed
+        version."""
+        assert mode in ("append", "replace")
+        return self.commit({DATA: (mode, self.write(DATA, df))}, None)
 
     # -- reads ---------------------------------------------------------
 
-    def _reader(self, spark: SparkSession, manifest: dict):
-        """A parquet reader under ``manifest``'s recorded schema, or an
-        inferring one where it recorded none."""
-        schema = manifest.get("schema")
-        if schema is None:
-            return spark.read
-        return spark.read.schema(StructType.fromJson(schema))
+    def _read_part(self, spark: SparkSession, record: dict, part: str):
+        """``part``'s directories under its recorded schema, or
+        inferred where it recorded none; None when it lists none."""
+        if not record["dirs"]:
+            return None
+        schema = record.get("schema")
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(
+            *[os.path.join(self.base, part, d) for d in record["dirs"]]
+        )
 
     def read(
         self, spark: SparkSession, version: int | None = None
@@ -264,120 +298,83 @@ class ManifestLog:
             version = self.latest_version()
         if version is None:
             return None
+        return self._read_part(spark, self._manifest(version), DATA)
+
+    def snapshot(
+        self, spark: SparkSession, version: int | None
+    ) -> tuple[dict[str, DataFrame], int | None]:
+        """Every non-empty part at ``version``, read as that one
+        manifest lists them, and the max id it records (None when it
+        records none, or when ``version`` is None: nothing committed)."""
+        if version is None:
+            return {}, None
         m = self._manifest(version)
-        if not m["dirs"]:
-            return None
-        return self._reader(spark, m).parquet(
-            *[os.path.join(self.data_dir, d) for d in m["dirs"]]
+        frames = {
+            part: self._read_part(spark, record, part)
+            for part, record in self._parts(m).items()
+        }
+        return (
+            {p: df for p, df in frames.items() if df is not None},
+            m.get("max_id"),
         )
-
-    def pruned_dirs(
-        self, col: str, lo=None, hi=None, version: int | None = None
-    ) -> tuple[list[str], list[str]]:
-        """(kept, skipped) transaction directories for a range
-        predicate ``lo <= col <= hi``: a directory is skipped only
-        when its recorded [min, max] provably cannot overlap the
-        range. Directories WITHOUT stats for ``col`` are always kept
-        — skipping is never allowed to drop unknown data."""
-        if version is None:
-            version = self.latest_version()
-        if version is None:
-            return [], []
-        m = self._manifest(version)
-        stats = m.get("stats", {})
-        kept, skipped = [], []
-        for d in m["dirs"]:
-            s = stats.get(d, {}).get(col)
-            if s is not None and (
-                (hi is not None and s[0] > hi)
-                or (lo is not None and s[1] < lo)
-            ):
-                skipped.append(d)
-            else:
-                kept.append(d)
-        return kept, skipped
-
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-    ) -> DataFrame | None:
-        """The table filtered to ``lo <= col <= hi``, reading ONLY the
-        transaction directories whose stats overlap the range — at
-        scale this skips whole appends (e.g. time-partitioned ingest
-        queried by date) before any parquet footer is opened. The
-        residual filter still applies row-level (stats pruning is a
-        superset guarantee, same contract as parquet row-group
-        skipping)."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.latest_version()
-        kept, _ = self.pruned_dirs(col, lo, hi, version)
-        if not kept:
-            return None
-        df = self._reader(spark, self._manifest(version)).parquet(
-            *[os.path.join(self.data_dir, d) for d in kept]
-        )
-        if lo is not None:
-            df = df.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(col) <= F.lit(hi))
-        return df
 
     # -- maintenance ---------------------------------------------------
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
-        """Delete data directories referenced by NO retained manifest
-        (aborted transactions + compacted-away history). Retains the
-        newest ``keep_versions`` manifests' references."""
+        """Delete the directories of every part referenced by NO
+        retained manifest (aborted transactions + compacted-away
+        history). Retains the newest ``keep_versions`` manifests'
+        references."""
         latest = self.latest_version()
         if latest is None:
             return []
-        keep: set[str] = set()
+        keep: dict[str, set[str]] = {}
         for v in range(max(0, latest - keep_versions + 1), latest + 1):
-            try:
-                keep.update(self._manifest(v)["dirs"])
-            except FileNotFoundError:
-                pass
+            m = self._try_manifest(v)
+            for part, record in ({} if m is None else self._parts(m)).items():
+                keep.setdefault(part, set()).update(record["dirs"])
         removed = []
-        if os.path.isdir(self.data_dir):
-            for name in os.listdir(self.data_dir):
-                if name not in keep:
+        for part in os.listdir(self.base):
+            part_dir = os.path.join(self.base, part)
+            if part.startswith(("_", ".")) or not os.path.isdir(part_dir):
+                continue
+            for name in os.listdir(part_dir):
+                if name not in keep.get(part, ()):
                     shutil.rmtree(
-                        os.path.join(self.data_dir, name),
-                        ignore_errors=True,
+                        os.path.join(part_dir, name), ignore_errors=True
                     )
                     removed.append(name)
         # stale commit temp files (writer crashed between write and
         # link); age-gated so a live writer's in-flight temp survives
-        if os.path.isdir(self.log_dir):
-            import time as _time
-
-            for name in os.listdir(self.log_dir):
-                if name.startswith(".tmp-"):
-                    p = os.path.join(self.log_dir, name)
-                    try:
-                        if _time.time() - os.path.getmtime(p) > 3600:
-                            os.unlink(p)
-                    except OSError:
-                        pass
+        for name in os.listdir(self.log_dir):
+            if name.startswith(".tmp-"):
+                p = os.path.join(self.log_dir, name)
+                try:
+                    if time.time() - os.path.getmtime(p) > 3600:
+                        os.unlink(p)
+                except OSError:
+                    pass
         return removed
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
-        """Rewrite the live snapshot into one directory of
-        ``target_files`` files and commit it as a replace — readers of
-        older versions are unaffected (their manifests still resolve
-        until vacuumed)."""
-        df = self.read(spark)
-        if df is None:
-            return self.latest_version() or 0
-        return self.write_and_commit(
-            df.coalesce(target_files), mode="replace"
-        )
+        """Rewrite every part of the live snapshot into one directory
+        of ``target_files`` files each and commit them, with the max
+        id, as one replace — readers of older versions are unaffected
+        (their manifests still resolve until vacuumed)."""
+        version = self.latest_version()
+        if version is None:
+            return 0
+        m = self._manifest(version)
+        if not m["dirs"]:
+            return version
+        changes = {
+            part: ("replace", self.write(
+                part,
+                self._read_part(spark, record, part).coalesce(target_files),
+            ))
+            for part, record in self._parts(m).items()
+        }
+        return self.commit(changes, m.get("max_id"))
 
     def drop(self) -> None:
         shutil.rmtree(self.base, ignore_errors=True)

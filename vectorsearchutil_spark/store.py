@@ -22,8 +22,8 @@ assignment and IVF list assignment run in Arrow and numpy, and the
 store is not re-planned for them. What the store already knows stays
 on the store object: its max id, and the centroids, lists schema and
 max indexed id of the IVF index it built or last extended. A reopened
-store knows neither until its first write; larger batches run the
-same steps as distributed plans.
+store knows neither until its first write, except a manifest store's
+max id. Larger batches run the same steps as distributed plans.
 
 Persistence modes:
 
@@ -37,11 +37,14 @@ Persistence modes:
   never on the store.
 * ``acid_path=`` — **manifest-log table** (sources/manifest.py): the
   file-backed mode, the analog of the reference's one SQLite file
-  with a transaction per row. Immutable data directories + an
-  atomic create-exclusive version manifest per commit (the
-  conditional-PUT primitive S3/GCS/ABFS provide); appends commit
-  only the appended rows; crashes at any point leave the previous
-  version readable and the half-written transaction invisible.
+  with a transaction per row. One write is one atomic
+  create-exclusive manifest version (the conditional-PUT primitive
+  S3/GCS/ABFS provide) listing the appended rows' directory, their
+  dedup-state parts and the store's max id, as the reference writes a
+  row and its ``vss`` entry in one transaction
+  (``VectorSearchBase.py:78``); a crash at any point leaves the
+  previous version readable. ``acid_format="delta"`` keeps the rows
+  only, in a Delta table.
 """
 
 from __future__ import annotations
@@ -79,7 +82,11 @@ from vectorsearchutil_spark.session import (
     in_list,
     local_frame,
 )
-from vectorsearchutil_spark.sources.manifest import nullable_schema
+from vectorsearchutil_spark.sources.manifest import (
+    DATA,
+    ManifestLog,
+    nullable_schema,
+)
 
 #: Fixed logical schema (reference save_columns, VectorSearchBase.py:21)
 SAVE_COLUMNS = ["target", "option1", "option2", "option3", "option4", "option5"]
@@ -98,11 +105,6 @@ STORE_SCHEMA = StructType(
     + [StructField(c, StringType()) for c in SAVE_COLUMNS]
     + [StructField("vector", ArrayType(FloatType()))]
 )
-
-
-#: dedup-state schemas by the store's (id, target) types and dedup
-#: parameters (see ``VectorStore._state_schemas``)
-_STATE_SCHEMAS: dict[tuple, dict[str, StructType]] = {}
 
 
 @dataclass
@@ -166,6 +168,12 @@ class VectorStore:
     ):
         if table is not None and acid_path is not None:
             raise ValueError("pass at most one of table= / acid_path=")
+        if acid_format not in ("manifest", "delta"):
+            raise ValueError(
+                f"acid_format must be 'manifest' or 'delta', not {acid_format!r}"
+            )
+        if acid_path is not None and acid_format == "delta" and maintain_dedup_state:
+            raise ValueError("dedup state needs acid_format='manifest'")
         self.spark = spark
         self.embedder = embedder
         self.vec_size = embedding_dim(embedder)
@@ -183,9 +191,11 @@ class VectorStore:
             **(dedup_params or {}),
         }
         self._dedup_state: dict[str, DataFrame] | None = None
-        #: the store's max id, held from the last write; None until
-        #: then (a reopened store reads it once, at its first append)
+        #: the store's max id, held from the last write or manifest;
+        #: None until then (the next append reads it once)
         self._max_id: int | None = None
+        #: the manifest version a manifest store holds
+        self._version: int | None = None
         #: the IVF index this store built or last extended
         self._ivf: _HeldIndex | None = None
         #: acid_path= — manifest-log table (sources/manifest.py): the
@@ -203,20 +213,8 @@ class VectorStore:
 
                 self.acid = DeltaLog(acid_path)
             else:
-                from vectorsearchutil_spark.sources.manifest import (
-                    ManifestLog,
-                )
-
                 self.acid = ManifestLog(acid_path)
-            self._df = self.acid.read(spark)
-            # a state with a part missing counts as absent: the next
-            # append signs the whole store again
-            if maintain_dedup_state and all(
-                os.path.isdir(self._dedup_dir(p)) for p in self._DEDUP_PARTS
-            ):
-                self._dedup_state = self._read_dedup_state(
-                    None if self._df is None else self._state_schemas()
-                )
+            self._open(None)
         elif table is not None and spark.catalog.tableExists(table):
             self._df = spark.table(table)
             if maintain_dedup_state and spark.catalog.tableExists(
@@ -227,8 +225,23 @@ class VectorStore:
                     for part in self._DEDUP_PARTS
                 }
 
-    def _dedup_dir(self, part: str) -> str:
-        return self.acid.base + "__dedup/" + part
+    def _open(self, version: int | None) -> None:
+        """Hold the ``acid_path=`` store at manifest ``version`` (None:
+        the latest): its rows, max id and, when kept and listed, dedup
+        state. A delta store reads its rows only."""
+        if not isinstance(self.acid, ManifestLog):
+            self._df = self.acid.read(self.spark)
+            return
+        if version is None:
+            version = self.acid.latest_version()
+        self._version = version
+        frames, self._max_id = self.acid.snapshot(self.spark, version)
+        self._df = frames.get(DATA)
+        self._dedup_state = None
+        if self.maintain_dedup_state and all(
+            p in frames for p in self._DEDUP_PARTS
+        ):
+            self._dedup_state = {p: frames[p] for p in self._DEDUP_PARTS}
 
     def _build_dedup_state(self, rows: DataFrame) -> dict[str, DataFrame]:
         from vectorsearchutil_spark.operators.dedup import (
@@ -241,46 +254,6 @@ class VectorStore:
             id_col="id",
             **self.dedup_params,
         )
-
-    def _state_key(self) -> tuple:
-        fields = self._df.schema
-        return (
-            fields["id"].dataType.json(),
-            fields["target"].dataType.json(),
-            tuple(sorted(self.dedup_params.items())),
-        )
-
-    def _state_schemas(self) -> dict[str, StructType]:
-        """The schemas ``build_ingest_dedup_state`` gives over rows of
-        the store's (id, target) schema: analysis only, but building
-        and analysing the state plans takes 0.2-0.4 s, so they are
-        derived (here, over an empty local frame) or recorded (at a
-        state write) once per process."""
-        key = self._state_key()
-        if key not in _STATE_SCHEMAS:
-            fields = self._df.schema
-            empty = local_frame(
-                self.spark, [], StructType([fields["id"], fields["target"]])
-            )
-            _STATE_SCHEMAS[key] = {
-                part: nullable_schema(df.schema)
-                for part, df in self._build_dedup_state(empty).items()
-            }
-        return _STATE_SCHEMAS[key]
-
-    def _read_dedup_state(
-        self, schemas: dict[str, StructType] | None
-    ) -> dict[str, DataFrame]:
-        """The ``acid_path=`` store's dedup-state directories, read
-        under ``schemas``, or inferred from the files (one job each)
-        when that is None."""
-        reader = self.spark.read
-        return {
-            part: (
-                reader if schemas is None else reader.schema(schemas[part])
-            ).parquet(self._dedup_dir(part))
-            for part in self._DEDUP_PARTS
-        }
 
     # -- store state -------------------------------------------------
 
@@ -296,8 +269,6 @@ class VectorStore:
 
     def reset_db(self) -> None:
         """Drop everything (reference reset_db, VectorSearchBase.py:96-99)."""
-        import shutil
-
         for df in self._cached():
             df.unpersist()
         self._df = None
@@ -312,9 +283,6 @@ class VectorStore:
                 )
         if self.acid is not None:
             self.acid.drop()
-            shutil.rmtree(
-                self.acid.base + "__dedup", ignore_errors=True
-            )
 
     def _cached(self) -> list[DataFrame]:
         """The frames an in-memory store holds in the cache: its data
@@ -342,8 +310,8 @@ class VectorStore:
 
     def _persist(self, df: DataFrame) -> DataFrame:
         if self.acid is not None:
-            # full-replace commit (appends go through the dedicated
-            # append commit in set_data, which writes only fresh rows)
+            # a delta store's full-replace commit (manifest stores
+            # commit through _commit)
             self.acid.write_and_commit(df, mode="replace")
             return self.acid.read(self.spark)
         if self.table is not None:
@@ -357,41 +325,36 @@ class VectorStore:
         return df.cache()
 
     def compact(self, target_files: int = 1) -> None:
-        """Rewrite the ``acid_path=`` store into ``target_files`` files
-        and vacuum the data directories it replaces.
+        """Rewrite the ``acid_path=`` store, its data and each
+        dedup-state part, into ``target_files`` files each and vacuum
+        the directories it replaces.
 
-        Every append commits its own data directory, so a long-lived
-        store fed by many tiny batches fragments; at scale small files
-        dominate scan planning cost. The rewrite is one replace
-        commit, so a crash mid-compaction leaves the previous version
-        readable. No-op for the in-memory and table modes (the
-        bucketed layout fixes file count by bucket) and for empty
-        stores.
+        Every append commits its own directory per part, so a
+        long-lived store fed by many tiny batches fragments; at scale
+        small files dominate scan planning cost. The rewrite is one
+        replace commit that carries the max id, so a crash
+        mid-compaction leaves the previous version readable. No-op for
+        the in-memory and table modes (the bucketed layout fixes file
+        count by bucket) and for empty stores.
         """
         if self._df is None or self.acid is None:
             return
-        self.acid.compact(self.spark, target_files)
+        version = self.acid.compact(self.spark, target_files)
         self.acid.vacuum()
-        self._df = self.acid.read(self.spark)
+        self._open(version)
 
     # -- ingest-dedup state (VERDICT r2 #5) ---------------------------
 
     def _update_dedup_state(self, batch: DataFrame, replace: bool) -> None:
-        """Persist the dedup signatures for ``batch`` (rows just
-        ingested: the driver path's one-partition local frame, or the
-        rows read back from the persisted store so lineage is clean).
-        Append mode appends ONLY the batch's state rows — the
-        incremental property: signature work per append is O(batch),
-        never O(store)."""
+        """Persist a table or in-memory store's dedup signatures for
+        ``batch`` (rows just ingested: the driver path's one-partition
+        local frame, or the rows read back from the persisted store so
+        lineage is clean). Append mode appends ONLY the batch's state
+        rows — the incremental property: signature work per append is
+        O(batch), never O(store)."""
         state = self._build_dedup_state(batch)
         mode = "overwrite" if replace else "append"
-        if self.acid is not None:
-            for part in self._DEDUP_PARTS:
-                state[part].write.mode(mode).parquet(self._dedup_dir(part))
-            schemas = {p: nullable_schema(state[p].schema) for p in state}
-            _STATE_SCHEMAS[self._state_key()] = schemas
-            self._dedup_state = self._read_dedup_state(schemas)
-        elif self.table is not None:
+        if self.table is not None:
             for part in self._DEDUP_PARTS:
                 state[part].write.mode(mode).saveAsTable(
                     f"{self.table}_dedup_{part}"
@@ -476,8 +439,9 @@ class VectorStore:
         already holds (one column-pruned job), writes the fresh rows
         as one local frame, and signs their dedup state from that
         frame as one partition. The next id comes from the held max
-        id; a reopened store reads it once. Larger batches run the
-        same steps as a distributed plan.
+        id (a manifest store's is in its manifest; other reopened
+        stores read it once). Larger batches run the same steps as a
+        distributed plan.
         """
         if "target" not in data.columns:
             return
@@ -510,6 +474,14 @@ class VectorStore:
                 .drop("_rn")
             ).select(*SAVE_COLUMNS, "vector", "_ord")
         replaced = self._cached()
+        if (
+            append
+            and isinstance(self.acid, ManifestLog)
+            and self.acid.latest_version() != self._version
+        ):
+            # another writer committed since this store last read its
+            # manifest: continue its ids, dedup and state from there
+            self._open(None)
         if append and self._df is not None:
             self._append(df, batch)
         else:
@@ -526,8 +498,12 @@ class VectorStore:
                 "id", F.row_number().over(Window.orderBy("_ord"))
             ).select("id", *SAVE_COLUMNS, "vector")
         self._ivf = None
+        n = None if batch is None else batch.num_rows
+        if isinstance(self.acid, ManifestLog):
+            self._commit(df, False, 0, n)
+            return
         self._df = self._persist(df)
-        self._max_id = None if batch is None else batch.num_rows
+        self._max_id = n
         if self.maintain_dedup_state:
             self._update_dedup_state(
                 self.data if batch is None else df, replace=True
@@ -553,6 +529,10 @@ class VectorStore:
             fresh = fresh.withColumn(
                 "id", F.row_number().over(Window.orderBy("_ord")) + F.lit(start)
             ).select("id", *SAVE_COLUMNS, "vector")
+        n = None if batch is None else batch.num_rows
+        if isinstance(self.acid, ManifestLog):
+            self._commit(fresh, True, start, n)
+            return
         if self.table is not None:
             # incremental append: write ONLY the fresh rows into the
             # bucketed table — at 100 TB the store is never rewritten
@@ -564,15 +544,12 @@ class VectorStore:
             )
             self._df = self.spark.table(self.table)
         elif self.acid is not None:
-            # ACID append: one immutable data directory holding ONLY
-            # the fresh rows + one atomic manifest commit — the store
-            # is never rewritten and a crash at any point leaves the
-            # previous version fully readable
+            # a delta store's append: only the fresh rows, one commit
             self.acid.write_and_commit(fresh, mode="append")
             self._df = self.acid.read(self.spark)
         else:
             self._df = self._persist(existing.unionByName(fresh))
-        self._max_id = None if batch is None else start + batch.num_rows
+        self._max_id = None if n is None else start + n
         if self.maintain_dedup_state:
             # signatures for the APPENDED rows only — O(batch) state
             # work: the pulled rows' local frame, or, read back from
@@ -587,6 +564,35 @@ class VectorStore:
             else:
                 signed = self.data.filter(F.col("id") > F.lit(start))
             self._update_dedup_state(signed, replace=whole)
+
+    def _commit(
+        self, rows: DataFrame, append: bool, start: int, n: int | None
+    ) -> None:
+        """Write a manifest store's ``rows`` (ids ``start + 1`` on: the
+        ``n`` pulled rows, or a distributed plan when ``n`` is None)
+        and their dedup state as uncommitted directories, then commit
+        them and the new max id as one version. A plan's state and max
+        id are read back from its written directory, so it runs once;
+        a store opened without state signs every row, replacing it."""
+        acid = self.acid
+        data = acid.write(DATA, rows)
+        if n is None:
+            rows = acid.read_written(self.spark, DATA, data)
+            top = rows.agg(F.max("id")).first()[0]
+            max_id = start if top is None else top
+        else:
+            max_id = start + n
+        changes = {DATA: ("append" if append else "replace", data)}
+        if self.maintain_dedup_state:
+            resign = append and self._dedup_state is None
+            signed = rows.select("id", "target")
+            if resign:
+                signed = self.data.select("id", "target").unionByName(signed)
+            state = self._build_dedup_state(signed)
+            mode = "append" if append and not resign else "replace"
+            for part in self._DEDUP_PARTS:
+                changes[part] = (mode, acid.write(part, state[part]))
+        self._open(acid.commit(changes, max_id))
 
     def _absent(self, batch: pa.Table) -> pa.Table:
         """The rows of the pulled ``batch`` whose target the store does
@@ -630,7 +636,7 @@ class VectorStore:
             if target not in seen:
                 seen.add(target)
                 keep.append(i)
-        batch = batch.take(keep)
+        batch = batch.take(pa.array(keep, pa.int64()))
         if not has_vector:
             vecs = embed_local(self.embedder, batch.column("target").to_pylist())
             batch = batch.append_column(

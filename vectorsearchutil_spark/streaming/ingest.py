@@ -79,33 +79,26 @@ def stream_ingest_deduped(
     threshold: float = 0.8,
 ):
     """Streaming ingest with the NEAR-dup gate: each micro-batch is
-    first screened by ``incremental_ingest_dedup`` against the store's
+    first screened by ``store.ingest_dedup_check`` against the store's
     current contents — exact dups AND near-dups (MinHash-LSH verified
     at Jaccard ≥ threshold) are rejected, only 'new' docs append.
 
     This upgrades the store's exact first-wins guard (reference
     insert-if-absent, vsu/base/VectorSearchBase.py:79-87) to the
     near-dup policy a training corpus actually wants: a trivially
-    perturbed re-submission no longer slips past the exact hash. A
-    micro-batch of at most ``dedup.INGEST_GATE_MAX_ROWS`` rows is
-    gated on the driver against the store rows it touches; a larger
-    one joins the store against BROADCAST batch buckets, so the store
-    never shuffles per micro-batch. Replay safety is unchanged (a
-    re-delivered batch re-gates to the same verdicts).
+    perturbed re-submission no longer slips past the exact hash. The
+    gate reads the store's dedup state, or derives it in-job when the
+    store keeps none, and caches nothing. Replay safety is unchanged
+    (a re-delivered batch re-gates to the same verdicts).
     """
-    from vectorsearchutil_spark.operators.dedup import (
-        incremental_ingest_dedup,
-    )
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        existing = store.data.select(
-            F.col("id").alias("doc_id"), F.col("target").alias("text")
+        verdicts = store.ingest_dedup_check(
+            batch_df, threshold, text_col="text", id_col="doc_id"
         )
-        incoming = batch_df.select("doc_id", "text")
-        verdicts = incremental_ingest_dedup(
-            existing, incoming, threshold=threshold
+        keep = verdicts.filter(F.col("verdict") == "new").select(
+            F.col("id").alias("doc_id")
         )
-        keep = verdicts.filter(F.col("verdict") == "new").select("doc_id")
         gated = batch_df.join(keep, "doc_id", "left_semi")
         renamed = gated.select(
             F.col("text").alias("target"),
