@@ -52,9 +52,6 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("store.py", "_update_dedup_state"): (
         2, "dedup state of a store with no persistent location lives in "
         "the cache"),
-    ("store.py", "add_to_ann_index"): (
-        1, "the fresh rows are counted and then written; unpersisted in a "
-        "finally block"),
     ("store.py", "set_zeroshot_labels"): (
         1, "the embedded label table is read by every zero-shot call"),
 }

@@ -226,7 +226,7 @@ def test_new_store_opens_quietly_and_stateless_manifest_resigns(
     )
     stateless = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
     assert stateless._dedup_state is None
-    assert "parts" not in stateless.acid._manifest(
+    assert "parts" not in stateless.acid.manifest(
         stateless.acid.latest_version()
     )
     # its first append signs every row, in the commit of its rows

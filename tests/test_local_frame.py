@@ -121,9 +121,11 @@ def _jobs(spark, group, fn):
 
 
 def test_store_query_job_budget(spark, tmp_path):
-    """A text read on a tiny store: ``query`` runs the empty check and
-    the result collect (2 jobs), ``query_ann`` the centroid read, the
-    lists schema and the collect (4). Encoding the query adds none."""
+    """A text read on a tiny store that holds its max id and its IVF
+    index: ``query`` and ``query_ann`` each run only the result collect
+    (1 job). A reopened store builds its first ``query_ann`` with at
+    most the centroid pull (1 job): the lists are read under the schema
+    the index manifest records. Encoding the query adds none."""
     vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
     vs.set_data(
         spark.createDataFrame([(f"doc {i}",) for i in range(40)], ["target"])
@@ -136,8 +138,13 @@ def test_store_query_job_budget(spark, tmp_path):
     n_ann = _jobs(
         spark, "budget-ann", lambda: vs.query_ann("doc 3", k=3).collect()
     )
-    assert n_query <= 2, n_query
-    assert n_ann <= 4, n_ann
+    reopened = VectorStore(spark, acid_path=str(tmp_path / "s"))
+    n_reopen = _jobs(
+        spark, "budget-ann-reopen", lambda: reopened.query_ann("doc 3", k=3)
+    )
+    assert n_query <= 1, n_query
+    assert n_ann <= 1, n_ann
+    assert n_reopen <= 1, n_reopen
 
 
 #: ``createDataFrame`` calls the engine may keep: pandas inputs, which

@@ -95,6 +95,7 @@ def test_optimize_ann_index_files_per_list(spark, tmp_path):
 
     import numpy as np
 
+    from vectorsearchutil_spark.sources.manifest import ManifestLog
     from vectorsearchutil_spark.store import VectorStore
 
     rng = np.random.RandomState(23)
@@ -110,7 +111,7 @@ def test_optimize_ann_index_files_per_list(spark, tmp_path):
     exact = [r["id"] for r in vs.query_ann(qvec, k=5, n_probe=4).collect()]
 
     n_files = vs.optimize_ann_index(target_files_per_list=2)
-    lists = os.path.join(vs._ivf_path, "lists")
+    lists = ManifestLog(vs._ivf_path).data_dir
     per_list = Counter(
         os.path.basename(os.path.dirname(p))
         for p in glob.glob(

@@ -350,10 +350,15 @@ def test_reopen_with_dedup_state_signs_existing_rows(spark, tmp_path, mode):
 def test_ann_index_query_and_pruning(spark, tmp_path):
     """build_ann_index + query_ann: self-match always found, results
     a subset contract of exact query (same ordering rules), probing
-    ALL lists == exact, and the probe scan is partition-pruned."""
-    import numpy as np
+    ALL lists == exact, and the probe scans only the probed list's
+    leaf directories from the index manifest."""
+    import os
+    from urllib.parse import urlparse
 
-    from vectorsearchutil_spark.plans.explain import formatted_plan
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from vectorsearchutil_spark.sources.manifest import ManifestLog
 
     rng = np.random.RandomState(3)
     rows = [
@@ -376,18 +381,29 @@ def test_ann_index_query_and_pruning(spark, tmp_path):
     got = [r["id"] for r in approx.collect()]
     assert exact[0] in got  # the self-match's list is always probed
 
-    # partition pruning is visible in the scan
-    import os
+    # the scan reads the leaf directories of the nearest list only
+    log = ManifestLog(path + "__ivf")
+    m = log.manifest(log.latest_version())
+    cents = pq.read_table(
+        os.path.join(log.base, "centroids", m["parts"]["centroids"]["dirs"][0])
+    ).to_pydict()
+    d2 = ((np.array(cents["centroid_vec"]) - np.array(qvec)) ** 2).sum(axis=1)
+    nearest = cents["centroid_id"][int(np.argmin(d2))]
+    leaves = {os.path.realpath(os.path.join(log.data_dir, d)) for d in m["dirs"]}
+    probed = {
+        os.path.realpath(os.path.join(log.data_dir, d))
+        for d in m["dirs"]
+        if d.endswith(f"/centroid_id={nearest}")
+    }
+    scanned = {
+        os.path.realpath(os.path.dirname(urlparse(f).path))
+        for f in approx.inputFiles()
+    }
+    assert scanned == probed and probed < leaves
 
-    lists = spark.read.parquet(
-        os.path.join(vs._ivf_path, "lists")
-    ).filter(F.col("centroid_id").isin([0, 1]))
-    plan = formatted_plan(lists)
-    assert "PartitionFilters" in plan and "centroid_id" in plan
-
-    # index is addressable after reopen via explicit path
+    # a reopened store finds its default index
     vs2 = VectorStore(spark, acid_path=path)
-    again = vs2.query_ann(qvec, k=5, n_probe=4, index_path=vs._ivf_path)
+    again = vs2.query_ann(qvec, k=5, n_probe=4)
     assert [r["id"] for r in again.collect()] == exact
 
 
@@ -424,8 +440,8 @@ def test_ann_index_incremental_add(spark, tmp_path):
 
 
 def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch):
-    """add_to_ann_index persists the fresh rows it assigns; a failing
-    write must still release them (cache lifetime is explicit)."""
+    """A failing add_to_ann_index write leaves nothing persisted
+    (cache lifetime is explicit)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
@@ -437,8 +453,7 @@ def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch)
         spark.createDataFrame([(f"new {i}",) for i in range(5)], ["target"]),
         append=True,
     )
-    # a fresh handle holds no index, so the add takes the persisting
-    # (distributed) path
+    # a fresh handle opens the index from its manifest
     vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
     sc = spark.sparkContext
     spark.catalog.clearCache()
@@ -449,20 +464,22 @@ def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
     with pytest.raises(OSError):
-        vs.add_to_ann_index(index_path=str(tmp_path / "s") + "__ivf")
+        vs.add_to_ann_index()
     # other tests' local checkpoints stay registered until collected,
     # so compare with the state before the call
     assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
 
 
 def test_ann_index_compaction(spark, tmp_path):
-    """Incremental appends accumulate one file per touched partition
-    per call; optimize_ann_index coalesces to one file per list via
-    staged swap and results are unchanged."""
+    """Incremental appends accumulate one file per touched list per
+    call; optimize_ann_index coalesces to one file per list in one
+    replace version, vacuums the rest, and results are unchanged."""
     import glob
     import os
 
     import numpy as np
+
+    from vectorsearchutil_spark.sources.manifest import ManifestLog
 
     rng = np.random.RandomState(11)
     rows = [
@@ -479,7 +496,7 @@ def test_ann_index_compaction(spark, tmp_path):
         )
         vs.add_to_ann_index()
 
-    lists = os.path.join(vs._ivf_path, "lists")
+    lists = ManifestLog(vs._ivf_path).data_dir
     files = lambda: len(  # noqa: E731
         glob.glob(os.path.join(lists, "**", "*.parquet"), recursive=True)
     )

@@ -164,7 +164,7 @@ def test_compact_and_vacuum_carry_the_state(spark, tmp_path):
     assert len(vs.acid.dirs()) == 3
     vs.compact()
     vs.acid.vacuum()
-    manifest = vs.acid._manifest(vs.acid.latest_version())
+    manifest = vs.acid.manifest(vs.acid.latest_version())
     assert manifest["max_id"] == len(_BASE) + len(_BATCH)
     listed = vs.acid._parts(manifest)
     assert sorted(listed) == ["buckets", "data", "meta", "shingles"]

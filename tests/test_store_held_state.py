@@ -2,11 +2,11 @@
 
 A batch that ``collect_if_small`` pulled goes through ``set_data``
 and ``add_to_ann_index`` in Arrow and numpy, with the store's max id
-and its IVF index (centroids, lists schema, max indexed id) held on
-the store object. Pins that path's equality with the distributed one
+and its IVF index (the index manifest and centroids) held on the
+store object. Pins that path's equality with the distributed one
 (``_LOCAL_BATCH_MAX_ROWS = 0``) in every store mode, the held state
-across reopen, replace and schema-less manifests, the healing of an
-interrupted ``optimize_ann_index`` swap, and the job budget of one
+across reopen, replace and schema-less manifests, an index write cut
+short at each of its writes and its commit, and the job budget of one
 small store round."""
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from vectorsearchutil_spark import store as store_mod
+from vectorsearchutil_spark.sources.manifest import DATA, ManifestLog
 from vectorsearchutil_spark.store import VectorStore
 
 _SCHEMA = "target string, option1 string"
@@ -42,6 +43,18 @@ _APPEND_2 = [
     ("kappa lambda mu nu", "re-sent loses"),
     ("sigma tau upsilon phi", "with vector"),
 ]
+
+
+def _index_lists(index_path):
+    """(id, centroid_id) of every row the index's latest version lists,
+    read through its manifest."""
+    log = ManifestLog(index_path)
+    return sorted(
+        (i, int(d.rsplit("=", 1)[1]))
+        for d in log.dirs()
+        for i in pq.read_table(os.path.join(log.data_dir, d), columns=["id"])
+        .column("id").to_pylist()
+    )
 
 
 def _store_kw(mode, tmp_path, name):
@@ -84,11 +97,7 @@ def _round_trip(spark, tmp_path, mode, name):
             part: sorted(map(tuple, df.collect()), key=repr)
             for part, df in vs._dedup_state.items()
         }
-        lists = sorted(
-            (r["id"], r["centroid_id"])
-            for r in spark.read.parquet(os.path.join(index_path, "lists"))
-            .select("id", "centroid_id").collect()
-        )
+        lists = _index_lists(index_path)
         tx_schemas = []
         if vs.acid is not None:
             for d in vs.acid.dirs():
@@ -144,18 +153,14 @@ def test_reopened_store_appends_then_extends_index(spark, tmp_path):
     ids = sorted(r["id"] for r in fresh.data.collect())
     assert ids == list(range(1, n_bulk + 6))
     assert fresh.add_to_ann_index(index_path=index_path) == 5
-    listed = [
-        r["id"]
-        for r in spark.read.parquet(os.path.join(index_path, "lists"))
-        .select("id").collect()
-    ]
-    assert sorted(listed) == ids
+    assert [i for i, _ in _index_lists(index_path)] == ids
     # the add left the index held: the next add is the held path
     assert fresh._ivf is not None and fresh._ivf.max_id == ids[-1]
     assert fresh.add_to_ann_index() == 0
 
+    # a replace drops the index it no longer matches
     fresh.set_data(spark.createDataFrame(_APPEND_2, _SCHEMA))
-    assert fresh._ivf is None
+    assert fresh._ivf is None and not os.path.exists(index_path)
     assert fresh._max_id == len(_APPEND_2)
 
 
@@ -176,42 +181,106 @@ def test_manifest_without_schema_reads_the_same_rows(spark, tmp_path):
     assert sorted(map(tuple, reopened.data.collect()), key=repr) == want
     # an append onto a parent without a schema records none either
     reopened.set_data(spark.createDataFrame(_APPEND_2, _SCHEMA), append=True)
-    assert "schema" not in reopened.acid._manifest(reopened.acid.latest_version())
+    assert "schema" not in reopened.acid.manifest(reopened.acid.latest_version())
     assert reopened.count() == len(want) + 2  # one target is re-sent
 
 
-def test_optimize_interrupted_between_renames_heals(spark, tmp_path, monkeypatch):
+def test_replace_and_reset_drop_the_index(spark, tmp_path):
+    """A replace leaves no index that lists the rows it removed, and a
+    reset leaves none for the next store at the same path."""
+    path = str(tmp_path / "st")
+    vs = VectorStore(spark, acid_path=path)
+    vs.set_data(spark.createDataFrame(
+        [(f"old doc {i}",) for i in range(30)], "target string"))
+    vs.build_ann_index(n_lists=3)
+    vs.set_data(spark.createDataFrame(
+        [(f"new doc {i}",) for i in range(10)], "target string"))
+    assert vs.add_to_ann_index() == 0
+    assert vs.query_ann("new doc 3") is None
+    vs.build_ann_index(n_lists=3)
+    got = vs.query_ann("new doc 3", k=3, n_probe=3).collect()
+    assert got[0]["target"] == "new doc 3"
+    assert all(r["target"].startswith("new doc") for r in got)
+    vs.reset_db()
+    assert not os.path.exists(path + "__ivf")
+    again = VectorStore(spark, acid_path=path)
+    again.set_data(spark.createDataFrame(
+        [(f"newer doc {i}",) for i in range(5)], "target string"))
+    assert again.query_ann("old doc 3") is None
+
+
+def _cut_short(monkeypatch, where):
+    """Make the index writer raise at ``where``: right after writing a
+    directory of that part, before the commit's link (``"commit"``) or
+    right after it (``"committed"``)."""
+    commit = ManifestLog.commit
+
+    def cut(write):
+        def cut_write(self, part, *args, **kwargs):
+            record = write(self, part, *args, **kwargs)
+            if part == where:
+                raise OSError(f"cut short after writing {part}")
+            return record
+        return cut_write
+
+    def cut_commit(self, changes, max_id):
+        if where == "commit":
+            raise OSError("cut short before the commit")
+        version = commit(self, changes, max_id)
+        if where == "committed":
+            raise OSError("cut short after the commit")
+        return version
+
+    for name in ("write", "write_partitioned"):
+        monkeypatch.setattr(ManifestLog, name, cut(getattr(ManifestLog, name)))
+    monkeypatch.setattr(ManifestLog, "commit", cut_commit)
+
+
+@pytest.mark.parametrize(
+    "op", ["build", "add", "add_distributed", "optimize"])
+def test_index_write_cut_short_reopens_before_or_after(
+    spark, tmp_path, monkeypatch, op
+):
+    """An index build, add or optimize that fails at any of its writes
+    or before its commit leaves the index as it was; one that fails
+    after the commit leaves it as the call would. A reopened store's
+    ``query_ann`` over every list says which, and the lists hold every
+    indexed row once."""
     path = str(tmp_path / "st")
     vs = VectorStore(spark, acid_path=path)
     vs.set_data(spark.createDataFrame(_BULK, _SCHEMA))
     vs.build_ann_index(n_lists=3)
     vs.set_data(spark.createDataFrame(_APPEND_1, _SCHEMA), append=True)
-    vs.add_to_ann_index()
-    q = "alpha beta gamma delta"
-    want = [r["id"] for r in vs.query_ann(q, k=5, n_probe=3).collect()]
+    if op == "optimize":
+        vs.add_to_ann_index()
+    if op == "add_distributed":
+        monkeypatch.setattr(store_mod, "_LOCAL_BATCH_MAX_ROWS", 0)
+    q = "zeta eta theta iota"  # appended: indexed only after an add
 
-    real_rename = os.rename
-    calls = []
+    def result():
+        got = VectorStore(spark, acid_path=path).query_ann(q, k=5, n_probe=3)
+        return [r["id"] for r in got.collect()]
 
-    def crash_on_second(src, dst):
-        calls.append(src)
-        if len(calls) == 2:
-            raise OSError("crash between the renames")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_on_second)
-    with pytest.raises(OSError):
-        vs.optimize_ann_index()
-    monkeypatch.setattr(os, "rename", real_rename)
-    lists = os.path.join(path + "__ivf", "lists")
-    assert not os.path.exists(lists)
-
+    before = result()
+    after = [r["id"] for r in vs.query(q, k=5).collect()]
+    assert (before == after) == (op == "optimize")
+    if op == "build":
+        call, parts = (lambda s: s.build_ann_index(n_lists=3)), [
+            DATA, "centroids"]
+    elif op == "optimize":
+        call, parts = (lambda s: s.optimize_ann_index()), [DATA]
+    else:
+        call, parts = (lambda s: s.add_to_ann_index()), [DATA]
+    for where in [*parts, "commit", "committed"]:
+        with monkeypatch.context() as m:
+            _cut_short(m, where)
+            with pytest.raises(OSError):
+                call(VectorStore(spark, acid_path=path))
+        assert result() == (after if where == "committed" else before), where
     reopened = VectorStore(spark, acid_path=path)
-    got = reopened.query_ann(q, k=5, n_probe=3, index_path=path + "__ivf")
-    assert [r["id"] for r in got.collect()] == want
-    assert reopened.optimize_ann_index(index_path=path + "__ivf") <= 3
-    got = reopened.query_ann(q, k=5, n_probe=3, index_path=path + "__ivf")
-    assert [r["id"] for r in got.collect()] == want
+    assert reopened.add_to_ann_index() == 0
+    ids = [i for i, _ in _index_lists(path + "__ivf")]
+    assert ids == sorted(r["id"] for r in reopened.data.collect())
 
 
 def _job_count(spark, group, fn):

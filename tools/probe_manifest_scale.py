@@ -1,18 +1,29 @@
-"""Scale probe of the manifest log: 200 appends, then compaction.
+"""Scale probe of the manifest log: 200 appends, then compaction;
+40 IVF index adds, then ``optimize_ann_index``.
 
-    python tools/probe_manifest_scale.py
+    python tools/probe_manifest_scale.py [log] [store] [index]
 
-Part 1 commits 200 appends of 5k rows to a bare ``ManifestLog`` and
-times a read of the fragmented table, ``compact()`` and a read after
-it. Part 2 feeds a ``VectorStore`` that keeps dedup state (one 500-doc
-load, then 200 appends of 20 docs, so each of its four parts lists 201
-directories) and reports the warm ``ingest_dedup_check`` of a 100-doc
-batch (jobs and seconds, median of 3) before and after
-``compact()``. A read of more than 32 directories
+With no argument it runs all three parts.
+
+Part 1 (``log``) commits 200 appends of 5k rows to a bare
+``ManifestLog`` and times a read of the fragmented table,
+``compact()`` and a read after it. Part 2 (``store``) feeds a
+``VectorStore`` that keeps dedup state (one 500-doc load, then 200
+appends of 20 docs, so each of its four parts lists 201 directories)
+and reports the warm ``ingest_dedup_check`` of a 100-doc batch (jobs
+and seconds, median of 3) before and after ``compact()``. A read of
+more than 32 directories
 (``spark.sql.sources.parallelPartitionDiscovery.threshold``) lists
 them with a Spark job of its own, so the probe also reports the jobs
-of a reopen. Everything is written under a temporary directory that is
-removed at exit.
+of a reopen. Part 3 (``index``) builds an IVF index (8 lists) over a
+400-doc store and makes 40 adds of 40 docs; each add lists one leaf
+directory per touched list, so a probe of 2 lists reads up to
+2 * (1 + adds) leaves. At several add counts and after
+``optimize_ann_index`` it reports the leaves the probe reads, the
+jobs and seconds of building ``query_ann`` on the store that holds
+the index (median of 3), the same for a reopened store's first
+``query_ann``, and the collect. Everything is written under a
+temporary directory that is removed at exit.
 """
 
 import os
@@ -25,16 +36,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from vectorsearchutil_spark import store as store_mod  # noqa: E402
 from vectorsearchutil_spark.session import get_spark  # noqa: E402
 from vectorsearchutil_spark.sources.manifest import ManifestLog  # noqa: E402
 from vectorsearchutil_spark.store import VectorStore  # noqa: E402
 
 APPENDS = 200
-
-spark = get_spark("manifest-probe")
-spark.sparkContext.setLogLevel("ERROR")
-work = tempfile.mkdtemp(prefix="manifest_probe_")
-
+INDEX_ADDS = 40
+INDEX_REPORT_AT = (8, 15, 16, 24, INDEX_ADDS)
 
 def jobs_of(group, fn):
     """``fn()`` and the number of Spark jobs it ran."""
@@ -113,7 +122,7 @@ def store_with_state():
             f"{label}-reopen",
             lambda: VectorStore(spark, acid_path=path,
                                 maintain_dedup_state=True))
-        m = vs.acid._manifest(vs.acid.latest_version())
+        m = vs.acid.manifest(vs.acid.latest_version())
         dirs = {p: len(r["dirs"]) for p, r in vs.acid._parts(m).items()}
         print(f"{label}: dirs per part {dirs}; warm ingest_dedup_check "
               f"{statistics.median(t for t, _ in runs):.2f}s, "
@@ -129,8 +138,66 @@ def store_with_state():
     check("compacted")
 
 
-try:
-    bare_log()
-    store_with_state()
-finally:
-    shutil.rmtree(work, ignore_errors=True)
+def index_adds():
+    rng = random.Random(1)
+    words = [f"w{i}" for i in range(500)]
+
+    def docs(k):
+        return spark.createDataFrame(
+            [(" ".join(rng.choice(words) for _ in range(12)),)
+             for _ in range(k)], "target string")
+
+    path = os.path.join(work, "indexed")
+    vs = VectorStore(spark, acid_path=path)
+    vs.set_data(docs(400))
+    vs.build_ann_index(n_lists=8)
+    q = "w1 w2 w3 w4 w5 w6"
+
+    def probe(label):
+        held = vs._index(vs._ivf_path)
+        probes = store_mod._probes(
+            held.cids, held.centroids, vs._query_vector(q), 2)
+        leaves = len(held.lists(probes)["dirs"])
+        runs = []
+        for r in range(3):
+            t0 = time.time()
+            df, jobs = jobs_of(f"{label}-held-{r}", lambda: vs.query_ann(q))
+            runs.append((time.time() - t0, jobs))
+        t0 = time.time()
+        df.collect()
+        t_collect = time.time() - t0
+        reopened = VectorStore(spark, acid_path=path)
+        t0 = time.time()
+        _, reopen_jobs = jobs_of(
+            f"{label}-reopen", lambda: reopened.query_ann(q))
+        t_reopen = time.time() - t0
+        print(f"{label}: probe reads {leaves} leaves; query_ann build "
+              f"{statistics.median(t for t, _ in runs):.3f}s, "
+              f"{max(j for _, j in runs)} jobs; reopened first build "
+              f"{t_reopen:.2f}s, {reopen_jobs} jobs; collect {t_collect:.2f}s")
+
+    t0 = time.time()
+    for a in range(1, INDEX_ADDS + 1):
+        vs.set_data(docs(40), append=True)
+        vs.add_to_ann_index()
+        if a in INDEX_REPORT_AT:
+            probe(f"after {a} adds")
+    print(f"index: {INDEX_ADDS} appends + adds of 40 docs: "
+          f"{time.time() - t0:.1f}s (with the probes)")
+    t0 = time.time()
+    vs.optimize_ann_index()
+    print(f"optimize_ann_index(): {time.time() - t0:.1f}s")
+    probe("after optimize")
+
+
+PARTS = {"log": bare_log, "store": store_with_state, "index": index_adds}
+
+if __name__ == "__main__":
+    spark = get_spark("manifest-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    work = tempfile.mkdtemp(prefix="manifest_probe_")
+    try:
+        for name in sys.argv[1:] or PARTS:
+            PARTS[name]()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -24,6 +24,15 @@ log borrows the design that Delta Lake built for exactly that problem:
   visible together or not at all — Delta's multi-action commit. A
   commit lists exactly the parts it writes: a writer that does not
   write a derived part drops it rather than leave it stale;
+* **a partitioned part lists leaf directories** — a
+  ``partitionBy`` write is recorded as its leaves
+  ``tx-<uuid>/<column>=<value>``. Spark refuses one read of several
+  ``partitionBy`` roots (``CONFLICTING_DIRECTORY_STRUCTURES``), while
+  leaves of many transactions read together under the recorded
+  schema, and a reader that wants some values reads only their
+  leaves (the IVF index's lists: a probe reads the probed lists'
+  leaves, manifest pruning in place of partition pruning). Vacuum
+  keeps or removes a leaf's whole transaction;
 * **commits are atomic create-exclusive** — ``O_CREAT|O_EXCL`` of the
   next version file either fully succeeds or fully fails. On object
   stores the same primitive is a conditional PUT
@@ -44,8 +53,13 @@ history grows the listing O(versions); Delta solves this with
 periodic checkpoint files. Every append adds one directory to each
 part it writes, so a read of a part lists O(appends) directories; past
 Spark's parallel-listing threshold (32 paths) that listing is a job of
-its own. ``compact()`` rewrites every part into one directory each,
-and ``vacuum()`` then removes the directories the compaction replaced;
+its own. A partitioned part adds up to one leaf per value and write:
+an IVF probe of ``n_probe`` lists after A index adds reads up to
+``n_probe * (1 + A)`` leaves, and crosses the threshold at
+``n_probe * (1 + A) > 32`` until ``optimize_ann_index`` rewrites the
+lists. ``compact()`` rewrites every unpartitioned part into one
+directory each, and ``vacuum()`` then removes the directories the
+compaction replaced;
 a deployment doing thousands of commits should additionally prune old
 ``v*.json`` (they are only needed for time travel).
 
@@ -145,7 +159,7 @@ class ManifestLog:
         except (OSError, json.JSONDecodeError):
             return None
 
-    def _manifest(self, version: int) -> dict:
+    def manifest(self, version: int) -> dict:
         m = self._try_manifest(version)
         if m is None:
             raise FileNotFoundError(
@@ -165,34 +179,44 @@ class ManifestLog:
             version = self.latest_version()
         if version is None:
             return []
-        return self._manifest(version)["dirs"]
+        return self.manifest(version)["dirs"]
 
     # -- transactions --------------------------------------------------
 
-    def write(self, part: str, df: DataFrame) -> tuple[str, dict]:
+    def write(self, part: str, df: DataFrame) -> dict:
         """Write ``df`` as a new directory of ``part``, invisible until
-        a commit lists it. Returns the directory's name and the JSON
-        schema a read of it reports."""
+        a commit lists it. Returns its record: the directory and the
+        JSON schema a read of it reports."""
         tx = f"tx-{uuid.uuid4().hex}"
         df.write.parquet(os.path.join(self.base, part, tx))
-        return tx, nullable_schema(df.schema).jsonValue()
+        return {"dirs": [tx], "schema": nullable_schema(df.schema).jsonValue()}
 
-    def read_written(
-        self, spark: SparkSession, part: str, written: tuple[str, dict]
-    ) -> DataFrame:
-        """A directory ``write`` returned, committed or not."""
-        tx, schema = written
-        return spark.read.schema(StructType.fromJson(schema)).parquet(
-            os.path.join(self.base, part, tx)
+    def write_partitioned(
+        self, part: str, df: DataFrame, column: str, **options
+    ) -> dict:
+        """``write`` partitioned by ``column``, with the writer
+        ``options``: the record lists the write's leaf directories
+        ``tx-<uuid>/<column>=<value>``, whose files do not carry the
+        column."""
+        tx = f"tx-{uuid.uuid4().hex}"
+        path = os.path.join(self.base, part, tx)
+        df.write.options(**options).partitionBy(column).parquet(path)
+        leaves = sorted(
+            f"{tx}/{name}"
+            for name in os.listdir(path)
+            if name.startswith(column + "=")
         )
+        schema = nullable_schema(df.drop(column).schema)
+        return {"dirs": leaves, "schema": schema.jsonValue()}
 
     def commit(
         self,
-        changes: dict[str, tuple[str, tuple[str, dict]]],
+        changes: dict[str, tuple[str, dict]],
         max_id: int | None,
     ) -> int:
         """Commit written directories as the next version: for each
-        part, ``(mode, written)``; ``'append'`` keeps the parent
+        part, ``(mode, record)`` with a record ``write`` returned (or a
+        part's record from a manifest); ``'append'`` keeps the parent
         version's directories of that part, ``'replace'`` starts
         fresh. The new version lists exactly the parts in ``changes``
         (``data`` among them), less any appended part the parent does
@@ -213,16 +237,17 @@ class ManifestLog:
                 if (v := self._version_of(name)) is not None
             ]
             version = max(occupied, default=-1) + 1
-            held = {} if parent is None else self._parts(self._manifest(parent))
+            held = {} if parent is None else self._parts(self.manifest(parent))
             listed = {}
-            for part, (mode, (tx, schema)) in changes.items():
+            for part, (mode, record) in changes.items():
                 if mode == "replace" or parent is None:
-                    listed[part] = {"dirs": [tx], "schema": schema}
+                    listed[part] = {"dirs": record["dirs"],
+                                    "schema": record.get("schema")}
                 elif part in held:
                     old = held[part]
-                    listed[part] = {"dirs": [*old["dirs"], tx]}
-                    if old.get("schema") == schema:
-                        listed[part]["schema"] = schema
+                    listed[part] = {"dirs": [*old["dirs"], *record["dirs"]]}
+                    if old.get("schema") == record.get("schema"):
+                        listed[part]["schema"] = record["schema"]
                 # else a writer that won the race dropped the part, and
                 # appending to nothing would list a part that misses
                 # the parent's rows: this version drops it too
@@ -275,9 +300,11 @@ class ManifestLog:
 
     # -- reads ---------------------------------------------------------
 
-    def _read_part(self, spark: SparkSession, record: dict, part: str):
-        """``part``'s directories under its recorded schema, or
-        inferred where it recorded none; None when it lists none."""
+    def read_part(self, spark: SparkSession, record: dict, part: str):
+        """The directories of ``part`` that ``record`` lists (a
+        manifest's, or one ``write`` returned, committed or not), under
+        its schema, or inferred where it has none; None when it lists
+        none."""
         if not record["dirs"]:
             return None
         schema = record.get("schema")
@@ -298,7 +325,7 @@ class ManifestLog:
             version = self.latest_version()
         if version is None:
             return None
-        return self._read_part(spark, self._manifest(version), DATA)
+        return self.read_part(spark, self.manifest(version), DATA)
 
     def snapshot(
         self, spark: SparkSession, version: int | None
@@ -308,9 +335,9 @@ class ManifestLog:
         records none, or when ``version`` is None: nothing committed)."""
         if version is None:
             return {}, None
-        m = self._manifest(version)
+        m = self.manifest(version)
         frames = {
-            part: self._read_part(spark, record, part)
+            part: self.read_part(spark, record, part)
             for part, record in self._parts(m).items()
         }
         return (
@@ -332,7 +359,10 @@ class ManifestLog:
         for v in range(max(0, latest - keep_versions + 1), latest + 1):
             m = self._try_manifest(v)
             for part, record in ({} if m is None else self._parts(m)).items():
-                keep.setdefault(part, set()).update(record["dirs"])
+                # a leaf directory keeps its whole transaction
+                keep.setdefault(part, set()).update(
+                    d.split("/", 1)[0] for d in record["dirs"]
+                )
         removed = []
         for part in os.listdir(self.base):
             part_dir = os.path.join(self.base, part)
@@ -364,17 +394,20 @@ class ManifestLog:
         version = self.latest_version()
         if version is None:
             return 0
-        m = self._manifest(version)
+        m = self.manifest(version)
         if not m["dirs"]:
             return version
         changes = {
             part: ("replace", self.write(
                 part,
-                self._read_part(spark, record, part).coalesce(target_files),
+                self.read_part(spark, record, part).coalesce(target_files),
             ))
             for part, record in self._parts(m).items()
         }
         return self.commit(changes, m.get("max_id"))
 
     def drop(self) -> None:
+        """Delete the table, its log first: a drop cut short leaves no
+        version that lists a deleted directory."""
+        shutil.rmtree(self.log_dir, ignore_errors=True)
         shutil.rmtree(self.base, ignore_errors=True)

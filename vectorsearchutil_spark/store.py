@@ -20,10 +20,11 @@ driver once and stays there, as the reference's in-process insert
 (``VectorSearchBase.py:78-94,101-133``) does: its dedup, id
 assignment and IVF list assignment run in Arrow and numpy, and the
 store is not re-planned for them. What the store already knows stays
-on the store object: its max id, and the centroids, lists schema and
-max indexed id of the IVF index it built or last extended. A reopened
-store knows neither until its first write, except a manifest store's
-max id. Larger batches run the same steps as distributed plans.
+on the store object: its max id, and the manifest and centroids of
+the IVF index it last used. A reopened store reads its max id at its
+first write (a manifest store from its manifest) and an index's
+centroids at its first call on that index. Larger batches run the
+same steps as distributed plans.
 
 Persistence modes:
 
@@ -45,13 +46,20 @@ Persistence modes:
   (``VectorSearchBase.py:78``); a crash at any point leaves the
   previous version readable. ``acid_format="delta"`` keeps the rows
   only, in a Delta table.
+
+The IVF index (``build_ann_index``) is a manifest log of its own in
+every mode, at ``<acid_path>__ivf`` or the caller's ``index_path=``:
+centroids, and lists recorded as ``partitionBy(centroid_id)`` leaf
+directories. Each build, add and optimize is one version with the max
+indexed id, so a crash leaves the previous index readable and an add
+indexes the ids above that max. A replace or reset drops the index.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 
 import numpy as np
@@ -62,7 +70,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -82,11 +89,7 @@ from vectorsearchutil_spark.session import (
     in_list,
     local_frame,
 )
-from vectorsearchutil_spark.sources.manifest import (
-    DATA,
-    ManifestLog,
-    nullable_schema,
-)
+from vectorsearchutil_spark.sources.manifest import DATA, ManifestLog
 
 #: Fixed logical schema (reference save_columns, VectorSearchBase.py:21)
 SAVE_COLUMNS = ["target", "option1", "option2", "option3", "option4", "option5"]
@@ -109,17 +112,39 @@ STORE_SCHEMA = StructType(
 
 @dataclass
 class _HeldIndex:
-    """An IVF index as its store built or last extended it."""
+    """An IVF index as one version of its manifest log records it."""
 
-    path: str
+    log: ManifestLog
+    #: that version's manifest: the lists (its data part, as leaf
+    #: directories ``tx-…/centroid_id=<c>``), the centroids part and
+    #: the max indexed id
+    manifest: dict
     #: centroid ids, ascending
     cids: list
     #: float64 (k, dim) centroid matrix, rows in ``cids`` order
     centroids: np.ndarray
-    #: the schema a read of the lists directory infers
-    lists_schema: StructType
-    #: every store row with an id at most this is in the lists
-    max_id: int
+
+    @property
+    def max_id(self) -> int:
+        """Every store row with an id at most this is in the lists."""
+        return self.manifest["max_id"]
+
+    def lists(self, cids: list) -> dict:
+        """The record of the lists of ``cids``: their leaf directories
+        under the lists' schema."""
+        names = {f"centroid_id={c}" for c in cids}
+        dirs = [d for d in self.manifest["dirs"] if d.split("/")[-1] in names]
+        return {"dirs": dirs, "schema": self.manifest.get("schema")}
+
+    def commit(self, mode: str, lists: dict, max_id: int) -> _HeldIndex:
+        """Commit the written ``lists`` (``mode`` onto this version's)
+        with this version's centroids as the next version."""
+        version = self.log.commit(
+            {DATA: (mode, lists),
+             "centroids": ("replace", self.manifest["parts"]["centroids"])},
+            max_id,
+        )
+        return replace(self, manifest=self.log.manifest(version))
 
 
 def _probes(
@@ -129,19 +154,6 @@ def _probes(
     ascending, ``centroids`` in their order), ties to the lower id."""
     d2 = centroid_sq_distances(np.asarray([qvec], dtype=np.float64), centroids)
     return [cids[i] for i in np.argsort(d2[0], kind="stable")[:n_probe]]
-
-
-def _heal_lists(lists_path: str) -> None:
-    """Put back a lists directory that a crash between the two renames
-    of ``optimize_ann_index`` left missing. The staged ``__compact``
-    copy is complete (it is renamed only after its write returned), so
-    it wins; otherwise the ``__old`` copy goes back."""
-    if os.path.isdir(lists_path):
-        return
-    for staged in (lists_path + "__compact", lists_path + "__old"):
-        if os.path.isdir(staged):
-            os.rename(staged, lists_path)
-            return
 
 
 class VectorStore:
@@ -196,7 +208,7 @@ class VectorStore:
         self._max_id: int | None = None
         #: the manifest version a manifest store holds
         self._version: int | None = None
-        #: the IVF index this store built or last extended
+        #: the IVF index this store last used
         self._ivf: _HeldIndex | None = None
         #: acid_path= — manifest-log table (sources/manifest.py): the
         #: object-store-safe mode. Appends commit only the appended
@@ -224,6 +236,9 @@ class VectorStore:
                     part: spark.table(f"{table}_dedup_{part}")
                     for part in self._DEDUP_PARTS
                 }
+        #: the index path of a call without ``index_path=``: the last
+        #: one built or added to, at first an acid store's default
+        self._ivf_path = None if self.acid is None else self.acid.base + "__ivf"
 
     def _open(self, version: int | None) -> None:
         """Hold the ``acid_path=`` store at manifest ``version`` (None:
@@ -274,7 +289,7 @@ class VectorStore:
         self._df = None
         self._dedup_state = None
         self._max_id = None
-        self._ivf = None
+        self._drop_index()
         if self.table is not None:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
             for part in self._DEDUP_PARTS:
@@ -283,6 +298,13 @@ class VectorStore:
                 )
         if self.acid is not None:
             self.acid.drop()
+
+    def _drop_index(self) -> None:
+        """Drop the IVF index at the store's index path: a replace or a
+        reset removes the rows it lists."""
+        if self._ivf_path is not None:
+            ManifestLog(self._ivf_path).drop()
+        self._ivf = None
 
     def _cached(self) -> list[DataFrame]:
         """The frames an in-memory store holds in the cache: its data
@@ -497,7 +519,7 @@ class VectorStore:
             df = df.withColumn(
                 "id", F.row_number().over(Window.orderBy("_ord"))
             ).select("id", *SAVE_COLUMNS, "vector")
-        self._ivf = None
+        self._drop_index()
         n = None if batch is None else batch.num_rows
         if isinstance(self.acid, ManifestLog):
             self._commit(df, False, 0, n)
@@ -514,9 +536,7 @@ class VectorStore:
         insert_data guard, VectorSearchBase.py:79-87): ``batch`` when
         it was pulled, else the distributed ``df``."""
         existing = self.data
-        start = self._max_id
-        if start is None:
-            start = existing.agg(F.coalesce(F.max("id"), F.lit(0))).first()[0]
+        start = self._top_id()
         if batch is not None:
             batch = self._absent(batch)
             fresh = self._with_ids(batch, start)
@@ -577,7 +597,7 @@ class VectorStore:
         acid = self.acid
         data = acid.write(DATA, rows)
         if n is None:
-            rows = acid.read_written(self.spark, DATA, data)
+            rows = acid.read_part(self.spark, data, DATA)
             top = rows.agg(F.max("id")).first()[0]
             max_id = start if top is None else top
         else:
@@ -593,6 +613,14 @@ class VectorStore:
             for part in self._DEDUP_PARTS:
                 changes[part] = (mode, acid.write(part, state[part]))
         self._open(acid.commit(changes, max_id))
+
+    def _top_id(self) -> int:
+        """The store's max id: held, or read once (one job)."""
+        if self._max_id is None:
+            self._max_id = self.data.agg(
+                F.coalesce(F.max("id"), F.lit(0))
+            ).first()[0]
+        return self._max_id
 
     def _absent(self, batch: pa.Table) -> pa.Table:
         """The rows of the pulled ``batch`` whose target the store does
@@ -695,13 +723,12 @@ class VectorStore:
         subsumes ANN on correctness; this is the sublinear-read path.
 
         k-means centroids (size-gated driver/distributed strategy)
-        define the coarse lists; the corpus is written PARTITIONED BY
-        list id, so a probe-limited search is partition pruning — at
-        100 TB each query reads n_probe/n_lists of the index. The
-        centroid table (k rows) persists next to it. Rebuild after
-        large appends (same posture as faiss retraining). The store
-        holds the new index (see :meth:`add_to_ann_index`) when it
-        holds its own max id."""
+        define the coarse lists; the corpus is written partitioned by
+        list id, and the index manifest lists each list's leaf
+        directories, so a probe reads n_probe of the n_lists lists. The
+        lists and the k-row centroid table commit as one replace
+        version with the max indexed id; the directories it replaces
+        are vacuumed. Rebuild after large appends (faiss retraining)."""
         from vectorsearchutil_spark.operators.clustering import kmeans
         from vectorsearchutil_spark.operators.similarity import (
             build_ivf_index,
@@ -715,7 +742,6 @@ class VectorStore:
                     "index_path= required for stores without acid_path="
                 )
             index_path = self.acid.base + "__ivf"
-        self._ivf = None
         _, centroids = kmeans(
             self.data, k=n_lists, vector_col="vector", id_col="id",
             dim=self.vec_size,
@@ -724,136 +750,108 @@ class VectorStore:
             F.col("cid").alias("centroid_id"),
             F.col("cv").alias("centroid_vec"),
         )
-        indexed = build_ivf_index(self.data, cents, vector_col="vector")
-        indexed.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            os.path.join(index_path, "lists")
+        log = ManifestLog(index_path)
+        lists = log.write_partitioned(
+            DATA,
+            build_ivf_index(self.data, cents, vector_col="vector"),
+            "centroid_id",
         )
-        cents.write.mode("overwrite").parquet(
-            os.path.join(index_path, "centroids")
+        version = log.commit(
+            {DATA: ("replace", lists),
+             "centroids": ("replace", log.write("centroids", cents))},
+            self._top_id(),
         )
+        log.vacuum()
         self._ivf_path = index_path
-        if self._max_id is not None:
-            # kmeans returns its centroids as a local relation, so
-            # this collect runs no job
-            self._hold_index(
-                index_path, cents.collect(), indexed.schema, self._max_id
-            )
+        # kmeans returns its centroids as a local relation, so this
+        # collect runs no job
+        self._hold(log, log.manifest(version), cents.collect())
 
-    def _hold_index(
-        self, path: str, cents: list, lists: StructType, max_id: int
-    ) -> None:
-        """Hold the index at ``path``: its (centroid_id, centroid_vec)
-        rows, the schema of the frames written to its lists (the
-        partition column last) and the max id they cover."""
+    def _hold(self, log: ManifestLog, manifest: dict, cents: list) -> _HeldIndex:
+        """Hold the index version ``manifest`` of ``log`` with its
+        (centroid_id, centroid_vec) rows ``cents``."""
         rows = sorted((r[0], list(r[1])) for r in cents)
-        data = nullable_schema(lists)
-        self._ivf = _HeldIndex(
-            path=path,
-            cids=[c for c, _ in rows],
-            centroids=np.array([v for _, v in rows], dtype=np.float64),
-            # a read of the lists infers the partition column's type
-            # from its directory names: int for kmeans' centroid ids
-            lists_schema=StructType(
-                [f for f in data.fields if f.name != "centroid_id"]
-                + [StructField("centroid_id", IntegerType())]
-            ),
-            max_id=max_id,
-        )
+        cids, vecs = [c for c, _ in rows], [v for _, v in rows]
+        self._ivf = _HeldIndex(log, manifest, cids, np.array(vecs, np.float64))
+        return self._ivf
 
-    def _held(self, index_path: str) -> _HeldIndex | None:
-        return (
-            self._ivf
-            if self._ivf is not None and self._ivf.path == index_path
-            else None
-        )
-
-    def _lists(self, index_path: str) -> DataFrame:
-        """The index's lists, read under the held schema when the
-        store holds the index."""
-        lists_path = os.path.join(index_path, "lists")
-        _heal_lists(lists_path)
-        held = self._held(index_path)
-        reader = self.spark.read
-        if held is not None:
-            reader = reader.schema(held.lists_schema)
-        return reader.parquet(lists_path)
+    def _index(self, index_path: str | None) -> _HeldIndex | None:
+        """The index at ``index_path`` as its latest version records
+        it, held by the store; None without a path, rows or committed
+        version. The centroids are pulled (one job) only when the store
+        holds another index or another version of this one."""
+        if index_path is None or self._df is None:
+            return None
+        log = ManifestLog(index_path)
+        version = log.latest_version()
+        if version is None:
+            return None
+        held = self._ivf
+        if (
+            held is not None
+            and held.log.base == log.base
+            and held.manifest["version"] == version
+        ):
+            return held
+        m = log.manifest(version)
+        cents = log.read_part(self.spark, m["parts"]["centroids"], "centroids")
+        return self._hold(log, m, cents.collect())
 
     def add_to_ann_index(self, index_path: str | None = None) -> int:
         """Incremental IVF maintenance: assign ONLY the store rows not
         yet in the index to the EXISTING centroids and append them to
-        their list partitions — the faiss ``index.add()`` posture
-        after ``set_data(append)``, without re-reading or re-writing
-        the indexed corpus. Centroids are NOT retrained (quantization
+        their lists — the faiss ``index.add()`` posture after
+        ``set_data(append)``, without re-reading or re-writing the
+        indexed corpus. Centroids are NOT retrained (quantization
         drifts only if the append distribution does; rebuild with
         :meth:`build_ann_index` then, exactly like faiss re-training).
 
-        When the store holds the index (it built or last extended it
-        and knows its max id), the unindexed rows are the ids above
-        the held max indexed id: one job pulls them if they are at
-        most ``_LOCAL_BATCH_MAX_ROWS``, they are assigned on the
-        driver against the held centroid matrix, and one job writes
-        them as one local frame — one file per touched list.
-        Otherwise (a reopened store, or more rows than the gate) the
-        unindexed set derives from a column-pruned id scan of the
-        lists (an id-only anti-join, which also picks up rows a
-        half-written earlier add missed) and the assignment is
-        ``build_ivf_index``'s; the store then holds the index.
-        Idempotent: a second call appends nothing. The lists are
-        plain Parquet in every store mode, so an append to them is
-        not atomic under concurrent writers, and a held index assumes
-        its store is the index's one writer. Returns the number of
-        rows added."""
-        index_path = index_path or getattr(self, "_ivf_path", None)
-        if index_path is None or self._df is None:
+        The unindexed rows are the ids above the max indexed id of the
+        index's latest version. Up to ``_LOCAL_BATCH_MAX_ROWS`` of them
+        are pulled in one job, assigned on the driver against the held
+        centroid matrix and written in one job, one file per touched
+        list; more go through ``build_ivf_index`` and are counted from
+        the written leaves. The leaves and the new max id commit as
+        one append version, so an add cut short leaves the index as it
+        was and the next add indexes the same rows. Idempotent. Two
+        stores adding to one index at once may both list the same
+        rows. Returns the number of rows added."""
+        index_path = index_path or self._ivf_path
+        held = self._index(index_path)
+        if held is None:
             return 0
-        lists_path = os.path.join(index_path, "lists")
-        _heal_lists(lists_path)
-        held = self._held(index_path)
-        if held is not None:
-            rows = collect_if_small(
-                self.data.filter(F.col("id") > F.lit(held.max_id)),
-                _LOCAL_BATCH_MAX_ROWS,
+        fresh = self.data.filter(F.col("id") > F.lit(held.max_id))
+        rows = collect_if_small(fresh, _LOCAL_BATCH_MAX_ROWS)
+        if rows is None:
+            from vectorsearchutil_spark.operators.similarity import (
+                build_ivf_index,
             )
-            if rows is not None:
-                if rows.num_rows:
-                    self._add_local(held, rows)
-                self._ivf_path = index_path
-                return rows.num_rows
-        from vectorsearchutil_spark.operators.similarity import (
-            build_ivf_index,
-        )
 
-        fresh = self.data.join(
-            self._lists(index_path).select("id"), "id", "left_anti"
-        )
-        cdf = self.spark.read.parquet(
-            os.path.join(index_path, "centroids")
-        ).select("centroid_id", "centroid_vec")
-        cent_rows = cdf.collect()
-        indexed = build_ivf_index(
-            fresh, local_frame(self.spark, cent_rows, cdf.schema),
-            vector_col="vector",
-        ).persist()
-        try:
-            n = indexed.count()
-            if n:
-                indexed.write.mode("append").partitionBy(
-                    "centroid_id"
-                ).parquet(lists_path)
-        finally:
-            indexed.unpersist()
-        self._ivf_path = index_path
-        if self._max_id is not None:
-            # every store row is in the lists now
-            self._hold_index(
-                index_path, cent_rows, indexed.schema, self._max_id
+            cents = held.log.read_part(
+                self.spark, held.manifest["parts"]["centroids"], "centroids"
             )
+            indexed = build_ivf_index(fresh, cents, vector_col="vector")
+        elif rows.num_rows:
+            indexed = self._assign_local(held, rows)
+        else:
+            return 0
+        lists = held.log.write_partitioned(DATA, indexed, "centroid_id")
+        if rows is None:
+            written = held.log.read_part(self.spark, lists, DATA)
+            n, top = (0, None) if written is None else written.agg(
+                F.count("*"), F.max("id")
+            ).first()
+        else:
+            n, top = rows.num_rows, pc.max(rows.column("id")).as_py()
+        if n:
+            self._ivf = held.commit("append", lists, top)
+        self._ivf_path = index_path
         return n
 
-    def _add_local(self, held: _HeldIndex, rows: pa.Table) -> None:
-        """Assign the pulled unindexed ``rows`` to the held centroids
-        (nearest, ties to the lower id; a NULL vector takes the lowest,
-        as ``build_ivf_index`` does) and append them to the lists."""
+    def _assign_local(self, held: _HeldIndex, rows: pa.Table) -> DataFrame:
+        """The pulled unindexed ``rows`` with the id of their nearest
+        held centroid (ties to the lower id; a NULL vector takes the
+        lowest, as ``build_ivf_index`` does), as one local frame."""
         d2 = centroid_sq_distances(
             batch_matrix(
                 rows.column("vector").to_pandas(), held.centroids.shape[1]
@@ -862,12 +860,9 @@ class VectorStore:
         )
         # the partition value only names the list's directory
         cids = pa.array([held.cids[i] for i in np.argmin(d2, axis=1)])
-        local_frame(
+        return local_frame(
             self.spark, rows.append_column("centroid_id", cids)
-        ).coalesce(1).write.mode("append").partitionBy("centroid_id").parquet(
-            os.path.join(held.path, "lists")
-        )
-        held.max_id = max(held.max_id, pc.max(rows.column("id")).as_py())
+        ).coalesce(1)
 
     def optimize_ann_index(
         self,
@@ -876,68 +871,50 @@ class VectorStore:
     ) -> int:
         """Compact the IVF lists after incremental appends — every
         :meth:`add_to_ann_index` call lands one parquet file per
-        touched partition, and small files are THE operational tax of
+        touched list, and small files are THE operational tax of
         incremental ingestion (footer reads and task scheduling start
-        to dominate the probe scans). Rewrites the lists directory
-        coalesced to ``target_files_per_list`` file(s) per centroid
-        partition via a staged swap: write to ``lists__compact``,
-        rename the old directory to ``lists__old``, then rename the
-        staged one into place (local renames; a crash between the two
-        leaves no ``lists``, and the next access to the index renames
-        the complete staged copy into place). Returns the number of
-        data files after compaction."""
+        to dominate the probe scans). Rewrites the lists coalesced to
+        ``target_files_per_list`` file(s) per list, commits them with
+        the same centroids and max indexed id as one replace version
+        (a rewrite cut short leaves the previous version readable),
+        then vacuums the directories it replaced. Returns the number
+        of data files after compaction."""
         import glob
-        import shutil
 
-        index_path = index_path or getattr(self, "_ivf_path", None)
-        if index_path is None:
+        held = self._index(index_path or self._ivf_path)
+        if held is None:
             return 0
-        lists_path = os.path.join(index_path, "lists")
-        lists_df = self._lists(index_path)
-        staged = lists_path + "__compact"
-        shutil.rmtree(staged, ignore_errors=True)
-        # repartition BY KEY ONLY: repartition(N, "centroid_id") sets
-        # the TOTAL partition count (N=1 funneled the whole rewrite
-        # through one task — a scale bottleneck; ADVICE r4 low) and
-        # never meant files-per-list anyway. Hash-distributing on
-        # centroid_id gives one task per populated list at default
-        # parallelism; files per list is controlled with
-        # maxRecordsPerFile sized to the LARGEST list (enforced per
-        # output file, so it survives AQE coalescing tasks together —
-        # a split-key repartition does not), so the parameter does
-        # what its name says: the biggest list lands in exactly
-        # `target_files_per_list` files, smaller lists in
-        # proportionally fewer.
-        lists_df = lists_df.repartition("centroid_id")
-        writer = lists_df.write.mode("overwrite")
+        frames = [
+            df.withColumn("centroid_id", F.lit(c))
+            for c in held.cids
+            if (df := held.log.read_part(self.spark, held.lists([c]), DATA))
+            is not None
+        ]
+        if not frames:
+            return 0
+        # repartition by key only (a total partition count of 1
+        # funnels the rewrite through one task); files per list come
+        # from maxRecordsPerFile sized to the largest list, which
+        # holds per output file however AQE coalesces tasks, so that
+        # list lands in exactly `target_files_per_list` files
+        lists_df = reduce(DataFrame.unionByName, frames).repartition(
+            "centroid_id"
+        )
+        options = {}
         n = max(1, int(target_files_per_list))
         if n > 1:
-            biggest = (
-                lists_df.groupBy("centroid_id")
-                .count()
-                .agg(F.max("count"))
-                .collect()[0][0]
-                or 1
-            )
-            writer = writer.option(
-                "maxRecordsPerFile", max(1, -(-int(biggest) // n))
-            )
-        (
-            writer.partitionBy("centroid_id").parquet(staged)
+            biggest = lists_df.groupBy("centroid_id").count().agg(
+                F.max("count")
+            ).first()[0]
+            options["maxRecordsPerFile"] = -(-biggest // n)
+        lists = held.log.write_partitioned(
+            DATA, lists_df, "centroid_id", **options
         )
-        old = lists_path + "__old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(lists_path, old)
-        os.rename(staged, lists_path)
-        shutil.rmtree(old, ignore_errors=True)
-        return len(
-            [
-                p
-                for p in glob.glob(
-                    os.path.join(lists_path, "**", "*.parquet"),
-                    recursive=True,
-                )
-            ]
+        self._ivf = held.commit("replace", lists, held.max_id)
+        held.log.vacuum()
+        return sum(
+            len(glob.glob(os.path.join(held.log.data_dir, d, "*.parquet")))
+            for d in lists["dirs"]
         )
 
     def query_ann(
@@ -948,39 +925,26 @@ class VectorStore:
         index_path: str | None = None,
     ) -> DataFrame | None:
         """Approximate kNN through the materialized IVF index: pick
-        the n_probe nearest lists driver-side, ties to the lower
-        centroid id, scan ONLY those partitions (PartitionFilters —
-        test-asserted), exact distance + top-k inside them. Same
-        result contract as ``query`` (ascending L2, ties by id);
-        recall < 1 by design. When the store holds the index the
-        probes come from the held centroid matrix and the lists are
-        read under the held schema, so building the result runs no
-        job; otherwise the k-row centroid table is read and
-        collected."""
-        index_path = index_path or getattr(self, "_ivf_path", None)
-        if index_path is None or self._df is None:
+        the n_probe nearest lists driver-side from the held centroid
+        matrix, ties to the lower centroid id, read ONLY the leaf
+        directories the index manifest lists for them (test-asserted),
+        exact distance + top-k inside them. Same result contract as
+        ``query`` (ascending L2, ties by id); recall < 1 by design.
+        The lists are read under the schema the manifest records, so
+        building the result runs no job, except the centroid pull when
+        the store does not hold the index's latest version."""
+        held = self._index(index_path or self._ivf_path)
+        if held is None:
             return None
         qvec = self._query_vector(q)
-        held = self._held(index_path)
-        if held is not None:
-            probes = _probes(held.cids, held.centroids, qvec, n_probe)
-        else:
-            rows = sorted(
-                (r[0], r[1])
-                for r in self.spark.read.parquet(
-                    os.path.join(index_path, "centroids")
-                ).collect()
-            )
-            probes = _probes(
-                [c for c, _ in rows],
-                np.array([v for _, v in rows], dtype=np.float64),
-                qvec,
-                n_probe,
-            )
-        pruned = self._lists(index_path).filter(
-            F.col("centroid_id").isin(probes)
+        probed = held.log.read_part(
+            self.spark,
+            held.lists(_probes(held.cids, held.centroids, qvec, n_probe)),
+            DATA,
         )
-        out = knn(pruned, qvec, k=k, vector_col="vector", id_col="id")
+        if probed is None:  # only empty lists probed
+            probed = self.data.limit(0)
+        out = knn(probed, qvec, k=k, vector_col="vector", id_col="id")
         return out.select("id", *SAVE_COLUMNS, "distance")
 
     # -- zero-shot (A8/A9/A19) ----------------------------------------
