@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -103,3 +104,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def run_jobs(spark):
+    """``run_jobs(fn)`` calls ``fn()`` under a Spark job group of its
+    own and returns ``(fn's result, sorted ids of the jobs it ran)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

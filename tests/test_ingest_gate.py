@@ -195,25 +195,14 @@ def test_in_list_quotes_strings_and_ints(spark):
     assert df.filter(in_list("t", [])).count() == 0
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_new_store_opens_quietly_and_stateless_manifest_resigns(
-    spark, tmp_path
+    spark, tmp_path, run_jobs
 ):
     path = str(tmp_path / "st")
-    vs, jobs = _jobs(
-        spark, "open-new",
-        lambda: VectorStore(spark, acid_path=path, maintain_dedup_state=True),
+    vs, jobs = run_jobs(
+        lambda: VectorStore(spark, acid_path=path, maintain_dedup_state=True)
     )
-    assert vs._dedup_state is None and jobs == 0
+    assert vs._dedup_state is None and jobs == []
     rows = [(t,) for t in _STORE[:4]]
     vs.set_data(spark.createDataFrame(rows, "target string"))
     reopened = VectorStore(spark, acid_path=path, maintain_dedup_state=True)

@@ -110,17 +110,7 @@ def test_embed_local_bit_equal_to_udf(spark, text):
     )
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_store_query_job_budget(spark, tmp_path):
+def test_store_query_job_budget(spark, tmp_path, run_jobs):
     """A text read on a tiny store that holds its max id and its IVF
     index: ``query`` and ``query_ann`` each run only the result collect
     (1 job). A reopened store builds its first ``query_ann`` with at
@@ -132,19 +122,13 @@ def test_store_query_job_budget(spark, tmp_path):
     )
     vs.build_ann_index(n_lists=4)
     vs.query("doc 3", k=3).collect()  # warm the code paths once
-    n_query = _jobs(
-        spark, "budget-query", lambda: vs.query("doc 3", k=3).collect()
-    )
-    n_ann = _jobs(
-        spark, "budget-ann", lambda: vs.query_ann("doc 3", k=3).collect()
-    )
+    _, query = run_jobs(lambda: vs.query("doc 3", k=3).collect())
+    _, ann = run_jobs(lambda: vs.query_ann("doc 3", k=3).collect())
     reopened = VectorStore(spark, acid_path=str(tmp_path / "s"))
-    n_reopen = _jobs(
-        spark, "budget-ann-reopen", lambda: reopened.query_ann("doc 3", k=3)
-    )
-    assert n_query <= 1, n_query
-    assert n_ann <= 1, n_ann
-    assert n_reopen <= 1, n_reopen
+    _, reopen = run_jobs(lambda: reopened.query_ann("doc 3", k=3))
+    assert len(query) <= 1, query
+    assert len(ann) <= 1, ann
+    assert len(reopen) <= 1, reopen
 
 
 #: ``createDataFrame`` calls the engine may keep: pandas inputs, which

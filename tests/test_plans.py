@@ -593,14 +593,19 @@ def test_window_queries_no_cartesian_no_sortmerge_fact_join(
     assert "CartesianProduct" not in plan
 
 
-def test_ngram_jaccard_per_doc_lists_planned_once(spark, sf_dir):
+def test_ngram_jaccard_per_doc_lists_planned_once(
+    spark, sf_dir, monkeypatch
+):
     """The per-doc shingle lists feed four consumers (both prefix
     sides and both verify sides) without a cache: the executed plan
     holds no InMemoryRelation, one exchange over the per-doc aggregate,
-    and ReusedExchange for the other consumers."""
+    and ReusedExchange for the other consumers. (The gate constant is
+    patched so that this small input takes the plan, not the driver.)"""
+    from vectorsearchutil_spark.operators import dedup
     from vectorsearchutil_spark.operators.dedup import ngram_jaccard_pairs
     from vectorsearchutil_spark.sources.readers import load_table
 
+    monkeypatch.setattr(dedup, "_NGRAM_DRIVER_MAX_DOCS", -1)
     df = ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), threshold=0.5
     )

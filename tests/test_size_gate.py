@@ -46,16 +46,6 @@ from vectorsearchutil_spark.store import VectorStore
 knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
 
 
-def _job_ids(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # -- collect_if_small -----------------------------------------------------
 
 
@@ -88,9 +78,9 @@ def test_collect_if_small_python_rdd_input(spark):
 
 
 @pytest.mark.parametrize("n", [5, 100])
-def test_collect_if_small_runs_one_job(spark, n):
+def test_collect_if_small_runs_one_job(spark, run_jobs, n):
     df = spark.range(0, 60, 1, 8).selectExpr("id", "id % 7 AS k")
-    jobs = _job_ids(spark, f"gate-one-job-{n}", lambda: collect_if_small(df, n))
+    _, jobs = run_jobs(lambda: collect_if_small(df, n))
     assert len(jobs) == 1, jobs
 
 
@@ -143,7 +133,9 @@ def _census(emb, strategy="auto"):
 
 
 @pytest.mark.parametrize("blas_cells", [session.ARROW_MIN_CELLS, 0])
-def test_self_knn_auto_builds_with_one_job(spark, emb, monkeypatch, blas_cells):
+def test_self_knn_auto_builds_with_one_job(
+    emb, monkeypatch, run_jobs, blas_cells
+):
     """The gate job is the only build job on both sides of the BLAS
     gate (expr at the default, arrow at 0): no count, no vector-size
     probe, no second collect. (``knn_mutual_pairs`` builds through the
@@ -152,19 +144,16 @@ def test_self_knn_auto_builds_with_one_job(spark, emb, monkeypatch, blas_cells):
     monkeypatch.setattr(session, "ARROW_MIN_CELLS", blas_cells)
     kw = dict(vector_col="embedding", id_col="vec_id")
     for op in (knn_hubness, intrinsic_dim_twonn):
-        jobs = _job_ids(
-            spark, f"knn-gate-{op.__name__}-{blas_cells}",
-            lambda: op(emb, **kw),
-        )
+        _, jobs = run_jobs(lambda: op(emb, **kw))
         assert len(jobs) == 1, (op.__name__, jobs)
 
 
-def test_neardup_auto_builds_with_one_job(spark, emb):
+def test_neardup_auto_builds_with_one_job(emb, run_jobs):
     for name, op in (
         ("neardup", lambda: neardup_pairs(emb, threshold=0.4)),
         ("lsh", lambda: cosine_lsh_pairs(emb)),
     ):
-        jobs = _job_ids(spark, f"neardup-gate-{name}", op)
+        _, jobs = run_jobs(op)
         assert len(jobs) == 1, (name, jobs)
 
 
@@ -455,7 +444,9 @@ def test_store_small_batch_path_equals_above_gate(spark, tmp_path, monkeypatch):
     assert [v[1] for v in small[2]] == ["exact_dup", "new", "exact_dup", "exact_dup"]
 
 
-def test_ingest_dedup_check_scans_client_batch_once(spark, tmp_path):
+def test_ingest_dedup_check_scans_client_batch_once(
+    spark, tmp_path, run_jobs
+):
     """A client's ``createDataFrame(<list>)`` batch is scanned by one
     job (the gate's pull); every later read of it hits the local
     relation, so no other job starts a Python worker for it."""
@@ -471,10 +462,7 @@ def test_ingest_dedup_check_scans_client_batch_once(spark, tmp_path):
     )
     rdd_id = batch._jdf.queryExecution().analyzed().rdd().id()
     vs.ingest_dedup_check(batch).collect()  # warm the code paths once
-    jobs = _job_ids(
-        spark, "dedup-check-scan",
-        lambda: vs.ingest_dedup_check(batch).collect(),
-    )
+    _, jobs = run_jobs(lambda: vs.ingest_dedup_check(batch).collect())
     from py4j.protocol import Py4JJavaError
 
     sc = spark.sparkContext

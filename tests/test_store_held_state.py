@@ -283,17 +283,7 @@ def test_index_write_cut_short_reopens_before_or_after(
     assert ids == sorted(r["id"] for r in reopened.data.collect())
 
 
-def _job_count(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_store_round_job_budget(spark, tmp_path):
+def test_store_round_job_budget(spark, tmp_path, run_jobs):
     """One small round of a file-backed store with dedup state, as a
     client feeds it: the dedup check of the batch runs at most 3 Spark
     jobs (the pull and two state probes), the append at most 6, the
@@ -316,8 +306,7 @@ def test_store_round_job_budget(spark, tmp_path):
     jobs = {}
     for r in range(2):  # the first round warms the code paths
         batch = docs(45, 1000 + 100 * r) + bulk[r * 5:r * 5 + 5]
-        verdicts, jobs["check"] = _job_count(
-            spark, f"budget-check-{r}",
+        verdicts, jobs["check"] = run_jobs(
             lambda: vs.ingest_dedup_check(spark.createDataFrame(
                 [(i, t) for i, (t, _) in enumerate(batch)],
                 "id long, target string")).collect(),
@@ -325,21 +314,19 @@ def test_store_round_job_budget(spark, tmp_path):
         resent = {v["id"]: v["matched_id"] for v in verdicts
                   if v["verdict"] == "exact_dup"}
         assert resent == {45 + j: r * 5 + j + 1 for j in range(5)}
-        _, jobs["append"] = _job_count(
-            spark, f"budget-append-{r}",
+        _, jobs["append"] = run_jobs(
             lambda: vs.set_data(
                 spark.createDataFrame(batch, _SCHEMA), append=True),
         )
-        added, jobs["add"] = _job_count(
-            spark, f"budget-add-{r}", vs.add_to_ann_index)
+        added, jobs["add"] = run_jobs(vs.add_to_ann_index)
         assert added == 45
-        exact, jobs["query"] = _job_count(
-            spark, f"budget-query-{r}", lambda: vs.query("doc1 w1 w2", k=5))
-        approx, jobs["query_ann"] = _job_count(
-            spark, f"budget-ann-{r}", lambda: vs.query_ann("doc1 w1 w2", k=5))
+        exact, jobs["query"] = run_jobs(lambda: vs.query("doc1 w1 w2", k=5))
+        approx, jobs["query_ann"] = run_jobs(
+            lambda: vs.query_ann("doc1 w1 w2", k=5))
         assert len(exact.collect()) == len(approx.collect()) == 5
-    assert jobs["check"] <= 3, jobs
-    assert jobs["append"] <= 6, jobs
-    assert jobs["add"] <= 2, jobs
-    assert jobs["query"] == 0 and jobs["query_ann"] == 0, jobs
+    n = {step: len(ids) for step, ids in jobs.items()}
+    assert n["check"] <= 3, jobs
+    assert n["append"] <= 6, jobs
+    assert n["add"] <= 2, jobs
+    assert n["query"] == 0 and n["query_ann"] == 0, jobs
     assert vs.count() == 290

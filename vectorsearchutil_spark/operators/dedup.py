@@ -10,6 +10,8 @@ implements exact first-wins dedup on ``target``,
 * **n-gram Jaccard** — inverted shingle index self-join. Exact
   near-dup but the join fans out on frequent shingles; at 100 TB use
   ``max_df`` to drop stop-shingles (standard practice) or MinHash.
+  Inputs of at most ``_NGRAM_DRIVER_MAX_DOCS`` rows are pulled in one
+  job and joined on the driver with the plan's filters and counts.
 * **MinHash + LSH** — constant-size signatures, banded bucketing;
   only bucket-mates are compared. The scale path: shuffle volume is
   O(docs × bands), independent of document length.
@@ -30,9 +32,11 @@ from __future__ import annotations
 
 import hashlib
 from collections import Counter
+from itertools import chain
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -138,6 +142,195 @@ def _prefix_len(threshold: float):
     ).cast("int")
 
 
+def _row_shingles(text: str | None, n: int) -> list[str]:
+    """The distinct word n-grams of one text, in first-occurrence order,
+    as ``shingles_sql(tokens_sql(text), n)`` computes them: tokens split
+    on single spaces with empties dropped, joined by ``_``; a NULL text
+    or one of fewer than ``n`` tokens has none."""
+    if text is None:
+        return []
+    toks = [w for w in text.split(" ") if w]
+    return list(
+        dict.fromkeys(
+            "_".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
+        )
+    )
+
+
+#: Inputs of at most this many rows run ``ngram_jaccard_pairs`` on the
+#: driver (one pull job) instead of the prefix-join plan (8 jobs at
+#: 100 documents). Measured on datagen-style documents (10-100 words
+#: from a 30-word vocabulary, so every shingle is frequent: the
+#: prefix filter's worst case), 4-core host, build + collect, min of
+#: 2, driver vs plan: 5k docs 0.9 vs 4.5 s at t=0.8 and 1.1 vs 5.3 s
+#: at t=0.5; 10k 1.6 vs 8.8 s and 1.9 vs 13.6 s; 20k 2.8 vs 15.3 s and
+#: 5.9 vs 53.5 s; 40k 7.9 vs 37.7 s and 26.1 vs 168 s (driver peak RSS
+#: 0.9 GB). The driver wins at every size measured, so the bound is
+#: the largest one measured, not a crossover; above it the pull
+#: gate's own cost grows with the bound (``collect_if_small``).
+_NGRAM_DRIVER_MAX_DOCS = 40_000
+
+#: Entry pairs the driver kernel filters per numpy batch: a memory
+#: bound (a dozen int64 arrays of this length), not a tuning knob.
+_PAIR_BATCH = 1 << 21
+
+
+def _group_pairs(sizes: np.ndarray):
+    """Every unordered pair of entries that share a group, for entries
+    laid out group after group, ``sizes[k]`` entries in group k: yields
+    ``(left, right)`` entry-index arrays, ``_PAIR_BATCH`` pairs or so
+    at a time."""
+    first = np.repeat(np.cumsum(sizes) - sizes, sizes)
+    # entry e pairs with the entries after it in its group
+    after = np.repeat(sizes, sizes) - 1 - (np.arange(len(first)) - first)
+    done = np.cumsum(after)
+    e0 = 0
+    while e0 < len(after):
+        base = done[e0 - 1] if e0 else 0
+        e1 = int(np.searchsorted(done, base + _PAIR_BATCH, "right"))
+        e1 = max(e1, e0 + 1)
+        k = after[e0:e1]
+        left = np.repeat(np.arange(e0, e1), k)
+        skip = np.arange(len(left)) - np.repeat(np.cumsum(k) - k, k)
+        yield left, left + 1 + skip
+        e0 = e1
+
+
+def _doc_keys(
+    table: pa.Table, id_col: str, text_col: str, n: int, max_df: int | None
+) -> tuple[pa.Array, np.ndarray, int]:
+    """``(docs, keys, n_ranks)`` of the pulled ``table``: the docs are
+    its distinct non-NULL ids in ascending order (a NULL id fails
+    ``id_a < id_b`` on both sides), and each doc's list is its run of
+    sorted ``doc * n_ranks + rank`` keys, where a shingle's rank is its
+    place in the global (df, shingle) order. Document frequencies count
+    every row, NULL ids too; a list is the multiset of its rows'
+    distinct shingles that pass ``max_df``, so a repeated id repeats a
+    shingle it shares across rows."""
+    ids = table.column(id_col)
+    docs = pc.drop_null(pc.unique(ids))
+    docs = docs.take(pc.sort_indices(docs))
+    row_doc = pc.fill_null(pc.index_in(ids, value_set=docs), -1)
+    rows = [_row_shingles(x, n) for x in table.column(text_col).to_pylist()]
+    lens = np.fromiter(map(len, rows), np.int64, len(rows))
+    enc = pc.dictionary_encode(
+        pa.array(chain.from_iterable(rows), pa.string())
+    )
+    codes = enc.indices.to_numpy().astype(np.int64)
+    n_ranks = len(enc.dictionary)
+    freq = np.bincount(codes, minlength=n_ranks)
+    # Arrow orders strings by their bytes, as Spark does
+    by_text = np.empty(n_ranks, np.int64)
+    by_text[pc.sort_indices(enc.dictionary).to_numpy()] = np.arange(n_ranks)
+    rank = np.empty(n_ranks, np.int64)
+    rank[np.lexsort((by_text, freq))] = np.arange(n_ranks)
+    doc = np.repeat(row_doc.to_numpy().astype(np.int64), lens)
+    keep = doc >= 0
+    if max_df is not None:
+        keep &= freq[codes] <= max_df
+    return docs, np.sort(doc[keep] * n_ranks + rank[codes[keep]]), n_ranks
+
+
+def _prefix_candidates(
+    doc: np.ndarray, rank: np.ndarray, n_sh: np.ndarray, t: float
+) -> np.ndarray:
+    """Sorted ``lo * n_docs + hi`` keys of the doc pairs that pass the
+    plan's prefix, length and positional filters, for the per-doc lists
+    ``(doc, rank)`` of :func:`_doc_keys` with ``n_sh`` entries per doc.
+    Every pair of prefix entries that share a shingle is tested with the
+    plan's double arithmetic."""
+    pos = np.arange(len(doc)) - (np.cumsum(n_sh) - n_sh)[doc]
+    prefix = pos < (n_sh - np.ceil(n_sh * t).astype(np.int64) + 1)[doc]
+    by_rank = np.argsort(rank[prefix], kind="stable")
+    p_doc, p_pos = doc[prefix][by_rank], pos[prefix][by_rank]
+    _, sizes = np.unique(rank[prefix], return_counts=True)
+    frac = t / (1.0 + t)
+    found = [np.empty(0, np.int64)]
+    for left, right in _group_pairs(sizes):
+        da, db = p_doc[left], p_doc[right]
+        na, nb = n_sh[da], n_sh[db]
+        # a match at 0-based positions (i, j) bounds the overlap by
+        # 1 + min(n_a − i − 1, n_b − j − 1); the pair needs at least
+        # α = ⌈t/(1+t)·(n_a+n_b) − 1e-9⌉
+        bound = np.minimum(na - p_pos[left], nb - p_pos[right])
+        ok = (
+            (da != db)
+            & (np.minimum(na, nb) >= np.maximum(na, nb) * t)
+            & (bound >= np.ceil(frac * (na + nb) - 1e-9))
+        )
+        lo, hi = np.minimum(da, db)[ok], np.maximum(da, db)[ok]
+        found.append(lo * len(n_sh) + hi)
+    return np.unique(np.concatenate(found))
+
+
+def _overlaps(
+    dkeys: np.ndarray, n_ranks: int, n_docs: int, lo: np.ndarray,
+    hi: np.ndarray,
+) -> np.ndarray:
+    """The number of distinct shingles docs ``lo[i]`` and ``hi[i]``
+    share, from the sorted distinct ``doc * n_ranks + rank`` keys, for
+    pairs sorted by ``lo``: one lo doc at a time, its shingles marked in
+    a mask and every hi doc's shingles looked up in it."""
+    d_doc, d_rank = np.divmod(dkeys, n_ranks)
+    d_n = np.bincount(d_doc, minlength=n_docs)
+    d_first = np.cumsum(d_n) - d_n
+    mask = np.zeros(n_ranks, bool)
+    inter = np.empty(len(lo), np.int64)
+    bounds = np.searchsorted(lo, np.arange(n_docs + 1))
+    for a in np.unique(lo).tolist():
+        c0, c1 = bounds[a], bounds[a + 1]
+        own = d_rank[d_first[a]:d_first[a] + d_n[a]]
+        mask[own] = True
+        b = hi[c0:c1]
+        k = d_n[b]
+        ends = np.cumsum(k)
+        idx = np.arange(ends[-1]) + np.repeat(d_first[b] - ends + k, k)
+        hits = np.r_[0, np.cumsum(mask[d_rank[idx]])]
+        inter[c0:c1] = hits[ends] - hits[ends - k]
+        mask[own] = False
+    return inter
+
+
+def _ngram_pairs_driver(
+    table: pa.Table, id_col: str, text_col: str, n: int, t: float,
+    max_df: int | None,
+) -> pa.Table:
+    """``ngram_jaccard_pairs`` of the pulled ``(id_col, text_col)``
+    ``table`` before its final jaccard expression: the verified pairs
+    as ``(id_a, id_b, n_a, n_b, inter)``, counted as the distributed
+    plan counts them (see :func:`_doc_keys` for the lists, where
+    ``n_sh`` is a list's length)."""
+    docs, keys, n_ranks = _doc_keys(table, id_col, text_col, n, max_df)
+    doc, rank = np.divmod(keys, n_ranks)
+    n_sh = np.bincount(doc, minlength=len(docs))
+    lo, hi = np.divmod(_prefix_candidates(doc, rank, n_sh, t), len(docs))
+    inter = _overlaps(np.unique(keys), n_ranks, len(docs), lo, hi)
+    na, nb = n_sh[lo], n_sh[hi]
+    ok = inter / (na + nb - inter) >= t
+    return pa.table(
+        {
+            "id_a": docs.take(lo[ok]),
+            "id_b": docs.take(hi[ok]),
+            "n_a": pa.array(na[ok], pa.int32()),
+            "n_b": pa.array(nb[ok], pa.int32()),
+            "inter": pa.array(inter[ok], pa.int32()),
+        }
+    )
+
+
+def _scored(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` of verified ``(id_a, id_b, n_a, n_b,
+    inter)`` rows: the one jaccard expression of both paths."""
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -147,9 +340,17 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram-shingle Jaccard near-dup pairs (id_a < id_b,
-    jaccard ≥ threshold).
+    jaccard ≥ threshold, a threshold in [0, 1]).
 
-    PPJoin-grade candidate generation (exact — no false negatives):
+    Small inputs run on the driver: one ``collect_if_small`` job pulls
+    ``(id_col, text_col)`` when it holds at most
+    ``_NGRAM_DRIVER_MAX_DOCS`` rows, and :func:`_ngram_pairs_driver`
+    computes the verified pairs in-process with the plan's own
+    filters and counts; the output goes through the same jaccard
+    expression as the plan below, so both paths return the same rows.
+
+    Above the gate, PPJoin-grade candidate generation (exact — no false
+    negatives):
     under one global shingle order, two sets with J ≥ t must share a
     shingle within their first ``|x| − ⌈t·|x|⌉ + 1`` elements, so only
     those prefixes enter the inverted-index self-join. Ordering
@@ -169,6 +370,14 @@ def ngram_jaccard_pairs(
     index never self-joins, and candidates approach the true pair
     count even at permissive thresholds (t=0.5 diagnostics)."""
     t = float(threshold)
+    if not 0.0 <= t <= 1.0:
+        raise ValueError(f"threshold must be in [0, 1], got {threshold!r}")
+    small = collect_if_small(
+        df.select(id_col, text_col), _NGRAM_DRIVER_MAX_DOCS
+    )
+    if small is not None:
+        pairs = _ngram_pairs_driver(small, id_col, text_col, n, t, max_df)
+        return _scored(local_frame(df.sparkSession, pairs), threshold)
     # not cached: the per-doc aggregate's exchange is planned once and
     # reused (ReusedExchange) by every consumer below
     per_doc = _doc_shingle_lists(df, text_col, id_col, n, max_df)
@@ -224,16 +433,11 @@ def ngram_jaccard_pairs(
     vb = per_doc.select(
         F.col(id_col).alias("id_b"), F.col("lst")["shingle"].alias("_sb")
     )
-    return (
+    return _scored(
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+        .withColumn("inter", F.size(F.array_intersect("_sa", "_sb"))),
+        threshold,
     )
 
 
@@ -1003,12 +1207,7 @@ def _sign_rows(
     n_sh: dict = {}
     by_id: dict = {}
     for i, t in zip(ids, texts):
-        toks = [] if t is None else [w for w in t.split(" ") if w]
-        grams = list(
-            dict.fromkeys(
-                "_".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-            )
-        )
+        grams = _row_shingles(t, n)
         per_row.append(grams)
         n_sh[i] = n_sh.get(i, 0) + len(grams)
         by_id.setdefault(i, set()).update(grams)
