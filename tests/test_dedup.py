@@ -116,27 +116,6 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
-def test_connected_components_strategies_agree(spark):
-    # size-gated strategy selection: both physical paths must produce
-    # the identical fixpoint
-    from vectorsearchutil_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (4, 9), (9, 8), (10, 11), (21, 20), (7, 3)],
-        ["id_a", "id_b"],
-    )
-    drv = {
-        (r["node"], r["component"])
-        for r in connected_components(pairs, strategy="driver").collect()
-    }
-    dist = {
-        (r["node"], r["component"])
-        for r in connected_components(pairs, strategy="distributed").collect()
-    }
-    assert drv == dist
-    assert {(1, 1), (9, 1), (7, 1)} <= drv  # deep chain collapses to min
-
-
 def test_connected_components_empty(spark):
     from vectorsearchutil_spark.operators.dedup import connected_components
 

@@ -71,66 +71,3 @@ def test_pagerank_directed_star(spark):
     )
     got = {r["node"]: r["pagerank"] for r in pagerank(e, iters=5).collect()}
     assert got[1] > got[2] >= got[3] * 0.999
-
-
-def test_triangle_strategy_equality(spark):
-    """Driver census ≡ oriented-join census, exact tuple equality
-    (r11 size-gated dispatch)."""
-    import random
-
-    from vectorsearchutil_spark.operators.graph import triangle_count
-
-    rng = random.Random(11)
-    pairs = sorted(
-        {
-            tuple(sorted(rng.sample(range(60), 2)))
-            for _ in range(300)
-        }
-    )
-    df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    a = [tuple(r) for r in triangle_count(df, strategy="driver").collect()]
-    b = [
-        tuple(r)
-        for r in triangle_count(df, strategy="distributed").collect()
-    ]
-    assert a == b
-    assert a[0][2] > 0  # the random graph actually has triangles
-
-
-def test_pagerank_strategy_equality_bitexact(spark):
-    """Driver fixed-point path ≡ iterative-join path, EXACT tuple
-    equality (the r11 size-gated strategy dispatch — same promise as
-    connected_components / self-kNN strategy gates)."""
-    import random
-
-    rng = random.Random(7)
-    pairs = list({(rng.randint(0, 40), rng.randint(41, 90)) for _ in range(200)})
-    df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    a = sorted(
-        tuple(r)
-        for r in pagerank_over_pairs(df, strategy="driver").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in pagerank_over_pairs(df, strategy="distributed").collect()
-    )
-    assert a == b
-
-
-def test_pagerank_directed_semantics_strategy_equality(spark):
-    """Nodes that only appear as src (no rank row) and only as dst
-    (no out-degree: dropped from output) must behave identically on
-    both strategies — the inner-join semantics the driver path
-    replicates."""
-    e = spark.createDataFrame(
-        [(100, 1), (1, 2), (2, 1), (1, 3), (3, 1)], ["src", "dst"]
-    )
-    a = sorted(
-        tuple(r) for r in pagerank(e, strategy="driver").collect()
-    )
-    b = sorted(
-        tuple(r) for r in pagerank(e, strategy="distributed").collect()
-    )
-    assert a == b
-    # node 100 never appears as dst → no rank row on either path
-    assert 100 not in {t[0] for t in a}

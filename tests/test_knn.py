@@ -77,36 +77,41 @@ def test_binary_rerank_recall_and_plan(spark, sf_dir):
     assert "TakeOrderedAndProject" in formatted_plan(df)
 
 
-def _census_frames(spark, sf_dir, strategy):
+def _census_frames(spark, sf_dir):
     from vectorsearchutil_spark.operators.knn import (
         knn_hubness,
         knn_mutual_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    hub = knn_hubness(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", strategy=strategy,
-    )
-    mut = knn_mutual_pairs(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", strategy=strategy,
-    )
+    kw = dict(k=10, vector_col="embedding", id_col="vec_id", metric="cosine")
+    hub = knn_hubness(emb, **kw)
+    mut = knn_mutual_pairs(emb, **kw)
     return (
         sorted(tuple(r) for r in hub.collect()),
         sorted(tuple(r) for r in mut.collect()),
     )
 
 
-def test_self_knn_strategy_equality(spark, sf_dir):
+def test_self_knn_strategy_equality(spark, sf_dir, monkeypatch):
     """VERDICT r9 #6: the blocked (no-collect, no-broadcast) self-kNN
     census path must be BIT-IDENTICAL to the expression and arrow
     paths — scores share the same IEEE fold order, ranks share the
     same (score desc, id asc) total order, and the tie-widened
-    per-task cut is partitioning-independent."""
-    expr = _census_frames(spark, sf_dir, "expr")
-    arrow = _census_frames(spark, sf_dir, "arrow")
-    blocked = _census_frames(spark, sf_dir, "blocked")
+    per-task cut is partitioning-independent. Each path is forced
+    through its gate constant: the default picks expr on the sf
+    corpus, a zero Arrow wall picks arrow, a -1 pull gate blocked."""
+    import importlib
+
+    from vectorsearchutil_spark import session
+
+    knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
+    expr = _census_frames(spark, sf_dir)
+    with monkeypatch.context() as m:
+        m.setattr(session, "ARROW_MIN_CELLS", 0)
+        arrow = _census_frames(spark, sf_dir)
+    monkeypatch.setattr(knn_mod, "_SELF_KNN_COLLECT_MAX", -1)
+    blocked = _census_frames(spark, sf_dir)
     assert expr == arrow
     assert expr == blocked
 
@@ -145,16 +150,3 @@ def test_self_knn_blocked_odd_block_counts(spark, sf_dir):
             ).collect()
         )
         assert got == want, f"n_blocks={nb} diverged"
-
-
-def test_self_knn_blocked_rejects_l2(spark, sf_dir):
-    import pytest
-
-    from vectorsearchutil_spark.operators.knn import knn_hubness
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="cosine only"):
-        knn_hubness(
-            emb, k=3, vector_col="embedding", id_col="vec_id",
-            metric="l2", strategy="blocked",
-        )

@@ -235,20 +235,38 @@ def _public_functions():
                     yield os.path.relpath(path, PKG), node
 
 
-def test_public_functions_take_no_sizing_options():
-    offenders = [
+def _public_params(pattern):
+    """``file:line function(param)`` for every public parameter whose
+    name ``pattern`` matches in full."""
+    return [
         f"{rel}:{node.lineno} {node.name}({p.arg})"
         for rel, node in _public_functions()
         for p in node.args.posonlyargs + node.args.args + node.args.kwonlyargs
-        if _SIZING_PARAM.fullmatch(p.arg)
+        if pattern.fullmatch(p.arg)
     ]
+
+
+def test_public_functions_take_no_sizing_options():
+    offenders = _public_params(_SIZING_PARAM)
+    assert not offenders, offenders
+
+
+#: path-choice options: the size gates alone pick each operator's
+#: physical path (driver/distributed, expr/Arrow, matrix/blocked), so
+#: no caller can force one, misspell one, or pull an unbounded input
+#: to the driver with one
+_PATH_PARAM = re.compile(r"strategy|verify")
+
+
+def test_public_functions_take_no_path_options():
+    offenders = _public_params(_PATH_PARAM)
     assert not offenders, offenders
 
 
 #: upper bound on the public options: defaulted parameters of public
 #: functions, methods and constructors. Lower it when an option goes;
 #: raise it only with a reason in CHANGES.md
-_MAX_PUBLIC_OPTIONS = 748
+_MAX_PUBLIC_OPTIONS = 732
 
 
 def test_public_option_count_does_not_grow():

@@ -306,18 +306,21 @@ def test_fuzzy_pairs_query_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pagerank_long_sum_aggregate(spark, sf_dir):
+def test_pagerank_long_sum_aggregate(spark, sf_dir, monkeypatch):
     """The per-iteration reduction must be a hash aggregate over the
     fixed-point longs (map-side combine), not a collect_list fold.
-    Forced distributed: below the r11 driver gate the registry query
-    returns a local result frame with no aggregate to assert on."""
+    Forced distributed through the edge gate: below it the registry
+    query returns a local result frame with no aggregate to assert
+    on."""
+    from vectorsearchutil_spark.operators import graph
     from vectorsearchutil_spark.operators.graph import pagerank_over_pairs
     from vectorsearchutil_spark.operators.similarity import neardup_pairs
     from vectorsearchutil_spark.queries import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = neardup_pairs(emb, threshold=0.35, strategy="auto")
-    df = pagerank_over_pairs(pairs, strategy="distributed")
+    pairs = neardup_pairs(emb, threshold=0.35)
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", -1)
+    df = pagerank_over_pairs(pairs)
     plan = formatted_plan(df)
     assert "collect_list" not in plan
     assert "sum(" in plan

@@ -238,27 +238,31 @@ def test_ivfpq_search_prunes_and_ranks(spark, emb, books, tmp_path):
 
 
 def test_distortion_strategy_equality(spark, emb, books):
-    """matrix (mapInArrow kernel) ≡ expr (JVM HOF fold) — including
-    the degenerate classes the kernel replicates cell by cell: NULL
-    vector, NaN/Inf components, short/over-length vectors, NULL
-    elements (r11 optimization round)."""
+    """The (j, d2) kernel (numpy ``mapInArrow``) ≡ its JVM reference
+    (HOF fold), cell by cell — including the degenerate classes the
+    kernel replicates: NULL vector, NaN/Inf components,
+    short/over-length vectors, NULL elements (r11 optimization
+    round)."""
     import math
 
-    from vectorsearchutil_spark.operators.pq import pq_subspace_distortion
+    from vectorsearchutil_spark.operators.pq import (
+        _pq_distortion_pairs_expr,
+        _pq_distortion_pairs_matrix,
+    )
 
-    def canon(rows):
-        return [
-            tuple(
-                "nan" if isinstance(v, float) and math.isnan(v) else v
-                for v in r
-            )
-            for r in sorted(rows, key=lambda r: r.subspace)
+    def canon(pairs):
+        rows = [
+            (r.j, "nan" if r.d2 is not None and math.isnan(r.d2) else r.d2)
+            for r in pairs.collect()
         ]
+        return sorted(rows, key=repr)
 
-    a = pq_subspace_distortion(emb, books, strategy="expr").collect()
-    b = pq_subspace_distortion(emb, books, strategy="matrix").collect()
-    assert canon(a) == canon(b)
+    def agree(df):
+        assert canon(_pq_distortion_pairs_expr(df, books, "embedding")) == (
+            canon(_pq_distortion_pairs_matrix(df, books, "embedding"))
+        )
 
+    agree(emb)
     nan, inf = float("nan"), float("inf")
     degen = spark.createDataFrame(
         [
@@ -276,6 +280,4 @@ def test_distortion_strategy_equality(spark, emb, books):
         ],
         "vec_id long, embedding array<float>",
     )
-    a = pq_subspace_distortion(degen, books, strategy="expr").collect()
-    b = pq_subspace_distortion(degen, books, strategy="matrix").collect()
-    assert canon(a) == canon(b)
+    agree(degen)

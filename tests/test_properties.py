@@ -975,9 +975,15 @@ def test_split_leakage_matches_naive(spark, n_docs, clusters):
     )
 )
 def test_triplet_mining_matches_numpy(spark, vecs):
-    """Both strategies equal a numpy reference on the shared 1e-6
+    """Both paths equal a numpy reference on the shared 1e-6
     quantization grid (anchors = first rows, ids 0..n-1 so every
-    vector below 32 anchors)."""
+    vector below 32 anchors). The default Arrow wall keeps these
+    inputs on the expression path; a zero wall picks the matrix
+    path."""
+    from unittest import mock
+
+    from vectorsearchutil_spark import session
+
     from vectorsearchutil_spark.operators.similarity import triplet_mining
 
     rows = [
@@ -1018,7 +1024,9 @@ def test_triplet_mining_matches_numpy(spark, vecs):
         [(i, int(l), [float(x) for x in v]) for i, l, v in rows],
         "vec_id long, label int, embedding array<double>",
     )
-    for strategy in ("expr", "matrix"):
+    for wall in (session.ARROW_MIN_CELLS, 0):
+        with mock.patch.object(session, "ARROW_MIN_CELLS", wall):
+            mined = triplet_mining(df).collect()
         got = {
             r.vec_id: (
                 r.label,
@@ -1027,7 +1035,7 @@ def test_triplet_mining_matches_numpy(spark, vecs):
                 r.n_hard,
                 r.n_semihard,
             )
-            for r in triplet_mining(df, strategy=strategy).collect()
+            for r in mined
         }
         assert set(got) == set(expect)
         for a, (el, ep, eh, enh, ens) in expect.items():

@@ -400,17 +400,19 @@ def test_zeroshot_arrow_strategy_bit_identical(spark, monkeypatch):
         "transform(sequence(1, 16), j -> pmod(xxhash64(id + 9, j),"
         " 1000) / 1000.0) AS label_vec",
     )
+    def predict(softmax, wall):
+        with monkeypatch.context() as m:
+            m.setattr(session, "ARROW_MIN_CELLS", wall)
+            out = zeroshot(emb, labels, softmax=softmax)
+            return out, {r["id"]: r for r in out.collect()}
+
     for softmax in (False, True):
-        expr_out = {
-            r["id"]: r
-            for r in zeroshot(emb, labels, softmax=softmax).collect()
-        }
-        arrow_out = {
-            r["id"]: r
-            for r in zeroshot(
-                emb, labels, softmax=softmax, strategy="arrow"
-            ).collect()
-        }
+        expr_df, expr_out = predict(softmax, session.ARROW_MIN_CELLS)
+        arrow_df, arrow_out = predict(softmax, 0)
+        # the auto gate: 2002 rows × 5 labels × 16 dims stays on the
+        # expression plan (no MapInPandas in it); a zero wall flips it
+        assert "MapInPandas" not in expr_df._jdf.queryExecution().toString()
+        assert "MapInPandas" in arrow_df._jdf.queryExecution().toString()
         assert set(expr_out) == set(arrow_out)
         for i, a in expr_out.items():
             b = arrow_out[i]
@@ -423,11 +425,3 @@ def test_zeroshot_arrow_strategy_bit_identical(spark, monkeypatch):
         for i in (2000, 2001):
             assert expr_out[i]["zeroshot_pred"] == "L0"
             assert expr_out[i]["score"] is None
-
-    # the auto gate: 2002 rows × 5 labels × 16 dims stays on the
-    # expression plan (no MapInPandas in it); a zero wall flips it
-    small = zeroshot(emb, labels)
-    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
-    big = zeroshot(emb, labels)
-    assert "MapInPandas" not in small._jdf.queryExecution().toString()
-    assert "MapInPandas" in big._jdf.queryExecution().toString()

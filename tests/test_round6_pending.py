@@ -319,10 +319,11 @@ def test_containment_partitioning_invariance(spark):
 # ---------------------------------------------------------------- hubness
 
 
-def test_hubness_arrow_matches_expression(spark):
-    """Strategy equality: the gated Arrow path must reproduce the
-    JVM expression path's counts exactly (bit-identical scores →
-    identical ranks)."""
+def test_hubness_arrow_matches_expression(spark, monkeypatch):
+    """Strategy equality: the gated Arrow path (forced by a zero
+    Arrow wall) must reproduce the JVM expression path's counts
+    exactly (bit-identical scores → identical ranks)."""
+    from vectorsearchutil_spark import session
     from vectorsearchutil_spark.operators.knn import knn_hubness
 
     emb = spark.read.parquet(
@@ -334,14 +335,11 @@ def test_hubness_arrow_matches_expression(spark):
             emb, k=5, vector_col="embedding", id_col="vec_id"
         ).collect()
     }
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
     arrow = {
         (r["vec_id"], r["k_occurrence"])
         for r in knn_hubness(
-            emb,
-            k=5,
-            vector_col="embedding",
-            id_col="vec_id",
-            strategy="arrow",
+            emb, k=5, vector_col="embedding", id_col="vec_id"
         ).collect()
     }
     assert expr == arrow

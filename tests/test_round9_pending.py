@@ -240,11 +240,13 @@ def test_triplet_excludes_nonfinite_and_zero(spark):
     assert out[0].pos_sim == pytest.approx(1.0)
 
 
-def test_triplet_strategy_equality(spark):
-    # the size gate must be invisible: expr (interpreted HOF) and
-    # matrix (Arrow/BLAS partial stats) produce identical rows on the
-    # 1e-6-quantized grid
+def test_triplet_strategy_equality(spark, monkeypatch):
+    # the size gate must be invisible: expr (interpreted HOF, at the
+    # default Arrow wall) and matrix (Arrow/BLAS partial stats, at a
+    # zero wall) produce identical rows on the 1e-6-quantized grid
     import random
+
+    from vectorsearchutil_spark import session
 
     rng = random.Random(7)
     rows = [
@@ -252,8 +254,9 @@ def test_triplet_strategy_equality(spark):
         for i in range(400)
     ]
     emb = _emb(spark, rows)
-    a = sorted(map(tuple, triplet_mining(emb, strategy="expr").collect()))
-    b = sorted(map(tuple, triplet_mining(emb, strategy="matrix").collect()))
+    a = sorted(map(tuple, triplet_mining(emb).collect()))
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)
+    b = sorted(map(tuple, triplet_mining(emb).collect()))
     assert a == b
 
 
@@ -405,9 +408,10 @@ def test_mutual_knn_asymmetric(spark):
     assert r.reciprocity == pytest.approx(2 / 3, abs=1e-6)
 
 
-def test_mutual_knn_strategy_equality(spark):
+def test_mutual_knn_strategy_equality(spark, monkeypatch):
     import random
 
+    from vectorsearchutil_spark import session
     from vectorsearchutil_spark.operators.knn import knn_mutual_pairs
 
     rng = random.Random(11)
@@ -416,7 +420,8 @@ def test_mutual_knn_strategy_equality(spark):
     ]
     df = spark.createDataFrame(rows, "id long, vector array<double>")
     a = knn_mutual_pairs(df, k=5).collect()[0]
-    b = knn_mutual_pairs(df, k=5, strategy="arrow").collect()[0]
+    monkeypatch.setattr(session, "ARROW_MIN_CELLS", 0)  # the arrow path
+    b = knn_mutual_pairs(df, k=5).collect()[0]
     assert tuple(a) == tuple(b)
 
 

@@ -118,10 +118,10 @@ def test_neardup_auto_gates_on_size(emb, monkeypatch):
     strategy equivalence of results."""
     # gate far below corpus cells → auto picks blocked
     monkeypatch.setattr(Sim, "_NEARDUP_MATRIX_MAX_CELLS", 1)
-    small_gate = neardup_pairs(emb, threshold=0.4, strategy="auto")
+    small_gate = neardup_pairs(emb, threshold=0.4)
     # gate above corpus cells → auto picks matrix
     monkeypatch.setattr(Sim, "_NEARDUP_MATRIX_MAX_CELLS", 10**12)
-    big_gate = neardup_pairs(emb, threshold=0.4, strategy="auto")
+    big_gate = neardup_pairs(emb, threshold=0.4)
     a = sorted((r["id_a"], r["id_b"]) for r in small_gate.collect())
     b = sorted((r["id_a"], r["id_b"]) for r in big_gate.collect())
     assert a == b and len(a) > 0
@@ -182,22 +182,21 @@ def test_ivf_partitioned_storage_prunes(spark, emb, tmp_path):
     assert got <= {1, 3}
 
 
-def test_neardup_blocked_empty_blocks(spark):
+def test_neardup_blocked_empty_blocks(spark, monkeypatch):
     """ADVICE r3 (medium): n_blocks ≫ rows leaves some block pairs
     with an empty side; those tasks must yield zero pairs, not raise
-    AxisError from norm(axis=1) on a 1-D empty array. 6 rows at the
-    neardup_pairs default n_blocks=32 exercises it."""
+    AxisError from norm(axis=1) on a 1-D empty array. 6 rows at
+    neardup_pairs' above-gate block count (32) exercise it."""
     rows = [(i, [1.0, float(i % 2)]) for i in range(6)]
     tiny = spark.createDataFrame(rows, ["vec_id", "embedding"])
     want = {
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in neardup_pairs_matrix(tiny, threshold=0.9).collect()
     }
+    monkeypatch.setattr(Sim, "_NEARDUP_MATRIX_MAX_CELLS", -1)
     got = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in neardup_pairs(
-            tiny, threshold=0.9, strategy="blocked"
-        ).collect()
+        for r in neardup_pairs(tiny, threshold=0.9).collect()
     }
     assert got == want and len(got) > 0
 

@@ -1,9 +1,11 @@
 """The size gates. The fused pull gate (``session.collect_if_small``):
 one Arrow job decides a driver/distributed choice and, when small,
 holds the rows the driver path uses. Pins the helper's contract and job
-count, equality of every table-fed driver path with its forced
-``strategy=`` path on both sides of the gate, the one-job build of the
-self-kNN and near-dup gates, and the store's small-batch pull. The
+count, one equality test per gate between the path below it and the
+path above it, the one-job build of the self-kNN and near-dup gates,
+and the store's small-batch pull. A test forces a side by setting the
+gate's module constant: ``-1`` sends even an empty input to the
+distributed side (``collect_if_small(df, -1)`` is always None). The
 measured Arrow gate (``session.arrow_wins``): at a zero wall every
 operator behind it takes its Arrow twin and returns the expression
 path's rows."""
@@ -22,7 +24,11 @@ from vectorsearchutil_spark.operators import similarity as Sim
 from vectorsearchutil_spark.operators.clustering import kmeans, silhouette_ab
 from vectorsearchutil_spark.operators.dedup import connected_components
 from vectorsearchutil_spark.operators.evaluation import knn_label_vote_eval
-from vectorsearchutil_spark.operators.graph import pagerank, triangle_count
+from vectorsearchutil_spark.operators.graph import (
+    pagerank,
+    pagerank_over_pairs,
+    triangle_count,
+)
 from vectorsearchutil_spark.operators.knn import (
     intrinsic_dim_twonn,
     knn_hubness,
@@ -84,7 +90,7 @@ def test_collect_if_small_runs_one_job(spark, run_jobs, n):
     assert len(jobs) == 1, jobs
 
 
-# -- table-fed driver paths vs forced strategies ---------------------------
+# -- table-fed driver paths vs the distributed plans ------------------------
 
 
 @pytest.fixture(scope="module")
@@ -101,13 +107,12 @@ def _kmeans_rows(res):
 
 
 def test_kmeans_gate_paths_agree(emb, monkeypatch):
-    forced = _kmeans_rows(kmeans(emb, k=5, iterations=2, strategy="distributed"))
+    """Driver and distributed Lloyd's produce identical assignments
+    and centroids (same float64 math + HALF_UP rounding)."""
     below = _kmeans_rows(kmeans(emb, k=5, iterations=2))
-    # a 1-cell gate sends the auto path above it, to the distributed plan
-    monkeypatch.setattr(clustering, "_DRIVER_MAX_CELLS", 1)
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_CELLS", -1)
     above = _kmeans_rows(kmeans(emb, k=5, iterations=2))
-    driver = _kmeans_rows(kmeans(emb, k=5, iterations=2, strategy="driver"))
-    assert below == forced == above == driver
+    assert below == above
 
 
 def test_pq_train_gate_paths_agree(emb):
@@ -124,8 +129,8 @@ def test_pq_train_gate_paths_agree(emb):
 # -- self-kNN and near-dup gates ------------------------------------------
 
 
-def _census(emb, strategy="auto"):
-    kw = dict(vector_col="embedding", id_col="vec_id", strategy=strategy)
+def _census(emb):
+    kw = dict(vector_col="embedding", id_col="vec_id")
     return (
         _rows(knn_hubness(emb, k=5, **kw)),
         _rows(knn_mutual_pairs(emb, k=5, **kw)),
@@ -158,7 +163,7 @@ def test_neardup_auto_builds_with_one_job(emb, run_jobs):
 
 
 def test_self_knn_auto_above_gate_is_blocked(emb, monkeypatch):
-    expr = _census(emb, "expr")
+    expr = _census(emb)
     monkeypatch.setattr(knn_mod, "_SELF_KNN_COLLECT_MAX", 3)
     hub = knn_hubness(emb, k=5, vector_col="embedding", id_col="vec_id")
     assert "FlatMapGroupsInPandas" in formatted_plan(hub)
@@ -179,10 +184,28 @@ def _degenerate_frames(spark):
     }
 
 
-def test_gated_self_knn_and_neardup_on_degenerate_input(spark):
-    for name, df in _degenerate_frames(spark).items():
+#: each gate of the self-kNN / near-dup family, set so that even an
+#: empty input takes the side above it
+_ABOVE_GATES = [
+    (knn_mod, "_SELF_KNN_COLLECT_MAX"),
+    (Sim, "_NEARDUP_MATRIX_MAX_CELLS"),
+    (Sim, "_LSH_VERIFY_MAX_BYTES"),
+]
+
+
+def test_gated_self_knn_and_neardup_on_degenerate_input(spark, monkeypatch):
+    """Empty and all-invalid inputs, below every gate of the family,
+    then above it."""
+    frames = _degenerate_frames(spark)
+    _check_degenerate(frames)
+    for module, name in _ABOVE_GATES:
+        monkeypatch.setattr(module, name, -1)
+    _check_degenerate(frames)
+
+
+def _check_degenerate(frames):
+    for name, df in frames.items():
         hub, mut = _census(df)
-        assert (hub, mut) == _census(df, "expr"), name
         assert hub == sorted((i, 0) for i, _ in df.collect()), name
         assert mut == [(0, 0, 0, 0, None)], name
         twonn = intrinsic_dim_twonn(
@@ -195,11 +218,10 @@ def test_gated_self_knn_and_neardup_on_degenerate_input(spark):
         assert lsh.collect() == [], name
 
 
-@pytest.fixture(scope="module")
-def pairs(spark):
-    rng = random.Random(5)
+def _random_pairs(spark, seed, nodes, draws):
+    rng = random.Random(seed)
     edges = sorted(
-        {tuple(sorted(rng.sample(range(50), 2))) for _ in range(120)}
+        {tuple(sorted(rng.sample(range(nodes), 2))) for _ in range(draws)}
     )
     return spark.createDataFrame(edges, ["id_a", "id_b"])
 
@@ -208,42 +230,84 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_connected_components_gate_paths_agree(pairs, monkeypatch):
-    forced = _rows(connected_components(pairs, strategy="distributed"))
-    assert _rows(connected_components(pairs)) == forced
-    assert _rows(connected_components(pairs, strategy="driver")) == forced
-    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 2)
-    assert _rows(connected_components(pairs)) == forced
+def _below_and_above(op, monkeypatch):
+    """``op()``'s rows below the driver edge gate, then above it."""
+    below = _rows(op())
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_DRIVER_MAX_EDGES", -1)
+        return below, _rows(op())
 
 
-def test_pagerank_gate_paths_agree(pairs, monkeypatch):
-    edges = pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS dst")
+#: a chain 1-2-3-4-9-8 (deep: several propagation rounds), islands,
+#: and a reversed pair
+_CC_CHAIN = [(2, 1), (2, 3), (3, 4), (4, 9), (9, 8), (10, 11), (21, 20), (7, 3)]
+
+
+def test_connected_components_gate_paths_agree(spark, monkeypatch):
+    """Union-find on the driver ≡ min-label propagation: the
+    identical fixpoint, on a random graph and on a deep chain."""
+    cases = {
+        "random": _random_pairs(spark, 5, 50, 120),
+        "chain": spark.createDataFrame(_CC_CHAIN, ["id_a", "id_b"]),
+    }
+    for case, pairs in cases.items():
+        below, above = _below_and_above(
+            lambda: connected_components(pairs), monkeypatch
+        )
+        assert below == above, case
+    assert {(1, 1), (9, 1), (7, 1)} <= set(below)  # the chain collapses
+
+
+def test_pagerank_gate_paths_agree(spark, monkeypatch):
+    """Driver fixed-point path ≡ iterative-join path, EXACT tuple
+    equality: a symmetrized graph, an undirected pair list through
+    ``pagerank_over_pairs``, and a directed edge list."""
+    pairs = _random_pairs(spark, 5, 50, 120)
+    rng = random.Random(7)
+    bipartite = spark.createDataFrame(
+        list({(rng.randint(0, 40), rng.randint(41, 90)) for _ in range(200)}),
+        ["id_a", "id_b"],
     )
-    forced = _rows(pagerank(edges, strategy="distributed"))
-    assert _rows(pagerank(edges)) == forced
-    assert _rows(pagerank(edges, strategy="driver")) == forced
-    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 3)
-    assert _rows(pagerank(edges)) == forced
+    # node 100 is only a src (no rank row): it contributes nothing and
+    # is absent from the output — the inner-join semantics the driver
+    # path replicates
+    directed = spark.createDataFrame(
+        [(100, 1), (1, 2), (2, 1), (1, 3), (3, 1)], ["src", "dst"]
+    )
+    cases = {
+        "symmetric": lambda: pagerank(
+            pairs.selectExpr("id_a AS src", "id_b AS dst").unionByName(
+                pairs.selectExpr("id_b AS src", "id_a AS dst")
+            )
+        ),
+        "over_pairs": lambda: pagerank_over_pairs(bipartite),
+        "directed": lambda: pagerank(directed),
+    }
+    for case, op in cases.items():
+        below, above = _below_and_above(op, monkeypatch)
+        assert below == above, case
+    assert 100 not in {t[0] for t in below}
 
 
-def test_triangle_count_gate_paths_agree(pairs, monkeypatch):
-    forced = _rows(triangle_count(pairs, strategy="distributed"))
-    assert _rows(triangle_count(pairs)) == forced
-    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 3)
-    assert _rows(triangle_count(pairs)) == forced
-    assert forced[0][2] > 0
+def test_triangle_count_gate_paths_agree(spark, monkeypatch):
+    """Driver census ≡ oriented-join census, exact tuple equality."""
+    for seed, nodes, draws in ((5, 50, 120), (11, 60, 300)):
+        pairs = _random_pairs(spark, seed, nodes, draws)
+        below, above = _below_and_above(
+            lambda: triangle_count(pairs), monkeypatch
+        )
+        assert below == above, seed
+        assert below[0][2] > 0, seed  # the random graph has triangles
 
 
-def test_gated_operators_on_empty_input(spark):
+def test_gated_operators_on_empty_input(spark, monkeypatch):
     empty = spark.createDataFrame([], "id_a long, id_b long")
     edges = empty.selectExpr("id_a AS src", "id_b AS dst")
-    for strategy in ("auto", "driver", "distributed"):
-        assert connected_components(empty, strategy=strategy).collect() == []
-        assert pagerank(edges, strategy=strategy).collect() == []
-        assert _rows(triangle_count(empty, strategy=strategy)) == [
-            (0, 0, 0, 0, 0.0)
-        ]
+    for gate in (graph._DRIVER_MAX_EDGES, -1):
+        monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", gate)
+        assert connected_components(empty).collect() == []
+        assert pagerank(edges).collect() == []
+        assert _rows(triangle_count(empty)) == [(0, 0, 0, 0, 0.0)]
 
 
 # -- the measured Arrow gate -----------------------------------------------
@@ -295,9 +359,7 @@ _MEASURED_TWINS = {
     "build_ivf_index_wide_ids": lambda emb, c: build_ivf_index(
         emb, _wide_ids(c)
     ),
-    "kmeans_distributed": lambda emb, c: kmeans(
-        emb, k=4, iterations=2, strategy="distributed"
-    )[0],
+    "kmeans_distributed": lambda emb, c: kmeans(emb, k=4, iterations=2)[0],
     "silhouette_ab": lambda emb, c: silhouette_ab(emb, _cent_list(c)),
     "triplet_mining": lambda emb, c: triplet_mining(emb),
     "recall_curve": lambda emb, c: recall_curve(_with_null_vectors(emb), c),
@@ -329,6 +391,9 @@ def test_measured_gate_auto_picks_arrow_at_zero_wall(
         plan = df._jdf.queryExecution().toString()
         return "MapInPandas" in plan or bool(matrix_calls)
 
+    # k-means' driver gate off, so its distributed assignment is the
+    # one measured
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_CELLS", -1)
     op = _MEASURED_TWINS[name]
     expr = op(emb, ivf_cents)
     assert not arrow_path(expr)

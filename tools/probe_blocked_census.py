@@ -7,21 +7,44 @@ two physical strategies are directly comparable — plus the blocked
 path at 100k x 64 (4x the pair count), a size where the arrow path's
 driver collect is already the wrong posture. Also reports the auto
 dispatch with _SELF_KNN_COLLECT_MAX lowered below the input size to
-prove the escalation wiring.
+prove the escalation wiring. Each probe forces its path through the
+gate constants (``_SELF_KNN_COLLECT_MAX = -1`` for blocked,
+``session.ARROW_MIN_CELLS = 0`` for arrow), as the tests do.
 
 Usage: python tools/probe_blocked_census.py [probe ...]
 """
 
 from __future__ import annotations
 
+import importlib
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
 PROBES = {}
+
+knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
+
+
+@contextmanager
+def _gate(module, name, value):
+    """``module.name`` set to ``value`` for the block, then restored."""
+    old = getattr(module, name)
+    setattr(module, name, value)
+    try:
+        yield
+    finally:
+        setattr(module, name, old)
+
+
+def _hubness(emb, k):
+    return knn_mod.knn_hubness(
+        emb, k=k, vector_col="embedding", id_col="vec_id", metric="cosine"
+    )
 
 
 def _force(df):
@@ -42,28 +65,22 @@ def _emb(spark, n):
 
 def probe_hubness_blocked_50k(spark):
     """Same 50k x 64 shape as the round-9 arrow probe; blocked path."""
-    from vectorsearchutil_spark.operators.knn import knn_hubness
-
     emb = _emb(spark, 50_000)
     t0 = time.time()
-    n = _force(knn_hubness(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", strategy="blocked",
-    ))
+    with _gate(knn_mod, "_SELF_KNN_COLLECT_MAX", -1):
+        n = _force(_hubness(emb, 10))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 50k x 64 (blocked, n_blocks=8) -> sum {n}"
 
 
 def probe_hubness_arrow_50k(spark):
     """Arrow comparator on the identical input (gate-forced)."""
-    from vectorsearchutil_spark.operators.knn import knn_hubness
+    from vectorsearchutil_spark import session
 
     emb = _emb(spark, 50_000)
     t0 = time.time()
-    n = _force(knn_hubness(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", strategy="arrow",
-    ))
+    with _gate(session, "ARROW_MIN_CELLS", 0):
+        n = _force(_hubness(emb, 10))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 50k x 64 (arrow comparator) -> sum {n}"
 
@@ -72,14 +89,10 @@ def probe_hubness_blocked_100k(spark):
     """4x the pair count of the round-9 probe — only the blocked
     path is the right posture here (the arrow path would collect
     100k vectors to the driver and broadcast ~50 MB per executor)."""
-    from vectorsearchutil_spark.operators.knn import knn_hubness
-
     emb = _emb(spark, 100_000)
     t0 = time.time()
-    n = _force(knn_hubness(
-        emb, k=10, vector_col="embedding", id_col="vec_id",
-        metric="cosine", strategy="blocked",
-    ))
+    with _gate(knn_mod, "_SELF_KNN_COLLECT_MAX", -1):
+        n = _force(_hubness(emb, 10))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 100k x 64 (blocked, n_blocks=8) -> sum {n}"
 
@@ -89,19 +102,9 @@ def probe_auto_escalation(spark):
     blocked (plan fingerprint: applyInPandas stage present, no
     broadcast of the query side). Runs on 2k points with the gate
     lowered to 1k — this probes the DISPATCH, not the compute."""
-    import importlib
-
-    knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
     emb = _emb(spark, 2_000)
-    gate = knn_mod._SELF_KNN_COLLECT_MAX
-    knn_mod._SELF_KNN_COLLECT_MAX = 1_000
-    try:
-        df = knn_mod.knn_hubness(
-            emb, k=5, vector_col="embedding", id_col="vec_id",
-            metric="cosine",
-        )
-    finally:
-        knn_mod._SELF_KNN_COLLECT_MAX = gate
+    with _gate(knn_mod, "_SELF_KNN_COLLECT_MAX", 1_000):
+        df = _hubness(emb, 5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     picked_blocked = "FlatMapGroupsInPandas" in plan
     n = df.count()

@@ -225,7 +225,6 @@ def kmeans(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int = 64,
-    strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iterations`` Lloyd's steps; returns (assignments,
     centroids). Assignments: (id, cid, distance to its centroid).
@@ -241,17 +240,15 @@ def kmeans(
     centroid rounding round-trips exactly through Python floats, so
     results are bit-identical to the lineage-chained form.
 
-    ``strategy`` is size-gated physical strategy selection (the
-    broadcast-join analogy): when the working set is at most
-    ``_DRIVER_MAX_CELLS`` float64 cells (5M ≈ 40 MB) the Lloyd's loop
-    runs on the driver in numpy — identical math, none of the
-    per-iteration job/shuffle overhead. Above the gate (any real
-    corpus) the distributed plan runs, and its assignment takes the
-    Arrow/BLAS form past ``session.ARROW_MIN_CELLS`` of rows×k×dim
-    work. ``strategy=`` forces either path ('driver' /
-    'distributed').
+    The physical path is size-gated (the broadcast-join analogy):
+    when the working set is at most ``_DRIVER_MAX_CELLS`` float64
+    cells (5M ≈ 40 MB) the Lloyd's loop runs on the driver in numpy —
+    identical math, none of the per-iteration job/shuffle overhead.
+    Above the gate (any real corpus) the distributed plan runs, and
+    its assignment takes the Arrow/BLAS form past
+    ``session.ARROW_MIN_CELLS`` of rows×k×dim work.
 
-    Under 'auto' the gate is one Arrow job (``collect_if_small`` at
+    The gate is one Arrow job (``collect_if_small`` at
     ``_DRIVER_MAX_CELLS // dim`` rows) that runs when this function is
     called; below the gate the driver path uses the rows it pulled.
     ``dim`` is the vector width the caller declares, read before
@@ -265,13 +262,8 @@ def kmeans(
     work = df.select(id_col, vector_col).filter(
         finite_vector(F.col(vector_col))
     )
-    table = None
-    if strategy == "auto":
-        table = collect_if_small(work, _DRIVER_MAX_CELLS // dim)
-        strategy = "distributed" if table is None else "driver"
-    if strategy == "driver":
-        if table is None:
-            table = work.toArrow()
+    table = collect_if_small(work, _DRIVER_MAX_CELLS // dim)
+    if table is not None:
         return _kmeans_driver(
             df.sparkSession, table, k, iterations, vector_col, id_col
         )

@@ -937,7 +937,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Connected components over a near-dup pair list: (node,
     component) where component = the minimum node id reachable from
@@ -951,17 +950,16 @@ def connected_components(
     and labels are localCheckpoint-ed each round so iteration N is
     one join, not a replay of rounds 1..N-1.
 
-    ``strategy`` is size-gated physical strategy selection: an edge
-    set of at most ``graph._DRIVER_MAX_EDGES`` (2M ≈ 32 MB) runs
-    union-find on the driver — the same fixpoint in one pass, none of
-    the per-round join/checkpoint jobs. Larger edge sets (deep 100 TB
-    near-dup graphs) take the distributed propagation. ``strategy=``
-    forces a path: 'driver' / 'distributed' (min-label propagation,
-    O(diameter) rounds).
+    The physical path is size-gated: an edge set of at most
+    ``graph._DRIVER_MAX_EDGES`` (2M ≈ 32 MB) runs union-find on the
+    driver — the same fixpoint in one pass, none of the per-round
+    join/checkpoint jobs. Larger edge sets (deep 100 TB near-dup
+    graphs) take the distributed min-label propagation (O(diameter)
+    rounds).
 
-    Under 'auto' the gate is one Arrow job (``collect_if_small``) that
-    runs when this function is called; below the gate union-find runs
-    over the rows that job pulled.
+    The gate is one Arrow job (``collect_if_small``) that runs when
+    this function is called; below the gate union-find runs over the
+    rows that job pulled.
     """
     # checkpoint the oriented pair list FIRST: the symmetric view
     # references it twice, and without the barrier the (expensive)
@@ -973,28 +971,24 @@ def connected_components(
         F.col(dst).cast("long").alias("b"),
     ).localCheckpoint(eager=False)
     spark = pairs.sparkSession
-    if strategy == "auto":
-        # gate on the HALF pair count (same 2M-symmetric-edge
-        # boundary): the driver path needs neither the symmetric
-        # union nor distinct — union-find's min-label fixpoint is
-        # invariant under duplicate and one-directional edges — so
-        # below the gate we skip building the symmetric edge set
-        # entirely (one union+distinct shuffle, one localCheckpoint
-        # materialization and a 2× larger driver pull, all removed;
-        # r10 optimization round).
-        # ASSUMPTION (ADVICE r10): ``pairs`` is canonical — one row
-        # per unordered pair (every in-repo producer emits a
-        # distinct id_a < id_b list). A producer that emitted
-        # duplicates/both orientations would only inflate this count
-        # and push the graph onto the distributed path early —
-        # correctness is unaffected either way (union-find and
-        # min-label are duplicate-invariant).
-        small = collect_if_small(half, graph._DRIVER_MAX_EDGES // 2)
-        if small is not None:
-            return _cc_driver(spark, small)
-        strategy = "distributed"
-    if strategy == "driver":
-        return _cc_driver(spark, half.toArrow())
+    # gate on the HALF pair count (same 2M-symmetric-edge
+    # boundary): the driver path needs neither the symmetric
+    # union nor distinct — union-find's min-label fixpoint is
+    # invariant under duplicate and one-directional edges — so
+    # below the gate we skip building the symmetric edge set
+    # entirely (one union+distinct shuffle, one localCheckpoint
+    # materialization and a 2× larger driver pull, all removed;
+    # r10 optimization round).
+    # ASSUMPTION (ADVICE r10): ``pairs`` is canonical — one row
+    # per unordered pair (every in-repo producer emits a
+    # distinct id_a < id_b list). A producer that emitted
+    # duplicates/both orientations would only inflate this count
+    # and push the graph onto the distributed path early —
+    # correctness is unaffected either way (union-find and
+    # min-label are duplicate-invariant).
+    small = collect_if_small(half, graph._DRIVER_MAX_EDGES // 2)
+    if small is not None:
+        return _cc_driver(spark, small)
     edges = (
         half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

@@ -108,7 +108,6 @@ def pagerank(
     damping: float = 0.85,
     iters: int = 3,
     round_dp: int = 6,
-    strategy: str = "auto",
 ) -> DataFrame:
     """PageRank over a DIRECTED edge list (symmetrize upstream for an
     undirected similarity graph). Nodes are the vertices appearing in
@@ -121,15 +120,13 @@ def pagerank(
     hash join (ranks are |V|-sized, edges |E|-sized) plus one long-sum
     aggregate — the standard iterative-join PageRank plan.
 
-    ``strategy`` is size-gated physical strategy selection (the
-    ``connected_components`` pattern, r11 optimization round): an edge
-    set of at most ``_DRIVER_MAX_EDGES`` runs the same fixed-point
-    iterations on the driver — bit-identical output, none of the
-    ~4 jobs/iteration of join/checkpoint scheduling latency. Larger
-    graphs take the iterative-join plan. Under 'auto' the gate is one
-    Arrow job (``collect_if_small``) that runs when this function is
-    called, and the driver path uses the edges it pulled.
-    ``strategy=`` forces a path ('driver'/'distributed')."""
+    The physical path is size-gated (the ``connected_components``
+    pattern): an edge set of at most ``_DRIVER_MAX_EDGES`` runs the
+    same fixed-point iterations on the driver — bit-identical output,
+    none of the ~4 jobs/iteration of join/checkpoint scheduling
+    latency. Larger graphs take the iterative-join plan. The gate is
+    one Arrow job (``collect_if_small``) that runs when this function
+    is called, and the driver path uses the edges it pulled."""
     spark = edges.sparkSession
     # edges and degrees are re-read every iteration — checkpoint so
     # iteration N doesn't recompute the upstream pair-mining plan N
@@ -138,13 +135,9 @@ def pagerank(
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
     ).localCheckpoint(eager=False)
-    if strategy == "auto":
-        tbl = collect_if_small(e, _DRIVER_MAX_EDGES)
-        if tbl is not None:
-            return _pagerank_driver(spark, tbl, damping, iters, round_dp)
-        strategy = "distributed"
-    if strategy == "driver":
-        return _pagerank_driver(spark, e.toArrow(), damping, iters, round_dp)
+    tbl = collect_if_small(e, _DRIVER_MAX_EDGES)
+    if tbl is not None:
+        return _pagerank_driver(spark, tbl, damping, iters, round_dp)
     nodes = e.select(F.col("_dst").alias("_id")).distinct()
     n_nodes = nodes.count()  # scalar: sizes the teleport term
     if n_nodes == 0:
@@ -198,15 +191,12 @@ def pagerank_over_pairs(
     id_b: str = "id_b",
     damping: float = 0.85,
     iters: int = 3,
-    strategy: str = "auto",
 ) -> DataFrame:
     """PageRank over an UNDIRECTED pair list (e.g. near-dup pairs):
     symmetrizes into a directed edge list, then runs ``pagerank``."""
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    return pagerank(
-        fwd.unionByName(rev), damping=damping, iters=iters, strategy=strategy
-    )
+    return pagerank(fwd.unionByName(rev), damping=damping, iters=iters)
 
 
 def _triangle_driver(spark, tbl) -> DataFrame:
@@ -231,7 +221,7 @@ def _triangle_driver(spark, tbl) -> DataFrame:
     # orient low-degree → high-degree (rows already satisfy a < b, so
     # the id tie-break reduces to keeping the row order)
     da, db = deg[ai], deg[bi]
-    lt = (da < db) | (da == db)
+    lt = da <= db
     u = np.where(lt, ai, bi)
     v = np.where(lt, bi, ai)
     out: list[set] = [set() for _ in range(n_nodes)]
@@ -274,7 +264,6 @@ def triangle_count(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient over an
     undirected pair list (one row per edge, ``id_a < id_b``). Returns
@@ -294,12 +283,11 @@ def triangle_count(
     Wedge total Σ deg·(deg−1)/2 uses integer ``div`` — no double
     fold anywhere.
 
-    ``strategy`` is the size-gated physical dispatch shared with
-    ``pagerank`` / ``connected_components`` (r11): at or below
-    ``_DRIVER_MAX_EDGES`` the census runs on the driver (identical
-    counts, one Arrow pull instead of the ~7-stage join cascade);
-    above it — or forced 'distributed' — the oriented-join plan runs.
-    Under 'auto' the gate is one Arrow job (``collect_if_small``) that
+    The physical path is the size gate shared with ``pagerank`` /
+    ``connected_components``: at or below ``_DRIVER_MAX_EDGES`` the
+    census runs on the driver (identical counts, one Arrow pull
+    instead of the ~7-stage join cascade); above it the oriented-join
+    plan runs. The gate is one Arrow job (``collect_if_small``) that
     runs when this function is called, and the driver path counts the
     edges it pulled.
     """
@@ -315,13 +303,9 @@ def triangle_count(
     e = pairs.select(
         F.col(id_a).alias("a"), F.col(id_b).alias("b")
     ).localCheckpoint(eager=False)
-    if strategy == "auto":
-        tbl = collect_if_small(e, _DRIVER_MAX_EDGES)
-        if tbl is not None:
-            return _triangle_driver(pairs.sparkSession, tbl)
-        strategy = "distributed"
-    if strategy == "driver":
-        return _triangle_driver(pairs.sparkSession, e.toArrow())
+    tbl = collect_if_small(e, _DRIVER_MAX_EDGES)
+    if tbl is not None:
+        return _triangle_driver(pairs.sparkSession, tbl)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))

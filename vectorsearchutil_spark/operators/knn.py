@@ -167,7 +167,6 @@ def knn_hubness(
     vector_col: str = "vector",
     id_col: str = "id",
     metric: str = "cosine",
-    strategy: str = "auto",
 ) -> DataFrame:
     """ANN hubness diagnostic: each point's *k-occurrence* — how many
     other points list it among their k nearest neighbours. High-
@@ -185,15 +184,14 @@ def knn_hubness(
     then one count per neighbour id. The quadratic candidate stage is
     inherent to exact hubness — at 100 TB run it per IVF probe list
     or on a deterministic hash-sample of queries; the aggregation
-    side stays O(n). Under ``auto`` with cosine, one Arrow job pulls
-    the valid points when there are at most ``_SELF_KNN_COLLECT_MAX``
-    of them; above ``session.ARROW_MIN_CELLS`` of n²·dim work the Arrow
-    path scores them dim-at-a-time in the JVM's fold order, so scores
-    and therefore ranks are BIT-IDENTICAL to the expression path (the
-    zeroshot technique). Past the gate (or with
-    ``strategy='blocked'``) the query side is hash-blocked instead
-    of collected/broadcast — see ``_self_knn_topk_blocked`` — so no
-    physical strategy here dies at the driver at 100 TB.
+    side stays O(n). Under cosine, one Arrow job pulls the valid
+    points when there are at most ``_SELF_KNN_COLLECT_MAX`` of them;
+    above ``session.ARROW_MIN_CELLS`` of n²·dim work the Arrow path
+    scores them dim-at-a-time in the JVM's fold order, so scores and
+    therefore ranks are BIT-IDENTICAL to the expression path (the
+    zeroshot technique). Past the gate the query side is hash-blocked
+    instead of collected/broadcast — see ``_self_knn_topk_blocked`` —
+    so no physical path here dies at the driver at 100 TB.
     """
     from vectorsearchutil_spark.functions.vector import (
         finite_vector,
@@ -204,7 +202,7 @@ def knn_hubness(
         finite_vector(F.col(vector_col))
         & (l2_norm(F.col(vector_col)) != F.lit(0.0))
     )
-    neighbors = _self_knn_topk(valid, k, vector_col, id_col, metric, strategy)
+    neighbors = _self_knn_topk(valid, k, vector_col, id_col, metric)
     occ = neighbors.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("int").alias("k_occurrence")
     )
@@ -610,32 +608,20 @@ def _self_knn_topk(
     vector_col: str,
     id_col: str,
     metric: str,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Strategy dispatch shared by ``knn_hubness`` /
-    ``knn_mutual_pairs``: 'expr' (broadcast expression plan),
-    'arrow' (driver query matrix, cosine only), 'blocked' (no
-    collect/broadcast, cosine only), or 'auto'. For cosine, 'auto' is
-    one ``collect_if_small`` job at ``_SELF_KNN_COLLECT_MAX`` points:
-    above it blocked, below it the measured BLAS gate on n²·dim picks
-    arrow or expr, and either broadcasts the pulled table. 'auto' with
-    l2 is expr, with no gate job. All three cosine paths score
-    bit-identically, so the choice is invisible to results
-    (strategy-equality tests)."""
-    if strategy not in ("auto", "expr", "arrow", "blocked"):
-        raise ValueError(f"unknown self-kNN strategy {strategy!r}")
-    if strategy in ("arrow", "blocked") and metric != "cosine":
-        raise ValueError(f"strategy {strategy!r} supports cosine only")
-    if strategy == "expr" or metric != "cosine":
+    """Path dispatch shared by ``knn_hubness`` / ``knn_mutual_pairs``
+    / ``intrinsic_dim_twonn``. For cosine, one ``collect_if_small``
+    job at ``_SELF_KNN_COLLECT_MAX`` points: above it the blocked
+    path (no collect/broadcast), below it the measured BLAS gate on
+    n²·dim picks arrow or expr, and either broadcasts the pulled
+    table. Any other metric is expr, with no gate job. All three
+    cosine paths score bit-identically, so the choice is invisible to
+    results (strategy-equality tests)."""
+    if metric != "cosine":
         return _self_knn_topk_expr(valid, k, vector_col, id_col, metric)
-    if strategy == "blocked":
-        return _self_knn_topk_blocked(valid, k, vector_col, id_col)
-    points = valid.select(id_col, vector_col)
-    if strategy == "arrow":
-        return _self_knn_topk_arrow(
-            valid, points.toArrow(), k, vector_col, id_col
-        )
-    table = collect_if_small(points, _SELF_KNN_COLLECT_MAX)
+    table = collect_if_small(
+        valid.select(id_col, vector_col), _SELF_KNN_COLLECT_MAX
+    )
     if table is None:
         return _self_knn_topk_blocked(valid, k, vector_col, id_col)
     n = table.num_rows
@@ -651,7 +637,6 @@ def knn_mutual_pairs(
     vector_col: str = "vector",
     id_col: str = "id",
     metric: str = "cosine",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Reciprocal-nearest-neighbour census — the mutuality companion
     to ``knn_hubness``: of the directed kNN edges, how many are
@@ -682,7 +667,7 @@ def knn_mutual_pairs(
         finite_vector(F.col(vector_col))
         & (l2_norm(F.col(vector_col)) != F.lit(0.0))
     )
-    topk = _self_knn_topk(valid, k, vector_col, id_col, metric, strategy)
+    topk = _self_knn_topk(valid, k, vector_col, id_col, metric)
     topk = topk.select("_qid", id_col).localCheckpoint(eager=False)
     fwd = topk.select(
         F.col("_qid").alias("id_a"), F.col(id_col).alias("id_b")
@@ -730,7 +715,6 @@ def intrinsic_dim_twonn(
     df: DataFrame,
     vector_col: str = "vector",
     id_col: str = "id",
-    strategy: str = "auto",
 ) -> DataFrame:
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017) from
     each point's two nearest neighbours under cosine distance
@@ -760,7 +744,7 @@ def intrinsic_dim_twonn(
         finite_vector(F.col(vector_col))
         & (l2_norm(F.col(vector_col)) != F.lit(0.0))
     )
-    topk = _self_knn_topk(valid, 2, vector_col, id_col, "cosine", strategy)
+    topk = _self_knn_topk(valid, 2, vector_col, id_col, "cosine")
     per = topk.groupBy("_qid").agg(
         F.max(F.when(F.col("_rk") == 1, F.col("_d"))).alias("_s1"),
         F.max(F.when(F.col("_rk") == 2, F.col("_d"))).alias("_s2"),

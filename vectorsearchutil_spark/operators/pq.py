@@ -14,12 +14,12 @@ Shape of the design:
   the lowest code, 6dp HALF_UP centroid rounding per iteration,
   empty clusters keep their centroid) so an oracle can re-derive the
   codebooks in SQL.
-* **Encode** — one narrow projection: the m codebooks travel as ONE
-  broadcast row (array<array<struct<cid,cv>>>); each subspace's code
-  is an array_min over (squared-distance, cid) structs. No shuffle,
-  no Python; the corpus scan writes m small ints + a quantization
-  error per row. At 100 TB the encoded table is ~dim·4/m× smaller
-  than the raw vectors — the point of PQ.
+* **Encode** — one narrow Arrow-batched pass: the m codebooks ride
+  into the workers as a closure constant and numpy takes each
+  subspace's argmin code (ties to the lowest). No shuffle; the corpus
+  scan writes m small ints + a quantization error per row. At
+  100 TB the encoded table is ~dim·4/m× smaller than the raw
+  vectors — the point of PQ.
 * **ADC search** — the query is expanded driver-side into an m×k
   distance table (a few hundred doubles); approximate distance is m
   array lookups + a fold, then a distributed top-k
@@ -137,89 +137,23 @@ def pq_train(
     return books
 
 
-def _codebook_row(df: DataFrame, books: Codebooks):
-    """The codebooks as ONE broadcastable row
-    (cbs array<array<struct<cid,cv>>>) — data-driven, not
-    literal-inlined: 1024 inline double literals blow past codegen
-    method limits (janino bails to interpreted — measured slower than
-    the lambda form)."""
-    payload = [
-        [(int(cid), [float(x) for x in cv]) for cid, cv in enumerate(book)]
-        for book in books
-    ]
-    return local_frame(
-        df.sparkSession,
-        [(payload,)], "cbs array<array<struct<cid:int,cv:array<double>>>>"
-    )
-
-
 def pq_encode(
     df: DataFrame,
     books: Codebooks,
     vector_col: str = "embedding",
     id_col: str = "vec_id",
-    strategy: str = "matrix",
 ) -> DataFrame:
     """Encode vectors to (id, codes array<int>, qerr double): per
     subspace the argmin code over the codebook (squared L2, ties to
     the lowest code), qerr = total squared quantization error rounded
-    4dp. One narrow pass over the corpus, no shuffle, either way.
+    4dp. One narrow pass over the corpus, no shuffle.
 
-    ``strategy='matrix'`` (default): Arrow-batched ``mapInPandas``
-    computing all subspace distance matrices in BLAS — the
-    knn_batch_matrix lesson (PERF.md): bulk vector math belongs in
-    numpy, where throughput scales with BLAS, not expression
-    interpretation. ``strategy='expr'`` keeps the pure-JVM
-    higher-order-function form (no Python workers; right for
-    streaming contexts or Python-less clusters). Both produce
-    bit-identical output (argmin ties to lowest cid; float64 sums in
-    dim order; 4dp half-up rounding applied JVM-side)."""
-    if strategy == "matrix":
-        return _pq_encode_matrix(df, books, vector_col, id_col)
-    m = len(books)
-    d = len(books[0][0])
-    vec = F.col(vector_col).cast("array<double>")
-    subs = df.crossJoin(F.broadcast(_codebook_row(df, books))).select(
-        F.col(id_col),
-        "cbs",
-        *[F.slice(vec, j * d + 1, d).alias(f"_s{j}") for j in range(m)],
-    )
-
-    def _best(j: int):
-        # NB: the lambda must be unary — pyspark dispatches on lambda
-        # arity, so a default-arg trick would bind the array index
-        s = F.col(f"_s{j}")
-        return F.array_min(
-            F.transform(
-                F.col("cbs")[j],
-                lambda c: F.struct(
-                    l2_squared(s, c["cv"]).alias("d"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        ).alias(f"_b{j}")
-
-    best = subs.select(F.col(id_col), *[_best(j) for j in range(m)])
-    total_err = None
-    for j in range(m):
-        term = F.col(f"_b{j}")["d"]
-        total_err = term if total_err is None else total_err + term
-    return best.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_b{j}")["cid"] for j in range(m)]).alias("codes"),
-        F.round(total_err, 4).alias("qerr"),
-    )
-
-
-def _pq_encode_matrix(
-    df: DataFrame,
-    books: Codebooks,
-    vector_col: str,
-    id_col: str,
-) -> DataFrame:
-    """BLAS encode: per Arrow batch, each subspace's n×k squared
-    distance matrix in one einsum-free broadcastized op. Codebooks
-    ride into the workers as a pickled closure constant (a few KB)."""
+    Arrow-batched ``mapInPandas`` computing all subspace distance
+    matrices in BLAS — the knn_batch_matrix lesson (PERF.md): bulk
+    vector math belongs in numpy, where throughput scales with BLAS,
+    not expression interpretation. Codebooks ride into the workers as
+    a pickled closure constant (a few KB); argmin ties go to the
+    lowest cid, and the 4dp half-up rounding is applied JVM-side."""
     import numpy as np
 
     m = len(books)
@@ -473,10 +407,11 @@ def _pq_distortion_pairs_matrix(
 ) -> DataFrame:
     """(j, d2) pairs — min squared quantization error per (vector,
     subspace) — via a numpy ``mapInArrow`` kernel (the
-    ``_pq_encode_matrix`` lesson: bulk vector math belongs in BLAS,
+    ``pq_encode`` lesson: bulk vector math belongs in BLAS,
     and the unrolled 8-subspace HOF tree costs more to BUILD and
     codegen than the 2k-row scan it runs on). Bit-identical to the
-    expr form for every input class:
+    JVM reference :func:`_pq_distortion_pairs_expr` for every input
+    class:
 
     * finite vectors: the per-dim accumulation runs in dimension
       order from 0.0 (``D += (S[:,i]-C[:,i])**2``) — the same IEEE
@@ -557,12 +492,71 @@ def _pq_distortion_pairs_matrix(
     return df.select(vector_col).mapInArrow(kernel, "j int, d2 double")
 
 
+def _codebook_row(df: DataFrame, books: Codebooks):
+    """The codebooks as ONE broadcastable row
+    (cbs array<array<struct<cid,cv>>>) — data-driven, not
+    literal-inlined: 1024 inline double literals blow past codegen
+    method limits (janino bails to interpreted — measured slower than
+    the lambda form)."""
+    payload = [
+        [(int(cid), [float(x) for x in cv]) for cid, cv in enumerate(book)]
+        for book in books
+    ]
+    return local_frame(
+        df.sparkSession,
+        [(payload,)], "cbs array<array<struct<cid:int,cv:array<double>>>>"
+    )
+
+
+def _pq_distortion_pairs_expr(
+    df: DataFrame, books: Codebooks, vector_col: str
+) -> DataFrame:
+    """(j, d2) pairs in the pure-JVM higher-order-function form: the
+    codebooks as one broadcast row, each subspace's min squared
+    distance an ``array_min`` over (d, cid) structs. The reference
+    that :func:`_pq_distortion_pairs_matrix` is tested against."""
+    m = len(books)
+    d = len(books[0][0])
+    vec = F.col(vector_col).cast("array<double>")
+    subs = df.crossJoin(F.broadcast(_codebook_row(df, books))).select(
+        "cbs",
+        *[F.slice(vec, j * d + 1, d).alias(f"_s{j}") for j in range(m)],
+    )
+
+    def _best(j: int):
+        # NB: the lambda must be unary — pyspark dispatches on lambda
+        # arity, so a default-arg trick would bind the array index
+        s = F.col(f"_s{j}")
+        return F.array_min(
+            F.transform(
+                F.col("cbs")[j],
+                lambda c: F.struct(
+                    l2_squared(s, c["cv"]).alias("d"),
+                    c["cid"].alias("cid"),
+                ),
+            )
+        ).alias(f"_b{j}")
+
+    best = subs.select(*[_best(j) for j in range(m)])
+    return best.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"),
+                        F.col(f"_b{j}")["d"].alias("d2"),
+                    )
+                    for j in range(m)
+                ]
+            )
+        ).alias("_p")
+    ).select(F.col("_p.j").alias("j"), F.col("_p.d2").alias("d2"))
+
+
 def pq_subspace_distortion(
     df: DataFrame,
     books: Codebooks,
     vector_col: str = "embedding",
-    id_col: str = "vec_id",
-    strategy: str = "matrix",
 ) -> DataFrame:
     """Per-subspace quantization distortion report for a trained PQ
     codebook: (subspace, n_vectors, mean_sq_err, max_sq_err,
@@ -572,58 +566,19 @@ def pq_subspace_distortion(
 
     Same one-pass broadcast-codebook shape as :func:`pq_encode`
     (corpus never shuffles; m narrow rows per vector enter the
-    aggregate). ``strategy='matrix'`` (default) computes the
-    per-(vector, subspace) min d2 in a numpy ``mapInArrow`` kernel
-    (see :func:`_pq_distortion_pairs_matrix` for the bit-identity
-    argument); ``strategy='expr'`` keeps the pure-JVM
-    higher-order-function form (streaming / Python-less clusters).
-    Cross-row aggregation is order-proof either way: per-(vector,
-    subspace) d2 is the encoder's fixed-order float64 sum, then the
-    mean quantizes d2 to 1e-6 units and sums exact integers — the
-    value-quantization pattern from the covariance rewrite — so the
-    result is bit-identical under any partitioning and replayable by
-    the SQL oracle.
+    aggregate). The per-(vector, subspace) min d2 comes from a numpy
+    ``mapInArrow`` kernel (see :func:`_pq_distortion_pairs_matrix`
+    for the bit-identity argument against the JVM reference
+    :func:`_pq_distortion_pairs_expr`). Cross-row aggregation is
+    order-proof: per-(vector, subspace) d2 is the encoder's
+    fixed-order float64 sum, then the mean quantizes d2 to 1e-6 units
+    and sums exact integers — the value-quantization pattern from the
+    covariance rewrite — so the result is bit-identical under any
+    partitioning and replayable by the SQL oracle.
     """
     from vectorsearchutil_spark.functions.vector import round_half_up
 
-    m = len(books)
-    d = len(books[0][0])
-    if strategy == "matrix":
-        pairs = _pq_distortion_pairs_matrix(df, books, vector_col)
-    else:
-        vec = F.col(vector_col).cast("array<double>")
-        subs = df.crossJoin(F.broadcast(_codebook_row(df, books))).select(
-            F.col(id_col),
-            "cbs",
-            *[F.slice(vec, j * d + 1, d).alias(f"_s{j}") for j in range(m)],
-        )
-
-        def _best(j: int):
-            s = F.col(f"_s{j}")
-            return F.array_min(
-                F.transform(
-                    F.col("cbs")[j],
-                    lambda c: F.struct(
-                        l2_squared(s, c["cv"]).alias("d"),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            ).alias(f"_b{j}")
-
-        best = subs.select(F.col(id_col), *[_best(j) for j in range(m)])
-        pairs = best.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.col(f"_b{j}")["d"].alias("d2"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("_p")
-        ).select(F.col("_p.j").alias("j"), F.col("_p.d2").alias("d2"))
+    pairs = _pq_distortion_pairs_matrix(df, books, vector_col)
     # guard the decimal cast: a NaN/Inf vector yields non-finite d2,
     # and ANSI CAST(NaN AS DECIMAL) throws — degrade those rows to
     # NULL (sum skips), same convention as _finite_or_null

@@ -49,6 +49,10 @@ from vectorsearchutil_spark.session import (
 #: not a memory bound — see its docstring
 _NEARDUP_MATRIX_MAX_CELLS = 5_000_000
 
+#: ``neardup_pairs``' block count above the matrix gate: 32 won at
+#: 125k×64 (see its docstring)
+_NEARDUP_BLOCKS = 32
+
 #: ``cosine_lsh_pairs``' matrix-verify gate: a memory bound on the
 #: float64 corpus matrix broadcast to every executor
 _LSH_VERIFY_MAX_BYTES = 400_000_000
@@ -255,22 +259,17 @@ def neardup_pairs(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.9,
-    strategy: str = "auto",
     dim: int = 64,
-    n_blocks: int = 32,
 ) -> DataFrame:
-    """Exact cosine near-dup pairs with size-gated physical strategy
-    (the broadcast-join analogy, mirroring ``kmeans(strategy="auto")``):
-
-    * ``matrix`` — collect+broadcast the corpus matrix, one narrow
-      BLAS pass (fastest at small n where the driver round-trip is
-      the whole cost);
-    * ``blocked`` — distributed block-pair tasks, no driver collect,
-      identical results (the production path above the gate);
-    * ``auto`` — one Arrow job pulls the non-NULL (id, vector) rows
-      when there are at most ``_NEARDUP_MATRIX_MAX_CELLS // dim`` of
-      them (``dim`` is the declared vector width), and the matrix
-      path broadcasts that table; above the gate, blocked.
+    """Exact cosine near-dup pairs with a size-gated physical path
+    (the broadcast-join analogy, mirroring ``kmeans``): one Arrow job
+    pulls the non-NULL (id, vector) rows when there are at most
+    ``_NEARDUP_MATRIX_MAX_CELLS // dim`` of them (``dim`` is the
+    declared vector width), and the matrix path broadcasts that table
+    in one narrow BLAS pass (fastest at small n where the driver
+    round-trip is the whole cost); above the gate
+    ``neardup_pairs_blocked`` runs ``_NEARDUP_BLOCKS`` distributed
+    block-pair tasks, no driver collect, identical results.
 
     The 5M-cell gate (~78k×64) is MEASURED, not a memory
     bound: at 50k×64 the matrix path wins (0.6 s vs 1.5 s — task
@@ -280,20 +279,13 @@ def neardup_pairs(
     round 3). Both paths return identical (id_a, id_b, cosine) rows,
     so the same oracle covers them.
     """
-    if strategy == "auto":
-        table = collect_if_small(
-            _vectors(df, id_col, vector_col),
-            _NEARDUP_MATRIX_MAX_CELLS // dim,
-        )
-        if table is not None:
-            return _neardup_pairs_matrix(
-                df, table, vector_col, id_col, threshold
-            )
-        strategy = "blocked"
-    if strategy == "matrix":
-        return neardup_pairs_matrix(df, vector_col, id_col, threshold)
+    table = collect_if_small(
+        _vectors(df, id_col, vector_col), _NEARDUP_MATRIX_MAX_CELLS // dim
+    )
+    if table is not None:
+        return _neardup_pairs_matrix(df, table, vector_col, id_col, threshold)
     return neardup_pairs_blocked(
-        df, vector_col, id_col, threshold, n_blocks=n_blocks
+        df, vector_col, id_col, threshold, n_blocks=_NEARDUP_BLOCKS
     )
 
 
@@ -663,7 +655,6 @@ def cosine_lsh_pairs(
     n_tables: int = 4,
     threshold: float = 0.3,
     dim: int = 64,
-    verify: str = "auto",
 ) -> DataFrame:
     """Approximate cosine near-dup via multi-table random-hyperplane
     LSH.
@@ -722,16 +713,10 @@ def cosine_lsh_pairs(
     # verify runs against the broadcast matrix — no vector joins, BLAS
     # instead of interpreted per-pair array math. Larger corpora take
     # the join path.
-    table = None
-    if verify == "auto":
-        table = collect_if_small(
-            _vectors(df, id_col, vector_col),
-            _LSH_VERIFY_MAX_BYTES // (8 * dim),
-        )
-        verify = "join" if table is None else "matrix"
-    if verify == "matrix":
-        if table is None:
-            table = _vectors(df, id_col, vector_col).toArrow()
+    table = collect_if_small(
+        _vectors(df, id_col, vector_col), _LSH_VERIFY_MAX_BYTES // (8 * dim)
+    )
+    if table is not None:
         out = _verify_pairs_matrix(table, cand, vector_col, id_col, threshold)
         return out.select(
             "id_a", "id_b", F.round("cosine", 4).alias("cosine")
@@ -742,7 +727,10 @@ def cosine_lsh_pairs(
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cosine", cosine_similarity(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
+        # Spark orders NaN above every number, so a non-finite vector's
+        # NaN cosine would pass the threshold; numpy's compare (the
+        # matrix verify) drops it
+        .filter((F.col("cosine") >= threshold) & ~F.isnan("cosine"))
         .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
     )
 
@@ -957,7 +945,6 @@ def triplet_mining(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Semi-hard triplet census (FaceNet's mining rule): per anchor
     (``id < anchor_below``, finite + nonzero-norm participation
@@ -987,9 +974,10 @@ def triplet_mining(
       associative, so per-batch partials reduce exactly). The
       expression form is interpreted per pair (HOFs sit outside
       codegen) — the measured ~20M cells/s wall (PERF.md round 4).
-    * ``auto`` — collects the anchors, and ``matrix`` when
-      ``session.arrow_wins`` (one ``emb.count()``) puts
-      rows×anchors×dim past the interpreted-HOF wall, else ``expr``.
+
+    The anchors are collected, and ``matrix`` runs when
+    ``session.arrow_wins`` (one ``emb.count()``) puts
+    rows×anchors×dim past the interpreted-HOF wall, else ``expr``.
     """
     from vectorsearchutil_spark.functions.vector import (
         cosine_similarity,
@@ -1017,16 +1005,8 @@ def triplet_mining(
         F.col("label").alias("_albl"),
         F.col("_e").alias("_ae"),
     )
-    arows = None
-    if strategy == "auto":
-        arows = anchors.collect()
-        strategy = (
-            "matrix" if arrow_wins(emb, [r["_ae"] for r in arows])
-            else "expr"
-        )
-    if strategy == "matrix":
-        if arows is None:
-            arows = anchors.collect()
+    arows = anchors.collect()
+    if arrow_wins(emb, [r["_ae"] for r in arows]):
         pos, neg = _triplet_matrix_stats(vv, arows, margin)
     else:
         cq = round_half_up(

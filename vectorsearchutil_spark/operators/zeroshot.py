@@ -74,7 +74,6 @@ def zeroshot(
     label_idx_col: str = "label_idx",
     label_vec_col: str = "label_vec",
     softmax: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Per-row prediction: data columns + ``zeroshot_pred`` (+ score).
 
@@ -91,18 +90,15 @@ def zeroshot(
     expansion, no window shuffle, no join-back — the corpus is
     scanned once and never moves (the shape that survives 100 TB).
 
-    ``strategy`` picks the physical form: 'expr' (above), 'arrow'
-    (:func:`_zeroshot_arrow`, bit-identical scores), or 'auto', which
-    takes 'arrow' when ``session.arrow_wins`` (one ``data.count()``)
-    puts rows × labels × dim past the interpreted-HOF wall.
+    The Arrow form (:func:`_zeroshot_arrow`, bit-identical scores)
+    takes over when ``session.arrow_wins`` (one ``data.count()``) puts
+    rows × labels × dim past the interpreted-HOF wall.
     """
     labs = sorted(
         (r[label_idx_col], r[label_col], r[label_vec_col])
         for r in labels.collect()
     )
-    if strategy == "arrow" or (
-        strategy == "auto" and arrow_wins(data, [v for *_, v in labs])
-    ):
+    if arrow_wins(data, [v for *_, v in labs]):
         return _zeroshot_arrow(data, labs, vector_col, softmax)
     lab_type = StructType(
         [

@@ -940,27 +940,31 @@ WHERE list_cosine_similarity(a.v, b.v) >= 0.35
 
 @query("dedup_embedding_cosine", _EMB_NEARDUP_ORACLE)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic near-dup pairs (cosine ≥ 0.35), size-gated strategy:
-    below the 50M-cell gate the corpus matrix broadcasts and one
+    """Semantic near-dup pairs (cosine ≥ 0.35), size-gated path:
+    below the 5M-cell matrix gate the corpus matrix broadcasts and one
     narrow BLAS pass scores it (no shuffle); above the gate the
     blocked block-pair plan runs with no driver collect at all.
     Both paths return identical rows — same oracle."""
     from vectorsearchutil_spark.operators.similarity import neardup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return neardup_pairs(emb, threshold=0.35, strategy="auto")
+    return neardup_pairs(emb, threshold=0.35)
 
 
 @query("dedup_embedding_cosine_blocked", _EMB_NEARDUP_ORACLE)
 def dedup_embedding_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production (above-gate) strategy of dedup_embedding_cosine,
-    forced: exact all-pairs cosine via distributed block-pair tasks —
-    no full-corpus collect anywhere in the plan. Checked against the
-    SAME oracle as the matrix path, proving strategy equivalence."""
-    from vectorsearchutil_spark.operators.similarity import neardup_pairs
+    """The production (above-gate) path of dedup_embedding_cosine,
+    called directly: exact all-pairs cosine via distributed
+    block-pair tasks at ``neardup_pairs``' above-gate block count
+    (``similarity._NEARDUP_BLOCKS``), with no full-corpus collect
+    anywhere in the plan. Checked against the SAME oracle as the
+    matrix path, proving path equivalence."""
+    from vectorsearchutil_spark.operators.similarity import (
+        neardup_pairs_blocked,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return neardup_pairs(emb, threshold=0.35, strategy="blocked")
+    return neardup_pairs_blocked(emb, threshold=0.35, n_blocks=32)
 
 
 # --------------------------------------------------------------------------
@@ -5758,7 +5762,7 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectorsearchutil_spark.operators.similarity import neardup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = neardup_pairs(emb, threshold=0.35, strategy="auto")
+    pairs = neardup_pairs(emb, threshold=0.35)
     return pagerank_over_pairs(pairs, damping=0.85, iters=3)
 
 
@@ -16258,7 +16262,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return common_neighbor_link_prediction(
-        neardup_pairs(emb, threshold=0.35, strategy="auto"), k=20
+        neardup_pairs(emb, threshold=0.35), k=20
     )
 
 
