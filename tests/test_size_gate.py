@@ -163,11 +163,11 @@ def test_neardup_auto_builds_with_one_job(emb, run_jobs):
 
 
 def test_self_knn_auto_above_gate_is_blocked(emb, monkeypatch):
-    expr = _census(emb)
+    below = _census(emb)
     monkeypatch.setattr(knn_mod, "_SELF_KNN_COLLECT_MAX", 3)
     hub = knn_hubness(emb, k=5, vector_col="embedding", id_col="vec_id")
     assert "FlatMapGroupsInPandas" in formatted_plan(hub)
-    assert _census(emb) == expr
+    assert _census(emb) == below
 
 
 def _degenerate_frames(spark):

@@ -19,7 +19,7 @@ from __future__ import annotations
 import importlib
 import sys
 import time
-from contextlib import contextmanager
+from unittest import mock
 
 sys.path.insert(0, "/root/repo")
 
@@ -28,17 +28,6 @@ from pyspark.sql import functions as F  # noqa: E402
 PROBES = {}
 
 knn_mod = importlib.import_module("vectorsearchutil_spark.operators.knn")
-
-
-@contextmanager
-def _gate(module, name, value):
-    """``module.name`` set to ``value`` for the block, then restored."""
-    old = getattr(module, name)
-    setattr(module, name, value)
-    try:
-        yield
-    finally:
-        setattr(module, name, old)
 
 
 def _hubness(emb, k):
@@ -67,7 +56,7 @@ def probe_hubness_blocked_50k(spark):
     """Same 50k x 64 shape as the round-9 arrow probe; blocked path."""
     emb = _emb(spark, 50_000)
     t0 = time.time()
-    with _gate(knn_mod, "_SELF_KNN_COLLECT_MAX", -1):
+    with mock.patch.object(knn_mod, "_SELF_KNN_COLLECT_MAX", -1):
         n = _force(_hubness(emb, 10))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 50k x 64 (blocked, n_blocks=8) -> sum {n}"
@@ -79,7 +68,7 @@ def probe_hubness_arrow_50k(spark):
 
     emb = _emb(spark, 50_000)
     t0 = time.time()
-    with _gate(session, "ARROW_MIN_CELLS", 0):
+    with mock.patch.object(session, "ARROW_MIN_CELLS", 0):
         n = _force(_hubness(emb, 10))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 50k x 64 (arrow comparator) -> sum {n}"
@@ -91,7 +80,7 @@ def probe_hubness_blocked_100k(spark):
     100k vectors to the driver and broadcast ~50 MB per executor)."""
     emb = _emb(spark, 100_000)
     t0 = time.time()
-    with _gate(knn_mod, "_SELF_KNN_COLLECT_MAX", -1):
+    with mock.patch.object(knn_mod, "_SELF_KNN_COLLECT_MAX", -1):
         n = _force(_hubness(emb, 10))
     dt = time.time() - t0
     return f"{dt:.1f}s @ 100k x 64 (blocked, n_blocks=8) -> sum {n}"
@@ -103,7 +92,7 @@ def probe_auto_escalation(spark):
     broadcast of the query side). Runs on 2k points with the gate
     lowered to 1k — this probes the DISPATCH, not the compute."""
     emb = _emb(spark, 2_000)
-    with _gate(knn_mod, "_SELF_KNN_COLLECT_MAX", 1_000):
+    with mock.patch.object(knn_mod, "_SELF_KNN_COLLECT_MAX", 1_000):
         df = _hubness(emb, 5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     picked_blocked = "FlatMapGroupsInPandas" in plan
