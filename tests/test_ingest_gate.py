@@ -6,18 +6,20 @@ in-process and reads only the state rows the batch touches. Pins that
 path's equality with the distributed plan (the gate constant patched
 to 0) over NULLs, duplicate ids, short and oddly spaced texts and
 unicode, in every store mode and in the stateless form; the driver
-signer's equality with ``build_ingest_dedup_state``; the quiet open of
-a new store and the re-signing of one whose manifest lists no dedup
-state; and the in-memory store's cache, which holds one copy of the
-store and its state across appends."""
+signer's equality with ``build_ingest_dedup_state``, rows and types;
+the quiet open of a new store and the re-signing of one whose manifest
+lists no dedup state; and the in-memory store's cache, which holds one
+copy of the store and its state across appends."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from vectorsearchutil_spark.operators import dedup as dd
 from vectorsearchutil_spark.session import in_list
+from vectorsearchutil_spark.sources.manifest import nullable_schema
 from vectorsearchutil_spark.store import VectorStore
 
 _STORE = [
@@ -169,16 +171,30 @@ def test_gate_empty_state_and_empty_batch(spark, tmp_path, monkeypatch):
 
 
 def test_driver_signer_equals_state_plan(spark):
+    """Row for row and type for type, for a long and an int id: each
+    part's Arrow columns have the names and types the plan's
+    ``toArrow`` gives (nullability aside, which no write records), so
+    a part written from either records one schema."""
     rows = [(i + 1, t) for i, t in enumerate(_STORE)] + list(_INCOMING)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    want = dd.build_ingest_dedup_state(df)
-    got = dd._sign_rows(
-        [r[0] for r in rows], [r[1] for r in rows], 3, 16, 4
-    )
-    for part in ("meta", "shingles", "buckets"):
-        assert sorted(got[part], key=repr) == sorted(
-            map(tuple, want[part].collect()), key=repr
-        ), part
+    for id_type in ("long", "int"):
+        df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+        want = dd.build_ingest_dedup_state(df)
+        got = dd._sign_rows(df.toArrow(), "text", "doc_id", 3, 16, 4)
+        for part in ("meta", "shingles", "buckets"):
+            plan = want[part].toArrow()
+            assert [(f.name, f.type) for f in got[part].schema] == [
+                (f.name, f.type) for f in plan.schema
+            ], (id_type, part)
+            assert nullable_schema(from_arrow_schema(got[part].schema)) == (
+                nullable_schema(want[part].schema)
+            ), (id_type, part)
+            assert sorted(_tuples(got[part]), key=repr) == sorted(
+                _tuples(plan), key=repr
+            ), (id_type, part)
+
+
+def _tuples(table):
+    return [tuple(r.values()) for r in table.to_pylist()]
 
 
 def test_in_list_quotes_strings_and_ints(spark):

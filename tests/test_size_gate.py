@@ -218,6 +218,29 @@ def _check_degenerate(frames):
         assert lsh.collect() == [], name
 
 
+def test_zero_norm_vectors_have_no_cosine_on_either_side(spark, monkeypatch):
+    """A zero vector has no cosine (``cosine_similarity`` is NULL for
+    it), so no pair with one passes even a threshold of -1: below and
+    above the near-dup gate and the LSH verify gate, only the pair of
+    the two non-zero vectors is left."""
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 0.5]), (4, [-1.0, 0.2])],
+        "vec_id long, embedding array<double>",
+    )
+    for above in (False, True):
+        with monkeypatch.context() as m:
+            if above:
+                m.setattr(Sim, "_NEARDUP_MATRIX_MAX_CELLS", -1)
+                m.setattr(Sim, "_LSH_VERIFY_MAX_BYTES", -1)
+            pairs = neardup_pairs(df, threshold=-1.0, dim=2)
+            # one plane in each of four tables: all six pairs collide
+            lsh = cosine_lsh_pairs(
+                df, n_planes=1, n_tables=4, threshold=-1.0, dim=2
+            )
+            assert _rows(pairs) == [(3, 4, -0.7894)], above
+            assert _rows(lsh) == [(3, 4, -0.7894)], above
+
+
 def _random_pairs(spark, seed, nodes, draws):
     rng = random.Random(seed)
     edges = sorted(

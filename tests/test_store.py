@@ -219,19 +219,27 @@ def _docs_df(spark, rows):
 
 def test_dedup_state_incremental_appends(spark, tmp_path, monkeypatch):
     """Appending twice must compute signatures for the APPENDED batch
-    only — never re-shingle the store. Spy on build_ingest_dedup_state
-    and record the row count of every input it is asked to sign."""
+    only — never re-shingle the store. Spy on both signers, the state
+    plan (build_ingest_dedup_state) and the in-process signer of a
+    pulled batch (_sign_rows), and record the row count of every input
+    either is asked to sign."""
     from vectorsearchutil_spark.operators import dedup as dd
     from vectorsearchutil_spark import store as store_mod
 
     signed_counts = []
     real_build = dd.build_ingest_dedup_state
+    real_sign = dd._sign_rows
 
     def spy(df, *a, **kw):
         signed_counts.append(df.count())
         return real_build(df, *a, **kw)
 
+    def sign_spy(batch, *a, **kw):
+        signed_counts.append(batch.num_rows)
+        return real_sign(batch, *a, **kw)
+
     monkeypatch.setattr(dd, "build_ingest_dedup_state", spy)
+    monkeypatch.setattr(dd, "_sign_rows", sign_spy)
 
     path = str(tmp_path / "st")
     vs = store_mod.VectorStore(
@@ -442,6 +450,7 @@ def test_ann_index_incremental_add(spark, tmp_path):
 def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch):
     """A failing add_to_ann_index write leaves nothing persisted
     (cache lifetime is explicit)."""
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
     vs = VectorStore(spark, acid_path=str(tmp_path / "s"))
@@ -459,11 +468,14 @@ def test_ann_index_add_unpersists_when_write_fails(spark, tmp_path, monkeypatch)
     spark.catalog.clearCache()
     before = set(sc._jsc.getPersistentRDDs().keySet())
 
-    def failing_write(self, path, *a, **kw):
+    def failing_write(*a, **kw):
         raise OSError("disk full")
 
+    # the add writes its few rows from the driver; a Spark write fails
+    # as well
+    monkeypatch.setattr(pq, "write_table", failing_write)
     monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
-    with pytest.raises(OSError):
+    with pytest.raises(OSError, match="disk full"):
         vs.add_to_ann_index()
     # other tests' local checkpoints stay registered until collected,
     # so compare with the state before the call

@@ -17,6 +17,7 @@ import os
 import shutil
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql.readwriter import DataFrameWriter
@@ -70,8 +71,9 @@ def _observe(spark, path, probe=_PROBE):
 
 
 def _crash_at(monkeypatch, point):
-    """Fail the next write of ``point``: a part's directory is written
-    and then the writer dies; the manifest link dies before it lands."""
+    """Fail the next write of ``point``: a part's directory is written,
+    by a Spark job or from the driver, and then the writer dies; the
+    manifest link dies before it lands."""
     if point == "link":
         def link(src, dst):
             raise _Crash(point)
@@ -79,13 +81,21 @@ def _crash_at(monkeypatch, point):
         monkeypatch.setattr(os, "link", link)
         return
     real = DataFrameWriter.parquet
+    real_file = pq.write_table
 
     def parquet(self, path, *args, **kwargs):
         real(self, path, *args, **kwargs)
         if point in path.split(os.sep)[-2:]:
             raise _Crash(point)
 
+    def write_table(table, where, *args, **kwargs):
+        # a driver write is one file <part>/tx-<uuid>/<file>
+        real_file(table, where, *args, **kwargs)
+        if point in where.split(os.sep)[-3:-1]:
+            raise _Crash(point)
+
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(pq, "write_table", write_table)
 
 
 @pytest.mark.parametrize("append", [False, True], ids=["replace", "append"])

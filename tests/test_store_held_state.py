@@ -1,13 +1,15 @@
 """The store's driver path for small batches and the state it holds.
 
 A batch that ``collect_if_small`` pulled goes through ``set_data``
-and ``add_to_ann_index`` in Arrow and numpy, with the store's max id
-and its IVF index (the index manifest and centroids) held on the
-store object. Pins that path's equality with the distributed one
-(``_LOCAL_BATCH_MAX_ROWS = 0``) in every store mode, the held state
-across reopen, replace and schema-less manifests, an index write cut
-short at each of its writes and its commit, and the job budget of one
-small store round."""
+and ``add_to_ann_index`` in Arrow and numpy, and a manifest store
+writes its parts from the driver, with the store's max id and its IVF
+index (the index manifest and centroids) held on the store object.
+Pins that path's equality with the distributed one
+(``_LOCAL_BATCH_MAX_ROWS = 0``) in every store mode, one recorded
+schema per part of a store and index that both paths wrote, the held
+state across reopen, replace and schema-less manifests, an index write
+cut short at each of its writes and its commit, and the job budget of
+one small store round."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -135,6 +138,56 @@ def test_driver_path_equals_distributed_path(spark, tmp_path, mode, monkeypatch)
     assert opts["kappa lambda mu nu"] == "new"
     assert [i for i, *_ in data] == list(range(1, len(data) + 1))
     assert [i for i, _ in lists] == [i for i, *_ in data]
+
+
+def test_parts_of_either_path_record_one_schema(
+    spark, tmp_path, monkeypatch, run_jobs
+):
+    """A manifest store fed by both paths: one append above the gate
+    (``_LOCAL_BATCH_MAX_ROWS = 0``) and one below it, in both orders,
+    each followed by an index add on its side. Every part of the store
+    and of its index keeps its recorded schema (a commit drops one that
+    differs from its parent's, and every later read of the part would
+    infer it with a job), so a reopen and a ``query_ann`` build run no
+    job. The directories either path wrote read back with one Arrow
+    schema and int32 ids, and both orders store the same rows, state
+    and lists."""
+    gate = store_mod._LOCAL_BATCH_MAX_ROWS
+    results = []
+    for order in ((0, gate), (gate, 0)):
+        path = str(tmp_path / f"st_{order[0]}")
+        vs = VectorStore(spark, acid_path=path, maintain_dedup_state=True)
+        vs.set_data(spark.createDataFrame(_BULK, _SCHEMA))
+        vs.build_ann_index(n_lists=3)
+        for bound, batch in zip(order, (_APPEND_1, _APPEND_2)):
+            with monkeypatch.context() as m:
+                m.setattr(store_mod, "_LOCAL_BATCH_MAX_ROWS", bound)
+                vs.set_data(spark.createDataFrame(batch, _SCHEMA), append=True)
+                assert vs.add_to_ann_index() > 0
+        for log in (vs.acid, ManifestLog(path + "__ivf")):
+            listed = log._parts(log.manifest(log.latest_version()))
+            for part, record in listed.items():
+                assert record.get("schema") is not None, (order, part)
+                read = {
+                    spark.read.parquet(os.path.join(log.base, part, d))
+                    .toArrow().schema
+                    for d in record["dirs"]
+                }
+                assert len(read) == 1, (order, part, read)
+                if part != "centroids":
+                    assert read.pop().field("id").type == pa.int32(), part
+        reopened, jobs = run_jobs(lambda: VectorStore(
+            spark, acid_path=path, maintain_dedup_state=True))
+        assert jobs == [], order
+        _, jobs = run_jobs(lambda: vs.query_ann("zeta eta theta iota", k=3))
+        assert jobs == [], order
+        results.append((
+            sorted(map(tuple, reopened.data.collect()), key=repr),
+            {part: sorted(map(tuple, df.collect()), key=repr)
+             for part, df in reopened._dedup_state.items()},
+            _index_lists(path + "__ivf"),
+        ))
+    assert results[0] == results[1]
 
 
 def test_reopened_store_appends_then_extends_index(spark, tmp_path):
@@ -286,9 +339,11 @@ def test_index_write_cut_short_reopens_before_or_after(
 def test_store_round_job_budget(spark, tmp_path, run_jobs):
     """One small round of a file-backed store with dedup state, as a
     client feeds it: the dedup check of the batch runs at most 3 Spark
-    jobs (the pull and two state probes), the append at most 6, the
-    index add at most 2, and building the exact and ANN reads runs
-    none (the jobs are in their result's collect)."""
+    jobs (the pull and two state probes), the append at most 2 (the
+    pull and the probe of the targets the store holds: the rows and
+    their state are written from the driver), the index add at most 1
+    (the pull of the unindexed rows), and building the exact and ANN
+    reads runs none (the jobs are in their result's collect)."""
     rng = np.random.RandomState(2)
     words = [f"w{i}" for i in range(60)]
 
@@ -326,7 +381,7 @@ def test_store_round_job_budget(spark, tmp_path, run_jobs):
         assert len(exact.collect()) == len(approx.collect()) == 5
     n = {step: len(ids) for step, ids in jobs.items()}
     assert n["check"] <= 3, jobs
-    assert n["append"] <= 6, jobs
-    assert n["add"] <= 2, jobs
+    assert n["append"] <= 2, jobs
+    assert n["add"] <= 1, jobs
     assert n["query"] == 0 and n["query_ann"] == 0, jobs
     assert vs.count() == 290

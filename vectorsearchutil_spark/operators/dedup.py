@@ -1119,8 +1119,9 @@ def build_ingest_dedup_state(
     ``n_sh`` is the shingle total over the rows sharing the doc's id
     (0 for a NULL id): a window sum of per-row shingle-array sizes, so
     ``meta`` needs no join back to a shingle count. Over a
-    one-partition input (the store's pulled batch) the window needs
-    no exchange either, and each state table is one write job.
+    one-partition input (an in-memory or table store's pulled batch)
+    the window needs no exchange either, and each state table is one
+    write job; ``_sign_rows`` computes the same tables in process.
     """
     assert num_hashes % band_size == 0
     from pyspark.sql import Window
@@ -1188,15 +1189,24 @@ INGEST_GATE_MAX_ROWS = 2_000
 
 
 def _sign_rows(
-    ids: list, texts: list, n: int, num_hashes: int, band_size: int
-) -> dict[str, list[tuple]]:
-    """``build_ingest_dedup_state`` of the driver-held rows
-    ``(ids[i], texts[i])``, computed in-process, row for row: the same
-    whitespace tokens (split on single spaces, empties dropped), the
-    same distinct word n-grams, the same md5 arithmetic. ``meta`` rows
+    batch: pa.Table,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_hashes: int,
+    band_size: int,
+) -> dict[str, pa.Table]:
+    """``build_ingest_dedup_state`` of the driver-held ``batch``,
+    computed in-process, row for row: the same whitespace tokens (split
+    on single spaces, empties dropped), the same distinct word n-grams,
+    the same md5 arithmetic. Each part is a table typed as the plan
+    types it: ``id_col`` in the batch's type, ``text_md5``,
+    ``shingle`` and ``bucket`` strings, ``n_sh`` long. ``meta`` rows
     come in input order; ``shingles`` per row in n-gram order;
     ``buckets`` per id, band by band."""
     assert num_hashes % band_size == 0
+    ids = batch.column(id_col).to_pylist()
+    texts = batch.column(text_col).to_pylist()
     per_row = []
     n_sh: dict = {}
     by_id: dict = {}
@@ -1205,30 +1215,35 @@ def _sign_rows(
         per_row.append(grams)
         n_sh[i] = n_sh.get(i, 0) + len(grams)
         by_id.setdefault(i, set()).update(grams)
-    meta = [
-        (
-            i,
-            None if t is None else hashlib.md5(t.encode()).hexdigest(),
-            0 if i is None else n_sh[i],
-        )
-        for i, t in zip(ids, texts)
-    ]
-    shingles = [(i, g) for i, grams in zip(ids, per_row) for g in grams]
-    buckets = []
+    md5s = [None if t is None else hashlib.md5(t.encode()).hexdigest()
+            for t in texts]
+    sizes = [0 if i is None else n_sh[i] for i in ids]
+    sh_ids = [i for i, grams in zip(ids, per_row) for _ in grams]
+    grams = [g for row in per_row for g in row]
+    b_ids, bands = [], []
     members = np.arange(num_hashes, dtype=np.int64)[:, None]
-    for i, grams in by_id.items():
-        if not grams:
+    for i, gs in by_id.items():
+        if not gs:
             continue
-        digests = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+        digests = [hashlib.md5(g.encode()).hexdigest() for g in gs]
         h1 = np.array([int(d[:12], 16) for d in digests], dtype=np.int64)
         h2 = np.array([int(d[16:28], 16) for d in digests], dtype=np.int64)
         sig = (h1 + members * h2).min(axis=1).tolist()
         for b in range(num_hashes // band_size):
             band = "|".join(map(str, sig[b * band_size:(b + 1) * band_size]))
-            buckets.append(
-                (i, f"{b}:{hashlib.md5(band.encode()).hexdigest()}")
-            )
-    return {"meta": meta, "shingles": shingles, "buckets": buckets}
+            b_ids.append(i)
+            bands.append(f"{b}:{hashlib.md5(band.encode()).hexdigest()}")
+    id_type = batch.schema.field(id_col).type
+
+    def table(i: list, **cols) -> pa.Table:
+        return pa.table({id_col: pa.array(i, id_type), **cols})
+
+    return {
+        "meta": table(ids, text_md5=pa.array(md5s, pa.string()),
+                      n_sh=pa.array(sizes, pa.int64())),
+        "shingles": table(sh_ids, shingle=pa.array(grams, pa.string())),
+        "buckets": table(b_ids, bucket=pa.array(bands, pa.string())),
+    }
 
 
 def _gate_on_driver(
@@ -1245,20 +1260,23 @@ def _gate_on_driver(
     """The distributed gate's verdicts for the pulled ``batch``, as a
     local frame: the batch is signed in-process, and two column-pruned
     jobs read only the state rows it touches."""
-    ids = batch.column(id_col).to_pylist()
-    texts = batch.column(text_col).to_pylist()
-    sig = _sign_rows(ids, texts, n, num_hashes, band_size)
+    sig = _sign_rows(batch, text_col, id_col, n, num_hashes, band_size)
+
+    def pairs(part: str, col: str) -> zip:
+        return zip(sig[part].column(id_col).to_pylist(),
+                   sig[part].column(col).to_pylist())
+
     # a NULL incoming id never joins back to its verdict: 'new'
     md5s: dict = {}
-    for i, h, _ in sig["meta"]:
+    for i, h in pairs("meta", "text_md5"):
         if i is not None and h is not None:
             md5s.setdefault(h, set()).add(i)
     counts: dict = {}
-    for i, g in sig["shingles"]:
+    for i, g in pairs("shingles", "shingle"):
         if i is not None:
             counts.setdefault(i, Counter())[g] += 1
     inc_buckets: dict = {}
-    for i, b in sig["buckets"]:
+    for i, b in pairs("buckets", "bucket"):
         if i is not None:
             inc_buckets.setdefault(b, []).append(i)
 
@@ -1345,7 +1363,7 @@ def _gate_on_driver(
                     break
 
     out = []
-    for i in ids:
+    for i in batch.column(id_col).to_pylist():
         if i in exact:
             out.append((i, "exact_dup", exact[i]))
         elif i in near:

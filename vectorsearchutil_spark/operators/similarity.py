@@ -66,6 +66,15 @@ def _vectors(df: DataFrame, id_col: str, vector_col: str) -> DataFrame:
     )
 
 
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """``mat``'s rows scaled to unit length. A zero row has no cosine
+    (``functions.vector.cosine_similarity`` is NULL for it), so it
+    becomes NaN: every score it enters is NaN and passes no threshold,
+    as the join verify drops the NULL."""
+    with np.errstate(invalid="ignore"):
+        return mat / np.linalg.norm(mat, axis=1)[:, None]
+
+
 def neardup_pairs_matrix(
     df: DataFrame,
     vector_col: str = "embedding",
@@ -95,11 +104,8 @@ def _neardup_pairs_matrix(
     pulled to the driver."""
     spark = df.sparkSession
     ids, mat = table_matrix(table, id_col, vector_col)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    normed = mat / norms[:, None]
     b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(normed)
+    b_mat = spark.sparkContext.broadcast(_unit_rows(mat))
 
     out_schema = StructType(
         [
@@ -119,10 +125,7 @@ def _neardup_pairs_matrix(
         # thresholding happens per chunk, so only survivors accumulate.
         chunk = max(1, 32_000_000 // max(1, len(all_ids)))
         for pdf in batches:
-            q = np.array(list(pdf[vector_col]), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = 1.0
-            qs = q / qn[:, None]
+            qs = _unit_rows(np.array(list(pdf[vector_col]), dtype=np.float64))
             qa = pdf[id_col].to_numpy(dtype=np.int64)
             for lo in range(0, len(qa), chunk):
                 sims = qs[lo : lo + chunk] @ all_mat.T
@@ -211,10 +214,9 @@ def neardup_pairs_blocked(
                 return np.empty(0, dtype=np.int64), np.empty((0, 1))
             part = part.sort_values("_id")
             ids = part["_id"].to_numpy(dtype=np.int64)
-            m = np.array(list(part["_vec"]), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1)
-            n[n == 0.0] = 1.0
-            return ids, m / n[:, None]
+            return ids, _unit_rows(
+                np.array(list(part["_vec"]), dtype=np.float64)
+            )
 
         a_ids, a_mat = matrix(pdf[pdf["_side"] == 0])
         if ba == bb:
@@ -615,10 +617,8 @@ def _verify_pairs_matrix(
     math."""
     spark = cand.sparkSession
     ids, mat = table_matrix(table, id_col, vector_col)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
     b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat / norms[:, None])
+    b_mat = spark.sparkContext.broadcast(_unit_rows(mat))
 
     out_schema = StructType(
         [

@@ -11,7 +11,11 @@ log borrows the design that Delta Lake built for exactly that problem:
 * **data files are immutable** — every transaction writes fresh
   ``<part>/tx-<uuid>/`` directories and never touches existing ones;
   an append writes ONLY the appended rows (no store rewrite, no
-  staging double-write);
+  staging double-write). A directory is written by a Spark job, or,
+  for a table the driver holds (a small batch, its dedup state, its
+  IVF list leaves), by pyarrow on the same filesystem the log writes
+  with ``os``. Either way it stays invisible until a commit lists it,
+  so a writer that dies mid-file leaves nothing a reader sees;
 * **the manifest is the source of truth** — ``_log/v<N>.json`` lists
   the directories visible at version N. Readers resolve the highest
   committed version and read exactly those directories, so a
@@ -40,7 +44,7 @@ log borrows the design that Delta Lake built for exactly that problem:
   concurrent writers race on the version number and the loser
   retries on the next version (optimistic concurrency);
 * **the manifest records each part's schema** — a commit stores the
-  written frames' schemas (the analogue of Delta's
+  written frames' or tables' schemas (the analogue of Delta's
   ``metaData.schemaString``) and reads use them, so a reader infers
   nothing from the parquet footers (schema inference is one Spark job
   per read). An append whose schema differs from its parent's records
@@ -77,7 +81,11 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 #: the part every table has; its record is the manifest's top level
@@ -85,6 +93,33 @@ DATA = "data"
 
 #: commit attempts before a writer gives up on a contended version
 _MAX_RETRIES = 20
+
+
+def _write_file(table: pa.Table, path: str) -> None:
+    """``table`` as the one Parquet file of the new directory ``path``,
+    typed as a Spark write of its frame is: the Parquet types its Arrow
+    types map to, with no Arrow schema kept in the footer. Values are
+    plain-encoded, as Spark's writer falls back to when a dictionary
+    does not pay: a dictionary of a small batch's mostly distinct ids,
+    hashes and vectors made a store's files 18% larger than Spark's
+    (500 rows and five 100-row appends with their state and index:
+    1.22 MB against 1.04 MB; plain: 1.02 MB)."""
+    os.makedirs(path)
+    pq.write_table(
+        table,
+        os.path.join(path, f"part-00000-{uuid.uuid4().hex}.snappy.parquet"),
+        compression="snappy",
+        use_dictionary=False,
+        store_schema=False,
+    )
+
+
+def _read_schema(rows: DataFrame | pa.Table) -> StructType:
+    """The schema a read of the written ``rows`` reports."""
+    if isinstance(rows, pa.Table):
+        return nullable_schema(from_arrow_schema(rows.schema))
+    return nullable_schema(rows.schema)
+
 
 def nullable_schema(schema: StructType) -> StructType:
     """``schema`` with every field, array element and map value
@@ -183,31 +218,47 @@ class ManifestLog:
 
     # -- transactions --------------------------------------------------
 
-    def write(self, part: str, df: DataFrame) -> dict:
-        """Write ``df`` as a new directory of ``part``, invisible until
-        a commit lists it. Returns its record: the directory and the
-        JSON schema a read of it reports."""
+    def write(self, part: str, rows: DataFrame | pa.Table) -> dict:
+        """Write ``rows`` as a new directory of ``part``, invisible
+        until a commit lists it: a frame in one Spark job, a
+        driver-held table as one file. Returns its record: the
+        directory and the JSON schema a read of it reports."""
         tx = f"tx-{uuid.uuid4().hex}"
-        df.write.parquet(os.path.join(self.base, part, tx))
-        return {"dirs": [tx], "schema": nullable_schema(df.schema).jsonValue()}
+        path = os.path.join(self.base, part, tx)
+        if isinstance(rows, pa.Table):
+            _write_file(rows, path)
+        else:
+            rows.write.parquet(path)
+        return {"dirs": [tx], "schema": _read_schema(rows).jsonValue()}
 
     def write_partitioned(
-        self, part: str, df: DataFrame, column: str, **options
+        self, part: str, rows: DataFrame | pa.Table, column: str, **options
     ) -> dict:
-        """``write`` partitioned by ``column``, with the writer
-        ``options``: the record lists the write's leaf directories
+        """``write`` partitioned by ``column``, a frame with the writer
+        ``options``, a table as one file per value (its leaf named by
+        the value's ``str``, as Spark names an integer key's): the
+        record lists the write's leaf directories
         ``tx-<uuid>/<column>=<value>``, whose files do not carry the
         column."""
         tx = f"tx-{uuid.uuid4().hex}"
         path = os.path.join(self.base, part, tx)
-        df.write.options(**options).partitionBy(column).parquet(path)
+        if isinstance(rows, pa.Table):
+            keys = rows.column(column)
+            rest = rows.drop_columns([column])
+            for value in pc.unique(keys).to_pylist():
+                _write_file(
+                    rest.filter(pc.equal(keys, value)),
+                    os.path.join(path, f"{column}={value}"),
+                )
+        else:
+            rows.write.options(**options).partitionBy(column).parquet(path)
+            rest = rows.drop(column)
+        # a table with no rows writes no leaf, nor the directory
+        names = os.listdir(path) if os.path.isdir(path) else []
         leaves = sorted(
-            f"{tx}/{name}"
-            for name in os.listdir(path)
-            if name.startswith(column + "=")
+            f"{tx}/{name}" for name in names if name.startswith(column + "=")
         )
-        schema = nullable_schema(df.drop(column).schema)
-        return {"dirs": leaves, "schema": schema.jsonValue()}
+        return {"dirs": leaves, "schema": _read_schema(rest).jsonValue()}
 
     def commit(
         self,

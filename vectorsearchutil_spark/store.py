@@ -19,12 +19,15 @@ A batch of at most ``_LOCAL_BATCH_MAX_ROWS`` rows is pulled to the
 driver once and stays there, as the reference's in-process insert
 (``VectorSearchBase.py:78-94,101-133``) does: its dedup, id
 assignment and IVF list assignment run in Arrow and numpy, and the
-store is not re-planned for them. What the store already knows stays
-on the store object: its max id, and the manifest and centroids of
-the IVF index it last used. A reopened store reads its max id at its
-first write (a manifest store from its manifest) and an index's
-centroids at its first call on that index. Larger batches run the
-same steps as distributed plans.
+store is not re-planned for them. A manifest store's Parquet parts of
+such a batch (its rows, their dedup state, signed in process, and
+their IVF list leaves) are written from the driver with pyarrow, one
+file each, so an append or an index add runs no Spark write job. What
+the store already knows stays on the store object: its max id, and
+the manifest and centroids of the IVF index it last used. A reopened
+store reads its max id at its first write (a manifest store from its
+manifest) and an index's centroids at its first call on that index.
+Larger batches run the same steps as distributed plans.
 
 Persistence modes:
 
@@ -458,12 +461,14 @@ class VectorStore:
         once (one Arrow job) and, like the reference's in-process
         table, deduplicated, encoded and given its ids on the driver.
         An append then pulls only the batch's targets that the store
-        already holds (one column-pruned job), writes the fresh rows
-        as one local frame, and signs their dedup state from that
-        frame as one partition. The next id comes from the held max
-        id (a manifest store's is in its manifest; other reopened
-        stores read it once). Larger batches run the same steps as a
-        distributed plan.
+        already holds (one column-pruned job). A manifest store's
+        fresh rows and their dedup state, signed in process, are
+        written from the driver, one file each, and committed as one
+        version; the other modes write the rows as one local frame and
+        sign their state from that frame as one partition. The next id
+        comes from the held max id (a manifest store's is in its
+        manifest; other reopened stores read it once). Larger batches
+        run the same steps as a distributed plan.
         """
         if "target" not in data.columns:
             return
@@ -514,18 +519,18 @@ class VectorStore:
         """Replace the store by the deduplicated batch: ``batch`` when
         it was pulled, else the distributed ``df``."""
         if batch is not None:
-            df = self._with_ids(batch, 0)
+            rows = self._with_ids(batch, 0)
         else:
-            df = df.withColumn(
+            rows = df.withColumn(
                 "id", F.row_number().over(Window.orderBy("_ord"))
             ).select("id", *SAVE_COLUMNS, "vector")
         self._drop_index()
-        n = None if batch is None else batch.num_rows
         if isinstance(self.acid, ManifestLog):
-            self._commit(df, False, 0, n)
+            self._commit(rows, False, 0)
             return
+        df = self._frame(rows)
         self._df = self._persist(df)
-        self._max_id = n
+        self._max_id = None if batch is None else batch.num_rows
         if self.maintain_dedup_state:
             self._update_dedup_state(
                 self.data if batch is None else df, replace=True
@@ -549,10 +554,10 @@ class VectorStore:
             fresh = fresh.withColumn(
                 "id", F.row_number().over(Window.orderBy("_ord")) + F.lit(start)
             ).select("id", *SAVE_COLUMNS, "vector")
-        n = None if batch is None else batch.num_rows
         if isinstance(self.acid, ManifestLog):
-            self._commit(fresh, True, start, n)
+            self._commit(fresh, True, start)
             return
+        fresh = self._frame(fresh)
         if self.table is not None:
             # incremental append: write ONLY the fresh rows into the
             # bucketed table — at 100 TB the store is never rewritten
@@ -569,7 +574,7 @@ class VectorStore:
             self._df = self.acid.read(self.spark)
         else:
             self._df = self._persist(existing.unionByName(fresh))
-        self._max_id = None if n is None else start + n
+        self._max_id = None if batch is None else start + batch.num_rows
         if self.maintain_dedup_state:
             # signatures for the APPENDED rows only — O(batch) state
             # work: the pulled rows' local frame, or, read back from
@@ -586,33 +591,54 @@ class VectorStore:
             self._update_dedup_state(signed, replace=whole)
 
     def _commit(
-        self, rows: DataFrame, append: bool, start: int, n: int | None
+        self, rows: DataFrame | pa.Table, append: bool, start: int
     ) -> None:
         """Write a manifest store's ``rows`` (ids ``start + 1`` on: the
-        ``n`` pulled rows, or a distributed plan when ``n`` is None)
-        and their dedup state as uncommitted directories, then commit
-        them and the new max id as one version. A plan's state and max
+        pulled rows as a table, or a distributed plan) and their dedup
+        state as uncommitted directories, then commit them and the new
+        max id as one version. A table and its state, signed in
+        process, are written from the driver. A plan's state and max
         id are read back from its written directory, so it runs once;
         a store opened without state signs every row, replacing it."""
         acid = self.acid
         data = acid.write(DATA, rows)
-        if n is None:
+        if isinstance(rows, pa.Table):
+            max_id = start + rows.num_rows
+        else:
             rows = acid.read_part(self.spark, data, DATA)
             top = rows.agg(F.max("id")).first()[0]
             max_id = start if top is None else top
-        else:
-            max_id = start + n
         changes = {DATA: ("append" if append else "replace", data)}
         if self.maintain_dedup_state:
             resign = append and self._dedup_state is None
-            signed = rows.select("id", "target")
-            if resign:
-                signed = self.data.select("id", "target").unionByName(signed)
-            state = self._build_dedup_state(signed)
+            state = self._signed_state(rows, resign)
             mode = "append" if append and not resign else "replace"
             for part in self._DEDUP_PARTS:
                 changes[part] = (mode, acid.write(part, state[part]))
         self._open(acid.commit(changes, max_id))
+
+    def _signed_state(
+        self, rows: DataFrame | pa.Table, whole: bool
+    ) -> dict[str, DataFrame | pa.Table]:
+        """The dedup state of ``rows``, and of every stored row when
+        ``whole``: a pulled table alone is signed in process, as typed
+        tables; anything else runs the state plan."""
+        from vectorsearchutil_spark.operators.dedup import _sign_rows
+
+        if isinstance(rows, pa.Table) and not whole:
+            return _sign_rows(rows, "target", "id", **self.dedup_params)
+        signed = self._frame(rows).select("id", "target")
+        if whole:
+            signed = self.data.select("id", "target").unionByName(signed)
+        return self._build_dedup_state(signed)
+
+    def _frame(self, rows: DataFrame | pa.Table) -> DataFrame:
+        """``rows`` as a frame: a pulled table as one local frame of
+        one partition, like the distributed path's window, so a write
+        of it is one file."""
+        if isinstance(rows, pa.Table):
+            return local_frame(self.spark, rows).coalesce(1)
+        return rows
 
     def _top_id(self) -> int:
         """The store's max id: held, or read once (one job)."""
@@ -637,20 +663,16 @@ class VectorStore:
             pc.invert(pc.is_in(batch.column("target"), held.column("target")))
         )
 
-    def _with_ids(self, rows: pa.Table, start: int) -> DataFrame:
+    def _with_ids(self, rows: pa.Table, start: int) -> pa.Table:
         """The pulled ``rows`` (in ingest order) with ids ``start + 1``
-        onward, as one local frame: a non-NULL int while they fit, as
-        the distributed path's ``row_number()`` gives, and one
-        partition, like that window's, so the write is one file."""
+        onward: a non-NULL int while they fit, as the distributed
+        path's ``row_number()`` gives."""
         n = rows.num_rows
         id_type = pa.int32() if start + n < 2**31 else pa.int64()
-        table = rows.append_column(
+        return rows.append_column(
             pa.field("id", id_type, nullable=False),
             pa.array(range(start + 1, start + n + 1), id_type),
-        ).select(
-            ["id", *SAVE_COLUMNS, "vector"]
-        )
-        return local_frame(self.spark, table).coalesce(1)
+        ).select(["id", *SAVE_COLUMNS, "vector"])
 
     def _first_wins_local(self, batch: pa.Table, has_vector: bool) -> pa.Table:
         """The pulled ``batch`` deduplicated on ``target``, first wins
@@ -809,13 +831,13 @@ class VectorStore:
         The unindexed rows are the ids above the max indexed id of the
         index's latest version. Up to ``_LOCAL_BATCH_MAX_ROWS`` of them
         are pulled in one job, assigned on the driver against the held
-        centroid matrix and written in one job, one file per touched
-        list; more go through ``build_ivf_index`` and are counted from
-        the written leaves. The leaves and the new max id commit as
-        one append version, so an add cut short leaves the index as it
-        was and the next add indexes the same rows. Idempotent. Two
-        stores adding to one index at once may both list the same
-        rows. Returns the number of rows added."""
+        centroid matrix and written from the driver, one file per
+        touched list; more go through ``build_ivf_index`` and are
+        counted from the written leaves. The leaves and the new max id
+        commit as one append version, so an add cut short leaves the
+        index as it was and the next add indexes the same rows.
+        Idempotent. Two stores adding to one index at once may both
+        list the same rows. Returns the number of rows added."""
         index_path = index_path or self._ivf_path
         held = self._index(index_path)
         if held is None:
@@ -848,10 +870,10 @@ class VectorStore:
         self._ivf_path = index_path
         return n
 
-    def _assign_local(self, held: _HeldIndex, rows: pa.Table) -> DataFrame:
+    def _assign_local(self, held: _HeldIndex, rows: pa.Table) -> pa.Table:
         """The pulled unindexed ``rows`` with the id of their nearest
         held centroid (ties to the lower id; a NULL vector takes the
-        lowest, as ``build_ivf_index`` does), as one local frame."""
+        lowest, as ``build_ivf_index`` does)."""
         d2 = centroid_sq_distances(
             batch_matrix(
                 rows.column("vector").to_pandas(), held.centroids.shape[1]
@@ -860,9 +882,7 @@ class VectorStore:
         )
         # the partition value only names the list's directory
         cids = pa.array([held.cids[i] for i in np.argmin(d2, axis=1)])
-        return local_frame(
-            self.spark, rows.append_column("centroid_id", cids)
-        ).coalesce(1)
+        return rows.append_column("centroid_id", cids)
 
     def optimize_ann_index(
         self,
